@@ -92,3 +92,43 @@ def test_delta_roundtrip():
     deltas = delta_encode(docids)
     np.testing.assert_array_equal(deltas.astype(np.int64), [3, 1, 6, 90, 1, 3899])
     np.testing.assert_array_equal(delta_decode(deltas).astype(np.int64), docids)
+
+
+def test_batched_boxes_match_per_range_encoders():
+    """The flat-buffer batch encoders (one pass over every range) equal
+    the per-range reference encoders byte for byte, across 1- and
+    2-byte tail headers, absent bloom rows and partial-byte bitmaps."""
+    from wiser_spark.functions.bloom import (
+        BOX_CAP,
+        bloom_boxes_encode,
+        bloom_boxes_encode_ranges,
+    )
+    from wiser_spark.functions.packing import varint_tail_box, varint_tail_boxes
+
+    rng = np.random.default_rng(5)
+    stream = rng.integers(0, 256, 4000, dtype=np.uint8)
+    cuts = np.unique(rng.integers(1, stream.size, 30))
+    bounds = np.concatenate(([0], cuts, [stream.size]))
+    keep = np.arange(bounds.size - 1) % 3 != 1  # gaps between ranges
+    lo, hi = bounds[:-1][keep], bounds[1:][keep]
+    assert (hi - lo).max() >= 128  # a 2-byte length header occurs
+    buf, offs = varint_tail_boxes(stream, lo, hi)
+    for t in range(lo.size):
+        assert buf[offs[t]:offs[t + 1]].tobytes() == varint_tail_box(
+            stream[lo[t]:hi[t]].tobytes()
+        )
+
+    mat = rng.integers(0, 256, (900, 9), dtype=np.uint8)
+    mat[rng.random(900) < 0.3] = 0  # absent (all-zero) filters
+    cuts = np.unique(rng.integers(1, 900, 40))
+    bounds = np.concatenate(([0], cuts, [900]))
+    lo, hi = bounds[:-1], bounds[1:]
+    lo, hi = lo[hi - lo <= BOX_CAP], hi[hi - lo <= BOX_CAP]
+    buf, offs = bloom_boxes_encode_ranges(mat, lo, hi)
+    for t in range(lo.size):
+        assert buf[offs[t]:offs[t + 1]].tobytes() == bloom_boxes_encode(
+            mat[lo[t]:hi[t]]
+        )[0]
+    empty = np.zeros(0, dtype=np.int64)
+    assert varint_tail_boxes(stream, empty, empty)[1].tolist() == [0]
+    assert bloom_boxes_encode_ranges(mat, empty, empty)[1].tolist() == [0]

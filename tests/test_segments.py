@@ -65,6 +65,18 @@ def test_segment_roundtrip_vs_postings(spark, oracle, index_dir):
     assert got == {k: sorted(v) for k, v in want.items()}
 
 
+def test_write_index_surfaces_every_thread_failure(spark, tmp_path):
+    """write_index writes docstats on a pool thread beside the segment
+    write: when both fail, the segment write's error is raised and the
+    docstats failure rides along as a note instead of being dropped."""
+    postings = spark.createDataFrame([("a", 0)], "term string, doc_id long")
+    docstats = spark.createDataFrame([(0, 3)], "doc_id long, doclen int")
+    with pytest.raises(Exception) as exc:  # postings lack tf
+        write_index(postings, docstats, None, None, str(tmp_path / "idx"),
+                    IndexConfig(bm25=PARAMS, n_shards=2))
+    assert "doclen_char" in " ".join(getattr(exc.value, "__notes__", []))
+
+
 def test_segment_offsets_roundtrip(spark):
     """off_blob round-trips the per-occurrence [s,e) byte spans through
     both write paths (mapside + shuffle-from-arrow-postings), and every

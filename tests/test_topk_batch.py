@@ -159,7 +159,7 @@ def test_batch_dedups_repeated_shapes(spark):
             assert got[rep * 10 + i] == want[i], (rep, i)
 
 
-def test_segment_batch_dedups_repeated_shapes(spark, tmp_path):
+def test_segment_batch_repeated_shapes_correct(spark, tmp_path):
     from wiser_spark.config import IndexConfig
     from wiser_spark.operators.mapside import write_index_mapside
     from wiser_spark.operators.segments import SegmentIndex
@@ -190,3 +190,33 @@ def test_segment_batch_dedups_repeated_shapes(spark, tmp_path):
     for rep in range(3):
         for i in range(2):
             assert got[rep * 10 + i] == want[i], (rep, i)
+
+
+def test_duplicate_query_ids_rejected(spark, tmp_path):
+    """A query log that repeats a query_id is malformed (answers are
+    keyed by query_id): both batch processors raise ValueError instead
+    of merging two queries' rows."""
+    from wiser_spark.config import IndexConfig
+    from wiser_spark.operators.mapside import write_index_mapside
+    from wiser_spark.operators.segments import SegmentIndex
+
+    docs = spark.createDataFrame(
+        [(0, "return x"), (1, "import y")], "doc_id long, content string"
+    )
+    postings = build_postings(docs)
+    docstats = build_docstats(docs)
+    d = str(tmp_path / "idx_dup")
+    write_index_mapside(docs, d, IndexConfig(bm25=PARAMS, n_shards=1))
+    idx = SegmentIndex(spark, d)
+    for log in (
+        [(3, ["return"], False), (3, ["return"], False)],  # same shape
+        [(3, ["return"], False), (4, ["x"], False), (3, ["import"], True)],
+        [(5, [], False), (5, ["return"], False)],  # even an empty query
+    ):
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            bm25_topk_batch(
+                postings, docstats, build_dictionary(postings),
+                corpus_stats(docstats), log, k=5, params=PARAMS,
+            )
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            idx.search_batch(log, k=5)

@@ -43,6 +43,7 @@ import math
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 BLOOM_BOX_MAGIC = 0xF5  # reference BLOOM_BOX_FIRST_BYTE (types.h:47)
 BOX_CAP = 128           # PACK_ITEM_CNT: postings per box
@@ -119,9 +120,18 @@ def vocab_bloom_matrix(uniques, bp: BloomParams) -> np.ndarray:
     is fully vectorized across the vocabulary (the per-term Python is
     just the md5 + two int.from_bytes, ~1 us), and byte-identical to
     ``token_bloom_mask`` per row (probe-side contract, pinned by
-    test_bloom)."""
+    test_bloom). ``uniques`` is a sequence of str or an Arrow string
+    array; the latter is hashed straight from its data buffer, with no
+    str object per term."""
     v = len(uniques)
-    digests = b"".join(hashlib.md5(t.encode()).digest() for t in uniques)
+    if isinstance(uniques, pa.Array):
+        offs = np.frombuffer(uniques.buffers()[1], dtype=np.int32)
+        offs = offs[uniques.offset:uniques.offset + v + 1].tolist()
+        data = memoryview(uniques.buffers()[2] or b"")
+        utf8 = (data[a:b] for a, b in zip(offs, offs[1:]))
+    else:
+        utf8 = (t.encode() for t in uniques)
+    digests = b"".join(hashlib.md5(t).digest() for t in utf8)
     ab = np.frombuffer(digests, dtype="<u8").reshape(v, 2)
     b = (ab[:, 1] % np.uint64(bp.bits - 1)) + np.uint64(1)
     # same family dispatch as token_bloom_mask, formula-identical
@@ -187,52 +197,52 @@ def bloom_boxes_encode(mat: np.ndarray) -> tuple[bytes, list[int]]:
     return b"".join(parts), offs
 
 
-def bloom_boxes_encode_batch(
+def bloom_boxes_encode_ranges(
     mat: np.ndarray, lo: np.ndarray, hi: np.ndarray
-) -> list[bytes]:
+) -> tuple[np.ndarray, np.ndarray]:
     """Encode ONE box per [lo[t], hi[t]) row-range of ``mat`` in a
-    single vectorized pass (every range must fit one box: hi-lo <=
-    BOX_CAP). Returns one blob per range, byte-identical to
-    ``bloom_boxes_encode(mat[lo[t]:hi[t]])``.
+    single vectorized pass. Ranges must be non-empty, ascending,
+    non-overlapping and fit one box (hi-lo <= BOX_CAP). Returns (flat
+    uint8 buffer, int64 offsets): value t is byte-identical to
+    ``bloom_boxes_encode(mat[lo[t]:hi[t]])[0]``.
 
     This is the vocabulary-batched fast path of the map-side build: a
     realistic code shard has ~10^5-10^6 distinct terms, almost all with
-    df < 128 — per-term packbits/tobytes calls (~10 us each) would
-    dominate the encode the same way per-term varint calls did before
-    round 2's batching. Here the presence bitmaps of ALL terms pack in
-    ONE np.packbits (each term starts byte-aligned in a padded bit
-    array), the payload is ONE flat mat[pres] copy, and each term's box
-    is a 4-piece bytes join over slices of those two flat buffers."""
-    nbytes = mat.shape[1]
+    df < 128, so no step here is per term: the presence bitmaps of ALL
+    ranges pack in ONE np.packbits (each range zero-padded to a byte
+    boundary), the payload is ONE mat[pres] gather, and the boxes are
+    spliced from the head, bitmap and payload streams in one pass."""
+    from wiser_spark.functions.packing import interleave_pieces, ranges_mask
+
     lo = np.asarray(lo, dtype=np.int64)
     hi = np.asarray(hi, dtype=np.int64)
-    df = hi - lo
-    n_terms = df.size
-    if n_terms and int(df.max()) > BOX_CAP:
+    cnt = hi - lo
+    if cnt.size and int(cnt.max()) > BOX_CAP:
         raise ValueError("batch encoder handles single-box ranges only")
     pres = mat.any(axis=1)
     pres_cum = np.concatenate(([0], np.cumsum(pres)))
-    bm_len = (df + 7) // 8
-    n_rows = int(df.sum())
-    if not n_rows:
-        return [bytes([BLOOM_BOX_MAGIC, 0])] * n_terms
-    # presence bitmaps: term t's bits live at byte-aligned offset
-    # pad[t] of a flat bit array -> one packbits for every term
-    pad = np.concatenate(([0], np.cumsum(bm_len * 8)))
-    term_of = np.repeat(np.arange(n_terms), df)
-    within = np.arange(n_rows) - np.repeat(np.cumsum(df) - df, df)
-    flat = np.zeros(int(pad[-1]), dtype=np.uint8)
-    flat[pad[term_of] + within] = pres[np.repeat(lo, df) + within]
-    bm = np.packbits(flat).tobytes()
-    pay = mat[pres].tobytes()  # present rows, fixed nbytes each
-    heads = [bytes([BLOOM_BOX_MAGIC, c]) for c in df.tolist()]
-    bm_lo = (pad >> 3).tolist()
-    p_lo = (pres_cum[lo] * nbytes).tolist()
-    p_hi = (pres_cum[hi] * nbytes).tolist()
-    return [
-        heads[t] + bm[bm_lo[t]:bm_lo[t + 1]] + pay[p_lo[t]:p_hi[t]]
-        for t in range(n_terms)
-    ]
+    sel = ranges_mask(mat.shape[0], lo, hi)
+    bm_len = (cnt + 7) // 8
+    pad = bm_len * 8 - cnt
+    bits, _ = interleave_pieces(
+        [pres[sel].view(np.uint8), np.zeros(int(pad.sum()), np.uint8)],
+        [cnt, pad],
+    )
+    heads = np.empty((cnt.size, 2), dtype=np.uint8)
+    heads[:, 0] = BLOOM_BOX_MAGIC
+    heads[:, 1] = cnt
+    return interleave_pieces(
+        [
+            heads.reshape(-1),
+            np.packbits(bits),  # MSB-first (ProduceBitmap)
+            mat[pres & sel].reshape(-1),  # present rows, nbytes each
+        ],
+        [
+            np.full(cnt.size, 2, dtype=np.int64),
+            bm_len,
+            (pres_cum[hi] - pres_cum[lo]) * mat.shape[1],
+        ],
+    )
 
 
 def bloom_boxes_decode(

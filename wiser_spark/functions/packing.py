@@ -26,7 +26,11 @@ from __future__ import annotations
 import numpy as np
 
 from wiser_spark.config import PACK_SIZE, PACKED_FRAME_MAGIC, VINTS_MAGIC
-from wiser_spark.functions.varint import varint_decode, varint_encode
+from wiser_spark.functions.varint import (
+    varint_decode,
+    varint_encode,
+    varint_encode_with_lengths,
+)
 
 
 def _bit_width(values: np.ndarray) -> int:
@@ -166,6 +170,55 @@ def varint_tail_box(payload: bytes) -> bytes:
     """Wrap a varint payload as a column TAIL blob — byte-identical to
     encode_column() for columns shorter than PACK_SIZE."""
     return bytes([VINTS_MAGIC]) + _scalar_varint(len(payload)) + payload
+
+
+def ranges_mask(n: int, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Boolean mask of length ``n`` set inside every [lo[t], hi[t]).
+    Ranges must be non-empty, ascending and non-overlapping."""
+    step = np.zeros(n + 1, dtype=np.int8)
+    step[lo] += 1
+    step[hi] -= 1
+    return np.cumsum(step[:-1], dtype=np.int8).astype(bool)
+
+
+def interleave_pieces(
+    parts: list[np.ndarray], lens: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Assemble per-row values from flat piece streams: value t is the
+    next ``lens[0][t]`` bytes of ``parts[0]``, then the next
+    ``lens[1][t]`` bytes of ``parts[1]``, and so on (each part holds
+    exactly its pieces, in row order). Returns (one flat uint8 buffer,
+    int64 value offsets of length n+1) — no per-row Python objects."""
+    ln = np.stack([np.asarray(x, dtype=np.int64) for x in lens], axis=1)
+    offsets = np.zeros(ln.shape[0] + 1, dtype=np.int64)
+    np.cumsum(ln.sum(axis=1), out=offsets[1:])
+    kind = np.repeat(
+        np.tile(np.arange(len(parts), dtype=np.uint8), ln.shape[0]),
+        ln.reshape(-1),
+    )
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    for j, part in enumerate(parts):
+        out[kind == j] = part
+    return out, offsets
+
+
+def varint_tail_boxes(
+    stream: np.ndarray, lo: np.ndarray, hi: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """One TAIL blob per byte range [lo[t], hi[t]) of a varint
+    ``stream`` (uint8), in one vectorized pass: value t is
+    byte-identical to ``varint_tail_box(stream[lo[t]:hi[t]])``.
+    Returns (flat buffer, offsets) as ``interleave_pieces``."""
+    plen = np.asarray(hi, dtype=np.int64) - lo
+    head, head_len = varint_encode_with_lengths(plen)
+    return interleave_pieces(
+        [
+            np.full(plen.size, VINTS_MAGIC, dtype=np.uint8),
+            np.frombuffer(head, dtype=np.uint8),
+            stream[ranges_mask(stream.size, lo, hi)],
+        ],
+        [np.ones(plen.size, dtype=np.int64), head_len, plen],
+    )
 
 
 def decode_column(blob: bytes | np.ndarray, count: int, offset: int = 0) -> np.ndarray:

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wiser_spark.plans.empty import empty_frame
+
 KB4 = 4 * 1024
 EXTENT_BYTES = 1 * 1024 * 1024
 
@@ -255,7 +257,7 @@ def fetch_docs(
     wset = set(wanted) if wanted is not None else None
     if wanted is not None:
         if not wanted:  # explicit empty request: no scan at all
-            return spark.createDataFrame([], "doc_id long, content string")
+            return empty_frame(spark, "doc_id long, content string")
         ext = ext.filter(_fetch_predicate(wanted))
 
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

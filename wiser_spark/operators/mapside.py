@@ -18,6 +18,15 @@ shuffle of the whole build).
 Equivalent to the reference's AddDocument loop (qq_mem_engine.h:298-305)
 run per-partition instead of per-process; differential tests pin the
 results to the shuffle-based path and the oracle.
+
+MEMORY CONTRACT of the shard encoder (``encode_doc_batches``): it builds
+no Python object per term or per row. Every column is a flat buffer
+plus offsets, handed to Arrow zero-copy, and only the few df >= 128
+terms take a per-term path. Its peak therefore follows the shard's
+token count (a fixed number of numpy arrays per occurrence) plus its
+output bytes, and the output leaves in batches of at most
+OUT_BATCH_ROWS rows and about OUT_BATCH_BYTES bytes (pinned by
+test_mapside's high-water-mark test).
 """
 
 from __future__ import annotations
@@ -28,7 +37,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wiser_spark.config import PACK_SIZE, IndexConfig
@@ -37,11 +48,20 @@ from wiser_spark.operators.segments import (
     BLOOM_PREFIX,
     DOCLEN_TERM,
     SEGMENT_SCHEMA,
+    _delta_varint_stream,
     _encode_term_flat,
+    await_all,
     bloom_row,
     decode_doclen_sentinel,
     doclen_sentinel_row,
 )
+
+# The shard encoder's output batches hold at most this many rows and
+# about this many payload bytes (whole terms only), so a shard of any
+# size streams out in bounded pieces and no binary column comes near
+# its int32 offset limit.
+OUT_BATCH_ROWS = 1 << 15
+OUT_BATCH_BYTES = 8 << 20
 
 
 def build_segments_mapside(
@@ -79,7 +99,7 @@ def build_segments_mapside(
     # instead of a 3-key lexsort — fewer memory passes per partition
     parted = parted.sortWithinPartitions("doc_id")
 
-    def encode_partition(arrow_batches) -> Iterator[pd.DataFrame]:
+    def encode_partition(arrow_batches) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         yield from encode_doc_batches(
@@ -87,20 +107,16 @@ def build_segments_mapside(
             content_col, with_blooms, bloom_cfg,
         )
 
-    return parted.mapInArrow(
-        lambda batches: _as_arrow(encode_partition(batches)), SEGMENT_SCHEMA
-    )
+    return parted.mapInArrow(encode_partition, SEGMENT_SCHEMA)
 
 
 def encode_doc_batches(
     arrow_batches, shard_id: int, content_col: str, with_blooms: bool,
     bloom_cfg=None,
-) -> Iterator[pd.DataFrame]:
-    """One shard's Arrow batches -> segment-row DataFrames. Module-level
-    (not a closure) so it can be profiled/driven without a Spark task."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+) -> Iterator[pa.RecordBatch]:
+    """One shard's Arrow batches -> segment-row Arrow batches (sentinel
+    last). Module-level (not a closure) so it can be profiled/driven
+    without a Spark task."""
     from wiser_spark.config import TOKEN_SPLIT_REGEX
 
     # the ENTIRE tokenize+flatten+dictionary-encode pipeline runs in
@@ -161,10 +177,15 @@ def encode_doc_batches(
             .astype(np.int64)
         )
     if not id_chunks or sum(len(c) for c in id_chunks) == 0:
-        yield pd.DataFrame(
-            columns=[f.split()[0] for f in SEGMENT_SCHEMA.split(", ")]
-        )
         return
+    schema = _arrow_segment_schema()
+    sentinel = pa.RecordBatch.from_pylist(
+        [doclen_sentinel_row(
+            shard_id, np.concatenate(id_chunks), np.concatenate(len_chunks)
+        )],
+        schema=schema,
+    )
+    del id_chunks, len_chunks
     # unify per-batch dictionaries into one partition vocabulary
     offsets = np.zeros(len(vocab_chunks), dtype=np.int64)
     sizes = np.array([len(v) for v in vocab_chunks], dtype=np.int64)
@@ -172,72 +193,76 @@ def encode_doc_batches(
     all_vocab = pa.concat_arrays(
         [v.cast(pa.string()) for v in vocab_chunks]
     )
+    del vocab_chunks
     # global codes: re-encode the concatenated vocab, map local->global
     genc = pc.dictionary_encode(all_vocab)
     if isinstance(genc, pa.ChunkedArray):
         genc = genc.combine_chunks()
+    del all_vocab
     local_to_global = genc.indices.to_numpy(zero_copy_only=False).astype(
         np.int64
     )
-    global_vocab = genc.dictionary
-    # sort the vocabulary so segment rows come out in term order —
-    # in Arrow C++ (UTF-8 byte order == code-point order, identical
-    # to a Python-string sort); the ONE Python-string materialization
-    # left is `uniques` itself, which every segment row's term field
-    # and the per-unique-term md5 bloom table need anyway
-    sort_perm = (
-        pc.sort_indices(global_vocab)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
+    # sort the vocabulary so segment rows come out in term order — in
+    # Arrow C++ (UTF-8 byte order == code-point order, identical to a
+    # Python-string sort). Every vocabulary entry occurs, so term t of
+    # the shard is vocab[t]: the term column is this array, sliced
+    sort_perm = pc.sort_indices(genc.dictionary)
+    vocab = genc.dictionary.take(sort_perm)
     rank_of = np.empty(len(sort_perm), dtype=np.int64)
-    rank_of[sort_perm] = np.arange(len(sort_perm))
-    uniques = np.asarray(
-        global_vocab.take(pa.array(sort_perm)).to_pylist(), dtype=object
+    rank_of[sort_perm.to_numpy(zero_copy_only=False)] = np.arange(
+        len(sort_perm)
     )
+    del genc, sort_perm
     codes = np.concatenate(
         [
             rank_of[local_to_global[offsets[i] + code_chunks[i]]]
             for i in range(len(code_chunks))
         ]
     )
+    del code_chunks, local_to_global, rank_of
     docs_rep = np.concatenate(doc_chunks)
     pos_all = np.concatenate(pos_chunks)
     starts_all = np.concatenate(start_chunks)
     ends_all = np.concatenate(end_chunks)
+    del doc_chunks, pos_chunks, start_chunks, end_chunks
     if codes.size == 0:  # docs exist but none tokenized to anything
-        yield pd.DataFrame(
-            [doclen_sentinel_row(shard_id, np.concatenate(id_chunks),
-                                 np.concatenate(len_chunks))]
-        )
+        yield sentinel
         return
-    # input stream is doc-ascending with in-doc position order, so a
-    # single STABLE sort on the term code yields (term, doc, pos)
-    # next-token code per occurrence (stream is doc-contiguous):
-    # feeds the per-posting end blooms (phrase pruning, ref B15/Q8)
-    nxt = np.full(codes.size, -1, dtype=np.int64)
-    prv = np.full(codes.size, -1, dtype=np.int64)
-    same_doc = docs_rep[1:] == docs_rep[:-1]
-    nxt[:-1][same_doc] = codes[1:][same_doc]
-    prv[1:][same_doc] = codes[:-1][same_doc]
+    if with_blooms:
+        # next/previous-token code per occurrence (stream is
+        # doc-contiguous): feeds the per-posting end/begin blooms
+        # (phrase pruning, ref B15/Q8)
+        nxt = np.full(codes.size, -1, dtype=np.int64)
+        prv = np.full(codes.size, -1, dtype=np.int64)
+        same_doc = docs_rep[1:] == docs_rep[:-1]
+        nxt[:-1][same_doc] = codes[1:][same_doc]
+        prv[1:][same_doc] = codes[:-1][same_doc]
+        del same_doc
     # input stream is doc-ascending with in-doc position order, so a
     # single STABLE sort on the term code yields (term, doc, pos)
     order = np.argsort(codes, kind="stable")
-    c, d, p = codes[order], docs_rep[order], pos_all[order]
-    st, en = starts_all[order], ends_all[order]
+    c = codes[order]
+    del codes
+    d = docs_rep[order]
+    del docs_rep
     # posting boundaries: change of (term, doc)
     new_posting = np.empty(len(c), dtype=bool)
     new_posting[0] = True
     np.logical_or(np.diff(c) != 0, np.diff(d) != 0, out=new_posting[1:])
     posting_of = np.cumsum(new_posting) - 1
     tfs_all = np.bincount(posting_of).astype(np.int64)
+    del posting_of
     posting_doc = d[new_posting]
     posting_code = c[new_posting]
+    del c, d
     # term boundaries over postings
-    term_breaks = np.flatnonzero(
-        np.diff(posting_code, prepend=posting_code[0] - 1) != 0
+    term_bounds = np.append(
+        np.flatnonzero(
+            np.diff(posting_code, prepend=posting_code[0] - 1) != 0
+        ),
+        len(posting_code),
     )
-    term_bounds = np.append(term_breaks, len(posting_code))
+    del posting_code
     pos_starts = np.cumsum(tfs_all) - tfs_all
     # per-posting end blooms: OR the next-token masks per posting.
     # SIZED filters (reference libbloom defaults entries=5 ratio=0.001
@@ -252,169 +277,229 @@ def encode_doc_batches(
         )
 
         bp = bloom_cfg or bloom_params()
-        vocab_masks = vocab_bloom_matrix(uniques, bp)
         # row V is an all-zero mask: occurrences with no neighbor
         # (nxt/prv == -1) gather it — one fancy index, no multiply pass
         vm_ext = np.vstack(
-            [vocab_masks, np.zeros((1, bp.nbytes), dtype=np.uint8)]
+            [vocab_bloom_matrix(vocab, bp),
+             np.zeros((1, bp.nbytes), dtype=np.uint8)]
         )
-        zero_row = len(uniques)
         p_starts_idx = np.flatnonzero(new_posting)
-        nxt_sorted = nxt[order]
-        posting_blooms = fold_occurrence_bloom_rows(
-            vm_ext[np.where(nxt_sorted >= 0, nxt_sorted, zero_row)],
-            p_starts_idx,
-        )
+
+        def fold(neighbor):
+            sorted_nb = neighbor[order]
+            return fold_occurrence_bloom_rows(
+                vm_ext[np.where(sorted_nb >= 0, sorted_nb, len(vocab))],
+                p_starts_idx,
+            )
+
         # begin blooms: same fold over the PRECEDING-token masks
         # (reference builds both sides, bloom_filter.h:595-646)
-        prv_sorted = prv[order]
-        posting_blooms_begin = fold_occurrence_bloom_rows(
-            vm_ext[np.where(prv_sorted >= 0, prv_sorted, zero_row)],
-            p_starts_idx,
-        )
+        blooms_end = fold(nxt)
+        del nxt
+        blooms_begin = fold(prv)
+        del prv, vm_ext, p_starts_idx
+    del new_posting
+    p = pos_all[order]
+    del pos_all
+    off_flat = np.empty(2 * p.size, dtype=np.int64)
+    off_flat[0::2] = starts_all[order]
+    del starts_all
+    off_flat[1::2] = ends_all[order]
+    del ends_all, order
     # ---- term encode, VOCABULARY-BATCHED. A real code corpus has
     # millions of distinct terms per shard and almost all of them have
-    # df < PACK_SIZE (pure varint-tail columns, no frames). Encoding
-    # those one Python call at a time was ~200 us/term — the dominant
-    # cost at realistic vocabularies — so every tail column is encoded
-    # in ONE flat varint pass over all terms (delta resets at run
-    # starts) and sliced per term by byte offsets; bloom boxes likewise
-    # come pre-serialized from ONE batch pass (bloom_boxes_encode_batch).
-    # Only the few df >= PACK_SIZE terms (stopword-like) take the
-    # framed/multi-box per-term path. Output rows are BYTE-IDENTICAL to
-    # _encode_term_flat /
-    # bloom_row and keep the same in-shard order (term, end-bloom,
-    # begin-bloom ascending by term; sentinel last) — pinned by
-    # test_mapside byte-identity.
-    from wiser_spark.functions.packing import varint_tail_box
+    # df < PACK_SIZE (pure varint-tail columns, no frames), so every
+    # column is built for ALL terms at once as one flat buffer plus
+    # per-term byte offsets: one delta+varint pass per stream (delta
+    # resets at run starts), tail boxes and bloom boxes spliced in one
+    # vectorized pass, position/offset blobs as zero-copy slices of
+    # their streams. Only the few df >= PACK_SIZE terms (stopword-like)
+    # take the framed/multi-box per-term path. Output rows are
+    # BYTE-IDENTICAL to _encode_term_flat / bloom_row and keep the same
+    # in-shard order (term, end-bloom, begin-bloom ascending by term;
+    # sentinel last) — pinned by test_mapside byte-identity.
+    from wiser_spark.functions.packing import varint_tail_boxes
     from wiser_spark.functions.varint import varint_encode_with_lengths
-    from wiser_spark.operators.segments import _delta_varint_stream
 
     term_lo, term_hi = term_bounds[:-1], term_bounds[1:]
     n_terms = len(term_lo)
-    occ_cum = np.concatenate(([0], np.cumsum(tfs_all)))
-    occ_lo, occ_hi = occ_cum[term_lo], occ_cum[term_hi]
+    df = term_hi - term_lo
+    occ_bounds = np.concatenate(([0], np.cumsum(tfs_all)))[term_bounds]
 
-    def _flat_stream(vals, run_starts):
-        # same encode _encode_term_flat uses (single source of truth for
-        # the byte-identity guarantee); bounds gain the final end offset
+    def term_stream(vals, run_starts, value_bounds):
+        # same encode _encode_term_flat uses (single source of truth
+        # for the byte-identity guarantee) -> (uint8 stream, per-term
+        # byte bounds)
         blob, val_offs = _delta_varint_stream(vals, run_starts)
-        return blob, np.concatenate((val_offs, [len(blob)]))
+        val_offs = np.append(val_offs, len(blob))
+        return np.frombuffer(blob, dtype=np.uint8), val_offs[value_bounds]
 
-    docid_blob_all, docid_b = _flat_stream(posting_doc, term_lo)
-    tf_blob_all, tf_lens = varint_encode_with_lengths(tfs_all)
-    tf_b = np.concatenate(([0], np.cumsum(tf_lens)))
-    pos_blob_all, pos_b = _flat_stream(p, pos_starts)
-    off_flat = np.empty(2 * p.size, dtype=np.int64)
-    off_flat[0::2] = st
-    off_flat[1::2] = en
-    off_blob_all, off_b = _flat_stream(off_flat, 2 * pos_starts)
-    if with_blooms:
-        # bloom boxes, vocabulary-batched: every df<=128 term's box is a
-        # slice of ONE flat buffer (single packbits / single payload
-        # scatter across the whole shard); multi-box terms take the
-        # per-term path below
-        from wiser_spark.functions.bloom import bloom_boxes_encode_batch
-
-        one_box = np.minimum(term_hi, term_lo + PACK_SIZE)
-        be_boxes = bloom_boxes_encode_batch(posting_blooms, term_lo, one_box)
-        bb_boxes = bloom_boxes_encode_batch(
-            posting_blooms_begin, term_lo, one_box
+    def tail_boxes(stream, bounds, rows):
+        return _spread(
+            varint_tail_boxes(stream, bounds[rows], bounds[rows + 1]),
+            rows, n_terms,
         )
 
-    R = 3 if with_blooms else 1
-    n_rows = n_terms * R
-    obj_cols = (
-        "term", "docids_blob", "tfs_blob", "pos_blob", "off_blob",
-        "skip_predocs", "skip_docid_offs", "skip_tf_offs",
-        "skip_pos_offs", "skip_off_offs", "skip_max_tfs",
-    )
-    # per-term max tf in ONE pass (block-max bound source; single-bag
-    # terms need just the term-wide max, framed terms re-derive per bag)
-    term_max_tf = (
-        np.maximum.reduceat(tfs_all, term_lo).tolist() if n_terms else []
-    )
-    col = {k: np.empty(n_rows, dtype=object) for k in obj_cols}
-    df_col = np.empty(n_rows, dtype=np.int64)
-    # plain-python views: scalar indexing of numpy arrays is ~10x slower
-    tl, th = term_lo.tolist(), term_hi.tolist()
-    ol, oh = occ_lo.tolist(), occ_hi.tolist()
-    db, tb, pb, ob = docid_b.tolist(), tf_b.tolist(), pos_b.tolist(), off_b.tolist()
-    code_l = posting_code[term_lo].tolist()
-    names = [uniques[c] for c in code_l]
-    ZERO, EMPTY = [0], []
-    if with_blooms:
-        # bloom rows assembled WHOLESALE: all their columns except the
-        # box blob (a flat-buffer slice per term) are constants, so the
-        # per-term loop below touches only the base row — keeping the
-        # loop's work equal to the no-bloom build
-        for j, (pref, boxes) in enumerate(
-            ((BLOOM_PREFIX, be_boxes), (BLOOM_BEGIN_PREFIX, bb_boxes)),
-            start=1,
-        ):
-            rows = slice(j, n_rows, R)
-            col["term"][rows] = [pref + t for t in names]
-            df_col[rows] = term_hi - term_lo
-            col["tfs_blob"][rows] = boxes
-            col["skip_tf_offs"][rows].fill(ZERO)
-            for k in ("docids_blob", "pos_blob", "off_blob"):
-                col[k][rows].fill(b"")
-            for k in ("skip_predocs", "skip_docid_offs",
-                      "skip_pos_offs", "skip_off_offs", "skip_max_tfs"):
-                col[k][rows].fill(EMPTY)
-    for t in range(n_terms):
-        lo, hi = tl[t], th[t]
-        term = names[t]
-        base = t * R
-        df = hi - lo
-        df_col[base] = df
-        col["term"][base] = term
-        if df < PACK_SIZE:  # pure-tail fast path
-            col["docids_blob"][base] = varint_tail_box(
-                docid_blob_all[db[lo]:db[hi]]
-            )
-            col["tfs_blob"][base] = varint_tail_box(tf_blob_all[tb[lo]:tb[hi]])
-            col["pos_blob"][base] = pos_blob_all[pb[ol[t]]:pb[oh[t]]]
-            col["off_blob"][base] = off_blob_all[ob[2 * ol[t]]:ob[2 * oh[t]]]
-            for k in ("skip_predocs", "skip_docid_offs", "skip_tf_offs",
-                      "skip_pos_offs", "skip_off_offs"):
-                col[k][base] = ZERO
-            col["skip_max_tfs"][base] = [term_max_tf[t]]
-        else:  # framed path (few stopword-scale terms)
-            sl = slice(ol[t], oh[t])
-            flat = p[sl]
-            flat_off = off_flat[2 * ol[t]:2 * oh[t]]
-            r = _encode_term_flat(
-                shard_id, term, posting_doc[lo:hi], tfs_all[lo:hi], flat,
-                flat_off,
-            )
-            for k in ("docids_blob", "tfs_blob", "pos_blob", "off_blob",
-                      "skip_predocs", "skip_docid_offs", "skip_tf_offs",
-                      "skip_pos_offs", "skip_off_offs", "skip_max_tfs"):
-                col[k][base] = r[k]
-            if with_blooms and df > PACK_SIZE:
-                # multi-box term: overwrite the wholesale single-box row
-                for j, blooms in ((1, posting_blooms),
-                                  (2, posting_blooms_begin)):
-                    pref = BLOOM_PREFIX if j == 1 else BLOOM_BEGIN_PREFIX
-                    br = bloom_row(shard_id, term, blooms[lo:hi], prefix=pref)
-                    col["tfs_blob"][base + j] = br["tfs_blob"]
-                    col["skip_tf_offs"][base + j] = br["skip_tf_offs"]
-    main = pd.DataFrame(
-        {"shard_id": np.full(n_rows, shard_id, dtype=np.int64),
-         "df_shard": df_col, **col}
-    )
-    sentinel = pd.DataFrame(
-        [doclen_sentinel_row(
-            shard_id, np.concatenate(id_chunks), np.concatenate(len_chunks)
+    tail = np.flatnonzero(df < PACK_SIZE)
+    framed = np.flatnonzero(df >= PACK_SIZE)
+    docid_stream, docid_bounds = term_stream(posting_doc, term_lo, term_bounds)
+    docids = tail_boxes(docid_stream, docid_bounds, tail)
+    del docid_stream
+    tf_blob, tf_lens = varint_encode_with_lengths(tfs_all)
+    tf_bounds = np.concatenate(([0], np.cumsum(tf_lens)))[term_bounds]
+    tfs = tail_boxes(np.frombuffer(tf_blob, dtype=np.uint8), tf_bounds, tail)
+    del tf_blob, tf_lens
+    pos = term_stream(p, pos_starts, occ_bounds)
+    offs = term_stream(off_flat, 2 * pos_starts, 2 * occ_bounds)
+    max_tf = np.maximum.reduceat(tfs_all, term_lo)
+    # per-term rows of the framed path, keyed by term index: the base
+    # row, then (multi-box terms only) the end- and begin-bloom rows
+    framed_rows: dict[int, list[dict]] = {}
+    for t in framed.tolist():
+        lo, hi = int(term_lo[t]), int(term_hi[t])
+        o_lo, o_hi = int(occ_bounds[t]), int(occ_bounds[t + 1])
+        term = vocab[t].as_py()
+        rows = [_encode_term_flat(
+            shard_id, term, posting_doc[lo:hi], tfs_all[lo:hi],
+            p[o_lo:o_hi], off_flat[2 * o_lo:2 * o_hi],
         )]
+        if with_blooms and hi - lo > PACK_SIZE:
+            rows += [
+                bloom_row(shard_id, term, blooms[lo:hi], prefix=pref)
+                for pref, blooms in ((BLOOM_PREFIX, blooms_end),
+                                     (BLOOM_BEGIN_PREFIX, blooms_begin))
+            ]
+        framed_rows[t] = rows
+    del posting_doc, tfs_all, p, off_flat, pos_starts
+    blobs = [docids, tfs, pos, offs]
+    if with_blooms:
+        from wiser_spark.functions.bloom import bloom_boxes_encode_ranges
+
+        one_box = np.flatnonzero(df <= PACK_SIZE)
+        bloom_boxes = [
+            _spread(
+                bloom_boxes_encode_ranges(
+                    blooms, term_lo[one_box], term_hi[one_box]
+                ),
+                one_box, n_terms,
+            )
+            for blooms in (blooms_end, blooms_begin)
+        ]
+        blobs += bloom_boxes
+        del blooms_end, blooms_begin
+    R = 3 if with_blooms else 1
+    # output batches: whole terms, bounded by rows and by payload bytes
+    term_bytes = sum(np.diff(b[1]) for b in blobs)
+    for t, rows in framed_rows.items():
+        term_bytes[t] += sum(
+            len(r["docids_blob"]) + len(r["tfs_blob"]) for r in rows
+        )
+    cum = np.concatenate(([0], np.cumsum(term_bytes)))
+    del term_bytes
+    t0 = 0
+    while t0 < n_terms:
+        fit = int(np.searchsorted(cum, cum[t0] + OUT_BATCH_BYTES, "right"))
+        t1 = min(n_terms, t0 + OUT_BATCH_ROWS // R, max(t0 + 1, fit - 1))
+        m = t1 - t0
+        terms = vocab.slice(t0, m)
+        consts = {
+            "shard_id": pa.array(np.full(m, shard_id, dtype=np.int32)),
+            "df_shard": pa.array(df[t0:t1].astype(np.int32)),
+        }
+        zero = _lists(np.arange(m + 1), np.zeros(m, dtype=np.int64))
+        parts = [_batch(schema, {
+            **consts,
+            "term": terms,
+            "docids_blob": _binary(docids, t0, t1),
+            "tfs_blob": _binary(tfs, t0, t1),
+            "pos_blob": _binary(pos, t0, t1),
+            "off_blob": _binary(offs, t0, t1),
+            "skip_predocs": zero, "skip_docid_offs": zero,
+            "skip_tf_offs": zero, "skip_pos_offs": zero,
+            "skip_off_offs": zero,
+            "skip_max_tfs": _lists(np.arange(m + 1), max_tf[t0:t1]),
+        })]
+        if with_blooms:
+            empty_bin = _binary(
+                (np.zeros(0, np.uint8), np.zeros(m + 1, np.int64)), 0, m
+            )
+            empty_list = _lists(np.zeros(m + 1), np.zeros(0, np.int64))
+            for pref, boxes in zip((BLOOM_PREFIX, BLOOM_BEGIN_PREFIX),
+                                   bloom_boxes):
+                parts.append(_batch(schema, {
+                    **consts,
+                    "term": pc.binary_join_element_wise(pref, terms, ""),
+                    "tfs_blob": _binary(boxes, t0, t1),
+                    "skip_tf_offs": zero,
+                    **dict.fromkeys(("docids_blob", "pos_blob", "off_blob"),
+                                    empty_bin),
+                    **dict.fromkeys(("skip_predocs", "skip_docid_offs",
+                                     "skip_pos_offs", "skip_off_offs",
+                                     "skip_max_tfs"), empty_list),
+                }))
+        # row u*R + j of the output is term t0+u's base (j=0) or bloom
+        # row: part j's row u, or its framed-path row where one exists
+        perm = (np.arange(R) * m + np.arange(m)[:, None]).astype(np.int64)
+        spliced = []
+        for t in framed[(framed >= t0) & (framed < t1)].tolist():
+            rows = framed_rows.pop(t)
+            perm[t - t0, :len(rows)] = R * m + len(spliced) + np.arange(
+                len(rows)
+            )
+            spliced += rows
+        if spliced:
+            parts.append(pa.RecordBatch.from_pylist(spliced, schema=schema))
+        perm = pa.array(perm.reshape(-1))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.concat_arrays([b.column(i) for b in parts]).take(perm)
+                for i in range(len(schema))
+            ],
+            schema=schema,
+        )
+        t0 = t1
+    yield sentinel
+
+
+
+def _spread(boxes, rows: np.ndarray, n: int):
+    """(buffer, offsets) of values for ``rows`` -> (buffer, offsets)
+    over all ``n`` rows, the others empty."""
+    buf, offs = boxes
+    lens = np.zeros(n, dtype=np.int64)
+    lens[rows] = np.diff(offs)
+    full = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lens, out=full[1:])
+    return buf, full
+
+
+def _binary(blob, t0: int, t1: int) -> pa.Array:
+    """Rows [t0, t1) of a (uint8 buffer, int64 offsets) column as a
+    BinaryArray over the same memory (zero-copy)."""
+    buf, offs = blob
+    o = offs[t0:t1 + 1]
+    if o[-1] - o[0] > np.iinfo(np.int32).max:
+        raise OverflowError("segment rows exceed a binary column's 2 GiB")
+    return pa.Array.from_buffers(
+        pa.binary(), t1 - t0,
+        [None, pa.py_buffer((o - o[0]).astype(np.int32)),
+         pa.py_buffer(buf[o[0]:o[-1]])],
     )
-    yield pd.concat([main, sentinel], ignore_index=True)
+
+
+def _lists(offsets: np.ndarray, values: np.ndarray) -> pa.Array:
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)), pa.array(values)
+    )
+
+
+def _batch(schema, cols: dict) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] for f in schema], schema=schema
+    )
 
 
 def _arrow_segment_schema():
-    import pyarrow as pa
-
     return pa.schema(
         [
             ("shard_id", pa.int32()),
@@ -432,14 +517,6 @@ def _arrow_segment_schema():
             ("skip_max_tfs", pa.list_(pa.int64())),
         ]
     )
-
-
-def _as_arrow(pdf_iter):
-    import pyarrow as pa
-
-    schema = _arrow_segment_schema()  # built worker-side, no session needed
-    for pdf in pdf_iter:
-        yield pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
 
 
 def write_index_mapside(
@@ -498,31 +575,27 @@ def write_index_mapside(
             yield pd.DataFrame({"n": ns, "s": sums})
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_dict = pool.submit(
-            lambda: dict_df.write.mode("overwrite").parquet(
-                f"{index_dir}/dictionary"
-            )
-        )
-        f_sent = pool.submit(
-            lambda: sent.mapInPandas(stats_of, "n long, s long")
-            .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-            .collect()[0]
-        )
-        f_shards = (
+        futures = [
             pool.submit(
+                lambda: dict_df.write.mode("overwrite").parquet(
+                    f"{index_dir}/dictionary"
+                )
+            ),
+            pool.submit(
+                lambda: sent.mapInPandas(stats_of, "n long, s long")
+                .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
+                .collect()[0]
+            ),
+        ]
+        if reuse_partitions:
+            futures.append(pool.submit(
                 lambda: int(
                     written.agg(F.max("shard_id")).collect()[0][0] or 0
                 )
                 + 1
-            )
-            if reuse_partitions
-            else None
-        )
-        f_dict.result()
-        agg = f_sent.result()
-        n_shards_actual = (
-            f_shards.result() if f_shards is not None else config.n_shards
-        )
+            ))
+        _, agg, *max_shard = await_all(futures)
+    n_shards_actual = max_shard[0] if max_shard else config.n_shards
     n_docs = int(agg["n"] or 0)
     avgdl = float(agg["s"]) / n_docs if n_docs else 1.0
     meta = {

@@ -58,6 +58,8 @@ from wiser_spark.functions.varint import (
     varint_encode_with_lengths,
 )
 from wiser_spark.operators.docstats import CorpusStats
+from wiser_spark.operators.topk import check_query_ids
+from wiser_spark.plans.empty import empty_frame
 
 SEGMENT_SCHEMA = (
     "shard_id int, term string, df_shard int, "
@@ -322,6 +324,27 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
     )
 
 
+def await_all(futures, error: Exception | None = None) -> list:
+    """Wait for EVERY future, then return their results in order, or
+    raise the first failure: ``error`` (the caller's own concurrent
+    step) ahead of the futures' in order. Later failures ride along as
+    notes on the raised one, so no failure of a build thread is
+    dropped."""
+    errors = [error] if error is not None else []
+    results = []
+    for f in futures:
+        try:
+            results.append(f.result())
+        except Exception as e:
+            errors.append(e)
+            results.append(None)
+    if errors:
+        for e in errors[1:]:
+            errors[0].add_note(f"concurrent failure: {type(e).__name__}: {e}")
+        raise errors[0]
+    return results
+
+
 def write_index(
     postings: DataFrame,
     docstats: DataFrame,
@@ -363,17 +386,23 @@ def write_index(
             .write.mode("overwrite")
             .parquet(f"{index_dir}/docstats")
         )
-        # segments: already hash-partitioned by shard_id (the groupBy),
-        # rows emitted in term order inside each shard — no extra
-        # shuffle before the write
-        segs.write.mode("overwrite").partitionBy("shard_id").parquet(
-            f"{index_dir}/segments"
-        )
-        dict_df = dictionary_from_segments(
-            spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
-        ).observe(obs, F.count(F.lit(1)).alias("n_terms"))
-        dict_df.write.mode("overwrite").parquet(f"{index_dir}/dictionary")
-        f_stats.result()
+        error = None
+        try:
+            # segments: already hash-partitioned by shard_id (the
+            # groupBy), rows emitted in term order inside each shard —
+            # no extra shuffle before the write
+            segs.write.mode("overwrite").partitionBy("shard_id").parquet(
+                f"{index_dir}/segments"
+            )
+            dict_df = dictionary_from_segments(
+                spark.read.schema(SEGMENT_SCHEMA).parquet(
+                    f"{index_dir}/segments"
+                )
+            ).observe(obs, F.count(F.lit(1)).alias("n_terms"))
+            dict_df.write.mode("overwrite").parquet(f"{index_dir}/dictionary")
+        except Exception as e:
+            error = e
+        await_all([f_stats], error)
     # vocabulary size rides in the metadata so readers can size the
     # driver dictionary cache without a count() job (ADVICE r03)
     n_terms = int(obs.get["n_terms"])
@@ -1428,7 +1457,7 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
     if gens is None:
         return spark.read.schema(SEGMENT_SCHEMA).parquet(base)
     if not gens:
-        return spark.createDataFrame([], SEGMENT_SCHEMA)
+        return empty_frame(spark, SEGMENT_SCHEMA)
     return (
         spark.read.option("basePath", base)
         .schema(SEGMENT_SCHEMA)
@@ -1988,13 +2017,12 @@ class SegmentIndex:
                     "doc_store_dir"
                 )
             out_schema += ", snippet string"
-        empty = spark.createDataFrame([], out_schema)
         per_shard = self._per_shard_topk(
             [(0, terms, is_phrase)], k,
             offs_qids=frozenset([0]) if return_snippets else frozenset(),
         )
         if per_shard is None:
-            return empty
+            return empty_frame(spark, out_schema)
         top = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         from pyspark.sql import Window
 
@@ -2081,7 +2109,9 @@ class SegmentIndex:
         kernel, phrase queries position-filtered), with content from
         ``docs`` (lake table, broadcast join over <= k*|log| winner
         rows) or ``doc_store_dir`` (chunked-store point fetch of the
-        distinct winner ids — the serving flow)."""
+        distinct winner ids — the serving flow). A repeated query_id
+        raises ValueError."""
+        check_query_ids(queries)
         out_schema = "query_id int, rank int, doc_id long, score double"
         if return_snippets:
             if docs is None and doc_store_dir is None:
@@ -2104,7 +2134,7 @@ class SegmentIndex:
         # first-run at 50k docs; warm 0.71 -> 0.67).
         per_shard = self._per_shard_topk(queries, k, offs_qids=offs_qids)
         if per_shard is None:
-            return self.spark.createDataFrame([], out_schema)
+            return empty_frame(self.spark, out_schema)
         from pyspark.sql import Window
 
         # <= k rows per (query, shard) reach this window — bounded input

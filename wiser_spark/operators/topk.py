@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from wiser_spark.config import BM25Params
 from wiser_spark.operators.docstats import CorpusStats
+from wiser_spark.plans.empty import empty_frame
 
 
 def _idf_col(n_docs: int, df_col):
@@ -88,7 +89,7 @@ def bm25_topk(
     spark = postings.sparkSession
     out_schema = "rank int, doc_id long, score double"
     if not terms:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     n = len(terms)
     uniq = sorted(set(terms))
 
@@ -197,6 +198,18 @@ def _phrase_gate():
     return F.size(inter) > 0
 
 
+def check_query_ids(queries) -> None:
+    """Reject a query log whose (query_id, terms, is_phrase) entries
+    repeat a query_id: answers are keyed by query_id, so two queries
+    under one id would merge their rows into one garbled answer."""
+    seen: set[int] = set()
+    for q in queries:
+        qid = int(q[0])
+        if qid in seen:
+            raise ValueError(f"duplicate query_id {qid} in query log")
+        seen.add(qid)
+
+
 def bm25_topk_batch(
     postings: DataFrame,
     docstats: DataFrame,
@@ -216,7 +229,8 @@ def bm25_topk_batch(
     former per-shape N-way self-join chains and their union are gone:
     guide §2.3/§2.4). The per-query top-k is a two-phase salted window
     (skew-safe). Scores fold in term order — bit-identical to
-    ``bm25_topk``."""
+    ``bm25_topk``. A repeated query_id raises ValueError."""
+    check_query_ids(queries)
     params = params or BM25Params()
     spark = postings.sparkSession
     from pyspark.sql import Window
@@ -228,7 +242,7 @@ def bm25_topk_batch(
         if terms
     ]
     if not live:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
 
     # Duplicate SHAPES in the log ((terms, is_phrase) equal) are pure
     # repeats of the same deterministic computation: answer each shape
