@@ -17,9 +17,11 @@ Two modes:
                    one pass, sentinel doc lengths, offsets + both bloom
                    sides; docIDs assigned deterministically if absent.
   --resumable-...  the staged checkpointed pipeline (IndexBuildPipeline):
-                   every stage records per-partition lineage + rows/bytes
-                   in manifest.json; a killed build resumes where it
-                   stopped (fingerprints chain over input file lineage).
+                   the same sentinel doc-length layout, without phrase
+                   blooms; every stage records per-partition lineage +
+                   rows/bytes in manifest.json; a killed build resumes
+                   where it stopped (fingerprints chain over input file
+                   lineage).
 
 Query the result with wiser_spark.operators.segments.SegmentIndex.
 """
@@ -45,8 +47,9 @@ def main() -> None:
                     help="total order for docID assignment when the "
                          "source has no doc_id column")
     ap.add_argument("--resumable-work-dir", default="",
-                    help="use the staged checkpointed pipeline instead "
-                         "of the one-pass map-side build")
+                    help="use the staged checkpointed pipeline "
+                         "(shuffle build, no phrase blooms) instead of "
+                         "the one-pass map-side build")
     ap.add_argument("--batches", type=int, default=0,
                     help=">0: RESUMABLE map-side build — the corpus "
                          "splits into this many deterministic md5 "

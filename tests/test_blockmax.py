@@ -20,11 +20,24 @@ K1 = PARAMS.k1
 IDF = 1.37  # arbitrary positive idf for the unit tests
 
 
+def _term_rows(postings):
+    """Segment rows of a hand-made one-shard postings table (doc
+    lengths: the token counts), sentinel dropped."""
+    from pyspark.sql import functions as F
+
+    docstats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    return [
+        r.asDict()
+        for r in build_segments(postings, docstats, n_shards=1).collect()
+        if r["term"] != ""
+    ]
+
+
 def _mk_row(spark, tfs_by_doc):
     """One term, docIDs 0..n-1 with the given tfs -> one segment row."""
     rows = [("t", i, int(tf)) for i, tf in enumerate(tfs_by_doc)]
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    return build_segments(postings, n_shards=1).collect()[0].asDict()
+    return _term_rows(postings)[0]
 
 
 def _full_topk(seg, k, cache, codes_for):
@@ -168,9 +181,7 @@ def _mk_term_row(spark, term, doc_tfs):
     """One term over explicit (doc_id, tf) pairs -> one segment row."""
     rows = [(term, int(d), int(tf)) for d, tf in doc_tfs]
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    return build_segments(postings, n_shards=1).filter(
-        f"term = '{term}'"
-    ).collect()[0].asDict()
+    return _term_rows(postings)[0]
 
 
 def _full_conj_topk(segs, terms, k, idfs, cache, codes_for):
@@ -478,10 +489,9 @@ def _mk_pos_rows(spark, contents):
     docs = spark.createDataFrame(
         list(enumerate(contents)), "doc_id long, content string"
     )
-    segs = build_segments(build_postings(docs), n_shards=1).collect()
     out: dict = {}
-    for r in segs:
-        out.setdefault(r["term"], []).append(r.asDict())
+    for r in _term_rows(build_postings(docs)):
+        out.setdefault(r["term"], []).append(r)
     return out
 
 
@@ -582,8 +592,8 @@ def _mk_pos_rows_sub(spark, contents, lo, hi):
         "doc_id long, content string",
     )
     out: dict = {}
-    for r in build_segments(build_postings(docs), n_shards=1).collect():
-        out.setdefault(r["term"], []).append(r.asDict())
+    for r in _term_rows(build_postings(docs)):
+        out.setdefault(r["term"], []).append(r)
     return out
 
 

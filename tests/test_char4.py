@@ -70,3 +70,22 @@ def test_decode_table_monotone_on_encodable():
     vals = np.arange(0, 1 << 16)
     dec = table[uint_to_char4(vals)]
     assert np.all(np.diff(dec) >= 0)
+
+
+def test_jvm_encode_matches_numpy(spark):
+    """The Catalyst Char4 encode (docstats' doclen_char, which v1
+    indexes scored with) equals uint_to_char4 (the sentinel rows' byte)
+    over every 16-bit length and the spec values up to 2^31 - 1."""
+    from pyspark.sql import functions as F
+
+    from wiser_spark.operators.docstats import char4_encode_col
+
+    extra = [1 << 20, (1 << 24) + 1, (1 << 29) - 1, 1 << 29, (1 << 31) - 1]
+    vals = np.concatenate([np.arange(0, (1 << 16) + 1), extra])
+    df = spark.createDataFrame([(int(v),) for v in vals], "v long")
+    got = {
+        r["v"]: r["c"]
+        for r in df.select("v", char4_encode_col(F.col("v")).alias("c")).collect()
+    }
+    want = uint_to_char4(vals)
+    assert [got[int(v)] for v in vals] == want.astype(int).tolist()

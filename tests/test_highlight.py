@@ -46,7 +46,7 @@ def test_index_snippets_phrase_filters_offsets(spark, tmp_path):
 
 
 def test_snippets_fallback_without_offsets_column(spark, tmp_path):
-    """A v1 index (built from positions-only postings, empty off_blob)
+    """An index written from positions-only postings (empty off_blob)
     must still serve snippets — via re-tokenization fallback, not a
     decoder crash."""
     from wiser_spark.config import BM25Params, IndexConfig

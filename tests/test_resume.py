@@ -100,6 +100,31 @@ def test_changed_input_invalidates_chain(spark, work_dir, tmp_path):
     assert _mtimes(d, "docs") != before  # fingerprint change forces rebuild
 
 
+def test_changed_docstats_reruns_segments(spark, work_dir, tmp_path):
+    """The segments stage writes each shard's doc-length sentinel from
+    the docstats output, so a changed docstats fingerprint re-runs it
+    (a work dir whose segments predate the sentinels is rebuilt too);
+    upstream postings stay skipped and the answers are unchanged."""
+    d = str(tmp_path / "p3")
+    shutil.copytree(work_dir, d)
+    want = _results(spark, d)
+    mpath = os.path.join(d, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["docstats"]["output_fingerprint"] = "changed-docstats"
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    before_postings = _mtimes(d, "postings")
+    before_segments = _mtimes(d, "segments")
+    IndexBuildPipeline(
+        spark, corpus_df(spark, 80), d,
+        IndexConfig(bm25=PARAMS, n_shards=3), source_fingerprint="corpus80-v1",
+    ).run()
+    assert _mtimes(d, "postings") == before_postings
+    assert _mtimes(d, "segments") != before_segments
+    assert _results(spark, d) == want
+
+
 # ---------------------------------------------------- batched map-side build
 def test_batched_mapside_build_resumable_and_rank_identical(
     spark, tmp_path, monkeypatch

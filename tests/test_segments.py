@@ -1,6 +1,9 @@
 """Segment format: round-trip, skip-offset partial decode, and the
 segment-backed query path vs the oracle (the vacuum-vs-qqmem analogue)."""
 
+import json
+import os
+
 import numpy as np
 import pytest
 
@@ -13,8 +16,10 @@ from wiser_spark.operators.postings import (
     build_postings,
 )
 from wiser_spark.operators.segments import (
+    DOCLEN_TERM,
     SegmentIndex,
     build_segments,
+    decode_doclen_sentinel,
     decode_segment_row,
     write_index,
 )
@@ -52,7 +57,7 @@ def test_segment_roundtrip_vs_postings(spark, oracle, index_dir):
     for term, d, tf, pos in oracle.postings():
         want.setdefault((d % 4, term), []).append((d, tf, tuple(pos)))
     got = {}
-    for r in segs.collect():
+    for r in segs.filter(f"term != '{DOCLEN_TERM}'").collect():
         row = r.asDict()
         doc_ids, tfs, positions = decode_segment_row(row, with_positions=True)
         got[(row["shard_id"], row["term"])] = [
@@ -65,16 +70,96 @@ def test_segment_roundtrip_vs_postings(spark, oracle, index_dir):
     assert got == {k: sorted(v) for k, v in want.items()}
 
 
-def test_write_index_surfaces_every_thread_failure(spark, tmp_path):
-    """write_index writes docstats on a pool thread beside the segment
-    write: when both fail, the segment write's error is raised and the
-    docstats failure rides along as a note instead of being dropped."""
-    postings = spark.createDataFrame([("a", 0)], "term string, doc_id long")
-    docstats = spark.createDataFrame([(0, 3)], "doc_id long, doclen int")
-    with pytest.raises(Exception) as exc:  # postings lack tf
-        write_index(postings, docstats, None, None, str(tmp_path / "idx"),
-                    IndexConfig(bm25=PARAMS, n_shards=2))
-    assert "doclen_char" in " ".join(getattr(exc.value, "__notes__", []))
+def test_write_index_sentinel_layout(spark, oracle, index_dir):
+    """write_index keeps doc lengths in the segment table: one sentinel
+    row per shard, last in the shard's single file, holding that
+    shard's docs with their true lengths and Char4 bytes; no docstats
+    table and no blooms."""
+    with open(f"{index_dir}/stats.json") as f:
+        meta = json.load(f)
+    assert meta["doclen_sentinel"] is True and "bloom" not in meta
+    assert not os.path.exists(f"{index_dir}/docstats")
+    for shard in range(4):
+        sdir = f"{index_dir}/segments/shard_id={shard}"
+        files = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
+        assert len(files) == 1
+        terms = spark.read.parquet(f"{sdir}/{files[0]}").select(
+            "term"
+        ).collect()
+        assert terms[-1]["term"] == DOCLEN_TERM
+    sent = spark.read.parquet(f"{index_dir}/segments").filter(
+        f"term = '{DOCLEN_TERM}'"
+    ).collect()
+    assert sorted(r["shard_id"] for r in sent) == [0, 1, 2, 3]
+    seen = []
+    for r in sent:
+        ids, chars, lens = decode_doclen_sentinel(r.asDict())
+        assert np.all(ids % 4 == r["shard_id"])
+        assert lens.tolist() == [oracle.doclens[i] for i in ids]
+        assert chars.tolist() == [oracle.doclen_chars[i] for i in ids]
+        seen.extend(ids.tolist())
+    assert sorted(seen) == list(range(N_DOCS))
+
+
+def test_write_index_sentinels_match_mapside(spark, tmp_path):
+    """The shuffle writer and the map-side writer emit byte-identical
+    sentinel rows for the same doc_id-bearing docs and shard layout
+    (the map-side input partitioned by doc_id % n_shards)."""
+    from wiser_spark.operators.mapside import write_index_mapside
+
+    n = 3
+    cfg = IndexConfig(bm25=PARAMS, n_shards=n)
+    docs = assign_doc_ids(corpus_df(spark, 70), n_partitions=2).select(
+        "doc_id", "content"
+    )
+    postings = build_postings(docs)
+    docstats = build_docstats(docs)
+    write_index(postings, docstats, None, corpus_stats(docstats),
+                str(tmp_path / "shuffle"), cfg)
+    by_mod = spark.createDataFrame(
+        docs.rdd.keyBy(lambda r: r["doc_id"] % n)
+        .partitionBy(n, lambda k: k).values(),
+        "doc_id long, content string",
+    )
+    write_index_mapside(by_mod, str(tmp_path / "mapside"), cfg,
+                        reuse_partitions=True)
+
+    def sentinels(d):
+        rows = spark.read.parquet(f"{d}/segments").filter(
+            f"term = '{DOCLEN_TERM}'"
+        ).collect()
+        return {r["shard_id"]: r.asDict() for r in rows}
+
+    a, b = sentinels(tmp_path / "shuffle"), sentinels(tmp_path / "mapside")
+    assert sorted(a) == list(range(n)) and a == b
+
+
+def test_close_releases_caches(spark, index_dir):
+    """close() unpersists the dictionary and a serving-cached segments
+    frame; the context manager closes on exit."""
+    idx = SegmentIndex(spark, index_dir)
+    idx.segments = idx.segments.cache()
+    assert idx.dictionary.is_cached and idx.segments.is_cached
+    idx.close()
+    assert not idx.dictionary.is_cached and not idx.segments.is_cached
+    with SegmentIndex(spark, index_dir) as idx2:
+        assert idx2.dictionary.is_cached
+        assert idx2.search(["return"], k=3).count() == 3
+    assert not idx2.dictionary.is_cached and not idx2.segments.is_cached
+
+
+def test_index_without_sentinels_refused(spark, tmp_path):
+    """A stats.json without doclen_sentinel names an index from a
+    removed v1 writer (doc lengths in a separate docstats table): the
+    reader refuses it instead of scoring without lengths."""
+    d = tmp_path / "v1"
+    d.mkdir()
+    (d / "stats.json").write_text(json.dumps({
+        "n_docs": 1, "avgdl": 1.0, "n_shards": 1, "k1": 1.2, "b": 0.75,
+        "format": "wiser-spark-segment-v1",
+    }))
+    with pytest.raises(ValueError, match="rebuilt"):
+        SegmentIndex(spark, str(d))
 
 
 def test_segment_offsets_roundtrip(spark):
@@ -109,16 +194,28 @@ def test_segment_offsets_roundtrip(spark):
 
     mapside = build_segments_mapside(docs, n_shards=2).collect()
     shuffle = build_segments(
-        build_postings_arrow(docs, with_offsets=True), n_shards=2
+        build_postings_arrow(docs, with_offsets=True), build_docstats(docs),
+        n_shards=2,
     ).collect()
     assert check(mapside) == check(shuffle) > 1000
+
+
+def _term_row(postings):
+    """The segment row of a one-term, one-shard hand-made postings
+    table (doc lengths: the token counts)."""
+    from pyspark.sql import functions as F
+
+    docstats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    return build_segments(postings, docstats, n_shards=1).filter(
+        f"term != '{DOCLEN_TERM}'"
+    ).collect()[0].asDict()
 
 
 def test_skip_entries_partial_decode(spark):
     """Skip rows every 128 postings allow decoding from a bag boundary."""
     rows = [("t", i * 3, 1 + (i % 5)) for i in range(400)]  # one term, 400 docs
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     assert len(seg["skip_predocs"]) == 4  # ceil(400/128)
     assert seg["skip_predocs"][0] == 0
     assert seg["skip_predocs"][1] == 127 * 3  # docID preceding bag 1
@@ -138,7 +235,7 @@ def test_selective_decode_reads_only_needed_bags(spark):
 
     rows = [("t", i * 3, 1 + (i % 5)) for i in range(700)]  # 6 bags
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     full_ids, full_tfs, _ = decode_segment_row(seg)
     # candidates: a few real docIDs in bags 0 and 4, plus a bag-boundary
     # docID (== skip_predocs[b], the LAST doc of the previous bag) and
@@ -209,7 +306,7 @@ def test_bag_cache_shares_decodes_across_queries(spark):
 
     rows = [("t", i * 2, 1 + (i % 7)) for i in range(700)]  # 6 bags
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     full_ids, full_tfs, _ = decode_segment_row(seg)
     cache: dict = {}
     cand1 = np.array([0, 2 * 150], dtype=np.int64)         # bags 0 and 1
@@ -320,10 +417,6 @@ def test_warmup_and_jobless_dictionary_cache(spark, index_dir):
     assert "n_terms" in idx.meta and idx.meta["n_terms"] > 0
     assert idx.warmup() is idx and idx._dict_mem is not None
     assert len(idx._dict_mem) == idx.meta["n_terms"]
-    # let the load-time doclens prefetch job finish first — it is a
-    # background job from __init__, not a lookup cost (r06 second pass)
-    if idx._doclens_prefetch_thread is not None:
-        idx._doclens_prefetch_thread.join(timeout=60)
     # jobless from here: lookups hit the driver dict
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
@@ -462,10 +555,6 @@ def test_overcap_lookup_memoized_jobless(spark, index_dir):
     from the per-process memo with ZERO Spark jobs (r06, VERDICT 7)."""
     idx = SegmentIndex(spark, index_dir)
     idx.DICT_DRIVER_CACHE_MAX = 0  # force the over-cap path
-    # let the load-time doclens prefetch job finish — a background job
-    # from __init__, not a lookup cost (r06 second pass)
-    if idx._doclens_prefetch_thread is not None:
-        idx._doclens_prefetch_thread.join(timeout=60)
     first = idx._dict_lookup(["return", "zz_never_there_zz"])
     assert "return" in first and "zz_never_there_zz" not in first
     tracker = spark.sparkContext.statusTracker()
@@ -480,24 +569,3 @@ def test_overcap_lookup_memoized_jobless(spark, index_dir):
     assert mid > after
     idx._dict_lookup(["import", "return"])
     assert len(tracker.getJobIdsForGroup(None) or []) == mid
-
-
-def test_doclens_prefetch_fills_in_background(spark, index_dir):
-    """v1 indexes prefetch the shard-keyed doc-length cache at load
-    (engine-load state, like the dictionary): after the background
-    thread completes, the cache exists without any query having run —
-    and a query then returns the same rows as a fresh, non-prefetched
-    path would."""
-    idx = SegmentIndex(spark, index_dir)
-    assert idx._doclens_prefetch_thread is not None
-    idx._doclens_prefetch_thread.join(timeout=120)
-    assert idx._doclens is not None
-    got = idx.search(["return", "import"], k=5).collect()
-    # same index, prefetch bypassed (fresh instance, thread joined then
-    # cache dropped so the query rebuilds it inline)
-    idx2 = SegmentIndex(spark, index_dir)
-    if idx2._doclens_prefetch_thread is not None:
-        idx2._doclens_prefetch_thread.join(timeout=120)
-    idx2._doclens = None
-    want = idx2.search(["return", "import"], k=5).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]

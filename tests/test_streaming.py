@@ -6,13 +6,27 @@ import os
 import pytest
 
 from wiser_spark.config import BM25Params, IndexConfig
-from wiser_spark.operators.segments import SegmentIndex
+from wiser_spark.operators.segments import (
+    DOCLEN_TERM,
+    SegmentIndex,
+    decode_doclen_sentinel,
+    read_segments,
+)
 from wiser_spark.oracle import OracleEngine
 from wiser_spark.sources.corpus import make_corpus
 from wiser_spark.streaming.incremental import start_incremental_index
 
 PARAMS = BM25Params(1.2, 0.75)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
+
+
+def _sentinel_doc_ids(spark, d):
+    """Every doc id of the live generations, read from the sentinel
+    doc-length rows."""
+    rows = read_segments(spark, d).filter(f"term = '{DOCLEN_TERM}'").collect()
+    return sorted(
+        i for r in rows for i in decode_doclen_sentinel(r.asDict())[0].tolist()
+    )
 
 
 @pytest.fixture(scope="module")
@@ -49,6 +63,8 @@ def test_stream_stats_match_batch(spark, streamed, oracle):
     idx = SegmentIndex(spark, streamed[0])
     assert idx.stats.n_docs == 90
     assert idx.stats.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
+    assert not os.path.exists(f"{streamed[0]}/docstats")
+    assert _sentinel_doc_ids(spark, streamed[0]) == list(range(90))
     # two generations actually present (exactly-once, no reprocessing)
     gens = {
         r["generation"]
@@ -92,16 +108,11 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     d = str(tmp_path / "idx")
     ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2))
     ix.process_batch(df, 0)
-    n1 = spark.read.parquet(f"{d}/docstats").count()
-    ids1 = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect()
-    )
+    ids1 = _sentinel_doc_ids(spark, d)
     ix.process_batch(df, 0)  # replay
-    assert spark.read.parquet(f"{d}/docstats").count() == n1 == 30
+    assert _sentinel_doc_ids(spark, d) == ids1
     ix.process_batch(spark.createDataFrame(make_corpus(40)[30:], SCHEMA), 1)
-    ids2 = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect()
-    )
+    ids2 = _sentinel_doc_ids(spark, d)
     # dense continuation: batch 1 starts exactly where batch 0 ended
     assert ids2 == list(range(40)) and ids1 == list(range(30))
     idx = SegmentIndex(spark, d)
@@ -126,11 +137,12 @@ def test_staging_leftover_replaced_on_retry(spark, tmp_path):
     # simulate the crash: generation published but commit record lost
     os.remove(f"{d}/commits.json")
     ix.process_batch(df, 0)  # retry
+    eng = OracleEngine(PARAMS)
+    for r in rows:
+        eng.add_document(r["content"])
     with open(f"{d}/commits.json") as f:
-        assert json.load(f) == {"0": [0, 20]}
-    assert spark.read.parquet(f"{d}/docstats").count() == 20
-    got = sorted(r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect())
-    assert got == list(range(20))
+        assert json.load(f) == {"0": [0, 20, sum(eng.doclens)]}
+    assert _sentinel_doc_ids(spark, d) == list(range(20))
 
 
 @pytest.fixture(scope="module")
@@ -155,7 +167,7 @@ def test_stream_v2_multigeneration_queries(spark, streamed_v2, oracle):
     idx = SegmentIndex(spark, streamed_v2)
     assert idx.stats.n_docs == 90
     assert idx.stats.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
-    assert idx.has_sentinel and idx.bloom_cfg is not None
+    assert idx.bloom_cfg is not None
     for terms, ph in [(["return"], False), (["return", "import"], False),
                       (["if", "else"], True)]:
         got = idx.search(terms, k=10, is_phrase=ph).collect()
@@ -223,9 +235,10 @@ def test_stream_query_rank_identical(spark, streamed, oracle, terms, is_phrase):
 
 
 def test_resume_with_other_format_refuses(tmp_path):
-    """Resuming an existing index with the OTHER fmt would corrupt it
-    (v1 generations carry no sentinels / no lensum in the commit log);
-    the constructor must refuse loudly."""
+    """Resuming an index of another format would corrupt it (v1
+    generations carry no sentinels / no lensum in the commit log); the
+    constructor must refuse loudly — and the v1 streaming mode itself
+    is gone."""
     import json
 
     from wiser_spark.streaming.incremental import IncrementalIndexer
@@ -234,14 +247,18 @@ def test_resume_with_other_format_refuses(tmp_path):
     os.makedirs(d)
     with open(f"{d}/stats.json", "w") as f:
         json.dump({"format": "wiser-spark-segment-v1"}, f)
-    IncrementalIndexer(d, fmt="v1")  # same format: fine
+    with pytest.raises(ValueError, match="cannot resume"):
+        IncrementalIndexer(d)
     with pytest.raises(ValueError, match="cannot resume"):
         IncrementalIndexer(d, fmt="v2")
     with open(f"{d}/stats.json", "w") as f:
         json.dump({"format": "wiser-spark-segment-v2-mapside"}, f)
+    IncrementalIndexer(d)
     IncrementalIndexer(d, fmt="v2")
-    with pytest.raises(ValueError, match="cannot resume"):
+    with pytest.raises(ValueError, match="unknown streaming index format"):
         IncrementalIndexer(d, fmt="v1")
+    with pytest.raises(ValueError, match="unknown streaming index format"):
+        IncrementalIndexer(str(tmp_path / "fresh"), fmt="v1")
 
 
 def test_auto_compaction_tiered_trigger(spark, tmp_path, oracle,

@@ -32,8 +32,9 @@ row's skip column — the analogue of the reference's BloomSkipList
 (``flash_containers.h:616-646``).
 
 The legacy 64-bit/k=2 single-word helpers (token_bloom_bits et al.)
-remain for indexes written before the sized format and for the
-prune-rate comparison test.
+are read by no index any more: no writer emits that format. They remain
+only as the baseline that test_sized_blooms_prune_at_least_as_much_as_
+legacy measures the sized filters against.
 """
 
 from __future__ import annotations

@@ -8,9 +8,10 @@ the distributed analogue of the reference's two-pass build,
   postings   tokenize + explode + groupBy(term, doc_id)
   docstats   doc lengths (+ lossy byte) + sha256 invariant
   dictionary term -> global df
-  segments   shard + encode posting blobs (the "merge" shuffle: the
-             reference's single-node qq->vacuum conversion becomes a
-             repartition by (shard, term) + partition-local encode)
+  segments   shard + encode posting blobs, each shard ending in its
+             doc-length sentinel row from docstats (the "merge" shuffle:
+             the reference's single-node qq->vacuum conversion becomes a
+             repartition by shard + partition-local encode)
 
 Re-running skips every stage whose input fingerprint is unchanged, so a
 killed build resumes where it stopped. Fingerprints chain: stage N's
@@ -151,13 +152,14 @@ class IndexBuildPipeline:
         )
 
         def write_segments(d):
-            build_segments(postings, cfg.n_shards).write.mode(
+            build_segments(postings, docstats, cfg.n_shards).write.mode(
                 "overwrite"
             ).partitionBy("shard_id").parquet(d)
 
+        # the sentinels come from docstats, so its output chains in too
         self._run_stage(
             "segments",
-            fingerprint("segments", fp_post, cfg.n_shards),
+            fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
             write_segments,
         )
 
@@ -166,11 +168,11 @@ class IndexBuildPipeline:
         meta = {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
             "n_shards": cfg.n_shards, "k1": cfg.bm25.k1, "b": cfg.bm25.b,
-            "format": "wiser-spark-segment-v1",
+            "format": "wiser-spark-segment-v2",
+            "doclen_sentinel": True,
         }
         with open(os.path.join(self.work_dir, "stats.json"), "w") as f:
             json.dump(meta, f, indent=1)
-        _ = fp_stats
         return self.manifest
 
 
@@ -197,7 +199,7 @@ def build_index_mapside_batched(
     """Resumable BATCH build on the zero-shuffle map-side encoder — the
     north rule's "resumable from checkpoint with per-partition lineage
     + metrics" for the scale path (plans.IndexBuildPipeline covers the
-    v1 relational path).
+    shuffle-built path).
 
     The corpus splits into ``n_batches`` deterministic md5 slices; each
     slice goes through the streaming sink's exactly-once commit

@@ -407,10 +407,7 @@ class SearchServer:
         if old.segments.is_cached:
             new.segments = new.segments.cache()
         self.index = new.warmup()
-        old.segments.unpersist(blocking=False)
-        old.dictionary.unpersist(blocking=False)
-        if old.docstats is not None:
-            old.docstats.unpersist(blocking=False)
+        old.close()
         return f"{n} docs committed"
 
     # -- lifecycle -------------------------------------------------------
