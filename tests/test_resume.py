@@ -36,6 +36,33 @@ def work_dir(spark, tmp_path_factory):
     return d
 
 
+def test_pipeline_dictionary_matches_write_index(spark, work_dir, tmp_path):
+    """The pipeline's dictionary is write_index's for the same postings
+    and n_shards, prefetch fields included, and stats.json records the
+    vocabulary size."""
+    from wiser_spark.operators.docstats import corpus_stats
+    from wiser_spark.operators.postings import build_dictionary
+    from wiser_spark.operators.segments import write_index
+
+    def read(stage):
+        return spark.read.parquet(os.path.join(work_dir, stage))
+
+    d = str(tmp_path / "write_index")
+    write_index(
+        read("postings"), read("docstats"), build_dictionary(read("postings")),
+        corpus_stats(read("docstats")), d,
+        IndexConfig(bm25=PARAMS, n_shards=3),
+    )
+    got = sorted(map(tuple, read("dictionary").collect()))
+    want = sorted(map(tuple, spark.read.parquet(f"{d}/dictionary").collect()))
+    assert got == want
+    assert read("dictionary").columns == [
+        "term", "df", "bytes_docid_tf", "prefetch_pages"
+    ]
+    with open(os.path.join(work_dir, "stats.json")) as f:
+        assert json.load(f)["n_terms"] == len(got)
+
+
 def _results(spark, work_dir):
     idx = SegmentIndex(spark, work_dir)
     return [

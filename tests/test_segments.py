@@ -151,7 +151,10 @@ def test_close_releases_caches(spark, index_dir):
 def test_index_without_sentinels_refused(spark, tmp_path):
     """A stats.json without doclen_sentinel names an index from a
     removed v1 writer (doc lengths in a separate docstats table): the
-    reader refuses it instead of scoring without lengths."""
+    reader refuses it instead of scoring without lengths, and
+    compaction instead of merging it into an index nobody can open."""
+    from wiser_spark.operators.segments import compact_index
+
     d = tmp_path / "v1"
     d.mkdir()
     (d / "stats.json").write_text(json.dumps({
@@ -160,6 +163,65 @@ def test_index_without_sentinels_refused(spark, tmp_path):
     }))
     with pytest.raises(ValueError, match="rebuilt"):
         SegmentIndex(spark, str(d))
+    with pytest.raises(ValueError, match="rebuilt"):
+        compact_index(spark, str(d), str(tmp_path / "out"))
+
+
+@pytest.mark.parametrize("flavor", ["offsets", "positions", "neither"])
+def test_build_segments_byte_identical_to_per_term_encode(spark, flavor):
+    """build_segments rows equal the per-term encoder's (term order,
+    one _encode_term_flat row per term) followed by the sentinel, for
+    postings with positions and offsets, positions only, and neither;
+    the corpus has terms on both sides of the framed-path df cut."""
+    from wiser_spark.operators.postings import build_postings_arrow
+    from wiser_spark.operators.segments import (
+        _encode_term_flat,
+        doclen_sentinel_row,
+    )
+
+    n_shards = 2
+    docs = assign_doc_ids(corpus_df(spark, 300), n_partitions=2).select(
+        "doc_id", "content"
+    )
+    postings = {
+        "offsets": build_postings_arrow(docs, with_offsets=True),
+        "positions": build_postings(docs),
+        "neither": build_postings(docs, with_positions=False),
+    }[flavor]
+    docstats = build_docstats(docs)
+    got: dict[int, list[dict]] = {}  # per shard, in emitted order
+    for r in build_segments(postings, docstats, n_shards).collect():
+        got.setdefault(r["shard_id"], []).append(r.asDict())
+
+    per_term: dict[tuple[int, str], list] = {}
+    for r in postings.collect():
+        per_term.setdefault(
+            (r["doc_id"] % n_shards, r["term"]), []
+        ).append(r.asDict())
+    lens = {r["doc_id"]: r["doclen"] for r in docstats.collect()}
+
+    def flat(ps, col):
+        if col not in ps[0]:
+            return None
+        return np.array([v for r in ps for v in r[col]], dtype=np.int64)
+
+    want: dict[int, list[dict]] = {}
+    for (shard, term), ps in sorted(per_term.items()):
+        ps.sort(key=lambda r: r["doc_id"])
+        want.setdefault(shard, []).append(_encode_term_flat(
+            shard, term,
+            np.array([r["doc_id"] for r in ps], dtype=np.int64),
+            np.array([r["tf"] for r in ps], dtype=np.int64),
+            flat(ps, "positions"), flat(ps, "offsets"),
+        ))
+    for shard in want:
+        ids = sorted(d for d in lens if d % n_shards == shard)
+        want[shard].append(
+            doclen_sentinel_row(shard, ids, [lens[d] for d in ids])
+        )
+    assert got == want
+    dfs = [r["df_shard"] for rows in got.values() for r in rows[:-1]]
+    assert max(dfs) >= 128 > min(dfs)
 
 
 def test_segment_offsets_roundtrip(spark):
@@ -469,40 +531,6 @@ def test_segment_search_rank_identical_to_oracle(
     assert [r["doc_id"] for r in got] == [d for d, _ in want]
     for r, (_, score) in zip(got, want):
         assert r["score"] == pytest.approx(score, rel=1e-12)
-
-
-def test_compact_index_written_before_skip_max_tfs(spark, tmp_path,
-                                                   index_dir):
-    """An index written before the skip_max_tfs column existed must
-    still compact: missing columns ride as nulls and the merge
-    re-encodes them fresh (so the compacted index even gains the
-    block-max column)."""
-    import shutil
-
-    from wiser_spark.operators.segments import compact_index
-
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(index_dir, legacy)
-    # rewrite the segments without the round-3 columns NOR the offsets
-    # column (binary missing -> filled with the documented b"" degrade
-    # value, arrays -> empty)
-    old = spark.read.parquet(f"{index_dir}/segments").drop(
-        "skip_max_tfs", "off_blob", "skip_off_offs"
-    )
-    shutil.rmtree(f"{legacy}/segments")
-    old.write.partitionBy("shard_id").parquet(f"{legacy}/segments")
-    out = str(tmp_path / "compacted")
-    compact_index(spark, legacy, out)
-    for ph in (False, True):
-        want = [tuple(r) for r in SegmentIndex(spark, index_dir)
-                .search(["return", "import"], k=10, is_phrase=ph).collect()]
-        got = [tuple(r) for r in SegmentIndex(spark, out)
-               .search(["return", "import"], k=10, is_phrase=ph).collect()]
-        assert got == want and len(got) == 10
-    # the compacted rows carry the re-derived block-max column
-    seg = spark.read.parquet(f"{out}/segments").filter(
-        "term = 'return'").collect()[0]
-    assert seg["skip_max_tfs"] is not None and len(seg["skip_max_tfs"]) > 0
 
 
 def test_term_prefix_pushdown_and_identity(spark, tmp_path):

@@ -221,6 +221,131 @@ def test_stream_v2_compaction_merges_sentinels_and_blooms(
             assert r["score"] == pytest.approx(s, rel=1e-12)
 
 
+def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
+    """Reference merge of generational segment rows: per shard, the
+    merged sentinel first, then each term in order as the per-term
+    encoders write it over its generations concatenated in docID order,
+    followed by its end- and begin-bloom rows (every generation here
+    carries both sides)."""
+    import numpy as np
+
+    from wiser_spark.functions.bloom import bloom_boxes_decode
+    from wiser_spark.operators.segments import (
+        BLOOM_PREFIXES,
+        _encode_term_flat,
+        bloom_row,
+        decode_segment_row,
+        doclen_sentinel_row,
+    )
+
+    by_key: dict[tuple[int, str], list[dict]] = {}
+    for r in rows:
+        by_key.setdefault((r["shard_id"], r["term"]), []).append(r)
+    out: dict[int, list[dict]] = {}
+    for (shard, term), parts in sorted(by_key.items()):
+        if term.startswith(BLOOM_PREFIXES):
+            continue
+        if term == DOCLEN_TERM:
+            sents = [decode_doclen_sentinel(r) for r in parts]
+            out.setdefault(shard, []).append(doclen_sentinel_row(
+                shard, np.concatenate([s[0] for s in sents]),
+                np.concatenate([s[2] for s in sents]),
+            ))
+            continue
+        dec = sorted(
+            (decode_segment_row(r, with_positions=True, with_offsets=True)
+             + (r["generation"],) for r in parts),
+            key=lambda d: d[0][0],
+        )
+        out[shard].append(_encode_term_flat(
+            shard, term, np.concatenate([d[0] for d in dec]),
+            np.concatenate([d[1] for d in dec]),
+            np.concatenate([p for d in dec for p in d[2]]),
+            np.concatenate([o for d in dec for o in d[3]]),
+        ))
+        for pref in BLOOM_PREFIXES:
+            side = {r["generation"]: r for r in by_key[(shard, pref + term)]}
+            out[shard].append(bloom_row(shard, term, np.concatenate([
+                bloom_boxes_decode(side[d[4]]["tfs_blob"], len(d[0]), nbytes)
+                for d in dec
+            ]), prefix=pref))
+    return out
+
+
+def test_stream_v2_compaction_byte_identical_to_per_term_merge(
+    spark, streamed_v2
+):
+    """compact_segments over the v2 generations writes, shard by shard,
+    exactly the rows of the per-term merge: sentinel first, then every
+    term with both bloom sides, in term order."""
+    import json
+
+    from wiser_spark.operators.segments import compact_segments
+
+    with open(f"{streamed_v2}/stats.json") as f:
+        nbytes = json.load(f)["bloom"]["nbytes"]
+    segs = read_segments(spark, streamed_v2)
+    got: dict[int, list[dict]] = {}
+    for r in compact_segments(segs, nbytes).collect():
+        got.setdefault(r["shard_id"], []).append(r.asDict())
+    want = _per_term_merge([r.asDict() for r in segs.collect()], nbytes)
+    assert got == want
+    assert all(rows[0]["term"] == DOCLEN_TERM for rows in got.values())
+
+
+def test_compaction_drops_only_unaligned_blooms(spark, tmp_path):
+    """A generation built without blooms leaves the bloom sides of the
+    terms it shares with a bloomed generation unalignable: compaction
+    drops exactly those terms' bloom rows and keeps the others'."""
+    from pyspark.sql import functions as F
+
+    from wiser_spark.operators.mapside import build_segments_mapside
+    from wiser_spark.operators.postings import assign_doc_ids
+    from wiser_spark.operators.segments import (
+        BLOOM_PREFIXES,
+        compact_segments,
+    )
+    from wiser_spark.sources.corpus import corpus_df
+
+    docs = assign_doc_ids(corpus_df(spark, 90)).select("doc_id", "content")
+    base = str(tmp_path / "segments")
+    for g, (cond, blooms) in enumerate(
+        [(F.col("doc_id") < 45, True), (F.col("doc_id") >= 45, False)]
+    ):
+        build_segments_mapside(
+            docs.filter(cond), n_shards=2, with_blooms=blooms
+        ).write.parquet(f"{base}/generation={g}")
+    segs = spark.read.parquet(base)
+    rows = [r.asDict() for r in segs.collect()]
+    merged = compact_segments(segs).collect()
+    terms_of = {
+        g: {(r["shard_id"], r["term"]) for r in rows if r["generation"] == g}
+        for g in (0, 1)
+    }
+    gen0_blooms = {
+        (r["shard_id"], r["term"]): r["tfs_blob"] for r in rows
+        if r["generation"] == 0 and r["term"].startswith(BLOOM_PREFIXES)
+    }
+    want = {
+        key: blob for key, blob in gen0_blooms.items()
+        if (key[0], key[1][1:]) not in terms_of[1]
+    }
+    got = {
+        (r["shard_id"], r["term"]): r["tfs_blob"] for r in merged
+        if r["term"].startswith(BLOOM_PREFIXES)
+    }
+    assert got == want
+    assert 0 < len(want) < len(gen0_blooms)
+    plain = {
+        (r["shard_id"], r["term"]) for r in merged
+        if not r["term"].startswith(BLOOM_PREFIXES)
+    }
+    assert plain == {
+        k for g in (0, 1) for k in terms_of[g]
+        if not k[1].startswith(BLOOM_PREFIXES)
+    }
+
+
 @pytest.mark.parametrize(
     "terms,is_phrase",
     [(["return"], False), (["return", "import"], False), (["if", "else"], True)],

@@ -19,12 +19,20 @@ Equivalent to the reference's AddDocument loop (qq_mem_engine.h:298-305)
 run per-partition instead of per-process; differential tests pin the
 results to the shuffle-based path and the oracle.
 
-MEMORY CONTRACT of the shard encoder (``encode_doc_batches``): it builds
-no Python object per term or per row. Every column is a flat buffer
-plus offsets, handed to Arrow zero-copy, and only the few df >= 128
-terms take a per-term path. Its peak therefore follows the shard's
-token count (a fixed number of numpy arrays per occurrence) plus its
-output bytes, and the output leaves in batches of at most
+``encode_postings`` is THE shard encoder: every writer turns a shard's
+postings into segment rows through it — ``encode_doc_batches`` below
+after tokenizing, segments.build_segments (write_index,
+IndexBuildPipeline) after sorting each shard's postings, and
+segments.compact_segments (compact_index, the streaming sink) after
+decoding each shard's generations, as the reference's qq->vacuum merge
+re-dumps through its one dumper (``flash_engine_dumper.h:557-582``).
+
+MEMORY CONTRACT of the map-side encode (``encode_doc_batches``): it
+builds no Python object per term or per row. Every column is a flat
+buffer plus offsets, handed to Arrow zero-copy, and only the few
+df >= 128 terms take a per-term path. Its peak therefore follows the
+shard's token count (a fixed number of numpy arrays per occurrence)
+plus its output bytes, and the output leaves in batches of at most
 OUT_BATCH_ROWS rows and about OUT_BATCH_BYTES bytes (pinned by
 test_mapside's high-water-mark test).
 """
@@ -44,16 +52,16 @@ from pyspark.sql import functions as F
 
 from wiser_spark.config import PACK_SIZE, IndexConfig
 from wiser_spark.operators.segments import (
-    BLOOM_BEGIN_PREFIX,
-    BLOOM_PREFIX,
+    BLOOM_PREFIXES,
     DOCLEN_TERM,
+    SEGMENT_ARROW_SCHEMA,
     SEGMENT_SCHEMA,
     _delta_varint_stream,
     _encode_term_flat,
     await_all,
     bloom_row,
     decode_doclen_sentinel,
-    doclen_sentinel_row,
+    sentinel_batch,
 )
 
 # The shard encoder's output batches hold at most this many rows and
@@ -115,8 +123,9 @@ def encode_doc_batches(
     bloom_cfg=None,
 ) -> Iterator[pa.RecordBatch]:
     """One shard's Arrow batches -> segment-row Arrow batches (sentinel
-    last). Module-level (not a closure) so it can be profiled/driven
-    without a Spark task."""
+    last): tokenize, sort the occurrences into postings, then hand them
+    to ``encode_postings``. Module-level (not a closure) so it can be
+    profiled/driven without a Spark task."""
     from wiser_spark.config import TOKEN_SPLIT_REGEX
 
     # the ENTIRE tokenize+flatten+dictionary-encode pipeline runs in
@@ -178,12 +187,8 @@ def encode_doc_batches(
         )
     if not id_chunks or sum(len(c) for c in id_chunks) == 0:
         return
-    schema = _arrow_segment_schema()
-    sentinel = pa.RecordBatch.from_pylist(
-        [doclen_sentinel_row(
-            shard_id, np.concatenate(id_chunks), np.concatenate(len_chunks)
-        )],
-        schema=schema,
+    sentinel = sentinel_batch(
+        shard_id, np.concatenate(id_chunks), np.concatenate(len_chunks)
     )
     del id_chunks, len_chunks
     # unify per-batch dictionaries into one partition vocabulary
@@ -263,12 +268,12 @@ def encode_doc_batches(
         len(posting_code),
     )
     del posting_code
-    pos_starts = np.cumsum(tfs_all) - tfs_all
     # per-posting end blooms: OR the next-token masks per posting.
     # SIZED filters (reference libbloom defaults entries=5 ratio=0.001
     # -> 71 bits / 9 bytes / k=10 per posting): one md5 per UNIQUE term
     # builds the (V, nbytes) mask table; per-occurrence rows are then a
     # fancy-index + one reduceat — no per-occurrence hashing
+    blooms = None
     if with_blooms:
         from wiser_spark.functions.bloom import (
             bloom_params,
@@ -296,8 +301,8 @@ def encode_doc_batches(
         # (reference builds both sides, bloom_filter.h:595-646)
         blooms_end = fold(nxt)
         del nxt
-        blooms_begin = fold(prv)
-        del prv, vm_ext, p_starts_idx
+        blooms = (blooms_end, fold(prv))
+        del blooms_end, prv, vm_ext, p_starts_idx
     del new_posting
     p = pos_all[order]
     del pos_all
@@ -306,30 +311,66 @@ def encode_doc_batches(
     del starts_all
     off_flat[1::2] = ends_all[order]
     del ends_all, order
-    # ---- term encode, VOCABULARY-BATCHED. A real code corpus has
-    # millions of distinct terms per shard and almost all of them have
-    # df < PACK_SIZE (pure varint-tail columns, no frames), so every
-    # column is built for ALL terms at once as one flat buffer plus
-    # per-term byte offsets: one delta+varint pass per stream (delta
-    # resets at run starts), tail boxes and bloom boxes spliced in one
-    # vectorized pass, position/offset blobs as zero-copy slices of
-    # their streams. Only the few df >= PACK_SIZE terms (stopword-like)
-    # take the framed/multi-box per-term path. Output rows are
-    # BYTE-IDENTICAL to _encode_term_flat / bloom_row and keep the same
-    # in-shard order (term, end-bloom, begin-bloom ascending by term;
-    # sentinel last) — pinned by test_mapside byte-identity.
+    # the encoder holds the only references from here on, so it frees
+    # each input as soon as it is consumed
+    batches = encode_postings(
+        shard_id, vocab, term_bounds, posting_doc, tfs_all, p, off_flat,
+        blooms,
+    )
+    del vocab, term_bounds, posting_doc, tfs_all, p, off_flat, blooms
+    yield from batches
+    yield sentinel
+
+
+def encode_postings(
+    shard_id: int,
+    vocab: pa.Array,
+    term_bounds: np.ndarray,
+    posting_doc: np.ndarray,
+    tfs_all: np.ndarray,
+    p: np.ndarray | None,
+    off_flat: np.ndarray | None,
+    blooms: tuple[np.ndarray, np.ndarray] | None,
+) -> Iterator[pa.RecordBatch]:
+    """THE shard encoder: one shard's postings -> its term and bloom
+    rows, in Arrow batches of at most OUT_BATCH_ROWS rows and about
+    OUT_BATCH_BYTES bytes; the caller adds the sentinel row.
+
+    Term t = ``vocab[t]`` (ascending) owns postings [term_bounds[t],
+    term_bounds[t+1]), doc-ascending. ``p`` holds the flat positions
+    (tf per posting), ``off_flat`` the flat [s,e,...] pairs (2*tf per
+    posting); None writes b"" blobs and empty skip lists. ``blooms`` is
+    the per-posting (end, begin) filter matrices, or None for no bloom
+    rows.
+
+    Vocabulary-batched: almost every term of a code shard has df <
+    PACK_SIZE (varint tail only), so each column is built for ALL
+    terms at once as one flat buffer plus per-term byte offsets (one
+    delta+varint pass per stream, tail and bloom boxes spliced in one
+    vectorized pass, position/offset blobs as zero-copy slices). Only
+    df >= PACK_SIZE terms take the framed per-term path. Rows are
+    BYTE-IDENTICAL to _encode_term_flat / bloom_row, in term order,
+    each term row followed by its end- then begin-bloom row."""
     from wiser_spark.functions.packing import varint_tail_boxes
     from wiser_spark.functions.varint import varint_encode_with_lengths
 
+    schema = SEGMENT_ARROW_SCHEMA
     term_lo, term_hi = term_bounds[:-1], term_bounds[1:]
     n_terms = len(term_lo)
+    if n_terms == 0:
+        return
     df = term_hi - term_lo
+    has_pos, has_off = p is not None, off_flat is not None
+    R = 1 if blooms is None else 3  # output rows per term
+    pos_starts = np.cumsum(tfs_all) - tfs_all
     occ_bounds = np.concatenate(([0], np.cumsum(tfs_all)))[term_bounds]
 
     def term_stream(vals, run_starts, value_bounds):
         # same encode _encode_term_flat uses (single source of truth
         # for the byte-identity guarantee) -> (uint8 stream, per-term
-        # byte bounds)
+        # byte bounds); an absent stream is all-empty
+        if vals is None:
+            return np.zeros(0, np.uint8), np.zeros(n_terms + 1, np.int64)
         blob, val_offs = _delta_varint_stream(vals, run_starts)
         val_offs = np.append(val_offs, len(blob))
         return np.frombuffer(blob, dtype=np.uint8), val_offs[value_bounds]
@@ -361,33 +402,32 @@ def encode_doc_batches(
         term = vocab[t].as_py()
         rows = [_encode_term_flat(
             shard_id, term, posting_doc[lo:hi], tfs_all[lo:hi],
-            p[o_lo:o_hi], off_flat[2 * o_lo:2 * o_hi],
+            p[o_lo:o_hi] if has_pos else None,
+            off_flat[2 * o_lo:2 * o_hi] if has_off else None,
         )]
-        if with_blooms and hi - lo > PACK_SIZE:
+        if R == 3 and hi - lo > PACK_SIZE:
             rows += [
-                bloom_row(shard_id, term, blooms[lo:hi], prefix=pref)
-                for pref, blooms in ((BLOOM_PREFIX, blooms_end),
-                                     (BLOOM_BEGIN_PREFIX, blooms_begin))
+                bloom_row(shard_id, term, side[lo:hi], prefix=pref)
+                for pref, side in zip(BLOOM_PREFIXES, blooms)
             ]
         framed_rows[t] = rows
     del posting_doc, tfs_all, p, off_flat, pos_starts
     blobs = [docids, tfs, pos, offs]
-    if with_blooms:
+    if R == 3:
         from wiser_spark.functions.bloom import bloom_boxes_encode_ranges
 
         one_box = np.flatnonzero(df <= PACK_SIZE)
         bloom_boxes = [
             _spread(
                 bloom_boxes_encode_ranges(
-                    blooms, term_lo[one_box], term_hi[one_box]
+                    side, term_lo[one_box], term_hi[one_box]
                 ),
                 one_box, n_terms,
             )
-            for blooms in (blooms_end, blooms_begin)
+            for side in blooms
         ]
         blobs += bloom_boxes
-        del blooms_end, blooms_begin
-    R = 3 if with_blooms else 1
+        del blooms
     # output batches: whole terms, bounded by rows and by payload bytes
     term_bytes = sum(np.diff(b[1]) for b in blobs)
     for t, rows in framed_rows.items():
@@ -407,6 +447,7 @@ def encode_doc_batches(
             "df_shard": pa.array(df[t0:t1].astype(np.int32)),
         }
         zero = _lists(np.arange(m + 1), np.zeros(m, dtype=np.int64))
+        empty_list = _lists(np.zeros(m + 1), np.zeros(0, np.int64))
         parts = [_batch(schema, {
             **consts,
             "term": terms,
@@ -415,17 +456,16 @@ def encode_doc_batches(
             "pos_blob": _binary(pos, t0, t1),
             "off_blob": _binary(offs, t0, t1),
             "skip_predocs": zero, "skip_docid_offs": zero,
-            "skip_tf_offs": zero, "skip_pos_offs": zero,
-            "skip_off_offs": zero,
+            "skip_tf_offs": zero,
+            "skip_pos_offs": zero if has_pos else empty_list,
+            "skip_off_offs": zero if has_off else empty_list,
             "skip_max_tfs": _lists(np.arange(m + 1), max_tf[t0:t1]),
         })]
-        if with_blooms:
+        if R == 3:
             empty_bin = _binary(
                 (np.zeros(0, np.uint8), np.zeros(m + 1, np.int64)), 0, m
             )
-            empty_list = _lists(np.zeros(m + 1), np.zeros(0, np.int64))
-            for pref, boxes in zip((BLOOM_PREFIX, BLOOM_BEGIN_PREFIX),
-                                   bloom_boxes):
+            for pref, boxes in zip(BLOOM_PREFIXES, bloom_boxes):
                 parts.append(_batch(schema, {
                     **consts,
                     "term": pc.binary_join_element_wise(pref, terms, ""),
@@ -458,7 +498,6 @@ def encode_doc_batches(
             schema=schema,
         )
         t0 = t1
-    yield sentinel
 
 
 
@@ -496,26 +535,6 @@ def _lists(offsets: np.ndarray, values: np.ndarray) -> pa.Array:
 def _batch(schema, cols: dict) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         [cols[f.name] for f in schema], schema=schema
-    )
-
-
-def _arrow_segment_schema():
-    return pa.schema(
-        [
-            ("shard_id", pa.int32()),
-            ("term", pa.string()),
-            ("df_shard", pa.int32()),
-            ("docids_blob", pa.binary()),
-            ("tfs_blob", pa.binary()),
-            ("pos_blob", pa.binary()),
-            ("off_blob", pa.binary()),
-            ("skip_predocs", pa.list_(pa.int64())),
-            ("skip_docid_offs", pa.list_(pa.int64())),
-            ("skip_tf_offs", pa.list_(pa.int64())),
-            ("skip_pos_offs", pa.list_(pa.int64())),
-            ("skip_off_offs", pa.list_(pa.int64())),
-            ("skip_max_tfs", pa.list_(pa.int64())),
-        ]
     )
 
 

@@ -7,11 +7,12 @@ the distributed analogue of the reference's two-pass build,
   docs       read input table -> deterministic dense docIDs
   postings   tokenize + explode + groupBy(term, doc_id)
   docstats   doc lengths (+ lossy byte) + sha256 invariant
-  dictionary term -> global df
   segments   shard + encode posting blobs, each shard ending in its
              doc-length sentinel row from docstats (the "merge" shuffle:
              the reference's single-node qq->vacuum conversion becomes a
              repartition by shard + partition-local encode)
+  dictionary term -> global df + prefetch fields, from the written
+             segments (segments.dictionary_from_segments)
 
 Re-running skips every stage whose input fingerprint is unchanged, so a
 killed build resumes where it stopped. Fingerprints chain: stage N's
@@ -31,10 +32,13 @@ from wiser_spark.operators.docstats import build_docstats, corpus_stats
 from wiser_spark.operators.postings import (
     DEFAULT_ORDER,
     assign_doc_ids,
-    build_dictionary,
     build_postings,
 )
-from wiser_spark.operators.segments import build_segments
+from wiser_spark.operators.segments import (
+    SEGMENT_SCHEMA,
+    build_segments,
+    dictionary_from_segments,
+)
 from wiser_spark.plans.manifest import (
     Manifest,
     StageEntry,
@@ -146,27 +150,34 @@ class IndexBuildPipeline:
         )
         docstats = self.spark.read.parquet(self._out("docstats"))
 
-        self._run_stage(
-            "dictionary", fingerprint("dictionary", fp_post),
-            lambda d: build_dictionary(postings).write.mode("overwrite").parquet(d),
-        )
-
         def write_segments(d):
             build_segments(postings, docstats, cfg.n_shards).write.mode(
                 "overwrite"
             ).partitionBy("shard_id").parquet(d)
 
         # the sentinels come from docstats, so its output chains in too
-        self._run_stage(
+        fp_segs = self._run_stage(
             "segments",
             fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
             write_segments,
+        )
+
+        # the same dictionary as every other writer's, prefetch fields
+        # included (queries pick full vs skip-based partial decode by them)
+        self._run_stage(
+            "dictionary", fingerprint("dictionary", fp_segs),
+            lambda d: dictionary_from_segments(
+                self.spark.read.schema(SEGMENT_SCHEMA).parquet(
+                    self._out("segments")
+                )
+            ).write.mode("overwrite").parquet(d),
         )
 
         # final queryable-index metadata (consumed by SegmentIndex)
         stats = corpus_stats(docstats)
         meta = {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
+            "n_terms": self.manifest.entries["dictionary"].rows,
             "n_shards": cfg.n_shards, "k1": cfg.bm25.k1, "b": cfg.bm25.b,
             "format": "wiser-spark-segment-v2",
             "doclen_sentinel": True,
