@@ -1,5 +1,5 @@
 """Chunked compressed doc store (S7): roundtrip, alignment rule,
-pruned point fetch."""
+pruned point read, and the snippet reply built from it."""
 
 import random
 
@@ -8,6 +8,7 @@ import pytest
 from wiser_spark.operators.docstore import (
     KB4,
     fetch_docs,
+    read_docs,
     should_align,
     write_doc_store,
 )
@@ -72,30 +73,108 @@ def test_extent_layout_and_alignment(spark, store):
     assert n_aligned > 0  # the rule fired somewhere in this corpus
 
 
-def test_point_fetch_prunes_extents(spark, store):
-    d, want = store
-    out = fetch_docs(spark, d, doc_ids=[3, 399])
-    rows = {r["doc_id"]: r["content"] for r in out.collect()}
-    assert rows == {3: want[3], 399: want[399]}
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "first_doc" in plan, plan[:2000]
+@pytest.fixture(scope="module")
+def ranged_store(spark, store, tmp_path_factory):
+    """The same docs as ``store``, written range-partitioned: each file
+    holds a contiguous doc-id range, so row-group min/max can prune."""
+    d = str(tmp_path_factory.mktemp("store") / "ranged")
+    docs = spark.createDataFrame(sorted(store[1].items()),
+                                 "doc_id long, content string")
+    write_doc_store(docs.repartitionByRange(4, "doc_id"), d,
+                    extent_bytes=64 * 1024)
+    return d, store[1]
 
 
-def test_large_fetch_bounded_predicate(spark, store):
-    """A serving-scale fetch (10^4 requested ids) must build a BOUNDED
-    predicate — at most MAX_FETCH_RANGES range clauses, not one clause
-    per id (ADVICE r03) — and return exactly the requested docs."""
-    from wiser_spark.operators.docstore import MAX_FETCH_RANGES
+def _row_groups(store_dir):
+    """{(file, row group): (min first_doc, max last_doc)} from the
+    parquet footers."""
+    import os
 
-    ids = list(range(0, 400, 3)) + list(range(10_000, 20_000))  # mostly absent
-    out = fetch_docs(spark, d := store[0], doc_ids=ids)
-    plan = out._jdf.queryExecution().analyzed().toString()
-    # clause count ~ occurrences of first_doc in the analyzed filter
-    assert plan.count("first_doc") <= MAX_FETCH_RANGES + 2, plan[:2000]
-    rows = {r["doc_id"]: r["content"] for r in out.collect()}
-    want = {i: store[1][i] for i in range(0, 400, 3)}
-    assert rows == want  # absent ids silent, present ids exact
-    _ = d
+    import pyarrow.parquet as pq
+
+    out = {}
+    ext = f"{store_dir}/extents"
+    for name in sorted(os.listdir(ext)):
+        if not name.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(f"{ext}/{name}").metadata
+        for g in range(md.num_row_groups):
+            cols = {md.row_group(g).column(j).path_in_schema:
+                    md.row_group(g).column(j).statistics
+                    for j in range(md.row_group(g).num_columns)}
+            out[(f"{ext}/{name}", g)] = (cols["first_doc"].min,
+                                         cols["last_doc"].max)
+    return out
+
+
+@pytest.fixture
+def recorded_reads(monkeypatch):
+    """Every (file, row group) read_docs reads, and the number of docs
+    it decompresses."""
+    import pyarrow.parquet as pq
+
+    from wiser_spark.operators import docstore
+
+    log = {"opened": [], "read": set(), "decompressed": 0}
+
+    class Recording(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            super().__init__(source, *a, **kw)
+            self._source = source
+            log["opened"].append(source)
+
+        def read_row_groups(self, row_groups, *a, **kw):
+            log["read"].update((self._source, g) for g in row_groups)
+            return super().read_row_groups(row_groups, *a, **kw)
+
+    codec_fns = docstore._codec_fns
+
+    def counting(codec):
+        compress, decompress = codec_fns(codec)
+
+        def counted(data):
+            log["decompressed"] += 1
+            return decompress(data)
+
+        return compress, counted
+
+    monkeypatch.setattr(pq, "ParquetFile", Recording)
+    monkeypatch.setattr(docstore, "_codec_fns", counting)
+    return log
+
+
+def test_point_fetch_prunes_extents(ranged_store, recorded_reads):
+    """A point read opens only the row groups whose [first_doc,
+    last_doc] min/max can hold a wanted id, and decompresses only the
+    wanted docs."""
+    d, want = ranged_store
+    got = read_docs(d, [3, 399])
+    assert got == {3: want[3], 399: want[399]}
+    groups = _row_groups(d)
+    expect = {key for key, (lo, hi) in groups.items()
+              if lo <= 3 <= hi or lo <= 399 <= hi}
+    assert recorded_reads["read"] == expect
+    assert 0 < len(expect) < len(groups)  # some row groups pruned
+    assert recorded_reads["decompressed"] == 2
+
+
+def test_large_fetch_returns_exactly_present_docs(
+    spark, ranged_store, recorded_reads
+):
+    """A serving-scale request (10^4 mostly-absent ids) returns exactly
+    the present docs, reading only row groups that can hold a wanted
+    id; fetch_docs with ids returns the same docs as a local frame."""
+    d, docs = ranged_store
+    ids = list(range(0, 400, 3)) + list(range(10_000, 20_000))
+    want = {i: docs[i] for i in range(0, 400, 3)}
+    assert read_docs(d, ids) == want  # absent ids silent, present exact
+    expect = {key for key, (lo, hi) in _row_groups(d).items()
+              if any(lo <= i <= hi for i in ids)}
+    assert recorded_reads["read"] == expect
+    assert recorded_reads["decompressed"] == len(want)
+    rows = fetch_docs(spark, d, doc_ids=ids).collect()
+    assert {r["doc_id"]: r["content"] for r in rows} == want
+    assert [r["doc_id"] for r in rows] == sorted(want)
 
 
 def test_codec_recorded_and_honored(spark, tmp_path):
@@ -125,13 +204,15 @@ def test_codec_recorded_and_honored(spark, tmp_path):
     assert got2 == got
 
 
-def test_empty_fetch_reads_nothing(spark, store):
-    """fetch_docs with an explicit empty id list returns an empty frame
-    WITHOUT scanning the store (no extent filter could prune it)."""
+def test_empty_fetch_reads_nothing(spark, store, recorded_reads):
+    """An explicit empty id list opens no extent file: read_docs
+    returns {} and fetch_docs an empty frame without a store scan."""
     d, _ = store
+    assert read_docs(d, []) == {}
     out = fetch_docs(spark, d, doc_ids=[])
-    assert out.count() == 0
+    assert out.collect() == []
     assert out.columns == ["doc_id", "content"]
+    assert recorded_reads["opened"] == [] and not recorded_reads["read"]
     # the plan must not touch the extents table at all
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "extents" not in plan
@@ -270,3 +351,51 @@ def test_snippet_winner_missing_from_store_keeps_entry(spark, tmp_path):
     ).collect()]
     assert [(r[1], r[2], r[3]) for r in got_b] == want
     assert {r[2]: r[4] for r in got_b}[drop] == ""
+
+
+def test_snippet_reply_adds_no_spark_job(spark, tmp_path):
+    """The reply is finished on the driver: on both content sources a
+    snippet search_batch (and search) runs exactly as many Spark jobs
+    as the same call without snippets, and collecting any returned
+    frame runs none. The lake table here is an in-memory frame, whose
+    filtered collect runs no job; a table on disk adds its own scan."""
+    from wiser_spark.config import BM25Params, IndexConfig
+    from wiser_spark.operators.mapside import write_index_mapside
+    from wiser_spark.operators.postings import assign_doc_ids
+    from wiser_spark.operators.segments import SegmentIndex
+    from wiser_spark.sources.corpus import corpus_df
+
+    docs = assign_doc_ids(corpus_df(spark, 120)).select("doc_id", "content")
+    idx_dir = str(tmp_path / "idx")
+    store_dir = str(tmp_path / "store")
+    write_index_mapside(docs, idx_dir,
+                        IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2))
+    write_doc_store(docs, store_dir)
+    local_docs = spark.createDataFrame(docs.toArrow())
+    idx = SegmentIndex(spark, idx_dir).warmup()
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def jobs():
+        bus.waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(None) or [])
+
+    def count(call):
+        j0 = jobs()
+        df = call()
+        j1 = jobs()
+        assert df.collect()
+        assert jobs() == j1, "collecting the reply ran a Spark job"
+        return j1 - j0
+
+    qlog = [(0, ["return"], False), (1, ["return", "import"], True)]
+    plain_batch = count(lambda: idx.search_batch(qlog, k=5))
+    plain_one = count(lambda: idx.search(["return", "import"], k=5,
+                                         is_phrase=True))
+    assert plain_batch >= 1 and plain_one >= 1
+    for src in ({"docs": local_docs}, {"doc_store_dir": store_dir}):
+        assert count(lambda: idx.search_batch(
+            qlog, k=5, return_snippets=True, **src)) == plain_batch
+        assert count(lambda: idx.search(
+            ["return", "import"], k=5, is_phrase=True,
+            return_snippets=True, **src)) == plain_one

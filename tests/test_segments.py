@@ -597,3 +597,83 @@ def test_overcap_lookup_memoized_jobless(spark, index_dir):
     assert mid > after
     idx._dict_lookup(["import", "return"])
     assert len(tracker.getJobIdsForGroup(None) or []) == mid
+
+
+def _segment_digest(index_dir: str) -> tuple[int, str]:
+    """scripts/segment_digest.py's digest of the index's segments."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "segment_digest",
+        os.path.join(os.path.dirname(__file__), "..", "scripts",
+                     "segment_digest.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.table_digest(os.path.join(index_dir, "segments"))
+
+
+def test_compact_positionless_index_matches_fresh_build(spark, tmp_path):
+    """An index built without positions compacts: two generations of
+    position-less segments merge into exactly the rows of a fresh
+    build of all the docs (empty pos_blob, empty skip_pos_offs), where
+    decoding the empty pos_blob of a df >= 2 term used to raise."""
+    import shutil
+
+    from wiser_spark.operators.segments import compact_index
+
+    docs = assign_doc_ids(corpus_df(spark, 120), n_partitions=2).cache()
+    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
+
+    def build(part, d):
+        postings = build_postings(part, with_positions=False)
+        docstats = build_docstats(part)
+        write_index(postings, docstats, build_dictionary(postings),
+                    corpus_stats(docstats), d, cfg)
+
+    fresh = str(tmp_path / "fresh")
+    build(docs, fresh)
+    multi = tmp_path / "multi"
+    for g, cond in enumerate(["doc_id < 60", "doc_id >= 60"]):
+        half = str(tmp_path / f"half{g}")
+        build(docs.filter(cond), half)
+        shutil.copytree(f"{half}/segments",
+                        multi / "segments" / f"generation={g}")
+    shutil.copytree(f"{fresh}/dictionary", multi / "dictionary")
+    shutil.copy(f"{fresh}/stats.json", multi / "stats.json")
+    out = str(tmp_path / "compacted")
+    compact_index(spark, str(multi), out)
+    got, want = _segment_digest(out), _segment_digest(fresh)
+    assert got == want and want[0] > 0
+    idx = SegmentIndex(spark, out)
+    assert [tuple(r) for r in idx.search(["return"], k=5).collect()] == [
+        tuple(r) for r in SegmentIndex(spark, fresh).search(
+            ["return"], k=5).collect()
+    ]
+
+
+def test_write_stats_crash_keeps_previous_file(tmp_path, monkeypatch):
+    """stats.json is published by one rename: a json.dump that dies
+    midway leaves the previous file byte-identical and loadable."""
+    from wiser_spark.operators.segments import write_stats
+
+    d = str(tmp_path / "idx")
+    write_stats(d, {"n_docs": 1, "avgdl": 2.0})
+    with open(f"{d}/stats.json", "rb") as f:
+        before = f.read()
+
+    def torn_dump(obj, fp, **kw):
+        fp.write('{"n_docs": 9, "av')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        write_stats(d, {"n_docs": 9, "avgdl": 3.0})
+    monkeypatch.undo()
+    with open(f"{d}/stats.json", "rb") as f:
+        assert f.read() == before
+    with open(f"{d}/stats.json") as f:
+        assert json.load(f) == {"n_docs": 1, "avgdl": 2.0}
+    write_stats(d, {"n_docs": 9, "avgdl": 3.0})  # a later write succeeds
+    with open(f"{d}/stats.json") as f:
+        assert json.load(f)["n_docs"] == 9

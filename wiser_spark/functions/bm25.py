@@ -23,21 +23,7 @@ def idf(n_docs: int, df) -> np.ndarray:
     return np.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
 
 
-def tfnorm_exact(tf, doclen, avgdl: float, params: BM25Params) -> np.ndarray:
-    t = np.asarray(tf, dtype=np.float64)
-    length = np.asarray(doclen, dtype=np.float64)
-    k1, b = params.k1, params.b
-    return (t * (k1 + 1.0)) / (t + k1 * (1.0 - b + (b * length) / avgdl))
-
-
 def tfnorm_cache(avgdl: float, params: BM25Params) -> np.ndarray:
     """256-entry table: byte c -> k1*(1 - b + b*decode(c)/avgdl)."""
     lengths = char4_decode_table().astype(np.float64)
     return params.k1 * (1.0 - params.b + params.b * lengths / avgdl)
-
-
-def tfnorm_lossy(tf, doclen_char, cache: np.ndarray, params: BM25Params) -> np.ndarray:
-    """tfnorm with the denominator tail looked up from the lossy cache."""
-    t = np.asarray(tf, dtype=np.float64)
-    c = np.asarray(doclen_char, dtype=np.int64) & 0xFF
-    return (t * (params.k1 + 1.0)) / (t + cache[c])

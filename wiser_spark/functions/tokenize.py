@@ -13,7 +13,8 @@ Consumers that must agree exactly (and are tested against each other):
   2. Pandas-UDF path:  ``tokenize_series`` (Arrow-vectorized; used where a
      Python kernel needs tokens, e.g. the oracle-parity test).
   3. Pure-Python oracle: ``tokenize_text``.
-  4. DuckDB oracle SQL: ``DUCKDB_TOKENS_EXPR`` / ``DUCKDB_DOCLEN_EXPR``.
+  4. DuckDB oracle SQL: the same ``TOKEN_SPLIT_REGEX`` split, inlined in
+     ``plans/oracle_sql.py``.
 """
 
 from __future__ import annotations
@@ -117,15 +118,3 @@ def tokens_col(content: Column) -> Column:
 def doclen_col(content: Column) -> Column:
     """Reference BodyLength(): non-empty chunks of raw content split on ' '."""
     return F.size(F.filter(F.split(content, " ", -1), lambda x: x != F.lit("")))
-
-
-# ---------------------------------------------------------------- duckdb
-def duckdb_tokens_expr(col: str) -> str:
-    return (
-        f"list_filter(regexp_split_to_array(lower({col}), '{TOKEN_SPLIT_REGEX}'), "
-        "x -> x <> '')"
-    )
-
-
-def duckdb_doclen_expr(col: str) -> str:
-    return f"len(list_filter(string_split({col}, ' '), x -> x <> ''))"

@@ -59,14 +59,6 @@ def varint_encode(values) -> bytes:
     return varint_encode_with_lengths(values)[0]
 
 
-def varint_lengths(values) -> np.ndarray:
-    """Encoded byte length of each value (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return np.ones(v.shape, dtype=np.int64)
-    return _n_bytes_of(v, int(v.max()))
-
-
 def varint_decode(buf: bytes | np.ndarray, offset: int = 0, count: int | None = None):
     """Decode a varint stream -> (uint64 array, bytes consumed).
 

@@ -18,17 +18,19 @@ bounded blob), each extent carrying its own fdx arrays:
 ``enc_offs[i] = (offset_in_blob << 1) | aligned`` with the reference's
 exact ShouldAlign rule; aligned docs are zero-padded to the next 4KB
 boundary inside the extent. ``first_doc``/``last_doc`` give parquet
-min/max row-group pruning, so fetching k docs reads only the extents
-that can hold them — the distributed madvise-random story.
+min/max row-group pruning, so ``read_docs`` point-reads k docs on the
+driver from only the row groups that can hold them — the
+madvise-random story.
 
 The codec is PLUGGABLE: LZ4 (the reference's codec, ``doc_store.h:
 28-127``) is used when the ``lz4`` package is importable, else zlib
 level 1 (stdlib) stands in. Each store records its codec in a
-``meta.json`` next to the extents, and ``fetch_docs`` decodes with the
-RECORDED codec — a store written under one environment reads correctly
-under another (or raises an explicit error if the recorded codec is
-unavailable, never silent corruption). The chunk/offset/alignment
-layout — the part that matters for the format — is codec-independent.
+``meta.json`` next to the extents, and the readers (``read_docs``,
+``fetch_docs``) decode with the RECORDED codec — a store written under
+one environment reads correctly under another (or raises an explicit
+error if the recorded codec is unavailable, never silent corruption).
+The chunk/offset/alignment layout — the part that matters for the
+format — is codec-independent.
 The per-row content sha256 invariant (input-hint contract) is pinned by
 test + the ``doc_store_roundtrip`` oracle entry.
 """
@@ -40,20 +42,15 @@ import os
 import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wiser_spark.plans.empty import empty_frame
-
 KB4 = 4 * 1024
 EXTENT_BYTES = 1 * 1024 * 1024
-
-# predicate-size bound for point fetches: past this many requested ids
-# the per-id OR chain is coalesced into at most this many [lo, hi]
-# range clauses (ADVICE r03: analyzer cost grows with expression-tree
-# size; winners cluster by extent so runs << ids)
-MAX_FETCH_RANGES = 64
 
 STORE_SCHEMA = (
     "first_doc long, last_doc long, n_docs int, "
@@ -80,7 +77,7 @@ def default_codec() -> str:
 
     NOTE the portability trade: the default follows the WRITER's
     environment, so a store written where lz4 is installed needs lz4
-    on the readers too (fetch_docs fails loudly, never silently).
+    on the readers too (the readers fail loudly, never silently).
     Fleets with heterogeneous environments should pass an explicit
     ``codec="zlib"`` (always available) to write_doc_store."""
     try:
@@ -115,7 +112,7 @@ def write_doc_store(
     shuffle beyond an in-partition sort (any doc-disjoint partitioning
     qualifies; docIDs ascend within each extent). ``codec`` defaults to
     lz4 when available, else zlib; the choice is recorded in the
-    store's meta.json and honored by ``fetch_docs``."""
+    store's meta.json and honored by the readers."""
     codec = codec or default_codec()
     _codec_fns(codec)  # validate driver-side before launching the job
     # meta.json is written atomically (tmp + os.replace). For a FRESH
@@ -200,65 +197,101 @@ def write_doc_store(
     _put_meta()  # rewrite case: flip the codec only over durable extents
 
 
-def _fetch_predicate(wanted: list[int]):
-    """Extent-pruning predicate over SORTED distinct ids, with a bounded
-    expression tree: exact per-id clauses up to MAX_FETCH_RANGES ids,
-    else the ids coalesce into at most MAX_FETCH_RANGES [lo, hi] runs
-    (split points = the largest id gaps, so the ranges hug the
-    clusters). A run's clause ``first_doc <= hi AND last_doc >= lo``
-    admits every extent a member id could live in; extra docs inside a
-    range never leak — the fetch UDF keeps exact ``wset`` membership."""
-    if len(wanted) <= MAX_FETCH_RANGES:
-        pred = None
-        for d in wanted:
-            p = (F.col("first_doc") <= d) & (F.col("last_doc") >= d)
-            pred = p if pred is None else pred | p
-        return pred
-    import numpy as np
+def _store_codec(store_dir: str) -> str:
+    """The codec recorded in the store's meta.json (zlib for stores
+    written before meta.json existed)."""
+    try:
+        with open(f"{store_dir}/meta.json") as f:
+            return json.load(f).get("codec", "zlib")
+    except FileNotFoundError:
+        return "zlib"
 
-    arr = np.asarray(wanted, dtype=np.int64)
-    gaps = np.diff(arr)
-    # the MAX_FETCH_RANGES-1 largest gaps split the ids into runs
-    cuts = np.sort(
-        np.argpartition(gaps, -(MAX_FETCH_RANGES - 1))[-(MAX_FETCH_RANGES - 1):]
-    )
-    starts = np.concatenate(([0], cuts + 1))
-    ends = np.concatenate((cuts, [len(arr) - 1]))
-    pred = None
-    for lo, hi in zip(arr[starts], arr[ends]):
-        p = (F.col("first_doc") <= int(hi)) & (F.col("last_doc") >= int(lo))
-        pred = p if pred is None else pred | p
-    return pred
+
+def _holds(wanted: np.ndarray, lo, hi) -> bool:
+    """Whether the sorted ids ``wanted`` have a member in [lo, hi]."""
+    i = np.searchsorted(wanted, lo)
+    return bool(i < wanted.size and wanted[i] <= hi)
+
+
+def _doc_range(rg) -> tuple[int, int] | None:
+    """[min(first_doc), max(last_doc)] of a row group from its parquet
+    statistics; None when the writer recorded none."""
+    stats = {
+        rg.column(j).path_in_schema: rg.column(j).statistics
+        for j in range(rg.num_columns)
+    }
+    lo, hi = stats.get("first_doc"), stats.get("last_doc")
+    if lo is None or hi is None or not (lo.has_min_max and hi.has_min_max):
+        return None
+    return lo.min, hi.max
+
+
+def read_docs(store_dir: str, doc_ids) -> dict[int, str]:
+    """doc_id -> content for the stored docs among ``doc_ids`` (absent
+    ids are skipped), read in the calling process with pyarrow and no
+    Spark job — the reference's reader slicing its mmapped store
+    (``doc_store.h:365-455``). A row group is read only when its
+    [first_doc, last_doc] min/max can hold a wanted id, an extent is
+    sliced only when its own range can, and only the wanted docs
+    decompress. An empty request opens no file."""
+    wanted = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
+    if not wanted.size:
+        return {}
+    _, decompress = _codec_fns(_store_codec(store_dir))
+    ext_dir = f"{store_dir}/extents"
+    out: dict[int, str] = {}
+    for name in sorted(os.listdir(ext_dir)):
+        if not name.endswith(".parquet") or name[0] in "._":
+            continue
+        pf = pq.ParquetFile(f"{ext_dir}/{name}")
+        groups = []
+        for g in range(pf.num_row_groups):
+            rng = _doc_range(pf.metadata.row_group(g))
+            if rng is None or _holds(wanted, *rng):
+                groups.append(g)
+        if not groups:
+            continue
+        t = pf.read_row_groups(
+            groups,
+            columns=["first_doc", "last_doc", "doc_ids", "enc_offs", "sizes",
+                     "blob"],
+        )
+        first, last = t["first_doc"].to_numpy(), t["last_doc"].to_numpy()
+        for i in range(t.num_rows):
+            if not _holds(wanted, first[i], last[i]):
+                continue
+            ids = t["doc_ids"][i].values.to_numpy()
+            offs = t["enc_offs"][i].values.to_numpy()
+            sizes = t["sizes"][i].values.to_numpy()
+            blob = memoryview(t["blob"][i].as_buffer())
+            for j in np.flatnonzero(np.isin(ids, wanted)):
+                off = int(offs[j]) >> 1
+                comp = blob[off : off + int(sizes[j])]
+                out[int(ids[j])] = decompress(bytes(comp)).decode("utf-8")
+    return out
 
 
 def fetch_docs(
     spark: SparkSession, store_dir: str, doc_ids: list[int] | None = None
 ) -> DataFrame:
-    """(doc_id, content) from the store. With ``doc_ids`` given, only
-    extents whose [first_doc, last_doc] range can hold one are read
-    (parquet min/max pruning on the range predicate) and only the
-    requested docs decompress; with None, the full store streams out
-    (the scan/export path).
-
-    Predicate size is BOUNDED: up to MAX_FETCH_RANGES ids keep the
-    exact per-id OR chain; larger requests (a whole query log's
-    winners, k x |log| ids) coalesce the sorted ids into at most
-    MAX_FETCH_RANGES [lo, hi] runs split at the LARGEST gaps — winners
-    cluster by extent, so runs cover few extra extents — and exactness
-    stays with the in-UDF ``wset`` membership check either way."""
-    try:
-        with open(f"{store_dir}/meta.json") as f:
-            codec = json.load(f).get("codec", "zlib")
-    except FileNotFoundError:  # stores written before meta.json: zlib
-        codec = "zlib"
+    """(doc_id, content) from the store. With ``doc_ids`` given, the
+    requested docs are point-read on the driver (``read_docs``) and
+    returned as a local frame sorted by doc_id; with None, the full
+    store streams out of a Spark scan (the scan/export path)."""
+    schema = "doc_id long, content string"
+    if doc_ids is not None:
+        got = read_docs(store_dir, doc_ids)
+        ids = sorted(got)
+        return spark.createDataFrame(
+            pa.table({
+                "doc_id": pa.array(ids, pa.int64()),
+                "content": pa.array([got[d] for d in ids], pa.string()),
+            }),
+            schema,
+        )
+    codec = _store_codec(store_dir)
     _codec_fns(codec)  # fail fast driver-side if the codec is absent
     ext = spark.read.schema(STORE_SCHEMA).parquet(f"{store_dir}/extents")
-    wanted = sorted(set(int(d) for d in doc_ids)) if doc_ids is not None else None
-    wset = set(wanted) if wanted is not None else None
-    if wanted is not None:
-        if not wanted:  # explicit empty request: no scan at all
-            return empty_frame(spark, "doc_id long, content string")
-        ext = ext.filter(_fetch_predicate(wanted))
 
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _, decompress = _codec_fns(codec)
@@ -270,8 +303,6 @@ def fetch_docs(
             ):
                 mv = memoryview(blob)
                 for i, did in enumerate(ids):
-                    if wanted is not None and int(did) not in wset:
-                        continue
                     off = int(offs[i]) >> 1
                     comp = mv[off : off + int(sizes[i])]
                     out_ids.append(int(did))
@@ -280,4 +311,4 @@ def fetch_docs(
                     )
             yield pd.DataFrame({"doc_id": out_ids, "content": out_docs})
 
-    return ext.mapInPandas(unpack, "doc_id long, content string")
+    return ext.mapInPandas(unpack, schema)

@@ -39,8 +39,6 @@ test_mapside's high-water-mark test).
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -62,6 +60,7 @@ from wiser_spark.operators.segments import (
     bloom_row,
     decode_doclen_sentinel,
     sentinel_batch,
+    write_stats,
 )
 
 # The shard encoder's output batches hold at most this many rows and
@@ -631,6 +630,4 @@ def write_index_mapside(
         from wiser_spark.functions.bloom import bloom_params
 
         meta["bloom"] = bloom_params()._asdict()
-    os.makedirs(index_dir, exist_ok=True)
-    with open(f"{index_dir}/stats.json", "w") as f:
-        json.dump(meta, f, indent=1)
+    write_stats(index_dir, meta)

@@ -49,6 +49,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from itertools import groupby, islice
 
 import numpy as np
 import pandas as pd
@@ -433,9 +434,18 @@ def write_index(
         "format": "wiser-spark-segment-v2",
         "doclen_sentinel": True,
     }
+    write_stats(index_dir, meta)
+
+
+def write_stats(index_dir: str, meta: dict) -> None:
+    """Publish an index's ``stats.json`` crash-safely: the JSON goes to
+    a temp file that one ``os.replace`` swaps in, so a crash mid-write
+    leaves the previous file whole and readers never see a torn one."""
     os.makedirs(index_dir, exist_ok=True)
-    with open(f"{index_dir}/stats.json", "w") as f:
+    tmp = f"{index_dir}/stats.json.tmp"
+    with open(tmp, "w") as f:
         json.dump(meta, f, indent=1)
+    os.replace(tmp, f"{index_dir}/stats.json")
 
 
 # ---------------------------------------------------- shard query kernel
@@ -1162,12 +1172,12 @@ def compact_segments(
     the shared shard encoder (mapside.encode_postings).
 
     The shard's sentinel rows merge by docID concatenation and come
-    first. Offsets survive only if every term row of the shard carries
-    them. Each bloom SIDE merges by decoding its generations' boxes in
-    the merged docID order, aligned on the ``generation`` column
-    (streaming indexes partition by it); a term's side that
-    cannot be aligned unambiguously is DROPPED, which is always
-    result-neutral: blooms are pruning-only and queries skip the
+    first. Positions and offsets each survive only if every term row
+    of the shard carries them. Each bloom SIDE merges by decoding its
+    generations' boxes in the merged docID order, aligned on the
+    ``generation`` column (streaming indexes partition by it); a term's
+    side that cannot be aligned unambiguously is DROPPED, which is
+    always result-neutral: blooms are pruning-only and queries skip the
     pre-check when the row is absent."""
     from wiser_spark.functions.bloom import (
         BLOOM_BOX_MAGIC,
@@ -1210,8 +1220,10 @@ def compact_segments(
             )
         if not plain:  # orphan bloom rows (shouldn't happen): dropped
             return
-        # offsets survive the merge only if EVERY generation carries
-        # them (a mixed index can't produce a complete merged column)
+        # positions and offsets each survive the merge only if EVERY
+        # term row carries them (an index built without them, or a
+        # mixed one, can't produce a complete merged column)
+        with_pos = all(len(r["pos_blob"]) for rs in plain.values() for r in rs)
         with_off = all(len(r["off_blob"]) for rs in plain.values() for r in rs)
         vocab = sorted(plain)
         ids, tfs, pos, offs, bounds = [], [], [], [], [0]
@@ -1225,7 +1237,8 @@ def compact_segments(
             for r in parts:
                 ids.append(r["ids"])
                 tfs.append(r["tfs"])
-                pos.append(_decode_runs(r["pos_blob"], r["tfs"]))
+                if with_pos:
+                    pos.append(_decode_runs(r["pos_blob"], r["tfs"]))
                 if with_off:
                     offs.append(_decode_runs(r["off_blob"], 2 * r["tfs"]))
             bounds.append(bounds[-1] + sum(len(r["ids"]) for r in parts))
@@ -1257,7 +1270,8 @@ def compact_segments(
         batches = encode_postings(
             shard_id, pa.array(vocab, pa.string()), np.array(bounds),
             np.concatenate(ids), np.concatenate(tfs),
-            np.concatenate(pos), np.concatenate(offs) if with_off else None,
+            np.concatenate(pos) if with_pos else None,
+            np.concatenate(offs) if with_off else None,
             mats,
         )
         del plain, sides, parts, ids, tfs, pos, offs, blooms, mats
@@ -1319,9 +1333,7 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
         "overwrite"
     ).parquet(f"{out_dir}/dictionary")
     meta["compacted"] = True
-    os.makedirs(out_dir, exist_ok=True)
-    with open(f"{out_dir}/stats.json", "w") as f:
-        json.dump(meta, f, indent=1)
+    write_stats(out_dir, meta)
 
 
 # ------------------------------------------------------------------ read
@@ -1415,18 +1427,6 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
         .schema(SEGMENT_SCHEMA)
         .parquet(*[f"{base}/generation={g}" for g in gens])
     )
-
-
-def _reply_schema(schema: str, return_snippets: bool, docs, doc_store_dir):
-    """A search reply's schema, with the snippet column when asked for
-    (which needs a content source)."""
-    if not return_snippets:
-        return schema
-    if docs is None and doc_store_dir is None:
-        raise ValueError(
-            "return_snippets requires the docs table or a doc_store_dir"
-        )
-    return schema + ", snippet string"
 
 
 class SegmentIndex:
@@ -1903,46 +1903,24 @@ class SegmentIndex:
         content_col: str = "content",
         doc_store_dir: str | None = None,
     ) -> DataFrame:
-        """Top-k (rank, doc_id, score) — a single-query run of the SAME
-        shard kernel ``search_batch`` uses (one code path, one shard
-        pass); the <= k rows per shard merge through a tiny global
-        top-k (TakeOrderedAndProject).
+        """Top-k (rank, doc_id, score[, snippet]) of one query: the
+        one-query case of ``search_batch`` (query id 0), without its
+        query_id column.
 
-        With ``return_snippets=True`` (requires ``docs`` = the content
-        table) the result gains a ``snippet`` column: the shard kernel
-        also emits each top doc's MATCHED offset pairs per term — all
-        occurrences for term queries, position-filtered for phrases
-        (reference ``query_processing.h:446-492``) — and the k result
-        docs' content (broadcast join) is passage-scored with the
-        reference's BM25-like highlighter (``highlighter.h:437-450``).
-
-        ``doc_store_dir`` (alternative to ``docs``): the reference's
-        serving flow — the <= k winner ids point-fetch their content
-        from a chunked doc store written by ``write_doc_store``
-        (extent min/max pruning, only the winners decompress;
-        ``doc_store.h:277-362``) instead of joining the lake table."""
-        out_schema = _reply_schema(
-            "rank int, doc_id long, score double", return_snippets, docs,
-            doc_store_dir,
-        )
-        per_shard = self._per_shard_topk(
-            [(0, terms, is_phrase)], k,
-            offs_qids=frozenset([0]) if return_snippets else frozenset(),
-        )
-        if per_shard is None:
-            return empty_frame(self.spark, out_schema)
-        top = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from pyspark.sql import Window
-
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        ranked = top.withColumn("rank", F.row_number().over(w))
-        if not return_snippets:
-            return ranked.select("rank", "doc_id", "score")
-
-        return self._snippet_tail(
-            ranked, [], {None: list(terms)}, out_schema, docs, content_col,
-            doc_store_dir, n_passages,
-        )
+        With ``return_snippets=True`` the reply gains a ``snippet``
+        column: the shard kernel also emits each top doc's MATCHED
+        offset pairs per term — all occurrences for term queries,
+        position-filtered for phrases (reference
+        ``query_processing.h:446-492``) — and each winner's content is
+        passage-scored with the reference's BM25-like highlighter
+        (``highlighter.h:437-450``). Content comes from ``docs`` (the
+        lake table) or ``doc_store_dir`` (the serving flow: the winners
+        are point-read from the chunked store written by
+        ``write_doc_store``, ``doc_store.h:277-362``)."""
+        return self._reply(
+            [(0, terms, is_phrase)], k, return_snippets, docs, n_passages,
+            content_col, doc_store_dir,
+        ).drop("query_id")
 
     def search_batch(
         self,
@@ -1955,116 +1933,119 @@ class SegmentIndex:
         doc_store_dir: str | None = None,
     ) -> DataFrame:
         """Answer a WHOLE query log in ONE pass over the segment table:
-        (query_id, rank, doc_id, score[, snippet]).
+        (query_id, rank, doc_id, score[, snippet]), sorted by
+        (query_id, rank).
 
         The QPS path: one scan + one Arrow stage answers every query —
         the shared shard kernel (``_per_shard_topk``) decodes each
         referenced term once across all queries and emits <= k rows per
-        (query, shard). The global merge is a window over <= k *
-        n_shards rows per query. The reference serves a log through its
+        (query, shard). The reference serves a log through its
         processor dispatch loop (``query_processing.h:956-979``) one
         query at a time; batching is the Spark-native fan-in that
         amortizes scan and job cost.
 
         ``return_snippets`` adds the snippet column for EVERY query in
-        the log (each winner's matched offset pairs ride out of the
-        kernel, phrase queries position-filtered), with content from
-        ``docs`` (lake table, broadcast join over <= k*|log| winner
-        rows) or ``doc_store_dir`` (chunked-store point fetch of the
-        distinct winner ids — the serving flow). A repeated query_id
-        raises ValueError."""
+        the log, with content from ``docs`` or ``doc_store_dir`` as in
+        ``search``. A repeated query_id raises ValueError."""
         check_query_ids(queries)
-        out_schema = _reply_schema(
-            "query_id int, rank int, doc_id long, score double",
-            return_snippets, docs, doc_store_dir,
-        )
-        offs_qids = (
-            frozenset(int(q[0]) for q in queries)
-            if return_snippets else frozenset()
-        )
         # NOTE r06: a duplicate-shape dedup (answer each (terms,
         # is_phrase) shape once, fan out via a broadcast map — as
         # bm25_topk_batch does) was measured HERE and reverted: the
         # shard kernel already decodes each referenced term once across
         # the whole log, so dedup only trims the per-query numpy top-k
-        # and the window input, while the extra mapping join costs more
+        # and the merge input, while the extra mapping join costs more
         # on a first execution than it saves warm (0.88 -> 0.93-1.26 s
         # first-run at 50k docs; warm 0.71 -> 0.67).
-        per_shard = self._per_shard_topk(queries, k, offs_qids=offs_qids)
-        if per_shard is None:
-            return empty_frame(self.spark, out_schema)
-        from pyspark.sql import Window
-
-        # <= k rows per (query, shard) reach this window — bounded input
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        ranked = per_shard.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-        if not return_snippets:
-            return ranked.select("query_id", "rank", "doc_id", "score")
-
-        terms_by_qid = {
-            int(qid): [str(t) for t in terms] for qid, terms, _ in queries
-        }
-        return self._snippet_tail(
-            ranked, ["query_id"], terms_by_qid, out_schema, docs,
-            content_col, doc_store_dir, n_passages,
+        return self._reply(
+            queries, k, return_snippets, docs, n_passages, content_col,
+            doc_store_dir,
         )
 
-    def _snippet_tail(
-        self, ranked: DataFrame, qcols: list[str], terms_by_qid: dict,
-        out_schema: str, docs: DataFrame | None, content_col: str,
-        doc_store_dir: str | None, n_passages: int,
+    # search and search_batch share this rather than calling each
+    # other, so a wrapper around either public entry sees one call per
+    # request
+    def _reply(
+        self, queries, k: int, return_snippets: bool,
+        docs: DataFrame | None, n_passages: int, content_col: str,
+        doc_store_dir: str | None,
     ) -> DataFrame:
-        """Snippets for the ranked winners of ``search`` (``qcols`` = [],
-        its terms under key None) or ``search_batch`` (``qcols`` =
-        ["query_id"]). Content comes from ``docs`` (broadcast join over
-        the winner rows) or, in the serving flow, from a point fetch of
-        the winner ids out of the chunked store at ``doc_store_dir``
-        (a driver action over <= k ids per query, like the reference
-        handing ids to its doc store)."""
+        """ONE collect of the shard kernel's <= k rows per (query,
+        shard), then the global merge, the ranks, the content read and
+        the snippets on the driver — the reference hands its top-k ids
+        to an in-process doc store and highlighter the same way. The
+        reply is a local frame: collecting it runs no Spark job."""
+        schema = "query_id int, rank int, doc_id long, score double"
+        if return_snippets:
+            if docs is None and doc_store_dir is None:
+                raise ValueError(
+                    "return_snippets requires the docs table or a "
+                    "doc_store_dir"
+                )
+            schema += ", snippet string"
+        offs_qids = (
+            frozenset(int(q[0]) for q in queries)
+            if return_snippets else frozenset()
+        )
+        per_shard = self._per_shard_topk(queries, k, offs_qids=offs_qids)
+        rows = per_shard.collect() if per_shard is not None else []
+        # global merge: each query's <= k * n_shards rows ranked by
+        # (-score, doc_id), top k kept
+        rows.sort(key=lambda r: (r["query_id"], -r["score"], r["doc_id"]))
+        top = [
+            (rank, r)
+            for _, group in groupby(rows, key=lambda r: r["query_id"])
+            for rank, r in enumerate(islice(group, k), 1)
+        ]
+        cols = {
+            "query_id": pa.array([r["query_id"] for _, r in top], pa.int32()),
+            "rank": pa.array([n for n, _ in top], pa.int32()),
+            "doc_id": pa.array([r["doc_id"] for _, r in top], pa.int64()),
+            "score": pa.array([r["score"] for _, r in top], pa.float64()),
+        }
+        if return_snippets:
+            cols["snippet"] = pa.array(
+                self._snippets(
+                    [r for _, r in top], queries, docs, content_col,
+                    doc_store_dir, n_passages,
+                ),
+                pa.string(),
+            )
+        return self.spark.createDataFrame(pa.table(cols), schema)
+
+    def _snippets(
+        self, winners: list, queries, docs: DataFrame | None,
+        content_col: str, doc_store_dir: str | None, n_passages: int,
+    ) -> list[str]:
+        """One snippet per winner row, highlighted on the driver. The
+        content is a point read of the winner ids from the chunked
+        store at ``doc_store_dir`` (no Spark job), or one filtered
+        collect of the ``docs`` table."""
         from wiser_spark.operators import docstore
         from wiser_spark.operators.highlight import snippet_from_stored_offsets
 
-        ranked = ranked.localCheckpoint(eager=True)  # run topk once
+        ids = sorted({r["doc_id"] for r in winners})
         if docs is None:
-            ids = ranked.select("doc_id")
-            if qcols:
-                ids = ids.distinct()  # one doc can win several queries
-            docs = docstore.fetch_docs(
-                self.spark, doc_store_dir, [int(r["doc_id"]) for r in ids.collect()]
+            content = docstore.read_docs(doc_store_dir, ids)
+        elif ids:
+            content = dict(
+                docs.select("doc_id", content_col)
+                .filter(F.col("doc_id").isin(ids))
+                .collect()
             )
-            content_col = "content"
-        # LEFT-preserve the ranked winners: a winner whose content is
-        # absent from the docs table / store (e.g. a doc added to a
-        # live index after the store was written) keeps its entry with
-        # an empty snippet instead of silently vanishing from the
-        # reply. ranked and hits are <= k rows per query; checkpointing
-        # them pins ONE shard-kernel run and ONE docs scan — the
-        # anti-join below reuses the materialized rows instead of
-        # recomputing the subtrees.
-        hits = docs.select("doc_id", F.col(content_col).alias("content")).join(
-            F.broadcast(ranked), "doc_id"
-        ).localCheckpoint(eager=True)
-        cols = [c.split()[0] for c in out_schema.split(", ")][:-1]
-
-        def mk_snippets(batches):
-            for pdf in batches:
-                qids = pdf[qcols[0]].astype(int) if qcols else [None] * len(pdf)
-                out = {c: pdf[c] for c in cols}
-                out["snippet"] = [
-                    snippet_from_stored_offsets(
-                        c, [list(o) for o in offs], terms_by_qid[q], n_passages
-                    )
-                    for c, offs, q in zip(pdf["content"], pdf["offs"], qids)
-                ]
-                yield pd.DataFrame(out)
-
-        snipped = hits.mapInPandas(mk_snippets, out_schema)
-        keys = [*qcols, "doc_id"]
-        missing = ranked.join(
-            F.broadcast(hits.select(*keys)), keys, "left_anti"
-        ).select(*cols, F.lit("").alias("snippet"))
-        return snipped.unionByName(missing).orderBy(*qcols, "rank")
+        else:
+            content = {}
+        terms_by_qid = {
+            int(qid): [str(t) for t in terms] for qid, terms, _ in queries
+        }
+        # a winner whose content is absent from the docs table / store
+        # (e.g. a doc added to a live index after the store was
+        # written) keeps its entry with an empty snippet instead of
+        # vanishing from the reply
+        return [
+            snippet_from_stored_offsets(
+                content[r["doc_id"]], r["offs"], terms_by_qid[r["query_id"]],
+                n_passages,
+            )
+            if r["doc_id"] in content else ""
+            for r in winners
+        ]

@@ -38,6 +38,7 @@ from wiser_spark.operators.segments import (
     SEGMENT_SCHEMA,
     build_segments,
     dictionary_from_segments,
+    write_stats,
 )
 from wiser_spark.plans.manifest import (
     Manifest,
@@ -182,8 +183,7 @@ class IndexBuildPipeline:
             "format": "wiser-spark-segment-v2",
             "doclen_sentinel": True,
         }
-        with open(os.path.join(self.work_dir, "stats.json"), "w") as f:
-            json.dump(meta, f, indent=1)
+        write_stats(self.work_dir, meta)
         return self.manifest
 
 

@@ -50,12 +50,13 @@ per-request semantics — is preserved verbatim):
   manifest); replies ``{"ok": true, "message": "<n> docs committed"}``.
 
 Concurrency: requests are answered under one lock.  A Spark driver
-CAN submit jobs from many threads, but the serving flow's snippet path
-collects winner ids on the driver between two jobs, and interleaving
-two interactive queries' jobs on a local[k] scheduler only degrades
-both latencies — the throughput path is ``/stream_search`` (batch
-fan-in), exactly as the reference pushes load through its streaming
-RPC rather than parallel unary calls (``grpc_bench.cc``).
+CAN submit jobs from many threads, but a reply is one collect of the
+shard kernel followed by driver-side work (merge, doc-store point read,
+highlighting), and interleaving two interactive queries' jobs on a
+local[k] scheduler only degrades both latencies —
+the throughput path is ``/stream_search`` (batch fan-in), exactly as
+the reference pushes load through its streaming RPC rather than
+parallel unary calls (``grpc_bench.cc``).
 """
 
 from __future__ import annotations

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wiser_spark.config import IndexConfig
-from wiser_spark.operators.segments import prefetch_pages_col
+from wiser_spark.operators.segments import prefetch_pages_col, write_stats
 
 _TABLES = ("segments", "dictionary_deltas")
 
@@ -656,8 +656,7 @@ class IncrementalIndexer:
             # family) across refreshes; defaults only for a brand-new
             # index
             meta["bloom"] = (self.bloom_cfg or bloom_params())._asdict()
-        with open(f"{self.index_dir}/stats.json", "w") as f:
-            json.dump(meta, f, indent=1)
+        write_stats(self.index_dir, meta)
 
 
 def start_incremental_index(
