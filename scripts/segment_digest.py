@@ -1,6 +1,6 @@
 """Print one SHA-1 per table of an index directory.
 
-    python scripts/segment_digest.py <index_dir>
+    python scripts/segment_digest.py [--logical] <index_dir>
 
 Each digest covers the table's rows (every column, partition columns
 included) serialized one per line and sorted, so it does not depend on
@@ -8,6 +8,16 @@ file names, file count or row order. Two builds of the same corpus by
 two versions of the writer print the same lines exactly when their
 segment and dictionary rows are byte-identical. Reads the parquet files
 with pyarrow; no Spark session is started.
+
+``--logical`` digests the segments table by (shard, term) entry
+instead of by row, so two segment layouts can be compared: an entry
+holds the term row's posting columns (partition columns included) and
+the (blob, box offsets) of its end and begin phrase blooms, read from
+the bloom columns of the term row, or from the older layout's separate
+bloom rows (term prefixed "\\x01" for end, "\\x02" for begin, the
+boxes in ``tfs_blob``/``skip_tf_offs``). Equal logical lines mean the
+same postings and the same bloom bytes, whichever layout wrote them.
+The dictionary line stays the plain row digest.
 """
 
 from __future__ import annotations
@@ -16,34 +26,96 @@ import hashlib
 import os
 import sys
 
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 TABLES = ("segments", "dictionary")
+# the bloom sides: (column pair of the term row, term prefix of the
+# older layout's bloom row)
+SIDES = (
+    (("bloom_end_blob", "skip_bloom_end_offs"), "\x01"),
+    (("bloom_begin_blob", "skip_bloom_begin_offs"), "\x02"),
+)
+BLOOM_COLS = {c for cols, _ in SIDES for c in cols}
 
 
-def table_digest(path: str) -> tuple[int, str]:
-    """(row count, SHA-1 over the sorted row lines) of one parquet table."""
-    table = ds.dataset(path, format="parquet", partitioning="hive").to_table()
-    cols = sorted(table.column_names)
-    lines = sorted(
-        repr(tuple(row[c] for c in cols)).encode()
-        for row in table.to_pylist()
-    )
+def _digest(lines: list[bytes]) -> tuple[int, str]:
     h = hashlib.sha1()
-    for line in lines:
+    for line in sorted(lines):
         h.update(line + b"\n")
     return len(lines), h.hexdigest()
 
 
-def main(index_dir: str) -> None:
+def _dataset(path: str):
+    return ds.dataset(path, format="parquet", partitioning="hive")
+
+
+def table_digest(path: str) -> tuple[int, str]:
+    """(row count, SHA-1 over the sorted row lines) of one parquet table."""
+    table = _dataset(path).to_table()
+    cols = sorted(table.column_names)
+    return _digest([
+        repr(tuple(row[c] for c in cols)).encode()
+        for row in table.to_pylist()
+    ])
+
+
+def logical_digest(path: str) -> tuple[int, str]:
+    """(entry count, SHA-1 over the sorted (shard, term) entry lines) of
+    a segments table in either bloom layout; one shard in memory at a
+    time."""
+    dataset = _dataset(path)
+    names = dataset.schema.names
+    base = sorted(c for c in names if c not in BLOOM_COLS)
+    part_cols = [c for c in ("shard_id", "generation") if c in names]
+    no_sides = [(None, None)] * len(SIDES)
+    shards = pc.unique(
+        dataset.to_table(columns=["shard_id"])["shard_id"]
+    ).to_pylist()
+    lines: list[bytes] = []
+    for shard in shards:
+        rows = dataset.to_table(filter=ds.field("shard_id") == shard).to_pylist()
+        entries: dict[tuple, dict] = {}
+        sides: dict[tuple, list] = {}
+        for r in rows:
+            term = r["term"]
+            side = next(
+                (s for s, (_, pref) in enumerate(SIDES)
+                 if term.startswith(pref)), None,
+            )
+            part = tuple(r[c] for c in part_cols)
+            if side is not None:  # older layout: a bloom row
+                key = part + (term[1:],)
+                got = sides.setdefault(key, list(no_sides))
+                got[side] = (r["tfs_blob"], r["skip_tf_offs"])
+                continue
+            key = part + (term,)
+            entries[key] = r
+            if BLOOM_COLS <= r.keys():
+                sides[key] = [tuple(r[c] for c in cols) for cols, _ in SIDES]
+        for key, r in entries.items():
+            entry = tuple(r[c] for c in base) + tuple(sides.get(key, no_sides))
+            lines.append(hashlib.sha1(repr(entry).encode()).digest())
+    return _digest(lines)
+
+
+def main(index_dir: str, logical: bool = False) -> None:
     for name in TABLES:
         path = os.path.join(index_dir, name)
-        if os.path.isdir(path):
+        if not os.path.isdir(path):
+            continue
+        if logical and name == "segments":
+            n, digest = logical_digest(path)
+            print(f"{name} entries={n} logical_sha1={digest}")
+        else:
             n, digest = table_digest(path)
             print(f"{name} rows={n} sha1={digest}")
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 2:
+    args = sys.argv[1:]
+    logical = "--logical" in args
+    args = [a for a in args if a != "--logical"]
+    if len(args) != 1:
         sys.exit(__doc__)
-    main(sys.argv[1])
+    main(args[0], logical)

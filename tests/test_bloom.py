@@ -25,7 +25,7 @@ def test_no_false_negatives_unit():
     64-bit one."""
     from wiser_spark.functions.bloom import (
         bloom_params,
-        fold_occurrence_bloom_rows,
+        fold_occurrence_masks,
         probe_rows,
         token_bloom_mask,
         vocab_bloom_matrix,
@@ -42,7 +42,7 @@ def test_no_false_negatives_unit():
     # masks byte-for-byte (the no-false-negative contract's foundation)
     for i in (0, 7, 199):
         assert np.array_equal(mat[i], token_bloom_mask(vocab[i], bp))
-    sized = fold_occurrence_bloom_rows(mat, starts)
+    sized = fold_occurrence_masks(mat, starts)
     for j, (lo, hi) in enumerate(spans):
         for t in vocab[lo:hi]:
             assert probe(blooms[j : j + 1], token_bloom_bits(t))[0]
@@ -124,7 +124,7 @@ def test_sized_blooms_prune_at_least_as_much_as_legacy():
     posting, 5000 absent probes — count false positives both ways."""
     from wiser_spark.functions.bloom import (
         bloom_params,
-        fold_occurrence_bloom_rows,
+        fold_occurrence_masks,
         probe_rows,
         token_bloom_mask,
         vocab_bloom_matrix,
@@ -133,7 +133,7 @@ def test_sized_blooms_prune_at_least_as_much_as_legacy():
     members = [f"in{i}" for i in range(5)]
     absent = [f"out{i}" for i in range(5000)]
     bp = bloom_params()
-    sized = fold_occurrence_bloom_rows(
+    sized = fold_occurrence_masks(
         vocab_bloom_matrix(members, bp), np.array([0])
     )
     legacy = fold_occurrence_blooms(
@@ -184,9 +184,15 @@ def test_bloom_index_matches_oracle(spark, both_indexes):
 
 
 def test_dictionary_excludes_bloom_and_sentinel_rows(spark, both_indexes):
+    """The dictionary holds exactly the term rows' terms: no sentinel,
+    and no entry per bloom side (blooms are columns of the term row,
+    not rows of their own)."""
     d = spark.read.parquet(f"{both_indexes[0]}/dictionary")
-    terms = [r["term"] for r in d.collect()]
-    assert all(t and not t.startswith(("\x01", "\x02")) for t in terms)
+    terms = sorted(r["term"] for r in d.collect())
+    segs = spark.read.parquet(f"{both_indexes[0]}/segments")
+    seg_terms = {r["term"] for r in segs.select("term").collect()}
+    assert "" not in terms and len(terms) == len(set(terms))
+    assert set(terms) == seg_terms - {""}
 
 
 def test_begin_bloom_sided_probe(spark, tmp_path):
@@ -217,3 +223,53 @@ def test_nonadjacent_cooccurrence_pruned(spark, tmp_path):
     idx = SegmentIndex(spark, d)
     assert idx.search(["alpha", "beta"], k=10, is_phrase=True).count() == 0
     assert idx.search(["alpha", "gap"], k=10, is_phrase=True).count() == 1
+
+
+PHRASES = [["return", "import"], ["if", "else"], ["import", "return", "def"],
+           ["self", "return"], ["def", "zz_absent"]]
+
+
+def test_bloom_is_result_neutral_across_generations(spark, tmp_path):
+    """Phrase answers are rank-identical with and without blooms on a
+    3-generation streaming index (multi-generation terms skip the
+    pre-check, single-generation ones run it), and again after each is
+    compacted (every term row then carries both bloom sides, or none);
+    all four match the oracle. One search_batch per index answers the
+    whole phrase log."""
+    from wiser_spark.operators.segments import BLOOM_COLUMNS, compact_index
+    from wiser_spark.streaming.incremental import IncrementalIndexer
+
+    schema = "repo string, path string, commit string, lang string, content string"
+    rows = make_corpus(150)
+    eng = OracleEngine(PARAMS)
+    for row in rows:
+        eng.add_document(row["content"])
+    want = [
+        [d for d, _ in eng.search(t, k=10, is_phrase=True)] for t in PHRASES
+    ]
+    answers = {}
+    for blooms in (True, False):
+        d = str(tmp_path / f"stream_{blooms}")
+        ix = IncrementalIndexer(
+            d, IndexConfig(bm25=PARAMS, n_shards=2), with_blooms=blooms
+        )
+        for b, lo in enumerate((0, 50, 100)):
+            ix.process_batch(spark.createDataFrame(rows[lo:lo + 50], schema), b)
+        compact_index(spark, d, d + "_c")
+        segs = spark.read.parquet(f"{d}_c/segments").filter("term != ''")
+        for blob_col, _ in BLOOM_COLUMNS:
+            assert segs.filter(
+                segs[blob_col].isNull() if blooms else segs[blob_col].isNotNull()
+            ).count() == 0
+        for name in (d, d + "_c"):
+            got = SegmentIndex(spark, name).search_batch(
+                [(i, t, True) for i, t in enumerate(PHRASES)], k=10
+            ).collect()
+            answers[(blooms, name.endswith("_c"))] = [
+                [(r["doc_id"], r["score"]) for r in got if r["query_id"] == i]
+                for i in range(len(PHRASES))
+            ]
+    base = answers[(False, False)]
+    assert all(a == base for a in answers.values())
+    assert [[d for d, _ in q] for q in base] == want
+    assert sum(map(len, want)) > 0

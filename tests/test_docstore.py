@@ -399,3 +399,39 @@ def test_snippet_reply_adds_no_spark_job(spark, tmp_path):
         assert count(lambda: idx.search(
             ["return", "import"], k=5, is_phrase=True,
             return_snippets=True, **src)) == plain_one
+
+
+def test_row_groups_honour_block_size(spark, tmp_path):
+    """A row group of the extents table holds at most one extent past
+    the 4 MiB block: the writer checks the block size from the first
+    row on, not only after 100 rows (one point read would otherwise
+    read 100 extents)."""
+    import base64
+    import math
+    import os
+
+    import pyarrow.parquet as pq
+
+    from wiser_spark.operators.docstore import STORE_BLOCK_BYTES
+
+    rnd = random.Random(5)
+    rows = [
+        (i, base64.b64encode(rnd.randbytes(30_000)).decode())
+        for i in range(240)
+    ]
+    extent = 256 * 1024
+    d = str(tmp_path / "ds")
+    write_doc_store(
+        spark.createDataFrame(rows, "doc_id long, content string")
+        .coalesce(1), d, extent_bytes=extent,
+    )
+    ext = f"{d}/extents"
+    sizes = [
+        md.row_group(g).num_rows
+        for name in sorted(os.listdir(ext)) if name.endswith(".parquet")
+        for md in [pq.ParquetFile(f"{ext}/{name}").metadata]
+        for g in range(md.num_row_groups)
+    ]
+    cap = math.ceil(STORE_BLOCK_BYTES / extent) + 1
+    assert sum(sizes) > cap  # the store spans more than one block
+    assert max(sizes) <= cap, sizes

@@ -8,7 +8,7 @@ import pytest
 from wiser_spark.config import BM25Params, IndexConfig
 from wiser_spark.operators.mapside import write_index_mapside
 from wiser_spark.operators.postings import assign_doc_ids
-from wiser_spark.operators.segments import SegmentIndex
+from wiser_spark.operators.segments import FORMAT, SegmentIndex
 from wiser_spark.oracle import OracleEngine
 from wiser_spark.sources.corpus import corpus_df, make_corpus
 
@@ -36,7 +36,7 @@ def test_meta_and_dictionary(spark, mapside_dir, oracle):
     meta = json.load(open(f"{mapside_dir}/stats.json"))
     assert meta["n_docs"] == N
     assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
-    assert meta["doclen_sentinel"] is True
+    assert meta["format"] == FORMAT
     d = {
         r["term"]: r["df"]
         for r in spark.read.parquet(f"{mapside_dir}/dictionary").collect()
@@ -79,22 +79,25 @@ def test_degenerate_corpora(spark, tmp_path):
 
 def test_batched_encode_byte_identical_to_reference():
     """The vocabulary-batched encoder must produce rows BYTE-IDENTICAL
-    to the per-term reference encode (_encode_term_flat / bloom_row) —
-    including df >= PACK_SIZE terms (framed path), df < PACK_SIZE
-    terms (batched tail path), and both bloom sides."""
+    to the per-term reference encode (_encode_term_flat, bloom columns
+    from bloom_boxes_encode) — including df >= PACK_SIZE terms (framed
+    path), df < PACK_SIZE terms (batched tail path), and both bloom
+    sides."""
     import random
 
     import numpy as np
     import pyarrow as pa
 
-    from wiser_spark.functions.bloom import bloom_params, vocab_bloom_matrix
+    from wiser_spark.functions.bloom import (
+        bloom_boxes_encode,
+        bloom_params,
+        vocab_bloom_matrix,
+    )
     from wiser_spark.operators.mapside import encode_doc_batches
     from wiser_spark.operators.segments import (
-        BLOOM_BEGIN_PREFIX,
-        BLOOM_PREFIX,
+        BLOOM_COLUMNS,
         DOCLEN_TERM,
         _encode_term_flat,
-        bloom_row,
     )
 
     rnd = random.Random(3)
@@ -149,11 +152,13 @@ def test_batched_encode_byte_identical_to_reference():
         want = _encode_term_flat(7, t, doc_ids, tfs, flat_pos, flat_off)
         have = got[t]
         for k, v in want.items():
+            if k in {c for side in BLOOM_COLUMNS for c in side}:
+                continue  # checked below against the boxes directly
             hv = have[k]
             assert (list(hv) if isinstance(v, list) else hv) == v, (t, k)
         # blooms: end = next-token masks, begin = previous-token masks
         # (sized filters: reference libbloom defaults, box layout)
-        for pref, delta in ((BLOOM_PREFIX, 1), (BLOOM_BEGIN_PREFIX, -1)):
+        for (blob_col, offs_col), delta in zip(BLOOM_COLUMNS, (1, -1)):
             blooms = []
             for d in doc_ids:
                 acc = np.zeros(bp.nbytes, dtype=np.uint8)
@@ -163,13 +168,12 @@ def test_batched_encode_byte_identical_to_reference():
                     if 0 <= q < len(toks):
                         acc |= masks[code[toks[q]]]
                 blooms.append(acc)
-            wantb = bloom_row(7, t, np.stack(blooms), prefix=pref)
-            haveb = got[pref + t]
-            for k, v in wantb.items():
-                hv = haveb[k]
-                assert (list(hv) if isinstance(v, list) else hv) == v, (t, pref, k)
+            blob, offs = bloom_boxes_encode(np.stack(blooms))
+            assert have[blob_col] == blob, (t, blob_col)
+            assert have[offs_col] == offs, (t, offs_col)
         n_checked += 1
     assert n_checked == len(vocab) and DOCLEN_TERM in got
+    assert len(got) == len(vocab) + 1  # one row per term + the sentinel
     assert max(len(per_term["hot"]), 0) >= 128  # framed path exercised
 
 
@@ -183,10 +187,7 @@ def _reference_rows(docs, with_blooms):
 
     from wiser_spark.functions.bloom import bloom_params, vocab_bloom_matrix
     from wiser_spark.operators.segments import (
-        BLOOM_BEGIN_PREFIX,
-        BLOOM_PREFIX,
         _encode_term_flat,
-        bloom_row,
         doclen_sentinel_row,
     )
 
@@ -204,21 +205,21 @@ def _reference_rows(docs, with_blooms):
     for t in vocab:
         doc_ids = sorted(per_term[t])
         occ = [o for d in doc_ids for o in per_term[t][d]]
-        rows.append(_encode_term_flat(
-            7, t, np.array(doc_ids, dtype=np.int64),
-            np.array([len(per_term[t][d]) for d in doc_ids], dtype=np.int64),
-            np.array([p for p, _, _ in occ], dtype=np.int64),
-            np.array([v for _, s, e in occ for v in (s, e)], dtype=np.int64),
-        ))
-        if not with_blooms:
-            continue
-        for pref, delta in ((BLOOM_PREFIX, 1), (BLOOM_BEGIN_PREFIX, -1)):
+        sides = []
+        for delta in (1, -1):  # end blooms, then begin blooms
             blooms = np.zeros((len(doc_ids), bp.nbytes), dtype=np.uint8)
             for i, d in enumerate(doc_ids):
                 for p, _, _ in per_term[t][d]:
                     if 0 <= p + delta < len(toks[d]):
                         blooms[i] |= masks[toks[d][p + delta].group()]
-            rows.append(bloom_row(7, t, blooms, prefix=pref))
+            sides.append(blooms)
+        rows.append(_encode_term_flat(
+            7, t, np.array(doc_ids, dtype=np.int64),
+            np.array([len(per_term[t][d]) for d in doc_ids], dtype=np.int64),
+            np.array([p for p, _, _ in occ], dtype=np.int64),
+            np.array([v for _, s, e in occ for v in (s, e)], dtype=np.int64),
+            tuple(sides) if with_blooms else None,
+        ))
     rows.append(doclen_sentinel_row(
         7, np.arange(len(docs)),
         [len([c for c in d.split(" ") if c]) for d in docs],
@@ -232,6 +233,8 @@ def _edge_corpus(case):
     rnd = random.Random(11)
     if case == "df_eq_128":  # 'edge' fills exactly one framed box
         return [f"edge w{i} x{i % 7} edge" for i in range(128)]
+    if case == "df_under_128":  # every term on the tail path
+        return [f"edge w{i} x{i % 7} edge" for i in range(127)]
     if case in ("df_over_128", "no_blooms", "batches"):
         # 'hot' spans two bloom boxes; rare terms stay on the tail path
         return [
@@ -244,15 +247,16 @@ def _edge_corpus(case):
 
 
 @pytest.mark.parametrize(
-    "case", ["df_eq_128", "df_over_128", "no_blooms", "batches",
-             "punctuation"],
+    "case", ["df_under_128", "df_eq_128", "df_over_128", "no_blooms",
+             "batches", "punctuation"],
 )
 def test_encode_byte_identical_edge_cases(case):
-    """Row-for-row, byte-identical and in order (term, end-bloom,
-    begin-bloom per term; sentinel last) against the per-term
-    reference, at the framed/tail boundary, across bloom boxes,
-    without blooms, over several input batches whose per-batch
-    dictionaries must unify, and for a shard with no tokens at all."""
+    """Row-for-row, byte-identical and in order (one row per term with
+    both bloom sides as columns; sentinel last) against the per-term
+    reference, below and at the framed/tail boundary, across bloom
+    boxes, without blooms (null bloom columns), over several input
+    batches whose per-batch dictionaries must unify, and for a shard
+    with no tokens at all."""
     import pyarrow as pa
 
     from wiser_spark.operators.mapside import encode_doc_batches
@@ -303,7 +307,7 @@ def hwm_kb():
 docs = []
 for i, row in enumerate(make_corpus(250, seed=101)):
     rng = random.Random(f"rare:{i}")
-    rare = " ".join(f"r{rng.getrandbits(48):012x}" for _ in range(170))
+    rare = " ".join(f"r{rng.getrandbits(48):012x}" for _ in range(190))
     docs.append(row["content"] + "\\n" + rare)
 rb = pa.record_batch({"doc_id": pa.array(range(250), pa.int64()),
                       "content": pa.array(docs)})
@@ -401,3 +405,77 @@ def test_write_index_mapside_surfaces_every_thread_failure(
     assert "injected stats failure" in " ".join(
         getattr(exc.value, "__notes__", [])
     )
+
+
+def _sentinel_shards(rows):
+    """shard id -> doc ids of each sentinel row, in row order."""
+    from wiser_spark.operators.segments import (
+        DOCLEN_TERM,
+        decode_doclen_sentinel,
+    )
+
+    return [
+        (r["shard_id"], decode_doclen_sentinel(r.asDict())[0].tolist())
+        for r in rows if r["term"] == DOCLEN_TERM
+    ]
+
+
+def test_shard_id_is_the_range_partition(spark):
+    """A plain 2-shard build labels shard s with the s-th contiguous
+    doc-id range, as the encode task numbers did."""
+    from wiser_spark.operators.mapside import build_segments_mapside
+
+    docs = assign_doc_ids(corpus_df(spark, 60), n_partitions=3).select(
+        "doc_id", "content"
+    )
+    sents = dict(_sentinel_shards(
+        build_segments_mapside(docs, n_shards=2).collect()
+    ))
+    assert sorted(sents) == [0, 1]
+    assert max(sents[0]) < min(sents[1])
+    assert sorted(sents[0] + sents[1]) == list(range(60))
+
+
+def test_shard_id_survives_union_and_coalesce(spark):
+    """The shard id is a column of the post-exchange stage, not the
+    encode task's number: a union of two builds keeps shards {0, 1} on
+    each side (their tasks are numbered 0-3), and a coalesce into one
+    task keeps both shards' sentinels apart."""
+    from pyspark.sql import functions as F
+
+    from wiser_spark.operators.mapside import build_segments_mapside
+
+    docs = assign_doc_ids(corpus_df(spark, 80), n_partitions=2).select(
+        "doc_id", "content"
+    )
+    left = build_segments_mapside(docs.filter(F.col("doc_id") < 40), 2)
+    right = build_segments_mapside(docs.filter(F.col("doc_id") >= 40), 2)
+    sents = _sentinel_shards(left.unionByName(right).collect())
+    assert len(sents) == 4
+    for side in (lambda d: d < 40, lambda d: d >= 40):
+        assert sorted(s for s, ids in sents if side(ids[0])) == [0, 1]
+
+    merged = _sentinel_shards(left.coalesce(1).collect())
+    assert sorted(s for s, _ in merged) == [0, 1]
+    assert sorted(d for _, ids in merged for d in ids) == list(range(40))
+
+
+def test_one_encode_task_refuses_two_shards():
+    """The encoder takes its shard id from the rows; a task whose rows
+    carry two shard ids raises instead of writing one shard's postings
+    under the other's id."""
+    import pyarrow as pa
+
+    from wiser_spark.operators.mapside import one_shard
+
+    def batch(shard):
+        return pa.record_batch({"doc_id": pa.array([shard], pa.int64()),
+                                "shard_id": pa.array([shard], pa.int32())})
+
+    empty = batch(0).slice(0, 0)
+    assert one_shard([]) is None and one_shard([empty]) is None
+    shard_id, rest = one_shard([empty, batch(3), batch(3)])
+    assert shard_id == 3 and len(list(rest)) == 2
+    shard_id, rest = one_shard([batch(0), batch(1)])
+    with pytest.raises(ValueError, match=r"shards \[0, 1\]"):
+        list(rest)

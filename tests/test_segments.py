@@ -16,7 +16,9 @@ from wiser_spark.operators.postings import (
     build_postings,
 )
 from wiser_spark.operators.segments import (
+    BLOOM_COLUMNS,
     DOCLEN_TERM,
+    FORMAT,
     SegmentIndex,
     build_segments,
     decode_doclen_sentinel,
@@ -77,16 +79,17 @@ def test_write_index_sentinel_layout(spark, oracle, index_dir):
     table and no blooms."""
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
-    assert meta["doclen_sentinel"] is True and "bloom" not in meta
+    assert meta["format"] == FORMAT and "bloom" not in meta
     assert not os.path.exists(f"{index_dir}/docstats")
     for shard in range(4):
         sdir = f"{index_dir}/segments/shard_id={shard}"
         files = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
         assert len(files) == 1
-        terms = spark.read.parquet(f"{sdir}/{files[0]}").select(
-            "term"
-        ).collect()
-        assert terms[-1]["term"] == DOCLEN_TERM
+        rows = spark.read.parquet(f"{sdir}/{files[0]}").collect()
+        assert rows[-1]["term"] == DOCLEN_TERM
+        assert all(
+            r[c] is None for r in rows for side in BLOOM_COLUMNS for c in side
+        )
     sent = spark.read.parquet(f"{index_dir}/segments").filter(
         f"term = '{DOCLEN_TERM}'"
     ).collect()
@@ -230,7 +233,7 @@ def test_segment_offsets_roundtrip(spark):
     span extracts its exact token from the lowered content."""
     from wiser_spark.operators.mapside import build_segments_mapside
     from wiser_spark.operators.postings import build_postings_arrow
-    from wiser_spark.operators.segments import BLOOM_PREFIXES, DOCLEN_TERM
+    from wiser_spark.operators.segments import DOCLEN_TERM
 
     docs = assign_doc_ids(corpus_df(spark, 60), n_partitions=2).select(
         "doc_id", "content"
@@ -241,7 +244,7 @@ def test_segment_offsets_roundtrip(spark):
         n_occ = 0
         for r in rows:
             row = r.asDict()
-            if row["term"] == DOCLEN_TERM or row["term"].startswith(BLOOM_PREFIXES):
+            if row["term"] == DOCLEN_TERM:
                 continue
             ids, tfs, _, offs = decode_segment_row(
                 row, with_positions=True, with_offsets=True
@@ -677,3 +680,25 @@ def test_write_stats_crash_keeps_previous_file(tmp_path, monkeypatch):
     write_stats(d, {"n_docs": 9, "avgdl": 3.0})  # a later write succeeds
     with open(f"{d}/stats.json") as f:
         assert json.load(f)["n_docs"] == 9
+
+
+def test_bloom_row_layout_refused(spark, tmp_path):
+    """An index of the older v2 layout (phrase blooms as separate
+    prefixed rows) is refused, not converted, by the reader, by
+    compaction and by a streaming resume — each asks for a rebuild."""
+    from wiser_spark.operators.segments import compact_index
+    from wiser_spark.streaming.incremental import IncrementalIndexer
+
+    for fmt in ("wiser-spark-segment-v2", "wiser-spark-segment-v2-mapside"):
+        d = tmp_path / fmt
+        d.mkdir()
+        (d / "stats.json").write_text(json.dumps({
+            "n_docs": 1, "avgdl": 1.0, "n_shards": 1, "k1": 1.2, "b": 0.75,
+            "format": fmt, "doclen_sentinel": True,
+        }))
+        with pytest.raises(ValueError, match="rebuilt"):
+            SegmentIndex(spark, str(d))
+        with pytest.raises(ValueError, match="rebuilt"):
+            compact_index(spark, str(d), str(tmp_path / "out"))
+        with pytest.raises(ValueError, match="rebuilt"):
+            IncrementalIndexer(str(d))

@@ -180,16 +180,11 @@ def test_stream_v2_multigeneration_queries(spark, streamed_v2, oracle):
 def test_stream_v2_compaction_merges_sentinels_and_blooms(
     spark, streamed_v2, oracle, tmp_path
 ):
-    """compact_index on a v2 streaming index merges plain rows AND the
-    sentinel doc-length rows AND both bloom sides into one row per
+    """compact_index on a v2 streaming index merges term rows (with
+    both bloom sides) AND the sentinel doc-length rows into one row per
     (shard, term); the compacted index answers the full suite
     rank-identically, with bloom pruning active again."""
-    from wiser_spark.operators.segments import (
-        BLOOM_BEGIN_PREFIX,
-        BLOOM_PREFIX,
-        DOCLEN_TERM,
-        compact_index,
-    )
+    from wiser_spark.operators.segments import DOCLEN_TERM, compact_index
 
     out = str(tmp_path / "compacted_v2")
     compact_index(spark, streamed_v2, out)
@@ -198,16 +193,15 @@ def test_stream_v2_compaction_merges_sentinels_and_blooms(
         segs.groupBy("shard_id", "term").count()
         .agg({"count": "max"}).collect()[0][0]
     )
-    assert per_key == 1  # sentinels, blooms, and terms all merged
-    rows = segs.select("term").collect()
+    assert per_key == 1  # sentinels and terms all merged
+    rows = segs.select(
+        "term", "bloom_end_blob", "bloom_begin_blob"
+    ).collect()
     terms = [r["term"] for r in rows]
     assert DOCLEN_TERM in terms
-    n_end = sum(t.startswith(BLOOM_PREFIX) for t in terms)
-    n_begin = sum(t.startswith(BLOOM_BEGIN_PREFIX) for t in terms)
-    n_plain = sum(
-        not t.startswith((BLOOM_PREFIX, BLOOM_BEGIN_PREFIX)) and t != DOCLEN_TERM
-        for t in terms
-    )
+    n_end = sum(r["bloom_end_blob"] is not None for r in rows)
+    n_begin = sum(r["bloom_begin_blob"] is not None for r in rows)
+    n_plain = sum(t != DOCLEN_TERM for t in terms)
     assert n_end == n_begin == n_plain > 0  # both sides survived the merge
     idx = SegmentIndex(spark, out)
     assert idx.stats.n_docs == 90
@@ -225,15 +219,14 @@ def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
     """Reference merge of generational segment rows: per shard, the
     merged sentinel first, then each term in order as the per-term
     encoders write it over its generations concatenated in docID order,
-    followed by its end- and begin-bloom rows (every generation here
-    carries both sides)."""
+    its end- and begin-bloom columns rebuilt the same way (every
+    generation here carries both sides)."""
     import numpy as np
 
     from wiser_spark.functions.bloom import bloom_boxes_decode
     from wiser_spark.operators.segments import (
-        BLOOM_PREFIXES,
+        BLOOM_COLUMNS,
         _encode_term_flat,
-        bloom_row,
         decode_segment_row,
         doclen_sentinel_row,
     )
@@ -243,8 +236,6 @@ def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
         by_key.setdefault((r["shard_id"], r["term"]), []).append(r)
     out: dict[int, list[dict]] = {}
     for (shard, term), parts in sorted(by_key.items()):
-        if term.startswith(BLOOM_PREFIXES):
-            continue
         if term == DOCLEN_TERM:
             sents = [decode_doclen_sentinel(r) for r in parts]
             out.setdefault(shard, []).append(doclen_sentinel_row(
@@ -254,7 +245,7 @@ def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
             continue
         dec = sorted(
             (decode_segment_row(r, with_positions=True, with_offsets=True)
-             + (r["generation"],) for r in parts),
+             + (r,) for r in parts),
             key=lambda d: d[0][0],
         )
         out[shard].append(_encode_term_flat(
@@ -262,13 +253,14 @@ def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
             np.concatenate([d[1] for d in dec]),
             np.concatenate([p for d in dec for p in d[2]]),
             np.concatenate([o for d in dec for o in d[3]]),
+            tuple(
+                np.concatenate([
+                    bloom_boxes_decode(d[4][blob_col], len(d[0]), nbytes)
+                    for d in dec
+                ])
+                for blob_col, _ in BLOOM_COLUMNS
+            ),
         ))
-        for pref in BLOOM_PREFIXES:
-            side = {r["generation"]: r for r in by_key[(shard, pref + term)]}
-            out[shard].append(bloom_row(shard, term, np.concatenate([
-                bloom_boxes_decode(side[d[4]]["tfs_blob"], len(d[0]), nbytes)
-                for d in dec
-            ]), prefix=pref))
     return out
 
 
@@ -277,7 +269,7 @@ def test_stream_v2_compaction_byte_identical_to_per_term_merge(
 ):
     """compact_segments over the v2 generations writes, shard by shard,
     exactly the rows of the per-term merge: sentinel first, then every
-    term with both bloom sides, in term order."""
+    term with both bloom columns, in term order."""
     import json
 
     from wiser_spark.operators.segments import compact_segments
@@ -295,14 +287,16 @@ def test_stream_v2_compaction_byte_identical_to_per_term_merge(
 
 def test_compaction_drops_only_unaligned_blooms(spark, tmp_path):
     """A generation built without blooms leaves the bloom sides of the
-    terms it shares with a bloomed generation unalignable: compaction
-    drops exactly those terms' bloom rows and keeps the others'."""
+    terms it shares with a bloomed generation unbuildable: compaction
+    nulls exactly those terms' sides (and those of its own terms), and
+    keeps the others' boxes byte for byte."""
     from pyspark.sql import functions as F
 
     from wiser_spark.operators.mapside import build_segments_mapside
     from wiser_spark.operators.postings import assign_doc_ids
     from wiser_spark.operators.segments import (
-        BLOOM_PREFIXES,
+        BLOOM_COLUMNS,
+        DOCLEN_TERM,
         compact_segments,
     )
     from wiser_spark.sources.corpus import corpus_df
@@ -316,34 +310,43 @@ def test_compaction_drops_only_unaligned_blooms(spark, tmp_path):
             docs.filter(cond), n_shards=2, with_blooms=blooms
         ).write.parquet(f"{base}/generation={g}")
     segs = spark.read.parquet(base)
-    rows = [r.asDict() for r in segs.collect()]
-    merged = compact_segments(segs).collect()
+    rows = [
+        r.asDict() for r in segs.filter(F.col("term") != DOCLEN_TERM).collect()
+    ]
+    merged = [
+        r.asDict()
+        for r in compact_segments(segs).collect() if r["term"] != DOCLEN_TERM
+    ]
     terms_of = {
         g: {(r["shard_id"], r["term"]) for r in rows if r["generation"] == g}
         for g in (0, 1)
     }
-    gen0_blooms = {
-        (r["shard_id"], r["term"]): r["tfs_blob"] for r in rows
-        if r["generation"] == 0 and r["term"].startswith(BLOOM_PREFIXES)
+    gen0 = {
+        (r["shard_id"], r["term"]): r for r in rows if r["generation"] == 0
     }
-    want = {
-        key: blob for key, blob in gen0_blooms.items()
-        if (key[0], key[1][1:]) not in terms_of[1]
-    }
-    got = {
-        (r["shard_id"], r["term"]): r["tfs_blob"] for r in merged
-        if r["term"].startswith(BLOOM_PREFIXES)
-    }
-    assert got == want
-    assert 0 < len(want) < len(gen0_blooms)
-    plain = {
-        (r["shard_id"], r["term"]) for r in merged
-        if not r["term"].startswith(BLOOM_PREFIXES)
-    }
-    assert plain == {
-        k for g in (0, 1) for k in terms_of[g]
-        if not k[1].startswith(BLOOM_PREFIXES)
-    }
+    assert all(
+        r[c] is None
+        for r in rows if r["generation"] == 1
+        for side in BLOOM_COLUMNS for c in side
+    )
+    assert {(r["shard_id"], r["term"]) for r in merged} == (
+        terms_of[0] | terms_of[1]
+    )
+    for cols in BLOOM_COLUMNS:
+        got = {
+            (r["shard_id"], r["term"]): tuple(r[c] for c in cols)
+            for r in merged if r[cols[0]] is not None
+        }
+        want = {
+            key: tuple(r[c] for c in cols) for key, r in gen0.items()
+            if key not in terms_of[1]
+        }
+        assert got == want, cols
+        assert 0 < len(want) < len(gen0)
+        # a null side carries null box offsets too
+        assert all(
+            r[cols[1]] is None for r in merged if r[cols[0]] is None
+        )
 
 
 @pytest.mark.parametrize(
@@ -360,24 +363,27 @@ def test_stream_query_rank_identical(spark, streamed, oracle, terms, is_phrase):
 
 
 def test_resume_with_other_format_refuses(tmp_path):
-    """Resuming an index of another format would corrupt it (v1
-    generations carry no sentinels / no lensum in the commit log); the
-    constructor must refuse loudly — and the v1 streaming mode itself
-    is gone."""
+    """Resuming an index of an older layout would corrupt it (v1
+    generations carry no sentinels / no lensum in the commit log; v2
+    generations keep their blooms in prefixed rows the merge no longer
+    reads); the constructor must refuse loudly — and the v1 streaming
+    mode itself is gone."""
     import json
 
+    from wiser_spark.operators.segments import FORMAT
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx")
     os.makedirs(d)
+    for old in ("wiser-spark-segment-v1", "wiser-spark-segment-v2-mapside"):
+        with open(f"{d}/stats.json", "w") as f:
+            json.dump({"format": old}, f)
+        with pytest.raises(ValueError, match="rebuilt"):
+            IncrementalIndexer(d)
+        with pytest.raises(ValueError, match="rebuilt"):
+            IncrementalIndexer(d, fmt="v2")
     with open(f"{d}/stats.json", "w") as f:
-        json.dump({"format": "wiser-spark-segment-v1"}, f)
-    with pytest.raises(ValueError, match="cannot resume"):
-        IncrementalIndexer(d)
-    with pytest.raises(ValueError, match="cannot resume"):
-        IncrementalIndexer(d, fmt="v2")
-    with open(f"{d}/stats.json", "w") as f:
-        json.dump({"format": "wiser-spark-segment-v2-mapside"}, f)
+        json.dump({"format": FORMAT}, f)
     IncrementalIndexer(d)
     IncrementalIndexer(d, fmt="v2")
     with pytest.raises(ValueError, match="unknown streaming index format"):

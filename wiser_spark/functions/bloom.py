@@ -156,7 +156,7 @@ def vocab_bloom_matrix(uniques, bp: BloomParams) -> np.ndarray:
     return out
 
 
-def fold_occurrence_bloom_rows(
+def fold_occurrence_masks(
     occ_masks: np.ndarray, posting_starts: np.ndarray
 ) -> np.ndarray:
     """OR the per-occurrence neighbor masks into per-posting filters:

@@ -51,6 +51,9 @@ from pyspark.sql import functions as F
 
 KB4 = 4 * 1024
 EXTENT_BYTES = 1 * 1024 * 1024
+# parquet row-group target of the extents table (about 4 extents of the
+# default size per row group, the point-read granularity)
+STORE_BLOCK_BYTES = 4 * 1024 * 1024
 
 STORE_SCHEMA = (
     "first_doc long, last_doc long, n_docs int, "
@@ -190,10 +193,14 @@ def write_doc_store(
     # block's worth of pages. A 4 MB block puts ~4 extents per row
     # group, so the range predicate prunes at near-extent granularity.
     # Write-side cost is a few more (still multi-MB) row groups — the
-    # store remains sequential-scan friendly.
+    # store remains sequential-scan friendly. The writer first checks
+    # the block size after page.size.row.check.min rows (default 100,
+    # i.e. 100 extents per row group), so that check starts at row 1.
     sel.mapInPandas(pack, STORE_SCHEMA).write.mode("overwrite").option(
-        "parquet.block.size", str(4 * 1024 * 1024)
-    ).parquet(f"{store_dir}/extents")
+        "parquet.block.size", str(STORE_BLOCK_BYTES)
+    ).option("parquet.page.size.row.check.min", "1").parquet(
+        f"{store_dir}/extents"
+    )
     _put_meta()  # rewrite case: flip the codec only over durable extents
 
 

@@ -39,6 +39,7 @@ test_mapside's high-water-mark test).
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Iterator
 
 import numpy as np
@@ -50,14 +51,14 @@ from pyspark.sql import functions as F
 
 from wiser_spark.config import PACK_SIZE, IndexConfig
 from wiser_spark.operators.segments import (
-    BLOOM_PREFIXES,
+    BLOOM_COLUMNS,
     DOCLEN_TERM,
+    FORMAT,
     SEGMENT_ARROW_SCHEMA,
     SEGMENT_SCHEMA,
     _delta_varint_stream,
     _encode_term_flat,
     await_all,
-    bloom_row,
     decode_doclen_sentinel,
     sentinel_batch,
     write_stats,
@@ -103,18 +104,47 @@ def build_segments_mapside(
         parted = sel.repartitionByRange(n_shards, "doc_id")
     # JVM in-partition sort (no shuffle): the token stream then arrives
     # doc-ascending, so the encoder needs ONE stable key sort (term code)
-    # instead of a 3-key lexsort — fewer memory passes per partition
-    parted = parted.sortWithinPartitions("doc_id")
+    # instead of a 3-key lexsort — fewer memory passes per partition.
+    # The shard id is DATA, taken in this stage: a later union or
+    # coalesce of builds runs the encoder in tasks whose numbers are not
+    # the shards', but leaves this column as it was
+    parted = parted.sortWithinPartitions("doc_id").withColumn(
+        "shard_id", F.spark_partition_id()
+    )
 
     def encode_partition(arrow_batches) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        yield from encode_doc_batches(
-            arrow_batches, TaskContext.get().partitionId(),
-            content_col, with_blooms, bloom_cfg,
-        )
+        shard = one_shard(arrow_batches)
+        if shard is not None:
+            shard_id, batches = shard
+            yield from encode_doc_batches(
+                batches, shard_id, content_col, with_blooms, bloom_cfg,
+            )
 
     return parted.mapInArrow(encode_partition, SEGMENT_SCHEMA)
+
+
+def one_shard(arrow_batches) -> tuple[int, Iterator[pa.RecordBatch]] | None:
+    """(shard id, the non-empty batches) of one encode task's input, read
+    from its ``shard_id`` column; None for no rows. The batches are
+    checked lazily, as the encoder pulls them: one holding another
+    shard's rows raises."""
+    batches = (rb for rb in arrow_batches if rb.num_rows)
+    first = next(batches, None)
+    if first is None:
+        return None
+    shard_id = first.column("shard_id")[0].as_py()
+
+    def checked():
+        for rb in itertools.chain([first], batches):
+            ids = {v.as_py() for v in pc.min_max(rb.column("shard_id")).values()}
+            if ids != {shard_id}:
+                raise ValueError(
+                    "one encode task got rows of shards "
+                    f"{sorted(ids | {shard_id})}"
+                )
+            yield rb
+
+    return shard_id, checked()
 
 
 def encode_doc_batches(
@@ -276,7 +306,7 @@ def encode_doc_batches(
     if with_blooms:
         from wiser_spark.functions.bloom import (
             bloom_params,
-            fold_occurrence_bloom_rows,
+            fold_occurrence_masks,
             vocab_bloom_matrix,
         )
 
@@ -291,7 +321,7 @@ def encode_doc_batches(
 
         def fold(neighbor):
             sorted_nb = neighbor[order]
-            return fold_occurrence_bloom_rows(
+            return fold_occurrence_masks(
                 vm_ext[np.where(sorted_nb >= 0, sorted_nb, len(vocab))],
                 p_starts_idx,
             )
@@ -330,26 +360,27 @@ def encode_postings(
     p: np.ndarray | None,
     off_flat: np.ndarray | None,
     blooms: tuple[np.ndarray, np.ndarray] | None,
+    bloom_kept: np.ndarray | None = None,
 ) -> Iterator[pa.RecordBatch]:
-    """THE shard encoder: one shard's postings -> its term and bloom
-    rows, in Arrow batches of at most OUT_BATCH_ROWS rows and about
+    """THE shard encoder: one shard's postings -> its term rows, one per
+    term, in Arrow batches of at most OUT_BATCH_ROWS rows and about
     OUT_BATCH_BYTES bytes; the caller adds the sentinel row.
 
     Term t = ``vocab[t]`` (ascending) owns postings [term_bounds[t],
     term_bounds[t+1]), doc-ascending. ``p`` holds the flat positions
     (tf per posting), ``off_flat`` the flat [s,e,...] pairs (2*tf per
     posting); None writes b"" blobs and empty skip lists. ``blooms`` is
-    the per-posting (end, begin) filter matrices, or None for no bloom
-    rows.
+    the per-posting (end, begin) filter matrices boxed into the bloom
+    columns, or None for null bloom columns; ``bloom_kept`` ((terms, 2)
+    bool, default all True) nulls the sides marked False.
 
     Vocabulary-batched: almost every term of a code shard has df <
-    PACK_SIZE (varint tail only), so each column is built for ALL
-    terms at once as one flat buffer plus per-term byte offsets (one
+    PACK_SIZE (varint tail, one bloom box), so each column is built for
+    ALL terms at once as one flat buffer plus per-term byte offsets (one
     delta+varint pass per stream, tail and bloom boxes spliced in one
     vectorized pass, position/offset blobs as zero-copy slices). Only
     df >= PACK_SIZE terms take the framed per-term path. Rows are
-    BYTE-IDENTICAL to _encode_term_flat / bloom_row, in term order,
-    each term row followed by its end- then begin-bloom row."""
+    BYTE-IDENTICAL to _encode_term_flat, in term order."""
     from wiser_spark.functions.packing import varint_tail_boxes
     from wiser_spark.functions.varint import varint_encode_with_lengths
 
@@ -360,7 +391,10 @@ def encode_postings(
         return
     df = term_hi - term_lo
     has_pos, has_off = p is not None, off_flat is not None
-    R = 1 if blooms is None else 3  # output rows per term
+    if blooms is None:
+        bloom_kept = np.zeros((n_terms, len(BLOOM_COLUMNS)), dtype=bool)
+    elif bloom_kept is None:
+        bloom_kept = np.ones((n_terms, len(BLOOM_COLUMNS)), dtype=bool)
     pos_starts = np.cumsum(tfs_all) - tfs_all
     occ_bounds = np.concatenate(([0], np.cumsum(tfs_all)))[term_bounds]
 
@@ -392,36 +426,33 @@ def encode_postings(
     pos = term_stream(p, pos_starts, occ_bounds)
     offs = term_stream(off_flat, 2 * pos_starts, 2 * occ_bounds)
     max_tf = np.maximum.reduceat(tfs_all, term_lo)
-    # per-term rows of the framed path, keyed by term index: the base
-    # row, then (multi-box terms only) the end- and begin-bloom rows
-    framed_rows: dict[int, list[dict]] = {}
+    # the framed path's rows, keyed by term index
+    framed_rows: dict[int, dict] = {}
     for t in framed.tolist():
         lo, hi = int(term_lo[t]), int(term_hi[t])
         o_lo, o_hi = int(occ_bounds[t]), int(occ_bounds[t + 1])
-        term = vocab[t].as_py()
-        rows = [_encode_term_flat(
-            shard_id, term, posting_doc[lo:hi], tfs_all[lo:hi],
+        framed_rows[t] = _encode_term_flat(
+            shard_id, vocab[t].as_py(), posting_doc[lo:hi], tfs_all[lo:hi],
             p[o_lo:o_hi] if has_pos else None,
             off_flat[2 * o_lo:2 * o_hi] if has_off else None,
-        )]
-        if R == 3 and hi - lo > PACK_SIZE:
-            rows += [
-                bloom_row(shard_id, term, side[lo:hi], prefix=pref)
-                for pref, side in zip(BLOOM_PREFIXES, blooms)
-            ]
-        framed_rows[t] = rows
+            None if blooms is None else tuple(
+                side[lo:hi] if keep else None
+                for side, keep in zip(blooms, bloom_kept[t])
+            ),
+        )
     del posting_doc, tfs_all, p, off_flat, pos_starts
     blobs = [docids, tfs, pos, offs]
-    if R == 3:
+    if blooms is None:
+        empty = (np.zeros(0, np.uint8), np.zeros(n_terms + 1, np.int64))
+        bloom_boxes = [empty] * len(BLOOM_COLUMNS)
+    else:
         from wiser_spark.functions.bloom import bloom_boxes_encode_ranges
 
-        one_box = np.flatnonzero(df <= PACK_SIZE)
+        # a tail term's side is ONE bloom box at byte offset 0
         bloom_boxes = [
             _spread(
-                bloom_boxes_encode_ranges(
-                    side, term_lo[one_box], term_hi[one_box]
-                ),
-                one_box, n_terms,
+                bloom_boxes_encode_ranges(side, term_lo[tail], term_hi[tail]),
+                tail, n_terms,
             )
             for side in blooms
         ]
@@ -429,27 +460,23 @@ def encode_postings(
         del blooms
     # output batches: whole terms, bounded by rows and by payload bytes
     term_bytes = sum(np.diff(b[1]) for b in blobs)
-    for t, rows in framed_rows.items():
-        term_bytes[t] += sum(
-            len(r["docids_blob"]) + len(r["tfs_blob"]) for r in rows
+    for t, row in framed_rows.items():
+        term_bytes[t] += len(row["docids_blob"]) + len(row["tfs_blob"]) + sum(
+            len(row[c] or b"") for c, _ in BLOOM_COLUMNS
         )
     cum = np.concatenate(([0], np.cumsum(term_bytes)))
     del term_bytes
     t0 = 0
     while t0 < n_terms:
         fit = int(np.searchsorted(cum, cum[t0] + OUT_BATCH_BYTES, "right"))
-        t1 = min(n_terms, t0 + OUT_BATCH_ROWS // R, max(t0 + 1, fit - 1))
+        t1 = min(n_terms, t0 + OUT_BATCH_ROWS, max(t0 + 1, fit - 1))
         m = t1 - t0
-        terms = vocab.slice(t0, m)
-        consts = {
-            "shard_id": pa.array(np.full(m, shard_id, dtype=np.int32)),
-            "df_shard": pa.array(df[t0:t1].astype(np.int32)),
-        }
         zero = _lists(np.arange(m + 1), np.zeros(m, dtype=np.int64))
         empty_list = _lists(np.zeros(m + 1), np.zeros(0, np.int64))
-        parts = [_batch(schema, {
-            **consts,
-            "term": terms,
+        cols = {
+            "shard_id": pa.array(np.full(m, shard_id, dtype=np.int32)),
+            "term": vocab.slice(t0, m),
+            "df_shard": pa.array(df[t0:t1].astype(np.int32)),
             "docids_blob": _binary(docids, t0, t1),
             "tfs_blob": _binary(tfs, t0, t1),
             "pos_blob": _binary(pos, t0, t1),
@@ -459,45 +486,34 @@ def encode_postings(
             "skip_pos_offs": zero if has_pos else empty_list,
             "skip_off_offs": zero if has_off else empty_list,
             "skip_max_tfs": _lists(np.arange(m + 1), max_tf[t0:t1]),
-        })]
-        if R == 3:
-            empty_bin = _binary(
-                (np.zeros(0, np.uint8), np.zeros(m + 1, np.int64)), 0, m
+        }
+        for s, (blob_col, offs_col) in enumerate(BLOOM_COLUMNS):
+            valid = bloom_kept[t0:t1, s]
+            cols[blob_col] = _binary(bloom_boxes[s], t0, t1, valid)
+            # a kept side's boxes start at offset 0: [0] per valid row
+            cols[offs_col] = _lists(
+                np.concatenate(([0], np.cumsum(valid))),
+                np.zeros(int(valid.sum()), np.int64), valid,
             )
-            for pref, boxes in zip(BLOOM_PREFIXES, bloom_boxes):
-                parts.append(_batch(schema, {
-                    **consts,
-                    "term": pc.binary_join_element_wise(pref, terms, ""),
-                    "tfs_blob": _binary(boxes, t0, t1),
-                    "skip_tf_offs": zero,
-                    **dict.fromkeys(("docids_blob", "pos_blob", "off_blob"),
-                                    empty_bin),
-                    **dict.fromkeys(("skip_predocs", "skip_docid_offs",
-                                     "skip_pos_offs", "skip_off_offs",
-                                     "skip_max_tfs"), empty_list),
-                }))
-        # row u*R + j of the output is term t0+u's base (j=0) or bloom
-        # row: part j's row u, or its framed-path row where one exists
-        perm = (np.arange(R) * m + np.arange(m)[:, None]).astype(np.int64)
+        batch = _batch(schema, cols)
+        # row u of the output is term t0+u's tail row, or its framed-
+        # path row where one exists
+        perm = np.arange(m, dtype=np.int64)
         spliced = []
         for t in framed[(framed >= t0) & (framed < t1)].tolist():
-            rows = framed_rows.pop(t)
-            perm[t - t0, :len(rows)] = R * m + len(spliced) + np.arange(
-                len(rows)
-            )
-            spliced += rows
+            perm[t - t0] = m + len(spliced)
+            spliced.append(framed_rows.pop(t))
         if spliced:
-            parts.append(pa.RecordBatch.from_pylist(spliced, schema=schema))
-        perm = pa.array(perm.reshape(-1))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.concat_arrays([b.column(i) for b in parts]).take(perm)
-                for i in range(len(schema))
-            ],
-            schema=schema,
-        )
+            parts = (batch, pa.RecordBatch.from_pylist(spliced, schema=schema))
+            batch = pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([b.column(i) for b in parts]).take(perm)
+                    for i in range(len(schema))
+                ],
+                schema=schema,
+            )
+        yield batch
         t0 = t1
-
 
 
 def _spread(boxes, rows: np.ndarray, n: int):
@@ -511,24 +527,36 @@ def _spread(boxes, rows: np.ndarray, n: int):
     return buf, full
 
 
-def _binary(blob, t0: int, t1: int) -> pa.Array:
+def _binary(blob, t0: int, t1: int, valid: np.ndarray | None = None
+            ) -> pa.Array:
     """Rows [t0, t1) of a (uint8 buffer, int64 offsets) column as a
-    BinaryArray over the same memory (zero-copy)."""
+    BinaryArray over the same memory (zero-copy); rows where the bool
+    array ``valid`` is False are null."""
     buf, offs = blob
     o = offs[t0:t1 + 1]
     if o[-1] - o[0] > np.iinfo(np.int32).max:
         raise OverflowError("segment rows exceed a binary column's 2 GiB")
     return pa.Array.from_buffers(
         pa.binary(), t1 - t0,
-        [None, pa.py_buffer((o - o[0]).astype(np.int32)),
+        [_validity(valid), pa.py_buffer((o - o[0]).astype(np.int32)),
          pa.py_buffer(buf[o[0]:o[-1]])],
     )
 
 
-def _lists(offsets: np.ndarray, values: np.ndarray) -> pa.Array:
-    return pa.ListArray.from_arrays(
-        pa.array(offsets.astype(np.int32)), pa.array(values)
+def _lists(offsets: np.ndarray, values: np.ndarray,
+           valid: np.ndarray | None = None) -> pa.Array:
+    return pa.Array.from_buffers(
+        pa.list_(pa.int64()), len(offsets) - 1,
+        [_validity(valid), pa.py_buffer(offsets.astype(np.int32))],
+        children=[pa.array(values, pa.int64())],
     )
+
+
+def _validity(valid: np.ndarray | None) -> pa.Buffer | None:
+    """Arrow validity bitmap of a bool array (None: all valid)."""
+    if valid is None or valid.all():
+        return None
+    return pa.py_buffer(np.packbits(valid, bitorder="little"))
 
 
 def _batch(schema, cols: dict) -> pa.RecordBatch:
@@ -623,8 +651,7 @@ def write_index_mapside(
         "n_terms": int(obs.get["n_terms"]),
         "n_shards": n_shards_actual,
         "k1": config.bm25.k1, "b": config.bm25.b,
-        "format": "wiser-spark-segment-v2-mapside",
-        "doclen_sentinel": True,
+        "format": FORMAT,
     }
     if with_blooms:
         from wiser_spark.functions.bloom import bloom_params

@@ -22,25 +22,37 @@ B4-B14):
                 per-128-bag skip rows, ``flash_containers.h:236-308``) —
                 enables partial decode from any bag boundary
   df_shard    : postings in this shard; global df lives in the dictionary
+  bloom_end_blob, bloom_begin_blob :
+                per-posting phrase blooms as BLOOM BOXES of sized
+                filters (libbloom sizing, functions/bloom.py), one filter
+                per posting in the row's docID order: END blooms hold
+                the tokens FOLLOWING each occurrence, BEGIN blooms the
+                tokens PRECEDING them (the reference builds both,
+                ``bloom_filter.h:595-646``, and dumps the boxes beside
+                the postings of the same record, ``flash_engine_dumper.h:
+                331-525``). skip_bloom_end_offs/skip_bloom_begin_offs
+                hold each box's byte offset (the BloomSkipList
+                analogue). Null when the row has no blooms: the
+                shuffle writers (write_index, IndexBuildPipeline) and
+                ``with_blooms=False`` build none, and a merge drops a
+                side it cannot rebuild
 
-Two row kinds ride beside the term rows in the same table:
-
-  sentinel    : term "" — one per non-empty shard (the reference's
-                doc-length store, ``doc_length_store.h:102-212``): the
-                shard's docIDs in docids_blob, lossy Char4 length bytes
-                in tfs_blob, true lengths varint'd in pos_blob (avgdl).
-                Every writer emits it, so a shard's scorer reads lengths
-                from the shard it already scans
-  blooms      : "\\x01term"/"\\x02term" — per-posting phrase blooms
-                (map-side writers only; see BLOOM_PREFIX)
+A table holds two row kinds: the term rows above, and per non-empty
+shard one doc-length SENTINEL row, term "" (the reference's doc-length
+store, ``doc_length_store.h:102-212``): the shard's docIDs in
+docids_blob, lossy Char4 length bytes in tfs_blob, true lengths
+varint'd in pos_blob (avgdl). Every writer emits it, so a shard's
+scorer reads lengths from the shard it already scans.
 
 SHARDING = the skew story. Every term's postings are split at the SAME
-doc boundaries (``doc_id % n_shards``), so a stopword-scale posting list
-('return' in 10^12 files) becomes n_shards bounded groups — the shuffle
-key (shard_id, term) is implicitly salted by the sharding, no group can
-exceed a shard's doc count, and conjunctive/phrase intersection stays
-shard-local. Queries fan out over shards and merge a k-row result per
-shard (distributed analogue of the reference's single-node zig-zag,
+doc boundaries, so a stopword-scale posting list ('return' in 10^12
+files) becomes n_shards bounded groups — no group can exceed a shard's
+doc count, and conjunctive/phrase intersection stays shard-local.
+``build_segments`` shards by ``doc_id % n_shards`` (the shuffle key
+(shard_id, term) is implicitly salted by it); the map-side writers
+shard by contiguous doc-id ranges (or the input partitioning).
+Queries fan out over shards and merge a k-row result per shard
+(distributed analogue of the reference's single-node zig-zag,
 ``query_processing.h:810-852``).
 """
 
@@ -59,6 +71,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wiser_spark.config import PACK_SIZE, BM25Params, IndexConfig
+from wiser_spark.functions.bloom import (
+    BLOOM_BOX_MAGIC,
+    BOX_CAP,
+    BloomParams,
+    bloom_boxes_decode,
+    bloom_boxes_encode,
+    bloom_params,
+    probe_rows,
+    token_bloom_mask,
+)
 from wiser_spark.functions.bm25 import tfnorm_cache
 from wiser_spark.functions.packing import (
     decode_column,
@@ -80,7 +102,9 @@ SEGMENT_SCHEMA = (
     "docids_blob binary, tfs_blob binary, pos_blob binary, off_blob binary, "
     "skip_predocs array<long>, skip_docid_offs array<long>, "
     "skip_tf_offs array<long>, skip_pos_offs array<long>, "
-    "skip_off_offs array<long>, skip_max_tfs array<long>"
+    "skip_off_offs array<long>, skip_max_tfs array<long>, "
+    "bloom_end_blob binary, bloom_begin_blob binary, "
+    "skip_bloom_end_offs array<long>, skip_bloom_begin_offs array<long>"
 )
 
 # the same schema in Arrow: the type of every batch the shard encoder
@@ -91,48 +115,24 @@ SEGMENT_ARROW_SCHEMA = pa.schema([
     for name, ddl in (f.split(" ", 1) for f in SEGMENT_SCHEMA.split(", "))
 ])
 
+# (blob, box offsets) columns of the two phrase-bloom sides, end first
+BLOOM_COLUMNS = (
+    ("bloom_end_blob", "skip_bloom_end_offs"),
+    ("bloom_begin_blob", "skip_bloom_begin_offs"),
+)
+
 # sentinel term of a per-shard doc-length row: the tokenizer can never
 # emit an empty term, so "" is collision-free
 DOCLEN_TERM = ""
 
-# prefixes marking phrase-bloom rows for a term ("\x01"/"\x02" are
-# outside the tokenizer alphabet). A row's tfs_blob holds BLOOM BOXES of
-# sized filters (libbloom sizing, functions/bloom.py), one filter per
-# posting, aligned with the term row's docID order: END blooms hold the
-# tokens FOLLOWING each occurrence, BEGIN blooms the tokens PRECEDING
-# them (the reference builds both, bloom_filter.h:595-646, and stores
-# them as separate regions of the same file, flash_containers.h:499)
-BLOOM_PREFIX = "\x01"        # end blooms
-BLOOM_BEGIN_PREFIX = "\x02"  # begin blooms
-BLOOM_PREFIXES = (BLOOM_PREFIX, BLOOM_BEGIN_PREFIX)
+# stats.json "format" of the one layout every writer emits: doc lengths
+# in sentinel rows, phrase blooms as columns of the term row
+FORMAT = "wiser-spark-segment-v3"
 
 
-def bloom_row(
-    shard_id: int, term: str, bloom_mat: np.ndarray, prefix: str = BLOOM_PREFIX
-) -> dict:
-    """One term's per-posting SIZED bloom filters ((n, nbytes) uint8,
-    posting-aligned with the term row's docID order) -> one bloom-box
-    segment row (reference flash_containers.h:499-561; sizing
-    bloom.bloom_params). skip_tf_offs carries the per-box byte offsets
-    — the BloomSkipList analogue enabling partial decode."""
-    from wiser_spark.functions.bloom import bloom_boxes_encode
-
-    blob, offs = bloom_boxes_encode(np.asarray(bloom_mat, dtype=np.uint8))
-    return {
-        "shard_id": shard_id,
-        "term": prefix + term,
-        "df_shard": int(bloom_mat.shape[0]),
-        "docids_blob": b"",
-        "tfs_blob": blob,
-        "pos_blob": b"",
-        "off_blob": b"",
-        "skip_predocs": [],
-        "skip_docid_offs": [],
-        "skip_tf_offs": offs,
-        "skip_pos_offs": [],
-        "skip_off_offs": [],
-        "skip_max_tfs": [],
-    }
+def _no_blooms() -> dict:
+    """The bloom columns of a row without blooms: all null."""
+    return {c: None for side in BLOOM_COLUMNS for c in side}
 
 
 def doclen_sentinel_row(shard_id: int, doc_ids, doclens) -> dict:
@@ -160,6 +160,7 @@ def doclen_sentinel_row(shard_id: int, doc_ids, doclens) -> dict:
         "skip_pos_offs": [],
         "skip_off_offs": [],
         "skip_max_tfs": [],
+        **_no_blooms(),
     }
 
 
@@ -216,6 +217,7 @@ def _encode_term_flat(
     tfs: np.ndarray,
     flat_pos: np.ndarray | None,
     flat_off: np.ndarray | None = None,
+    blooms: tuple[np.ndarray | None, np.ndarray | None] | None = None,
 ) -> dict:
     """One term within a shard -> one segment row. Fully vectorized.
 
@@ -223,7 +225,10 @@ def _encode_term_flat(
     concatenation of each doc's ascending positions in that doc order;
     ``flat_off`` (if given) is the matching flat [s,e,s,e,...] offset
     pairs (2*tf values per doc). Each is delta+varint encoded in ONE
-    pass (per-doc boundaries fixed up vectorially)."""
+    pass (per-doc boundaries fixed up vectorially). ``blooms`` holds
+    the (end, begin) per-posting filter matrices ((n, nbytes) uint8 in
+    docID order) boxed into the bloom columns; a side that is None (or
+    no ``blooms``) stays null."""
     docids_blob, docid_offs = encode_column(delta_encode(doc_ids))
     tfs_blob, tf_offs = encode_column(tfs.astype(np.uint64))
 
@@ -255,7 +260,7 @@ def _encode_term_flat(
     # style scorer" — exact top-k, bags provably below the running
     # threshold are never decoded)
     max_tfs = np.maximum.reduceat(tfs, np.arange(0, n, PACK_SIZE))
-    return {
+    row = {
         "shard_id": shard_id,
         "term": term,
         "df_shard": n,
@@ -269,7 +274,12 @@ def _encode_term_flat(
         "skip_pos_offs": skip_pos.tolist(),
         "skip_off_offs": skip_off.tolist(),
         "skip_max_tfs": max_tfs.astype(np.int64).tolist(),
+        **_no_blooms(),
     }
+    for cols, mat in zip(BLOOM_COLUMNS, blooms or ()):
+        if mat is not None:
+            row.update(zip(cols, bloom_boxes_encode(mat)))
+    return row
 
 
 def build_segments(
@@ -345,14 +355,11 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
     """(term, df, bytes_docid_tf, prefetch_pages) from written segment
     rows in ONE scan of three pruned columns — the .tip analogue (B13).
     df = sum(df_shard) because each doc lives in exactly one shard.
-    Sentinel and bloom rows are excluded. The single definition behind
-    every writer: the shuffle build, the map-side build, and the
-    streaming sink's per-generation deltas."""
+    Sentinel rows are excluded. The single definition behind every
+    writer: the shuffle build, the map-side build, and the streaming
+    sink's per-generation deltas."""
     return (
-        segs.filter(
-            (F.col("term") != DOCLEN_TERM)
-            & ~F.substring("term", 1, 1).isin(*BLOOM_PREFIXES)
-        )
+        segs.filter(F.col("term") != DOCLEN_TERM)
         .groupBy("term")
         .agg(
             F.sum("df_shard").cast("int").alias("df"),
@@ -431,8 +438,7 @@ def write_index(
         "n_shards": config.n_shards,
         "k1": config.bm25.k1,
         "b": config.bm25.b,
-        "format": "wiser-spark-segment-v2",
-        "doclen_sentinel": True,
+        "format": FORMAT,
     }
     write_stats(index_dir, meta)
 
@@ -454,20 +460,13 @@ def write_stats(index_dir: str, meta: dict) -> None:
 # log per shard pass)
 
 def _parse_shard_rows(seg_pdf: "pd.DataFrame"):
-    """Split a shard's segment rows into term rows, bloom rows (keyed by
-    (side, term)) and the doc-length sentinel rows."""
+    """Split a shard's segment rows into term rows (one per generation,
+    keyed by term) and the doc-length sentinel rows."""
     rows_by_term: dict[str, list] = {}
-    bloom_rows: dict[tuple[str, str], list] = {}
     for _, r in seg_pdf.iterrows():
-        t = r["term"]
-        if t.startswith(BLOOM_PREFIX):
-            bloom_rows.setdefault(("end", t[1:]), []).append(r)
-        elif t.startswith(BLOOM_BEGIN_PREFIX):
-            bloom_rows.setdefault(("begin", t[1:]), []).append(r)
-        else:
-            rows_by_term.setdefault(t, []).append(r)
+        rows_by_term.setdefault(r["term"], []).append(r)
     sentinel_rows = rows_by_term.pop(DOCLEN_TERM, None)
-    return rows_by_term, bloom_rows, sentinel_rows
+    return rows_by_term, sentinel_rows
 
 
 def _decode_terms(rows_by_term, terms: set, need_pos: bool, need_off: bool):
@@ -1009,12 +1008,11 @@ def _topk_blockmax_conj(rows_by_term, terms_l, k, idfs, cache, k1,
     return all_ids[order], all_sc[order]
 
 
-def _bloom_prune(cand, decoded, terms_l, bloom_rows, rows_by_term,
-                 bloom_cfg=None):
+def _bloom_prune(cand, decoded, terms_l, rows_by_term, bloom_cfg=None):
     """Phrase bloom pre-check (ref Q8): prune candidates whose blooms
     prove the adjacency impossible. No false negatives by construction,
     so this only prunes; the positional intersect stays the gate.
-    Applied only when one bloom row pairs with one term row
+    Applied only when the term has ONE row in the shard
     (single-generation indexes). Sided selection mirrors the reference
     (query_processing.h:796-807, bloom_enable_factor = 1): a 2-term
     phrase probes the SMALLER list's bloom — end bloom of t0 if
@@ -1023,23 +1021,20 @@ def _bloom_prune(cand, decoded, terms_l, bloom_rows, rows_by_term,
 
     Filters are sized bloom boxes (reference libbloom sizing + box
     layout; ``bloom_cfg`` carries bits/bytes/hashes from the index
-    meta); a blob without the box magic is skipped, not probed."""
-    from wiser_spark.functions.bloom import (
-        BLOOM_BOX_MAGIC,
-        bloom_boxes_decode,
-        bloom_params,
-        probe_rows,
-        token_bloom_mask,
-    )
+    meta); a null blob, or one without the box magic, is skipped, not
+    probed."""
 
-    def prune(cnd, kind, term, probe_term):
-        brows = bloom_rows.get((kind, term))
-        if brows is None or len(brows) != 1 or len(rows_by_term[term]) != 1:
+    def prune(cnd, side, term, probe_term):
+        rows = rows_by_term[term]
+        if len(rows) != 1:
             return cnd
-        n_post = int(brows[0]["df_shard"])
-        blob = brows[0]["tfs_blob"]
+        n_post = int(rows[0]["df_shard"])
+        blob = rows[0][f"bloom_{side}_blob"]
         ids = decoded[term][0]
-        if n_post != ids.size or len(blob) == 0 or blob[0] != BLOOM_BOX_MAGIC:
+        if (
+            blob is None or n_post != ids.size or len(blob) == 0
+            or blob[0] != BLOOM_BOX_MAGIC
+        ):
             return cnd
         at = np.searchsorted(ids, cnd)
         bp = bloom_cfg or bloom_params()
@@ -1173,23 +1168,15 @@ def compact_segments(
 
     The shard's sentinel rows merge by docID concatenation and come
     first. Positions and offsets each survive only if every term row
-    of the shard carries them. Each bloom SIDE merges by decoding its
-    generations' boxes in the merged docID order, aligned on the
-    ``generation`` column (streaming indexes partition by it); a term's
-    side that cannot be aligned unambiguously is DROPPED, which is
+    of the shard carries them. A merged term keeps a bloom SIDE only if
+    every one of its generation rows carries that side as boxes of its
+    own postings (``_has_side``); otherwise the side is null, which is
     always result-neutral: blooms are pruning-only and queries skip the
-    pre-check when the row is absent."""
-    from wiser_spark.functions.bloom import (
-        BLOOM_BOX_MAGIC,
-        bloom_boxes_decode,
-        bloom_params,
-    )
-
+    pre-check on a null side."""
     nbytes = bloom_nbytes or bloom_params().nbytes
-    gen = F.col("generation") if "generation" in segments.columns else F.lit(0)
     segs = segments.select(
-        "shard_id", "term", gen.cast("long").alias("gen"), "df_shard",
-        "docids_blob", "tfs_blob", "pos_blob", "off_blob",
+        "shard_id", "term", "df_shard", "docids_blob", "tfs_blob",
+        "pos_blob", "off_blob", *(c for side in BLOOM_COLUMNS for c in side),
     )
 
     def merge_shard(
@@ -1200,16 +1187,12 @@ def compact_segments(
         rows = [r for rb in batches for r in rb.to_pylist()]
         shard_id = rows[0]["shard_id"]
         plain: dict[str, list] = {}
-        sides: dict[str, dict] = {pref: {} for pref in BLOOM_PREFIXES}
         sentinels = []
         for r in rows:
-            t = r["term"]
-            if t == DOCLEN_TERM:
+            if r["term"] == DOCLEN_TERM:
                 sentinels.append(decode_doclen_sentinel(r))
-            elif t[:1] in sides:
-                sides[t[:1]].setdefault(t[1:], []).append(r)
             else:
-                plain.setdefault(t, []).append(r)
+                plain.setdefault(r["term"], []).append(r)
         del rows
         if sentinels:
             # true lengths ride in pos_blob, so the merged Char4 bytes
@@ -1218,7 +1201,7 @@ def compact_segments(
                 shard_id, np.concatenate([s[0] for s in sentinels]),
                 np.concatenate([s[2] for s in sentinels]),
             )
-        if not plain:  # orphan bloom rows (shouldn't happen): dropped
+        if not plain:
             return
         # positions and offsets each survive the merge only if EVERY
         # term row carries them (an index built without them, or a
@@ -1227,9 +1210,9 @@ def compact_segments(
         with_off = all(len(r["off_blob"]) for rs in plain.values() for r in rs)
         vocab = sorted(plain)
         ids, tfs, pos, offs, bounds = [], [], [], [], [0]
-        blooms: dict[str, list] = {pref: [] for pref in BLOOM_PREFIXES}
-        dropped = []  # bloom rows of the sides that cannot be aligned
-        for base in vocab:
+        blooms: tuple[list, list] = ([], [])
+        kept = np.ones((len(vocab), len(BLOOM_COLUMNS)), dtype=bool)
+        for t, base in enumerate(vocab):
             parts = plain[base]
             for r in parts:
                 r["ids"], r["tfs"], _ = decode_segment_row(r)
@@ -1242,89 +1225,64 @@ def compact_segments(
                 if with_off:
                     offs.append(_decode_runs(r["off_blob"], 2 * r["tfs"]))
             bounds.append(bounds[-1] + sum(len(r["ids"]) for r in parts))
-            gens = sorted(r["gen"] for r in parts)
-            for pref, side in sides.items():
-                brows = side.get(base, [])
-                by_gen = {b["gen"]: b for b in brows}
-                # aligned: one box-encoded bloom row per generation of
-                # the term, as long as that generation's term row
-                if sorted(by_gen) == sorted(b["gen"] for b in brows) == gens and all(
-                    by_gen[r["gen"]]["tfs_blob"][:1] == bytes([BLOOM_BOX_MAGIC])
-                    and by_gen[r["gen"]]["df_shard"] == len(r["ids"])
-                    for r in parts
-                ):
-                    blooms[pref].append(np.concatenate([
-                        bloom_boxes_decode(
-                            by_gen[r["gen"]]["tfs_blob"], len(r["ids"]), nbytes
-                        )
+            for s, (blob_col, offs_col) in enumerate(BLOOM_COLUMNS):
+                if all(_has_side(r, blob_col, offs_col) for r in parts):
+                    blooms[s].append(np.concatenate([
+                        bloom_boxes_decode(r[blob_col], len(r["ids"]), nbytes)
                         for r in parts
                     ]))
-                else:  # drop: pruning-only, result-neutral
-                    dropped.append(pref + base)
-                    blooms[pref].append(
+                else:  # null: pruning-only, result-neutral
+                    kept[t, s] = False
+                    blooms[s].append(
                         np.zeros((bounds[-1] - bounds[-2], nbytes), np.uint8)
                     )
-        mats = None  # no bloom rows at all unless some side aligned
-        if len(dropped) < len(BLOOM_PREFIXES) * len(vocab):
-            mats = tuple(np.concatenate(blooms[pref]) for pref in BLOOM_PREFIXES)
         batches = encode_postings(
             shard_id, pa.array(vocab, pa.string()), np.array(bounds),
             np.concatenate(ids), np.concatenate(tfs),
             np.concatenate(pos) if with_pos else None,
             np.concatenate(offs) if with_off else None,
-            mats,
+            tuple(np.concatenate(b) for b in blooms) if kept.any() else None,
+            kept,
         )
-        del plain, sides, parts, ids, tfs, pos, offs, blooms, mats
-        if not dropped:
-            yield from batches
-            return
-        drop = pa.array(dropped, pa.string())
-        for b in batches:
-            yield b.filter(pc.invert(pc.is_in(b.column("term"), drop)))
+        del plain, parts, ids, tfs, pos, offs, blooms
+        yield from batches
 
     return segs.groupBy("shard_id").applyInArrow(merge_shard, SEGMENT_SCHEMA)
 
 
-def require_sentinel_layout(meta: dict, index_dir: str) -> None:
-    """Refuse an index whose doc lengths live outside its segment table
-    (the removed v1 layout): no reader or merge handles it."""
-    if not meta.get("doclen_sentinel"):
+def _has_side(row: dict, blob_col: str, offs_col: str) -> bool:
+    """Whether a term row carries a bloom side as boxes of its own
+    postings: the box magic, and one box offset per 128 postings."""
+    blob, box_offs = row[blob_col], row[offs_col]
+    return (
+        bool(blob) and blob[0] == BLOOM_BOX_MAGIC and box_offs is not None
+        and len(box_offs) == -(-int(row["df_shard"]) // BOX_CAP)
+    )
+
+
+def require_layout(meta: dict, index_dir: str) -> None:
+    """Refuse an index written in an older layout (doc lengths outside
+    the segment table, or phrase blooms as separate prefixed rows): no
+    reader or merge handles it, and none converts it."""
+    if meta.get("format") != FORMAT:
         raise ValueError(
-            f"index at {index_dir!r} keeps doc lengths outside its "
-            "segment table: it was written by a removed v1 writer "
-            "and must be rebuilt"
+            f"index at {index_dir!r} has format {meta.get('format')!r}, "
+            f"not {FORMAT!r}: it was written by an older writer and "
+            "must be rebuilt"
         )
 
 
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
-    generation index at ``out_dir`` (segments merged per (shard, term)
-    — including sentinel and bloom rows; dictionary / stats.json
+    generation index at ``out_dir`` (segments merged per (shard, term),
+    sentinels and bloom columns included; dictionary / stats.json
     carried over). Queries over the compacted index are identical;
     per-term read cost drops to one row, and bloom pruning re-activates
     (multi-generation rows skip it)."""
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
-    require_sentinel_layout(meta, index_dir)
-    # manifest-pinned read (read_segments lacks the generation column's
-    # partition discovery only for non-generational dirs, where gen=0):
-    # explicit paths + basePath keep `generation` available to the merge
-    from wiser_spark.streaming.incremental import read_generations
-
-    gens = read_generations(index_dir)
-    if gens is None:
-        segs = spark.read.parquet(f"{index_dir}/segments")
-    elif not gens:
-        # empty manifest (e.g. hand-repaired index): nothing to merge —
-        # parquet(*[]) would raise an unable-to-infer-schema error
-        segs = spark.createDataFrame(
-            [], SEGMENT_SCHEMA + ", generation long"
-        )
-    else:
-        base = f"{index_dir}/segments"
-        segs = spark.read.option("basePath", base).parquet(
-            *[f"{base}/generation={g}" for g in gens]
-        )
+    require_layout(meta, index_dir)
+    segs = read_segments(spark, index_dir)
     nbytes = (meta.get("bloom") or {}).get("nbytes")
     compact_segments(segs, nbytes).write.mode("overwrite").partitionBy(
         "shard_id"
@@ -1460,7 +1418,7 @@ class SegmentIndex:
         self.scan_coalesce = scan_coalesce
         with open(f"{index_dir}/stats.json") as f:
             self.meta = json.load(f)
-        require_sentinel_layout(self.meta, index_dir)
+        require_layout(self.meta, index_dir)
         self.params = BM25Params(k1=self.meta["k1"], b=self.meta["b"])
         self.stats = CorpusStats(self.meta["n_docs"], self.meta["avgdl"])
         # explicit schemas keep a degenerate (empty-corpus) index
@@ -1489,8 +1447,6 @@ class SegmentIndex:
         ).parquet(f"{index_dir}/dictionary").cache()
         # sized-bloom geometry (bits/bytes/hashes); None when the index
         # has no phrase blooms
-        from wiser_spark.functions.bloom import BloomParams
-
         b = self.meta.get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
         self._dict_mem: dict[str, tuple[int, int | None]] | None = None
@@ -1688,21 +1644,26 @@ class SegmentIndex:
             seg_cols += ["pos_blob", "skip_pos_offs"]
         if need_off:
             seg_cols += ["off_blob", "skip_off_offs"]
-        # the shard's sentinel rows, plus the phrase bloom rows
-        # (pruning-only): end blooms for all but the last term, begin
-        # blooms for all but the first (the sided 2-term choice needs
-        # either available)
-        wanted = set(all_terms) | {DOCLEN_TERM}
-        for _, terms_l, ph in qlist:
-            if ph:
-                wanted.update(BLOOM_PREFIX + t for t in terms_l[:-1])
-                wanted.update(BLOOM_BEGIN_PREFIX + t for t in terms_l[1:])
+        # the phrase bloom blobs (pruning-only; the probe decodes the
+        # whole blob, so the box offsets stay unread): end blooms of all
+        # but a phrase's last term, begin blooms of all but its first
+        # (the sided 2-term choice needs either), null for other terms
+        # so they do not travel to the kernel
+        for (blob_col, _), sided in zip(BLOOM_COLUMNS, (
+            {t for _, terms_l, ph in qlist if ph for t in terms_l[:-1]},
+            {t for _, terms_l, ph in qlist if ph for t in terms_l[1:]},
+        )):
+            if sided:
+                seg_cols.append(
+                    F.when(F.col("term").isin(sorted(sided)), F.col(blob_col))
+                    .alias(blob_col)
+                )
         seg = self.segments.filter(
-            F.col("term").isin(sorted(wanted))
+            F.col("term").isin([DOCLEN_TERM, *all_terms])
         ).select(*seg_cols)
 
         def shard_kernel(seg_pdf: pd.DataFrame) -> pd.DataFrame:
-            rows_by_term, bloom_rows, sentinel_rows = _parse_shard_rows(seg_pdf)
+            rows_by_term, sentinel_rows = _parse_shard_rows(seg_pdf)
             codes_for = _doclen_code_fn(sentinel_rows)
             # LAZY decode, shared across queries: a term decodes at most
             # once fully (at the richest level any query needs); terms
@@ -1842,8 +1803,7 @@ class SegmentIndex:
                 cand_pre = cand
                 if ph:
                     cand = _bloom_prune(
-                        cand, qdec, terms_l, bloom_rows, rows_by_term,
-                        bloom_cfg,
+                        cand, qdec, terms_l, rows_by_term, bloom_cfg
                     )
                     if cand.size == 0:
                         continue

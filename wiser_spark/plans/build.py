@@ -35,6 +35,7 @@ from wiser_spark.operators.postings import (
     build_postings,
 )
 from wiser_spark.operators.segments import (
+    FORMAT,
     SEGMENT_SCHEMA,
     build_segments,
     dictionary_from_segments,
@@ -180,8 +181,7 @@ class IndexBuildPipeline:
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
             "n_terms": self.manifest.entries["dictionary"].rows,
             "n_shards": cfg.n_shards, "k1": cfg.bm25.k1, "b": cfg.bm25.b,
-            "format": "wiser-spark-segment-v2",
-            "doclen_sentinel": True,
+            "format": FORMAT,
         }
         write_stats(self.work_dir, meta)
         return self.manifest

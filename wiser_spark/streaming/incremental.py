@@ -56,7 +56,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wiser_spark.config import IndexConfig
-from wiser_spark.operators.segments import prefetch_pages_col, write_stats
+from wiser_spark.operators.segments import (
+    FORMAT,
+    prefetch_pages_col,
+    require_layout,
+    write_stats,
+)
 
 _TABLES = ("segments", "dictionary_deltas")
 
@@ -248,35 +253,32 @@ class IncrementalIndexer:
         compact_every: int | None = None,
     ):
         """Each generation is built with the ZERO-SHUFFLE map-side
-        encoder — sentinel doc-length rows and both bloom sides ride
-        inside the segment table, and ``compact_index`` merges the
-        generations (sentinels and blooms included) into the same
-        single-generation layout a batch map-side build writes. ``fmt``
-        names that layout; "v2" is the only one.
+        encoder — sentinel doc-length rows ride inside the segment
+        table, both bloom sides inside the term rows — and
+        ``compact_index`` merges the generations (sentinels and blooms
+        included) into the same single-generation layout a batch
+        map-side build writes. ``fmt`` names that layout; "v2" is the
+        only one.
 
         ``compact_every``: the TIERED AUTO-COMPACTION trigger — a
         long-running stream otherwise accumulates one generation per
         micro-batch and every query merges them per (shard, term)
         forever. When the segment table holds MORE than this many
         generations after a commit, they merge in place into one
-        (``compact_segments`` — sentinels, both bloom sides, and the
+        (``compact_segments`` — sentinels, bloom columns, and the
         dictionary deltas included). None (default) disables it."""
         if fmt != "v2":
             raise ValueError(f"unknown streaming index format: {fmt}")
-        # resuming an index of another format would corrupt it silently
-        # (e.g. generations without doc-length sentinels, commits
-        # without the summed lengths the avgdl fold reads) — refuse
+        # resuming an index of an older layout would corrupt it silently
+        # (e.g. generations without doc-length sentinels, or with bloom
+        # rows the merge no longer reads) — refuse
         try:
             with open(f"{index_dir}/stats.json") as f:
                 _meta = json.load(f)
-            existing = _meta.get("format", "")
         except (FileNotFoundError, json.JSONDecodeError):
-            _meta, existing = {}, ""
-        if existing and not existing.startswith("wiser-spark-segment-v2"):
-            raise ValueError(
-                f"index at {index_dir!r} has format {existing!r}; "
-                f"cannot resume it with fmt={fmt!r}"
-            )
+            _meta = {}
+        if _meta:
+            require_layout(_meta, index_dir)
         self.index_dir = index_dir
         self.config = config or IndexConfig()
         self.order_cols = list(order_cols)
@@ -645,9 +647,8 @@ class IncrementalIndexer:
             "n_shards": self.config.n_shards,
             "k1": self.config.bm25.k1,
             "b": self.config.bm25.b,
-            "format": "wiser-spark-segment-v2-mapside",
+            "format": FORMAT,
             "streaming": True,
-            "doclen_sentinel": True,
         }
         if self.with_blooms:
             from wiser_spark.functions.bloom import bloom_params
