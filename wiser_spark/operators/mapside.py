@@ -62,6 +62,7 @@ from wiser_spark.operators.segments import (
     decode_doclen_sentinel,
     sentinel_batch,
     write_stats,
+    write_table,
 )
 
 # The shard encoder's output batches hold at most this many rows and
@@ -582,9 +583,7 @@ def write_index_mapside(
         docs, config.n_shards, content_col,
         reuse_partitions=reuse_partitions, with_blooms=with_blooms,
     )
-    segs.write.mode("overwrite").partitionBy("shard_id").parquet(
-        f"{index_dir}/segments"
-    )
+    write_table(segs, f"{index_dir}/segments", "shard_id")
     # explicit schema: a DEGENERATE (empty) corpus writes no part files,
     # which would fail schema inference — the index stays readable
     written = spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
@@ -622,11 +621,7 @@ def write_index_mapside(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
-            pool.submit(
-                lambda: dict_df.write.mode("overwrite").parquet(
-                    f"{index_dir}/dictionary"
-                )
-            ),
+            pool.submit(write_table, dict_df, f"{index_dir}/dictionary"),
             pool.submit(
                 lambda: sent.mapInPandas(stats_of, "n long, s long")
                 .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))

@@ -54,6 +54,11 @@ shard by contiguous doc-id ranges (or the input partitioning).
 Queries fan out over shards and merge a k-row result per shard
 (distributed analogue of the reference's single-node zig-zag,
 ``query_processing.h:810-852``).
+
+STORAGE: ``write_table`` writes every index table (zstd, v2 pages: the
+``term`` column is front-coded, dictionary files are sorted by term);
+snappy tables written earlier still read. ``scripts/index_footprint.py``
+prints an index's bytes, codecs and encodings per column.
 """
 
 from __future__ import annotations
@@ -355,9 +360,10 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
     """(term, df, bytes_docid_tf, prefetch_pages) from written segment
     rows in ONE scan of three pruned columns — the .tip analogue (B13).
     df = sum(df_shard) because each doc lives in exactly one shard.
-    Sentinel rows are excluded. The single definition behind every
-    writer: the shuffle build, the map-side build, and the streaming
-    sink's per-generation deltas."""
+    Sentinel rows are excluded; each partition (so each written file)
+    is sorted by term. The single definition behind every writer: the
+    shuffle build, the map-side build, and the streaming sink's
+    per-generation deltas."""
     return (
         segs.filter(F.col("term") != DOCLEN_TERM)
         .groupBy("term")
@@ -367,6 +373,7 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
             .cast("long").alias("bytes_docid_tf"),
         )
         .withColumn("prefetch_pages", prefetch_pages_col())
+        .sortWithinPartitions("term")
     )
 
 
@@ -409,9 +416,8 @@ def write_index(
     # segments: already hash-partitioned by shard_id (the cogroup), rows
     # emitted in term order inside each shard — no extra shuffle before
     # the write
-    build_segments(postings, docstats, config.n_shards).write.mode(
-        "overwrite"
-    ).partitionBy("shard_id").parquet(f"{index_dir}/segments")
+    write_table(build_segments(postings, docstats, config.n_shards),
+                f"{index_dir}/segments", "shard_id")
     # dictionary (term, df, bytes_docid_tf, prefetch_pages) in ONE scan
     # of the written segment rows (3 pruned columns): df = sum of
     # df_shard (each doc lives in exactly one shard), bytes/pages = the
@@ -424,11 +430,12 @@ def write_index(
     from pyspark.sql import Observation
 
     obs = Observation()
-    dictionary_from_segments(
-        spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
-    ).observe(obs, F.count(F.lit(1)).alias("n_terms")).write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/dictionary")
+    write_table(
+        dictionary_from_segments(
+            spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
+        ).observe(obs, F.count(F.lit(1)).alias("n_terms")),
+        f"{index_dir}/dictionary",
+    )
     meta = {
         "n_docs": stats.n_docs,
         "avgdl": stats.avgdl,
@@ -441,6 +448,37 @@ def write_index(
         "format": FORMAT,
     }
     write_stats(index_dir, meta)
+
+
+def write_table(df: DataFrame, path: str, partition_by: str | None = None
+                ) -> None:
+    """Overwrite one index table: zstd pages (parquet's default level)
+    and v2 data pages, under which a string column that falls back from
+    dictionary encoding is front-coded (DELTA_BYTE_ARRAY), the columnar
+    form of the reference's prefix-sharing term trie
+    (``term_index.h:101-163``)."""
+    w = df.write.mode("overwrite").option("compression", "zstd").option(
+        "parquet.writer.version", "v2")
+    (w.partitionBy(partition_by) if partition_by else w).parquet(path)
+
+
+def read_json(path: str, missing_ok: bool = False) -> dict | None:
+    """An index metadata file's JSON object. Only a missing file is
+    absent (None when ``missing_ok``): a present but unreadable file
+    raises ValueError naming it, since reading it as absent would skip
+    what it records (the layout, the bloom params, the generations)."""
+    try:
+        with open(path) as f:
+            obj = json.load(f)
+        if not isinstance(obj, dict):
+            raise ValueError("not a JSON object")
+        return obj
+    except FileNotFoundError:
+        if missing_ok:
+            return None
+        raise
+    except ValueError as e:  # also JSONDecodeError, UnicodeDecodeError
+        raise ValueError(f"unreadable index metadata {path!r}: {e}") from e
 
 
 def write_stats(index_dir: str, meta: dict) -> None:
@@ -1279,17 +1317,14 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     carried over). Queries over the compacted index are identical;
     per-term read cost drops to one row, and bloom pruning re-activates
     (multi-generation rows skip it)."""
-    with open(f"{index_dir}/stats.json") as f:
-        meta = json.load(f)
+    meta = read_json(f"{index_dir}/stats.json")
     require_layout(meta, index_dir)
     segs = read_segments(spark, index_dir)
     nbytes = (meta.get("bloom") or {}).get("nbytes")
-    compact_segments(segs, nbytes).write.mode("overwrite").partitionBy(
-        "shard_id"
-    ).parquet(f"{out_dir}/segments")
-    spark.read.parquet(f"{index_dir}/dictionary").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/dictionary")
+    write_table(compact_segments(segs, nbytes), f"{out_dir}/segments",
+                "shard_id")
+    write_table(spark.read.parquet(f"{index_dir}/dictionary")
+                .sortWithinPartitions("term"), f"{out_dir}/dictionary")
     meta["compacted"] = True
     write_stats(out_dir, meta)
 
@@ -1416,8 +1451,7 @@ class SegmentIndex:
         self.spark = spark
         self.index_dir = index_dir
         self.scan_coalesce = scan_coalesce
-        with open(f"{index_dir}/stats.json") as f:
-            self.meta = json.load(f)
+        self.meta = read_json(f"{index_dir}/stats.json")
         require_layout(self.meta, index_dir)
         self.params = BM25Params(k1=self.meta["k1"], b=self.meta["b"])
         self.stats = CorpusStats(self.meta["n_docs"], self.meta["avgdl"])
@@ -1549,9 +1583,11 @@ class SegmentIndex:
         ``tsl/htrie``, whose prefix iteration the engine uses for
         dictionary walks). Serving reads the CACHED dictionary (an
         in-memory filter over vocabulary-sized rows); a cold read gets
-        parquet min/max row-group pruning for free because the
-        dictionary is written sorted by term — StringStartsWith pushes
-        down to the scan (pinned by test_term_prefix_pushdown)."""
+        parquet min/max row-group pruning because every writer sorts
+        each dictionary file by term (``dictionary_from_segments``,
+        the streaming fold), so a file's row groups hold disjoint term
+        ranges — StringStartsWith pushes down to the scan (pinned by
+        test_term_prefix_pushdown)."""
         if not prefix:
             raise ValueError("prefix must be non-empty")
         return self.dictionary.filter(

@@ -40,6 +40,7 @@ from wiser_spark.operators.segments import (
     build_segments,
     dictionary_from_segments,
     write_stats,
+    write_table,
 )
 from wiser_spark.plans.manifest import (
     Manifest,
@@ -123,7 +124,7 @@ class IndexBuildPipeline:
                 if "doc_id" in self.source.columns
                 else assign_doc_ids(self.source, self.order_cols)
             )
-            out.write.mode("overwrite").parquet(d)
+            write_table(out, d)
             # the write was the one action over the assignment: release
             # its pinned shuffle layout eagerly (r04 advisory)
             pinned = getattr(out, "_wiser_pinned", None)
@@ -138,41 +139,40 @@ class IndexBuildPipeline:
             fingerprint(
                 "postings", fp_docs, cfg.with_positions, self.content_col
             ),
-            lambda d: build_postings(
+            lambda d: write_table(build_postings(
                 docs, with_positions=cfg.with_positions,
                 content_col=self.content_col,
-            ).write.mode("overwrite").parquet(d),
+            ), d),
         )
         postings = self.spark.read.parquet(self._out("postings"))
 
         fp_stats = self._run_stage(
             "docstats", fingerprint("docstats", fp_docs, self.content_col),
-            lambda d: build_docstats(docs, content_col=self.content_col)
-            .write.mode("overwrite").parquet(d),
+            lambda d: write_table(
+                build_docstats(docs, content_col=self.content_col), d
+            ),
         )
         docstats = self.spark.read.parquet(self._out("docstats"))
-
-        def write_segments(d):
-            build_segments(postings, docstats, cfg.n_shards).write.mode(
-                "overwrite"
-            ).partitionBy("shard_id").parquet(d)
 
         # the sentinels come from docstats, so its output chains in too
         fp_segs = self._run_stage(
             "segments",
             fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
-            write_segments,
+            lambda d: write_table(
+                build_segments(postings, docstats, cfg.n_shards), d,
+                "shard_id",
+            ),
         )
 
         # the same dictionary as every other writer's, prefetch fields
         # included (queries pick full vs skip-based partial decode by them)
         self._run_stage(
             "dictionary", fingerprint("dictionary", fp_segs),
-            lambda d: dictionary_from_segments(
+            lambda d: write_table(dictionary_from_segments(
                 self.spark.read.schema(SEGMENT_SCHEMA).parquet(
                     self._out("segments")
                 )
-            ).write.mode("overwrite").parquet(d),
+            ), d),
         )
 
         # final queryable-index metadata (consumed by SegmentIndex)
@@ -299,9 +299,9 @@ def build_index_mapside_batched(
     bucketed = None
     if uncommitted:
         if not os.path.exists(f"{staged_src}/_SUCCESS"):
-            source.withColumn(
+            write_table(source.withColumn(
                 "_batch", batch_id_col(order_cols, n_batches)
-            ).write.mode("overwrite").partitionBy("_batch").parquet(staged_src)
+            ), staged_src, "_batch")
         bucketed = spark.read.parquet(staged_src)
 
     # ------------------------------------------------- pipelined commits

@@ -59,8 +59,10 @@ from wiser_spark.config import IndexConfig
 from wiser_spark.operators.segments import (
     FORMAT,
     prefetch_pages_col,
+    read_json,
     require_layout,
     write_stats,
+    write_table,
 )
 
 _TABLES = ("segments", "dictionary_deltas")
@@ -84,13 +86,17 @@ def _manifest_path(index_dir: str) -> str:
 
 def read_generations(index_dir: str) -> list[int] | None:
     """The LIVE generation set from the atomic manifest, or None when
-    the index predates manifests (readers then fall back to directory
-    listing — the pre-round-5 behavior)."""
+    the index has no manifest (readers then fall back to directory
+    listing — the pre-round-5 behavior). A manifest that is present but
+    unreadable raises ValueError: a listing could include merged-away
+    generations and so duplicate documents."""
+    path = _manifest_path(index_dir)
+    manifest = read_json(path, missing_ok=True)
     try:
-        with open(_manifest_path(index_dir)) as f:
-            return sorted(int(g) for g in json.load(f)["generations"])
-    except (FileNotFoundError, json.JSONDecodeError, KeyError):
-        return None
+        return None if manifest is None else sorted(
+            int(g) for g in manifest["generations"])
+    except (KeyError, TypeError, ValueError) as e:
+        raise ValueError(f"unreadable index metadata {path!r}: {e!r}") from e
 
 
 def _write_generations(index_dir: str, gens) -> None:
@@ -272,13 +278,10 @@ class IncrementalIndexer:
         # resuming an index of an older layout would corrupt it silently
         # (e.g. generations without doc-length sentinels, or with bloom
         # rows the merge no longer reads) — refuse
-        try:
-            with open(f"{index_dir}/stats.json") as f:
-                _meta = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            _meta = {}
-        if _meta:
+        _meta = read_json(f"{index_dir}/stats.json", missing_ok=True)
+        if _meta is not None:
             require_layout(_meta, index_dir)
+        read_generations(index_dir)  # an unreadable manifest raises
         self.index_dir = index_dir
         self.config = config or IndexConfig()
         self.order_cols = list(order_cols)
@@ -292,7 +295,7 @@ class IncrementalIndexer:
         # family via the BloomParams default
         from wiser_spark.functions.bloom import BloomParams
 
-        b = _meta.get("bloom")
+        b = (_meta or {}).get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
 
     # ------------------------------------------------------- commit log
@@ -403,9 +406,7 @@ class IncrementalIndexer:
             docs, self.config.n_shards, self.content_col,
             with_blooms=self.with_blooms, bloom_cfg=self.bloom_cfg,
         )
-        segs.write.mode("overwrite").partitionBy("shard_id").parquet(
-            f"{staging}/segments"
-        )
+        write_table(segs, f"{staging}/segments", "shard_id")
         # the encode was the ONE action over the sorted slice: the
         # pinned shuffle layout can release now (r04 advisory: the
         # context cleaner is too lazy for a 10^12-file ingest)
@@ -415,9 +416,9 @@ class IncrementalIndexer:
         staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
             f"{staging}/segments"
         )
-        dictionary_from_segments(staged).select(
+        write_table(dictionary_from_segments(staged).select(
             "term", "df", "bytes_docid_tf"
-        ).write.mode("overwrite").parquet(f"{staging}/dictionary_deltas")
+        ), f"{staging}/dictionary_deltas")
 
         # atomic per-table publish: generation=<id> partition dirs. A
         # leftover from a crashed attempt of this SAME batch is replaced
@@ -494,7 +495,8 @@ class IncrementalIndexer:
 
     def _fold_deltas(self, spark: SparkSession, gens=None) -> DataFrame:
         """THE dictionary-deltas fold (one definition; _refresh_meta
-        folds every generation, compaction folds the merged subset)."""
+        folds every generation, compaction folds the merged subset),
+        each partition sorted by term like dictionary_from_segments."""
         d = spark.read.schema(
             "term string, df int, bytes_docid_tf long"
         ).parquet(f"{self.index_dir}/dictionary_deltas")
@@ -503,7 +505,7 @@ class IncrementalIndexer:
         return d.groupBy("term").agg(
             F.sum("df").cast("int").alias("df"),
             F.sum("bytes_docid_tf").cast("long").alias("bytes_docid_tf"),
-        )
+        ).sortWithinPartitions("term")
 
     def _maybe_compact(self, spark: SparkSession) -> None:
         """SIZE-TIERED trigger: when more than ``compact_every``
@@ -587,20 +589,15 @@ class IncrementalIndexer:
         staging_rel = "_staging/compact"
         staging = f"{self.index_dir}/{staging_rel}"
         shutil.rmtree(staging, ignore_errors=True)
-        try:
-            with open(f"{self.index_dir}/stats.json") as f:
-                nbytes = (json.load(f).get("bloom") or {}).get("nbytes")
-        except (FileNotFoundError, json.JSONDecodeError):
-            nbytes = None
+        meta = read_json(f"{self.index_dir}/stats.json", missing_ok=True)
+        nbytes = ((meta or {}).get("bloom") or {}).get("nbytes")
         segs = spark.read.parquet(f"{self.index_dir}/segments").filter(
             F.col("generation").isin(gens)
         )
-        compact_segments(segs, nbytes).write.mode("overwrite").partitionBy(
-            "shard_id"
-        ).parquet(f"{staging}/segments")
-        self._fold_deltas(spark, gens).write.mode("overwrite").parquet(
-            f"{staging}/dictionary_deltas"
-        )
+        write_table(compact_segments(segs, nbytes), f"{staging}/segments",
+                    "shard_id")
+        write_table(self._fold_deltas(spark, gens),
+                    f"{staging}/dictionary_deltas")
         # (the QUERYABLE dictionary is refolded by _refresh_meta from
         # all remaining deltas after the swap — same sums either way)
         journal = {
@@ -632,12 +629,9 @@ class IncrementalIndexer:
         lensum = sum(v[2] for v in commits.values() if v[1])
         # fold delta dictionaries into the queryable table (ONE fold
         # definition, shared with compaction's subset fold)
-        (
-            self._fold_deltas(spark)
-            .withColumn("prefetch_pages", prefetch_pages_col())
-            .write.mode("overwrite")
-            .parquet(f"{self.index_dir}/dictionary")
-        )
+        write_table(self._fold_deltas(spark).withColumn(
+            "prefetch_pages", prefetch_pages_col()
+        ), f"{self.index_dir}/dictionary")
         meta = {
             "n_docs": n_docs,
             "avgdl": (lensum / n_docs) if n_docs else 1.0,
