@@ -1,6 +1,7 @@
 """Print one SHA-1 per table of an index directory.
 
-    python scripts/segment_digest.py [--logical] <index_dir>
+    python scripts/segment_digest.py [--logical | --no-blooms] <index_dir>
+    python scripts/segment_digest.py --blooms-vs <other_index_dir> <index_dir>
 
 Each digest covers the table's rows (every column, partition columns
 included) serialized one per line and sorted, so it does not depend on
@@ -18,6 +19,14 @@ bloom rows (term prefixed "\\x01" for end, "\\x02" for begin, the
 boxes in ``tfs_blob``/``skip_tf_offs``). Equal logical lines mean the
 same postings and the same bloom bytes, whichever layout wrote them.
 The dictionary line stays the plain row digest.
+
+``--no-blooms`` digests every table with the four bloom columns dropped,
+and ``--blooms-vs`` compares the bloom columns of ``<index_dir>``'s
+segments with those of the same (shard, generation, term) rows of
+``<other_index_dir>``: it prints how many rows of two or more postings
+carry the other index's bloom columns exactly, and how many rows of one
+posting carry none. Together they check a change of bloom policy
+against the index it replaces.
 """
 
 from __future__ import annotations
@@ -50,10 +59,11 @@ def _dataset(path: str):
     return ds.dataset(path, format="parquet", partitioning="hive")
 
 
-def table_digest(path: str) -> tuple[int, str]:
-    """(row count, SHA-1 over the sorted row lines) of one parquet table."""
+def table_digest(path: str, drop=()) -> tuple[int, str]:
+    """(row count, SHA-1 over the sorted row lines) of one parquet
+    table, without the columns in ``drop``."""
     table = _dataset(path).to_table()
-    cols = sorted(table.column_names)
+    cols = sorted(c for c in table.column_names if c not in drop)
     return _digest([
         repr(tuple(row[c] for c in cols)).encode()
         for row in table.to_pylist()
@@ -99,23 +109,51 @@ def logical_digest(path: str) -> tuple[int, str]:
     return _digest(lines)
 
 
-def main(index_dir: str, logical: bool = False) -> None:
+def blooms_vs(path: str, other: str) -> str:
+    """The bloom columns of the segments at ``path`` against those of
+    the same (shard, generation, term) rows at ``other``."""
+    def rows(p):
+        names = _dataset(p).schema.names
+        key = [c for c in ("shard_id", "generation", "term") if c in names]
+        table = _dataset(p).to_table(
+            columns=key + ["df_shard"] + sorted(BLOOM_COLS))
+        return {tuple(r[c] for c in key): r for r in table.to_pylist()}
+
+    mine, theirs = rows(path), rows(other)
+    if mine.keys() != theirs.keys():
+        return "rows differ"
+    multi = [k for k, r in mine.items() if r["df_shard"] >= 2 and k[-1]]
+    single = [k for k, r in mine.items() if r["df_shard"] < 2 and k[-1]]
+    same = sum(
+        all(mine[k][c] == theirs[k][c] for c in BLOOM_COLS) for k in multi
+    )
+    null = sum(all(mine[k][c] is None for c in BLOOM_COLS) for k in single)
+    return (f"df>=2 rows={len(multi)} equal={same} "
+            f"df==1 rows={len(single)} null={null}")
+
+
+def main(index_dir: str, mode: str | None = None) -> None:
     for name in TABLES:
         path = os.path.join(index_dir, name)
         if not os.path.isdir(path):
             continue
-        if logical and name == "segments":
+        if mode == "--logical" and name == "segments":
             n, digest = logical_digest(path)
             print(f"{name} entries={n} logical_sha1={digest}")
         else:
-            n, digest = table_digest(path)
+            drop = BLOOM_COLS if mode == "--no-blooms" else ()
+            n, digest = table_digest(path, drop)
             print(f"{name} rows={n} sha1={digest}")
 
 
 if __name__ == "__main__":
     args = sys.argv[1:]
-    logical = "--logical" in args
-    args = [a for a in args if a != "--logical"]
-    if len(args) != 1:
+    if len(args) == 3 and args[0] == "--blooms-vs":
+        print(blooms_vs(os.path.join(args[2], "segments"),
+                        os.path.join(args[1], "segments")))
+    elif len(args) == 2 and args[0] in ("--logical", "--no-blooms"):
+        main(args[1], args[0])
+    elif len(args) == 1:
+        main(args[0])
+    else:
         sys.exit(__doc__)
-    main(args[0], logical)

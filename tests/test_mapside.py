@@ -82,7 +82,7 @@ def test_batched_encode_byte_identical_to_reference():
     to the per-term reference encode (_encode_term_flat, bloom columns
     from bloom_boxes_encode) — including df >= PACK_SIZE terms (framed
     path), df < PACK_SIZE terms (batched tail path), and both bloom
-    sides."""
+    sides, which only the df >= 2 terms carry."""
     import random
 
     import numpy as np
@@ -157,7 +157,12 @@ def test_batched_encode_byte_identical_to_reference():
             hv = have[k]
             assert (list(hv) if isinstance(v, list) else hv) == v, (t, k)
         # blooms: end = next-token masks, begin = previous-token masks
-        # (sized filters: reference libbloom defaults, box layout)
+        # (sized filters: reference libbloom defaults, box layout), for
+        # multi-posting terms only
+        n_checked += 1
+        if len(doc_ids) == 1:
+            assert all(have[c] is None for side in BLOOM_COLUMNS for c in side)
+            continue
         for (blob_col, offs_col), delta in zip(BLOOM_COLUMNS, (1, -1)):
             blooms = []
             for d in doc_ids:
@@ -171,7 +176,6 @@ def test_batched_encode_byte_identical_to_reference():
             blob, offs = bloom_boxes_encode(np.stack(blooms))
             assert have[blob_col] == blob, (t, blob_col)
             assert have[offs_col] == offs, (t, offs_col)
-        n_checked += 1
     assert n_checked == len(vocab) and DOCLEN_TERM in got
     assert len(got) == len(vocab) + 1  # one row per term + the sentinel
     assert max(len(per_term["hot"]), 0) >= 128  # framed path exercised
@@ -180,7 +184,8 @@ def test_batched_encode_byte_identical_to_reference():
 
 def _reference_rows(docs, with_blooms):
     """Expected segment rows of shard 7 over ``docs`` (doc_id = list
-    index), in output order, from the per-term reference encoders."""
+    index), in output order, from the per-term reference encoders:
+    blooms on the terms of two or more postings only."""
     import re
 
     import numpy as np
@@ -218,7 +223,7 @@ def _reference_rows(docs, with_blooms):
             np.array([len(per_term[t][d]) for d in doc_ids], dtype=np.int64),
             np.array([p for p, _, _ in occ], dtype=np.int64),
             np.array([v for _, s, e in occ for v in (s, e)], dtype=np.int64),
-            tuple(sides) if with_blooms else None,
+            tuple(sides) if with_blooms and len(doc_ids) > 1 else None,
         ))
     rows.append(doclen_sentinel_row(
         7, np.arange(len(docs)),
@@ -251,8 +256,9 @@ def _edge_corpus(case):
              "batches", "punctuation"],
 )
 def test_encode_byte_identical_edge_cases(case):
-    """Row-for-row, byte-identical and in order (one row per term with
-    both bloom sides as columns; sentinel last) against the per-term
+    """Row-for-row, byte-identical and in order (one row per term, both
+    bloom sides as columns of the df >= 2 terms and null on the df == 1
+    ones; sentinel last) against the per-term
     reference, below and at the framed/tail boundary, across bloom
     boxes, without blooms (null bloom columns), over several input
     batches whose per-batch dictionaries must unify, and for a shard
@@ -307,7 +313,7 @@ def hwm_kb():
 docs = []
 for i, row in enumerate(make_corpus(250, seed=101)):
     rng = random.Random(f"rare:{i}")
-    rare = " ".join(f"r{rng.getrandbits(48):012x}" for _ in range(190))
+    rare = " ".join(f"r{rng.getrandbits(48):012x}" for _ in range(260))
     docs.append(row["content"] + "\\n" + rare)
 rb = pa.record_batch({"doc_id": pa.array(range(250), pa.int64()),
                       "content": pa.array(docs)})

@@ -180,9 +180,10 @@ def test_stream_v2_multigeneration_queries(spark, streamed_v2, oracle):
 def test_stream_v2_compaction_merges_sentinels_and_blooms(
     spark, streamed_v2, oracle, tmp_path
 ):
-    """compact_index on a v2 streaming index merges term rows (with
-    both bloom sides) AND the sentinel doc-length rows into one row per
-    (shard, term); the compacted index answers the full suite
+    """compact_index on a v2 streaming index merges term rows AND the
+    sentinel doc-length rows into one row per (shard, term), with both
+    bloom sides on every term row of two or more postings and none on
+    the others; the compacted index answers the full suite
     rank-identically, with bloom pruning active again."""
     from wiser_spark.operators.segments import DOCLEN_TERM, compact_index
 
@@ -195,14 +196,17 @@ def test_stream_v2_compaction_merges_sentinels_and_blooms(
     )
     assert per_key == 1  # sentinels and terms all merged
     rows = segs.select(
-        "term", "bloom_end_blob", "bloom_begin_blob"
+        "term", "df_shard", "bloom_end_blob", "bloom_begin_blob"
     ).collect()
     terms = [r["term"] for r in rows]
     assert DOCLEN_TERM in terms
-    n_end = sum(r["bloom_end_blob"] is not None for r in rows)
-    n_begin = sum(r["bloom_begin_blob"] is not None for r in rows)
-    n_plain = sum(t != DOCLEN_TERM for t in terms)
-    assert n_end == n_begin == n_plain > 0  # both sides survived the merge
+    plain = [r for r in rows if r["term"] != DOCLEN_TERM]
+    multi = [r for r in plain if r["df_shard"] >= 2]
+    assert 0 < len(multi) < len(plain)
+    for r in plain:  # both sides exactly where they can prune
+        has = r["df_shard"] >= 2
+        assert (r["bloom_end_blob"] is not None) == has, r["term"]
+        assert (r["bloom_begin_blob"] is not None) == has, r["term"]
     idx = SegmentIndex(spark, out)
     assert idx.stats.n_docs == 90
     for terms_q, ph in [(["return"], False), (["return", "import"], False),
@@ -215,21 +219,41 @@ def test_stream_v2_compaction_merges_sentinels_and_blooms(
             assert r["score"] == pytest.approx(s, rel=1e-12)
 
 
-def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
+def _per_term_merge(
+    rows: list[dict], bp, texts: list[str]
+) -> dict[int, list[dict]]:
     """Reference merge of generational segment rows: per shard, the
     merged sentinel first, then each term in order as the per-term
     encoders write it over its generations concatenated in docID order,
-    its end- and begin-bloom columns rebuilt the same way (every
-    generation here carries both sides)."""
+    with end- and begin-bloom columns built from the documents' token
+    streams (``texts[doc_id]``) when the merged term has two or more
+    postings."""
+    import re
+
     import numpy as np
 
-    from wiser_spark.functions.bloom import bloom_boxes_decode
+    from wiser_spark.functions.bloom import token_bloom_mask
     from wiser_spark.operators.segments import (
-        BLOOM_COLUMNS,
         _encode_term_flat,
         decode_segment_row,
         doclen_sentinel_row,
     )
+
+    toks = [re.findall(r"[a-z0-9_]+", t.lower()) for t in texts]
+    masks: dict[str, np.ndarray] = {}
+
+    def mask(tok):
+        if tok not in masks:
+            masks[tok] = token_bloom_mask(tok, bp)
+        return masks[tok]
+
+    def side(ids, plists, step):
+        out = np.zeros((len(ids), bp.nbytes), dtype=np.uint8)
+        for i, (doc, ps) in enumerate(zip(ids, plists)):
+            for p in ps:
+                if 0 <= p + step < len(toks[doc]):
+                    out[i] |= mask(toks[doc][p + step])
+        return out
 
     by_key: dict[tuple[int, str], list[dict]] = {}
     for r in rows:
@@ -245,21 +269,17 @@ def _per_term_merge(rows: list[dict], nbytes: int) -> dict[int, list[dict]]:
             continue
         dec = sorted(
             (decode_segment_row(r, with_positions=True, with_offsets=True)
-             + (r,) for r in parts),
+             for r in parts),
             key=lambda d: d[0][0],
         )
+        ids = np.concatenate([d[0] for d in dec])
+        plists = [p for d in dec for p in d[2]]
         out[shard].append(_encode_term_flat(
-            shard, term, np.concatenate([d[0] for d in dec]),
-            np.concatenate([d[1] for d in dec]),
-            np.concatenate([p for d in dec for p in d[2]]),
+            shard, term, ids, np.concatenate([d[1] for d in dec]),
+            np.concatenate(plists),
             np.concatenate([o for d in dec for o in d[3]]),
-            tuple(
-                np.concatenate([
-                    bloom_boxes_decode(d[4][blob_col], len(d[0]), nbytes)
-                    for d in dec
-                ])
-                for blob_col, _ in BLOOM_COLUMNS
-            ),
+            (side(ids, plists, 1), side(ids, plists, -1))
+            if len(ids) > 1 else None,
         ))
     return out
 
@@ -269,84 +289,23 @@ def test_stream_v2_compaction_byte_identical_to_per_term_merge(
 ):
     """compact_segments over the v2 generations writes, shard by shard,
     exactly the rows of the per-term merge: sentinel first, then every
-    term with both bloom columns, in term order."""
+    term in term order, its bloom columns rebuilt from the documents
+    (both sides on df >= 2 terms, none on df == 1 ones)."""
     import json
 
+    from wiser_spark.functions.bloom import BloomParams
     from wiser_spark.operators.segments import compact_segments
 
     with open(f"{streamed_v2}/stats.json") as f:
-        nbytes = json.load(f)["bloom"]["nbytes"]
+        bp = BloomParams(**json.load(f)["bloom"])
     segs = read_segments(spark, streamed_v2)
     got: dict[int, list[dict]] = {}
-    for r in compact_segments(segs, nbytes).collect():
+    for r in compact_segments(segs, bp).collect():
         got.setdefault(r["shard_id"], []).append(r.asDict())
-    want = _per_term_merge([r.asDict() for r in segs.collect()], nbytes)
+    want = _per_term_merge([r.asDict() for r in segs.collect()], bp,
+                           [r["content"] for r in make_corpus(90)])
     assert got == want
     assert all(rows[0]["term"] == DOCLEN_TERM for rows in got.values())
-
-
-def test_compaction_drops_only_unaligned_blooms(spark, tmp_path):
-    """A generation built without blooms leaves the bloom sides of the
-    terms it shares with a bloomed generation unbuildable: compaction
-    nulls exactly those terms' sides (and those of its own terms), and
-    keeps the others' boxes byte for byte."""
-    from pyspark.sql import functions as F
-
-    from wiser_spark.operators.mapside import build_segments_mapside
-    from wiser_spark.operators.postings import assign_doc_ids
-    from wiser_spark.operators.segments import (
-        BLOOM_COLUMNS,
-        DOCLEN_TERM,
-        compact_segments,
-    )
-    from wiser_spark.sources.corpus import corpus_df
-
-    docs = assign_doc_ids(corpus_df(spark, 90)).select("doc_id", "content")
-    base = str(tmp_path / "segments")
-    for g, (cond, blooms) in enumerate(
-        [(F.col("doc_id") < 45, True), (F.col("doc_id") >= 45, False)]
-    ):
-        build_segments_mapside(
-            docs.filter(cond), n_shards=2, with_blooms=blooms
-        ).write.parquet(f"{base}/generation={g}")
-    segs = spark.read.parquet(base)
-    rows = [
-        r.asDict() for r in segs.filter(F.col("term") != DOCLEN_TERM).collect()
-    ]
-    merged = [
-        r.asDict()
-        for r in compact_segments(segs).collect() if r["term"] != DOCLEN_TERM
-    ]
-    terms_of = {
-        g: {(r["shard_id"], r["term"]) for r in rows if r["generation"] == g}
-        for g in (0, 1)
-    }
-    gen0 = {
-        (r["shard_id"], r["term"]): r for r in rows if r["generation"] == 0
-    }
-    assert all(
-        r[c] is None
-        for r in rows if r["generation"] == 1
-        for side in BLOOM_COLUMNS for c in side
-    )
-    assert {(r["shard_id"], r["term"]) for r in merged} == (
-        terms_of[0] | terms_of[1]
-    )
-    for cols in BLOOM_COLUMNS:
-        got = {
-            (r["shard_id"], r["term"]): tuple(r[c] for c in cols)
-            for r in merged if r[cols[0]] is not None
-        }
-        want = {
-            key: tuple(r[c] for c in cols) for key, r in gen0.items()
-            if key not in terms_of[1]
-        }
-        assert got == want, cols
-        assert 0 < len(want) < len(gen0)
-        # a null side carries null box offsets too
-        assert all(
-            r[cols[1]] is None for r in merged if r[cols[0]] is None
-        )
 
 
 @pytest.mark.parametrize(

@@ -29,7 +29,11 @@ MSB-first as in ``ProduceBitmap``][the PRESENT arrays, fixed
 document edge) stores nothing and reads back as an all-zero filter
 (probes negative, correctly). Per-box byte offsets ride in the segment
 row's skip column — the analogue of the reference's BloomSkipList
-(``flash_containers.h:616-646``).
+(``flash_containers.h:616-646``). Only term rows of two or more postings
+store blooms (``mapside.neighbor_blooms``, for every writer): a filter of
+one posting could prune only the candidate the kernel has already
+decoded, and the reference stores nothing that cannot pay either
+(``flash_containers.h:499-629``).
 
 The legacy 64-bit/k=2 single-word helpers (token_bloom_bits et al.)
 are read by no index any more: no writer emits that format. They remain

@@ -50,6 +50,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wiser_spark.config import PACK_SIZE, IndexConfig
+from wiser_spark.functions.bloom import (
+    bloom_boxes_encode_ranges,
+    bloom_params,
+    fold_occurrence_masks,
+    vocab_bloom_matrix,
+)
 from wiser_spark.operators.segments import (
     BLOOM_COLUMNS,
     DOCLEN_TERM,
@@ -71,6 +77,9 @@ from wiser_spark.operators.segments import (
 # its int32 offset limit.
 OUT_BATCH_ROWS = 1 << 15
 OUT_BATCH_BYTES = 8 << 20
+# only a term of at least this many postings in a shard gets phrase
+# blooms: one posting leaves no candidate the kernel has not decoded
+BLOOM_MIN_DF = 2
 
 
 def build_segments_mapside(
@@ -263,23 +272,11 @@ def encode_doc_batches(
     if codes.size == 0:  # docs exist but none tokenized to anything
         yield sentinel
         return
-    if with_blooms:
-        # next/previous-token code per occurrence (stream is
-        # doc-contiguous): feeds the per-posting end/begin blooms
-        # (phrase pruning, ref B15/Q8)
-        nxt = np.full(codes.size, -1, dtype=np.int64)
-        prv = np.full(codes.size, -1, dtype=np.int64)
-        same_doc = docs_rep[1:] == docs_rep[:-1]
-        nxt[:-1][same_doc] = codes[1:][same_doc]
-        prv[1:][same_doc] = codes[:-1][same_doc]
-        del same_doc
     # input stream is doc-ascending with in-doc position order, so a
     # single STABLE sort on the term code yields (term, doc, pos)
     order = np.argsort(codes, kind="stable")
     c = codes[order]
-    del codes
     d = docs_rep[order]
-    del docs_rep
     # posting boundaries: change of (term, doc)
     new_posting = np.empty(len(c), dtype=bool)
     new_posting[0] = True
@@ -289,7 +286,7 @@ def encode_doc_batches(
     del posting_of
     posting_doc = d[new_posting]
     posting_code = c[new_posting]
-    del c, d
+    del c, d, new_posting
     # term boundaries over postings
     term_bounds = np.append(
         np.flatnonzero(
@@ -298,42 +295,14 @@ def encode_doc_batches(
         len(posting_code),
     )
     del posting_code
-    # per-posting end blooms: OR the next-token masks per posting.
-    # SIZED filters (reference libbloom defaults entries=5 ratio=0.001
-    # -> 71 bits / 9 bytes / k=10 per posting): one md5 per UNIQUE term
-    # builds the (V, nbytes) mask table; per-occurrence rows are then a
-    # fancy-index + one reduceat — no per-occurrence hashing
+    # phrase blooms (ref B15/Q8) of the multi-posting terms
     blooms = None
     if with_blooms:
-        from wiser_spark.functions.bloom import (
-            bloom_params,
-            fold_occurrence_masks,
-            vocab_bloom_matrix,
+        blooms = neighbor_blooms(
+            vocab, codes, docs_rep, order, term_bounds, tfs_all,
+            bloom_cfg or bloom_params(),
         )
-
-        bp = bloom_cfg or bloom_params()
-        # row V is an all-zero mask: occurrences with no neighbor
-        # (nxt/prv == -1) gather it — one fancy index, no multiply pass
-        vm_ext = np.vstack(
-            [vocab_bloom_matrix(vocab, bp),
-             np.zeros((1, bp.nbytes), dtype=np.uint8)]
-        )
-        p_starts_idx = np.flatnonzero(new_posting)
-
-        def fold(neighbor):
-            sorted_nb = neighbor[order]
-            return fold_occurrence_masks(
-                vm_ext[np.where(sorted_nb >= 0, sorted_nb, len(vocab))],
-                p_starts_idx,
-            )
-
-        # begin blooms: same fold over the PRECEDING-token masks
-        # (reference builds both sides, bloom_filter.h:595-646)
-        blooms_end = fold(nxt)
-        del nxt
-        blooms = (blooms_end, fold(prv))
-        del blooms_end, prv, vm_ext, p_starts_idx
-    del new_posting
+    del codes, docs_rep
     p = pos_all[order]
     del pos_all
     off_flat = np.empty(2 * p.size, dtype=np.int64)
@@ -352,6 +321,47 @@ def encode_doc_batches(
     yield sentinel
 
 
+def neighbor_blooms(
+    vocab: pa.Array,
+    codes: np.ndarray,
+    docs: np.ndarray,
+    order: np.ndarray,
+    term_bounds: np.ndarray,
+    tfs_all: np.ndarray,
+    bp,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The (end, begin) phrase blooms for ``encode_postings``: one
+    (n, bp.nbytes) filter per posting of each term of BLOOM_MIN_DF or
+    more postings, ORing the masks of the tokens FOLLOWING (end) or
+    PRECEDING (begin) each occurrence (``bloom_filter.h:595-646``).
+    ``codes``/``docs``: each occurrence's term code (into ``vocab``) and
+    doc id in token-stream order (doc-contiguous, positions ascending);
+    ``order``: the stream index of each posting occurrence, in (term,
+    doc, pos) order."""
+    df = np.diff(term_bounds)
+    folded = np.repeat(np.repeat(df >= BLOOM_MIN_DF, df), tfs_all)
+    first = np.zeros(folded.size, dtype=bool)
+    first[np.cumsum(tfs_all) - tfs_all] = True
+    at = order[folded]
+    starts = np.flatnonzero(first[folded])
+    del folded, first
+    # the neighbor's code, or -1 at a document edge
+    neighbors = []
+    for step in (1, -1):
+        nb = np.clip(at + step, 0, codes.size - 1)
+        neighbors.append(np.where(
+            (nb == at + step) & (docs[nb] == docs[at]), codes[nb], -1
+        ))
+    # mask row 0 is all-zero, for the edge occurrences
+    used = np.unique(np.concatenate(neighbors + [np.array([-1])]))
+    used_masks = np.zeros((used.size, bp.nbytes), dtype=np.uint8)
+    used_masks[1:] = vocab_bloom_matrix(vocab.take(pa.array(used[1:])), bp)
+    return tuple(
+        fold_occurrence_masks(used_masks[np.searchsorted(used, nb)], starts)
+        for nb in neighbors
+    )
+
+
 def encode_postings(
     shard_id: int,
     vocab: pa.Array,
@@ -361,7 +371,6 @@ def encode_postings(
     p: np.ndarray | None,
     off_flat: np.ndarray | None,
     blooms: tuple[np.ndarray, np.ndarray] | None,
-    bloom_kept: np.ndarray | None = None,
 ) -> Iterator[pa.RecordBatch]:
     """THE shard encoder: one shard's postings -> its term rows, one per
     term, in Arrow batches of at most OUT_BATCH_ROWS rows and about
@@ -371,9 +380,9 @@ def encode_postings(
     term_bounds[t+1]), doc-ascending. ``p`` holds the flat positions
     (tf per posting), ``off_flat`` the flat [s,e,...] pairs (2*tf per
     posting); None writes b"" blobs and empty skip lists. ``blooms`` is
-    the per-posting (end, begin) filter matrices boxed into the bloom
-    columns, or None for null bloom columns; ``bloom_kept`` ((terms, 2)
-    bool, default all True) nulls the sides marked False.
+    the (end, begin) filter matrices of ``neighbor_blooms`` boxed into the
+    bloom columns of the terms of BLOOM_MIN_DF or more postings; other
+    terms' bloom columns, and all when ``blooms`` is None, are null.
 
     Vocabulary-batched: almost every term of a code shard has df <
     PACK_SIZE (varint tail, one bloom box), so each column is built for
@@ -392,10 +401,10 @@ def encode_postings(
         return
     df = term_hi - term_lo
     has_pos, has_off = p is not None, off_flat is not None
-    if blooms is None:
-        bloom_kept = np.zeros((n_terms, len(BLOOM_COLUMNS)), dtype=bool)
-    elif bloom_kept is None:
-        bloom_kept = np.ones((n_terms, len(BLOOM_COLUMNS)), dtype=bool)
+    # terms with blooms, and their rows [bloom_lo, bloom_hi) of blooms
+    bloomed = (df >= BLOOM_MIN_DF) & (blooms is not None)
+    bloom_hi = np.cumsum(np.where(bloomed, df, 0))
+    bloom_lo = bloom_hi - np.where(bloomed, df, 0)
     pos_starts = np.cumsum(tfs_all) - tfs_all
     occ_bounds = np.concatenate(([0], np.cumsum(tfs_all)))[term_bounds]
 
@@ -437,8 +446,7 @@ def encode_postings(
             p[o_lo:o_hi] if has_pos else None,
             off_flat[2 * o_lo:2 * o_hi] if has_off else None,
             None if blooms is None else tuple(
-                side[lo:hi] if keep else None
-                for side, keep in zip(blooms, bloom_kept[t])
+                side[bloom_lo[t]:bloom_hi[t]] for side in blooms
             ),
         )
     del posting_doc, tfs_all, p, off_flat, pos_starts
@@ -447,13 +455,13 @@ def encode_postings(
         empty = (np.zeros(0, np.uint8), np.zeros(n_terms + 1, np.int64))
         bloom_boxes = [empty] * len(BLOOM_COLUMNS)
     else:
-        from wiser_spark.functions.bloom import bloom_boxes_encode_ranges
-
-        # a tail term's side is ONE bloom box at byte offset 0
+        # a bloomed tail term's side is ONE bloom box at byte offset 0
+        boxed = tail[bloomed[tail]]
         bloom_boxes = [
             _spread(
-                bloom_boxes_encode_ranges(side, term_lo[tail], term_hi[tail]),
-                tail, n_terms,
+                bloom_boxes_encode_ranges(side, bloom_lo[boxed],
+                                          bloom_hi[boxed]),
+                boxed, n_terms,
             )
             for side in blooms
         ]
@@ -488,10 +496,10 @@ def encode_postings(
             "skip_off_offs": zero if has_off else empty_list,
             "skip_max_tfs": _lists(np.arange(m + 1), max_tf[t0:t1]),
         }
+        valid = bloomed[t0:t1]
         for s, (blob_col, offs_col) in enumerate(BLOOM_COLUMNS):
-            valid = bloom_kept[t0:t1, s]
             cols[blob_col] = _binary(bloom_boxes[s], t0, t1, valid)
-            # a kept side's boxes start at offset 0: [0] per valid row
+            # a bloomed side's boxes start at offset 0: [0] per valid row
             cols[offs_col] = _lists(
                 np.concatenate(([0], np.cumsum(valid))),
                 np.zeros(int(valid.sum()), np.int64), valid,
@@ -649,7 +657,5 @@ def write_index_mapside(
         "format": FORMAT,
     }
     if with_blooms:
-        from wiser_spark.functions.bloom import bloom_params
-
         meta["bloom"] = bloom_params()._asdict()
     write_stats(index_dir, meta)

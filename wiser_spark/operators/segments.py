@@ -32,10 +32,10 @@ B4-B14):
                 the postings of the same record, ``flash_engine_dumper.h:
                 331-525``). skip_bloom_end_offs/skip_bloom_begin_offs
                 hold each box's byte offset (the BloomSkipList
-                analogue). Null when the row has no blooms: the
+                analogue). Null on rows with df_shard < 2 (nothing
+                to prune), on the sentinel, and on every row of the
                 shuffle writers (write_index, IndexBuildPipeline) and
-                ``with_blooms=False`` build none, and a merge drops a
-                side it cannot rebuild
+                ``with_blooms=False``; older rows with blooms still read
 
 A table holds two row kinds: the term rows above, and per non-empty
 shard one doc-length SENTINEL row, term "" (the reference's doc-length
@@ -78,7 +78,6 @@ from pyspark.sql import functions as F
 from wiser_spark.config import PACK_SIZE, BM25Params, IndexConfig
 from wiser_spark.functions.bloom import (
     BLOOM_BOX_MAGIC,
-    BOX_CAP,
     BloomParams,
     bloom_boxes_decode,
     bloom_boxes_encode,
@@ -222,7 +221,7 @@ def _encode_term_flat(
     tfs: np.ndarray,
     flat_pos: np.ndarray | None,
     flat_off: np.ndarray | None = None,
-    blooms: tuple[np.ndarray | None, np.ndarray | None] | None = None,
+    blooms: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> dict:
     """One term within a shard -> one segment row. Fully vectorized.
 
@@ -232,8 +231,7 @@ def _encode_term_flat(
     pairs (2*tf values per doc). Each is delta+varint encoded in ONE
     pass (per-doc boundaries fixed up vectorially). ``blooms`` holds
     the (end, begin) per-posting filter matrices ((n, nbytes) uint8 in
-    docID order) boxed into the bloom columns; a side that is None (or
-    no ``blooms``) stays null."""
+    docID order) boxed into the bloom columns; None leaves them null."""
     docids_blob, docid_offs = encode_column(delta_encode(doc_ids))
     tfs_blob, tf_offs = encode_column(tfs.astype(np.uint64))
 
@@ -282,8 +280,7 @@ def _encode_term_flat(
         **_no_blooms(),
     }
     for cols, mat in zip(BLOOM_COLUMNS, blooms or ()):
-        if mat is not None:
-            row.update(zip(cols, bloom_boxes_encode(mat)))
+        row.update(zip(cols, bloom_boxes_encode(mat)))
     return row
 
 
@@ -1194,7 +1191,7 @@ def _bm25_scores(decoded, terms_l, cand, codes, idfs, cache, k1):
 
 # ------------------------------------------------------------- compaction
 def compact_segments(
-    segments: DataFrame, bloom_nbytes: int | None = None
+    segments: DataFrame, bloom_cfg: BloomParams | None = None
 ) -> DataFrame:
     """Merge multi-generation segment rows into ONE row per (shard,
     term) — the reference's qq->vacuum merge (B18,
@@ -1206,21 +1203,23 @@ def compact_segments(
 
     The shard's sentinel rows merge by docID concatenation and come
     first. Positions and offsets each survive only if every term row
-    of the shard carries them. A merged term keeps a bloom SIDE only if
-    every one of its generation rows carries that side as boxes of its
-    own postings (``_has_side``); otherwise the side is null, which is
-    always result-neutral: blooms are pruning-only and queries skip the
-    pre-check on a null side."""
-    nbytes = bloom_nbytes or bloom_params().nbytes
-    segs = segments.select(
-        "shard_id", "term", "df_shard", "docids_blob", "tfs_blob",
-        "pos_blob", "off_blob", *(c for side in BLOOM_COLUMNS for c in side),
-    )
+    of the shard carries them. Phrase blooms are REBUILT (two df == 1
+    rows merge into a df == 2 row that needs blooms neither carried):
+    the decoded (doc, pos) occurrences sort back into each document's
+    token stream, folded by ``mapside.neighbor_blooms`` with
+    ``bloom_cfg``, the index's recorded params and hash family, so a
+    compacted shard holds exactly the rows one build of its documents
+    writes. No ``bloom_cfg`` or no positions: null bloom columns."""
+    segs = segments.select("shard_id", "term", "df_shard", "docids_blob",
+                           "tfs_blob", "pos_blob", "off_blob")
 
     def merge_shard(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        from wiser_spark.operators.mapside import encode_postings
+        from wiser_spark.operators.mapside import (
+            encode_postings,
+            neighbor_blooms,
+        )
 
         rows = [r for rb in batches for r in rb.to_pylist()]
         shard_id = rows[0]["shard_id"]
@@ -1248,9 +1247,7 @@ def compact_segments(
         with_off = all(len(r["off_blob"]) for rs in plain.values() for r in rs)
         vocab = sorted(plain)
         ids, tfs, pos, offs, bounds = [], [], [], [], [0]
-        blooms: tuple[list, list] = ([], [])
-        kept = np.ones((len(vocab), len(BLOOM_COLUMNS)), dtype=bool)
-        for t, base in enumerate(vocab):
+        for base in vocab:
             parts = plain[base]
             for r in parts:
                 r["ids"], r["tfs"], _ = decode_segment_row(r)
@@ -1263,39 +1260,30 @@ def compact_segments(
                 if with_off:
                     offs.append(_decode_runs(r["off_blob"], 2 * r["tfs"]))
             bounds.append(bounds[-1] + sum(len(r["ids"]) for r in parts))
-            for s, (blob_col, offs_col) in enumerate(BLOOM_COLUMNS):
-                if all(_has_side(r, blob_col, offs_col) for r in parts):
-                    blooms[s].append(np.concatenate([
-                        bloom_boxes_decode(r[blob_col], len(r["ids"]), nbytes)
-                        for r in parts
-                    ]))
-                else:  # null: pruning-only, result-neutral
-                    kept[t, s] = False
-                    blooms[s].append(
-                        np.zeros((bounds[-1] - bounds[-2], nbytes), np.uint8)
-                    )
+        del plain, parts
+        vocab, bounds = pa.array(vocab, pa.string()), np.array(bounds)
+        ids, tfs = np.concatenate(ids), np.concatenate(tfs)
+        pos = np.concatenate(pos) if with_pos else None
+        blooms = None
+        if bloom_cfg is not None and with_pos:
+            # each occurrence's term code and doc in posting order; the
+            # (doc, pos) sort is the shard's token stream
+            occ_doc = np.repeat(ids, tfs)
+            occ_code = np.repeat(np.arange(len(vocab)), np.diff(bounds))
+            stream = np.lexsort((pos, occ_doc))
+            blooms = neighbor_blooms(
+                vocab, np.repeat(occ_code, tfs)[stream], occ_doc[stream],
+                np.argsort(stream), bounds, tfs, bloom_cfg,
+            )
+            del occ_doc, occ_code, stream
         batches = encode_postings(
-            shard_id, pa.array(vocab, pa.string()), np.array(bounds),
-            np.concatenate(ids), np.concatenate(tfs),
-            np.concatenate(pos) if with_pos else None,
-            np.concatenate(offs) if with_off else None,
-            tuple(np.concatenate(b) for b in blooms) if kept.any() else None,
-            kept,
+            shard_id, vocab, bounds, ids, tfs, pos,
+            np.concatenate(offs) if with_off else None, blooms,
         )
-        del plain, parts, ids, tfs, pos, offs, blooms
+        del ids, tfs, pos, offs, blooms
         yield from batches
 
     return segs.groupBy("shard_id").applyInArrow(merge_shard, SEGMENT_SCHEMA)
-
-
-def _has_side(row: dict, blob_col: str, offs_col: str) -> bool:
-    """Whether a term row carries a bloom side as boxes of its own
-    postings: the box magic, and one box offset per 128 postings."""
-    blob, box_offs = row[blob_col], row[offs_col]
-    return (
-        bool(blob) and blob[0] == BLOOM_BOX_MAGIC and box_offs is not None
-        and len(box_offs) == -(-int(row["df_shard"]) // BOX_CAP)
-    )
 
 
 def require_layout(meta: dict, index_dir: str) -> None:
@@ -1312,19 +1300,20 @@ def require_layout(meta: dict, index_dir: str) -> None:
 
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
-    generation index at ``out_dir`` (segments merged per (shard, term),
-    sentinels and bloom columns included; dictionary / stats.json
+    generation index at ``out_dir`` (``compact_segments``: blooms
+    rebuilt; the dictionary derived from the compacted rows, stats.json
     carried over). Queries over the compacted index are identical;
     per-term read cost drops to one row, and bloom pruning re-activates
     (multi-generation rows skip it)."""
     meta = read_json(f"{index_dir}/stats.json")
     require_layout(meta, index_dir)
-    segs = read_segments(spark, index_dir)
-    nbytes = (meta.get("bloom") or {}).get("nbytes")
-    write_table(compact_segments(segs, nbytes), f"{out_dir}/segments",
-                "shard_id")
-    write_table(spark.read.parquet(f"{index_dir}/dictionary")
-                .sortWithinPartitions("term"), f"{out_dir}/dictionary")
+    bloom = meta.get("bloom")
+    segs = compact_segments(read_segments(spark, index_dir),
+                            BloomParams(**bloom) if bloom else None)
+    write_table(segs, f"{out_dir}/segments", "shard_id")
+    write_table(dictionary_from_segments(
+        spark.read.schema(SEGMENT_SCHEMA).parquet(f"{out_dir}/segments")
+    ), f"{out_dir}/dictionary")
     meta["compacted"] = True
     write_stats(out_dir, meta)
 

@@ -56,8 +56,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wiser_spark.config import IndexConfig
+from wiser_spark.functions.bloom import BloomParams
 from wiser_spark.operators.segments import (
     FORMAT,
+    SEGMENT_SCHEMA,
+    dictionary_from_segments,
     prefetch_pages_col,
     read_json,
     require_layout,
@@ -261,8 +264,8 @@ class IncrementalIndexer:
         """Each generation is built with the ZERO-SHUFFLE map-side
         encoder — sentinel doc-length rows ride inside the segment
         table, both bloom sides inside the term rows — and
-        ``compact_index`` merges the generations (sentinels and blooms
-        included) into the same single-generation layout a batch
+        ``compact_index`` merges the generations (sentinels merged,
+        blooms rebuilt) into the same single-generation layout a batch
         map-side build writes. ``fmt`` names that layout; "v2" is the
         only one.
 
@@ -271,8 +274,8 @@ class IncrementalIndexer:
         micro-batch and every query merges them per (shard, term)
         forever. When the segment table holds MORE than this many
         generations after a commit, they merge in place into one
-        (``compact_segments`` — sentinels, bloom columns, and the
-        dictionary deltas included). None (default) disables it."""
+        (``compact_segments``, dictionary delta included). None
+        (default) disables it."""
         if fmt != "v2":
             raise ValueError(f"unknown streaming index format: {fmt}")
         # resuming an index of an older layout would corrupt it silently
@@ -293,8 +296,6 @@ class IncrementalIndexer:
         # generations' masks would not match the probe side; a meta
         # that predates the family field reconstructs as the old "dh"
         # family via the BloomParams default
-        from wiser_spark.functions.bloom import BloomParams
-
         b = (_meta or {}).get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
 
@@ -397,10 +398,6 @@ class IncrementalIndexer:
         n_docs, lensum, refresh_meta,
     ) -> None:
         from wiser_spark.operators.mapside import build_segments_mapside
-        from wiser_spark.operators.segments import (
-            SEGMENT_SCHEMA,
-            dictionary_from_segments,
-        )
 
         segs = build_segments_mapside(
             docs, self.config.n_shards, self.content_col,
@@ -413,12 +410,7 @@ class IncrementalIndexer:
         prep["pinned"].unpersist()
         # dictionary delta from the STAGED rows (plain term rows only) —
         # no second tokenize pass over the batch
-        staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
-            f"{staging}/segments"
-        )
-        write_table(dictionary_from_segments(staged).select(
-            "term", "df", "bytes_docid_tf"
-        ), f"{staging}/dictionary_deltas")
+        self._write_delta(spark, staging)
 
         # atomic per-table publish: generation=<id> partition dirs. A
         # leftover from a crashed attempt of this SAME batch is replaced
@@ -493,19 +485,15 @@ class IncrementalIndexer:
     def _recover_compaction(self) -> None:
         recover_compaction(self.index_dir, sweep=True)
 
-    def _fold_deltas(self, spark: SparkSession, gens=None) -> DataFrame:
-        """THE dictionary-deltas fold (one definition; _refresh_meta
-        folds every generation, compaction folds the merged subset),
-        each partition sorted by term like dictionary_from_segments."""
-        d = spark.read.schema(
-            "term string, df int, bytes_docid_tf long"
-        ).parquet(f"{self.index_dir}/dictionary_deltas")
-        if gens is not None:
-            d = d.filter(F.col("generation").isin([int(g) for g in gens]))
-        return d.groupBy("term").agg(
-            F.sum("df").cast("int").alias("df"),
-            F.sum("bytes_docid_tf").cast("long").alias("bytes_docid_tf"),
-        ).sortWithinPartitions("term")
+    def _write_delta(self, spark: SparkSession, staging: str) -> None:
+        """Stage the dictionary delta of the segments staged at
+        ``staging``: (term, df, bytes_docid_tf) of their term rows."""
+        staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
+            f"{staging}/segments"
+        )
+        write_table(dictionary_from_segments(staged).select(
+            "term", "df", "bytes_docid_tf"
+        ), f"{staging}/dictionary_deltas")
 
     def _maybe_compact(self, spark: SparkSession) -> None:
         """SIZE-TIERED trigger: when more than ``compact_every``
@@ -544,11 +532,13 @@ class IncrementalIndexer:
         the streaming analogue of the reference's qq->vacuum
         conversion, B18). Routine maintenance should prefer the tiered
         ``_maybe_compact`` policy; this is the explicit 'force-merge'
-        an operator runs before freezing an index."""
+        an operator runs before freezing an index; it refreshes the
+        queryable dictionary like a flush."""
         gens = self._generations()
         if len(gens) > 1:
             self._recover_compaction()
             self.compact_generations(spark, gens)
+            self._refresh_meta(spark)
 
     def compact_generations(self, spark: SparkSession, gens) -> None:
         """Merge the given generation dirs into ONE, in place,
@@ -557,7 +547,7 @@ class IncrementalIndexer:
         id space), so the install is a rename into a dir that never
         existed: no live data is ever removed to make room.
 
-          1. the merged segments + folded dictionary deltas are STAGED
+          1. the merged segments and their dictionary delta are STAGED
              outside the live table dirs;
           2. a JOURNAL (compaction.json, atomic rename; staging paths
              recorded RELATIVE to the index dir) records the
@@ -573,7 +563,7 @@ class IncrementalIndexer:
         sees the consistent pre-flip set or the consistent post-flip
         set, never a mix. Merging a SUBSET is query-identical:
         remaining generations still merge per (shard, term) at read
-        time, and the dictionary fold is sum-associative."""
+        time, and the df fold is sum-associative."""
         gens = sorted(int(g) for g in gens)
         if len(gens) < 2:
             return
@@ -590,16 +580,17 @@ class IncrementalIndexer:
         staging = f"{self.index_dir}/{staging_rel}"
         shutil.rmtree(staging, ignore_errors=True)
         meta = read_json(f"{self.index_dir}/stats.json", missing_ok=True)
-        nbytes = ((meta or {}).get("bloom") or {}).get("nbytes")
+        bloom = (meta or {}).get("bloom")
         segs = spark.read.parquet(f"{self.index_dir}/segments").filter(
             F.col("generation").isin(gens)
         )
-        write_table(compact_segments(segs, nbytes), f"{staging}/segments",
-                    "shard_id")
-        write_table(self._fold_deltas(spark, gens),
-                    f"{staging}/dictionary_deltas")
-        # (the QUERYABLE dictionary is refolded by _refresh_meta from
-        # all remaining deltas after the swap — same sums either way)
+        write_table(
+            compact_segments(segs, BloomParams(**bloom) if bloom else None),
+            f"{staging}/segments", "shard_id",
+        )
+        # the delta of the MERGED rows (shorter than the merged-away
+        # ones); _refresh_meta refolds the queryable dictionary
+        self._write_delta(spark, staging)
         journal = {
             "remove": gens,
             "target": target,
@@ -627,11 +618,16 @@ class IncrementalIndexer:
         n_docs = sum(v[1] for v in commits.values())
         # (empty batches committed by older writers carry no lensum)
         lensum = sum(v[2] for v in commits.values() if v[1])
-        # fold delta dictionaries into the queryable table (ONE fold
-        # definition, shared with compaction's subset fold)
-        write_table(self._fold_deltas(spark).withColumn(
-            "prefetch_pages", prefetch_pages_col()
-        ), f"{self.index_dir}/dictionary")
+        # fold delta dictionaries into the queryable table, each
+        # partition sorted by term like dictionary_from_segments
+        deltas = spark.read.schema(
+            "term string, df int, bytes_docid_tf long"
+        ).parquet(f"{self.index_dir}/dictionary_deltas")
+        write_table(deltas.groupBy("term").agg(
+            F.sum("df").cast("int").alias("df"),
+            F.sum("bytes_docid_tf").cast("long").alias("bytes_docid_tf"),
+        ).withColumn("prefetch_pages", prefetch_pages_col())
+            .sortWithinPartitions("term"), f"{self.index_dir}/dictionary")
         meta = {
             "n_docs": n_docs,
             "avgdl": (lensum / n_docs) if n_docs else 1.0,
