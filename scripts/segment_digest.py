@@ -20,6 +20,15 @@ boxes in ``tfs_blob``/``skip_tf_offs``). Equal logical lines mean the
 same postings and the same bloom bytes, whichever layout wrote them.
 The dictionary line stays the plain row digest.
 
+An index with no ``dictionary/`` table (no writer stores one now; the
+reader derives it) gets its ``dictionary`` line from the segments of
+the live generations, by the definition of
+``segments.dictionary_from_segments``: per term other than the
+doc-length sentinel, df = sum(df_shard), bytes_docid_tf = sum of
+len(docids_blob) + len(tfs_blob), prefetch_pages = ceil(bytes_docid_tf
+/ PREFETCH_PAGE_BYTES). It equals the digest of that dictionary written
+as a table, so it compares with an older writer's stored one.
+
 ``--no-blooms`` digests every table with the four bloom columns dropped,
 and ``--blooms-vs`` compares the bloom columns of ``<index_dir>``'s
 segments with those of the same (shard, generation, term) rows of
@@ -32,6 +41,7 @@ against the index it replaces.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import sys
 
@@ -46,6 +56,10 @@ SIDES = (
     (("bloom_begin_blob", "skip_bloom_begin_offs"), "\x02"),
 )
 BLOOM_COLS = {c for cols, _ in SIDES for c in cols}
+# segments.PREFETCH_PAGE_BYTES and segments.DOCLEN_TERM (this script
+# imports no Spark code)
+PREFETCH_PAGE_BYTES = 4096
+DOCLEN_TERM = ""
 
 
 def _digest(lines: list[bytes]) -> tuple[int, str]:
@@ -67,6 +81,37 @@ def table_digest(path: str, drop=()) -> tuple[int, str]:
     return _digest([
         repr(tuple(row[c] for c in cols)).encode()
         for row in table.to_pylist()
+    ])
+
+
+def derived_dictionary_digest(index_dir: str) -> tuple[int, str]:
+    """(row count, SHA-1) of the dictionary derived from the segments
+    of the index's live generations (all of them without a
+    ``generations.json``), hashed as ``table_digest`` hashes a written
+    dictionary."""
+    manifest = os.path.join(index_dir, "generations.json")
+    live = None
+    if os.path.exists(manifest):
+        with open(manifest) as f:
+            # as strings: a lone generation id past 32 bits reads as a
+            # string partition value
+            live = [str(int(g)) for g in json.load(f)["generations"]]
+    cols = ["term", "df_shard", "docids_blob", "tfs_blob"]
+    table = _dataset(os.path.join(index_dir, "segments")).to_table(
+        columns=cols,
+        filter=None if live is None
+        else ds.field("generation").cast("string").isin(live),
+    ).filter(pc.field("term") != DOCLEN_TERM)
+    nbytes = pc.add(pc.binary_length(table["docids_blob"]),
+                    pc.binary_length(table["tfs_blob"])).cast("int64")
+    agg = table.select(["term", "df_shard"]).append_column(
+        "nbytes", nbytes
+    ).group_by("term").aggregate([("df_shard", "sum"), ("nbytes", "sum")])
+    return _digest([
+        repr((b, df, -(-b // PREFETCH_PAGE_BYTES), term)).encode()
+        for term, df, b in zip(agg["term"].to_pylist(),
+                               agg["df_shard_sum"].to_pylist(),
+                               agg["nbytes_sum"].to_pylist())
     ])
 
 
@@ -135,6 +180,11 @@ def blooms_vs(path: str, other: str) -> str:
 def main(index_dir: str, mode: str | None = None) -> None:
     for name in TABLES:
         path = os.path.join(index_dir, name)
+        if (name == "dictionary" and not os.path.isdir(path)
+                and os.path.isdir(os.path.join(index_dir, "segments"))):
+            n, digest = derived_dictionary_digest(index_dir)
+            print(f"{name} rows={n} sha1={digest}")
+            continue
         if not os.path.isdir(path):
             continue
         if mode == "--logical" and name == "segments":

@@ -184,10 +184,10 @@ def test_bloom_index_matches_oracle(spark, both_indexes):
 
 
 def test_dictionary_excludes_bloom_and_sentinel_rows(spark, both_indexes):
-    """The dictionary holds exactly the term rows' terms: no sentinel,
-    and no entry per bloom side (blooms are columns of the term row,
-    not rows of their own)."""
-    d = spark.read.parquet(f"{both_indexes[0]}/dictionary")
+    """The reader's dictionary holds exactly the term rows' terms: no
+    sentinel, and no entry per bloom side (blooms are columns of the
+    term row, not rows of their own)."""
+    d = SegmentIndex(spark, both_indexes[0]).dictionary
     terms = sorted(r["term"] for r in d.collect())
     segs = spark.read.parquet(f"{both_indexes[0]}/segments")
     seg_terms = {r["term"] for r in segs.select("term").collect()}

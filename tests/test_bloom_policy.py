@@ -1,10 +1,11 @@
 """Phrase blooms only where they can prune: every bloom writer gives a
 term row both bloom sides when it holds two or more postings and none
 when it holds one; compaction rebuilds the blooms (a compacted shard is
-byte for byte a fresh encode of its documents) and derives the
-dictionary from the compacted rows."""
+byte for byte a fresh encode of its documents), and the reader's
+dictionary reflects the compacted rows."""
 
 import json
+import os
 import shutil
 
 import pytest
@@ -15,9 +16,9 @@ from wiser_spark.operators.mapside import write_index_mapside
 from wiser_spark.operators.segments import (
     BLOOM_COLUMNS,
     DOCLEN_TERM,
+    SegmentIndex,
     compact_index,
     decode_doclen_sentinel,
-    dictionary_from_segments,
     read_segments,
 )
 from wiser_spark.sources.corpus import make_corpus
@@ -125,17 +126,22 @@ def test_compaction_equals_fresh_encode(spark, built, writer):
 
 @pytest.mark.parametrize("writer", ["compact_index", "compact_now"])
 def test_compacted_dictionary_matches_segments(spark, built, writer):
-    """After compaction every dictionary row (df, bytes_docid_tf,
-    prefetch_pages) is dictionary_from_segments of the compacted
-    segments: the byte counts are the merged rows', not the sums over
-    the merged-away generations."""
+    """After compaction no dictionary table is written, and every row
+    (df, bytes_docid_tf, prefetch_pages) of the reader's dictionary
+    sums the compacted segment rows: the byte counts are the merged
+    rows', not the sums over the merged-away generations."""
     d = built[0][writer]
-    got = spark.read.parquet(f"{d}/dictionary").select(
-        "term", "df", "bytes_docid_tf", "prefetch_pages"
-    ).collect()
-    want = dictionary_from_segments(read_segments(spark, d)).collect()
+    assert not os.path.exists(f"{d}/dictionary")
+    want: dict[str, list] = {}
+    for r in _term_rows(spark, d):
+        if r["term"] != DOCLEN_TERM:
+            acc = want.setdefault(r["term"], [0, 0])
+            acc[0] += r["df_shard"]
+            acc[1] += len(r["docids_blob"]) + len(r["tfs_blob"])
+    got = SegmentIndex(spark, d).dictionary.collect()
     assert len(got) > 1000
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert sorted(map(tuple, got)) == sorted(
+        (t, df, b, -(-b // 4096)) for t, (df, b) in want.items())
 
 
 def fresh_shard_rows(shard_id, doc_ids, content_of, bp) -> dict:

@@ -2,6 +2,7 @@
 shuffle-based v1 path. This is the scale-path differential gate."""
 
 import json
+import os
 
 import pytest
 
@@ -37,12 +38,13 @@ def test_meta_and_dictionary(spark, mapside_dir, oracle):
     assert meta["n_docs"] == N
     assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
     assert meta["format"] == FORMAT
-    d = {
-        r["term"]: r["df"]
-        for r in spark.read.parquet(f"{mapside_dir}/dictionary").collect()
-    }
-    assert d["return"] == oracle.df("return")
+    assert "n_terms" not in meta  # the reader counts the vocabulary
+    assert not os.path.exists(f"{mapside_dir}/dictionary")
+    idx = SegmentIndex(spark, mapside_dir).warmup()
+    d = {r["term"]: r["df"] for r in idx.dictionary.collect()}
+    assert d == {t: oracle.df(t) for t in oracle.index if oracle.df(t)}
     assert "" not in d  # sentinel rows excluded from the dictionary
+    assert idx.meta["n_terms"] == len(d)
 
 
 def test_degenerate_corpora(spark, tmp_path):
@@ -374,43 +376,6 @@ def test_absent_term_answers_run_no_job(spark, mapside_dir):
     bus.waitUntilEmpty()
     assert unary == [] and batch == []
     assert len(tracker.getJobIdsForGroup(None) or []) == before
-
-
-def test_write_index_mapside_surfaces_every_thread_failure(
-    spark, tmp_path, monkeypatch
-):
-    """The post-write bookkeeping jobs run on pool threads: when the
-    dictionary write and the sentinel-stats job both fail, the first
-    failure is raised and the second rides along as a note — neither
-    is dropped."""
-    from pyspark.sql import functions as F
-
-    from wiser_spark.operators import mapside, segments
-
-    class FailingSum:
-        def __getattr__(self, name):
-            return getattr(F, name)
-
-        @staticmethod
-        def sum(*_):
-            raise RuntimeError("injected stats failure")
-
-    monkeypatch.setattr(
-        segments, "dictionary_from_segments",
-        lambda segs: segs.selectExpr(
-            "CAST(raise_error('injected dictionary failure') AS STRING)"
-            " AS term"
-        ),
-    )
-    monkeypatch.setattr(mapside, "F", FailingSum())
-    docs = spark.createDataFrame([(0, "a b")], "doc_id long, content string")
-    with pytest.raises(Exception, match="injected dictionary failure") as exc:
-        write_index_mapside(
-            docs, str(tmp_path / "idx"), IndexConfig(bm25=PARAMS, n_shards=1)
-        )
-    assert "injected stats failure" in " ".join(
-        getattr(exc.value, "__notes__", [])
-    )
 
 
 def _sentinel_shards(rows):

@@ -37,9 +37,10 @@ def work_dir(spark, tmp_path_factory):
 
 
 def test_pipeline_dictionary_matches_write_index(spark, work_dir, tmp_path):
-    """The pipeline's dictionary is write_index's for the same postings
-    and n_shards, prefetch fields included, and stats.json records the
-    vocabulary size."""
+    """The reader's dictionary of a pipeline build is that of
+    write_index for the same postings and n_shards, prefetch fields
+    included; neither writer stores a dictionary or records n_terms,
+    and the reader counts the vocabulary."""
     from wiser_spark.operators.docstats import corpus_stats
     from wiser_spark.operators.postings import build_dictionary
     from wiser_spark.operators.segments import write_index
@@ -53,14 +54,18 @@ def test_pipeline_dictionary_matches_write_index(spark, work_dir, tmp_path):
         corpus_stats(read("docstats")), d,
         IndexConfig(bm25=PARAMS, n_shards=3),
     )
-    got = sorted(map(tuple, read("dictionary").collect()))
-    want = sorted(map(tuple, spark.read.parquet(f"{d}/dictionary").collect()))
-    assert got == want
-    assert read("dictionary").columns == [
+    pipe = SegmentIndex(spark, work_dir).warmup()
+    got = sorted(map(tuple, pipe.dictionary.collect()))
+    want = sorted(map(tuple, SegmentIndex(spark, d).dictionary.collect()))
+    assert got == want and got
+    assert pipe.dictionary.columns == [
         "term", "df", "bytes_docid_tf", "prefetch_pages"
     ]
-    with open(os.path.join(work_dir, "stats.json")) as f:
-        assert json.load(f)["n_terms"] == len(got)
+    assert pipe.meta["n_terms"] == len(got)
+    for index_dir in (work_dir, d):
+        assert not os.path.exists(os.path.join(index_dir, "dictionary"))
+        with open(os.path.join(index_dir, "stats.json")) as f:
+            assert "n_terms" not in json.load(f)
 
 
 def _results(spark, work_dir):
@@ -74,7 +79,7 @@ def _results(spark, work_dir):
 def test_manifest_written(work_dir):
     with open(os.path.join(work_dir, "manifest.json")) as f:
         m = json.load(f)
-    assert set(m) == {"docs", "postings", "docstats", "dictionary", "segments"}
+    assert set(m) == {"docs", "postings", "docstats", "segments"}
     for stage, e in m.items():
         assert e["status"] == "complete"
         assert e["rows"] > 0 and e["bytes"] > 0

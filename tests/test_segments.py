@@ -439,8 +439,8 @@ def test_prefetch_pages_in_dictionary_and_partial_path(
     d = str(tmp_path / "idx")
     write_index_mapside(docs, d, IndexConfig(bm25=BM25Params(1.2, 0.75),
                                              n_shards=2))
-    dic = {r["term"]: r for r in
-           spark.read.parquet(f"{d}/dictionary").collect()}
+    idx = SegmentIndex(spark, d)
+    dic = {r["term"]: r for r in idx.dictionary.collect()}
     seg_rows = spark.read.parquet(f"{d}/segments").filter(
         "term = 'hot'"
     ).collect()
@@ -448,7 +448,6 @@ def test_prefetch_pages_in_dictionary_and_partial_path(
                      for r in seg_rows)
     assert dic["hot"]["bytes_docid_tf"] == want_bytes
     assert dic["hot"]["prefetch_pages"] == -(-want_bytes // 4096)
-    idx = SegmentIndex(spark, d)
     full = [tuple(r) for r in idx.search(["rare", "hot"], k=10).collect()]
     monkeypatch.setattr(segmod, "PARTIAL_DECODE_MIN_PAGES", 1)
     part = [tuple(r) for r in idx.search(["rare", "hot"], k=10).collect()]
@@ -475,12 +474,16 @@ QUERIES = [
 
 
 def test_warmup_and_jobless_dictionary_cache(spark, index_dir):
-    """write_index records n_terms in stats.json; warmup() builds the
-    driver dictionary cache from it WITHOUT a count() job, and lookups
-    afterwards (present and absent terms) run jobless and identical."""
+    """write_index records no n_terms; warmup() counts the dictionary
+    the reader derives from the segments into meta["n_terms"] and
+    builds the driver dictionary cache, and lookups afterwards
+    (present and absent terms) run jobless and identical."""
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        assert "n_terms" not in json.load(f)
     idx = SegmentIndex(spark, index_dir)
-    assert "n_terms" in idx.meta and idx.meta["n_terms"] > 0
+    assert "n_terms" not in idx.meta
     assert idx.warmup() is idx and idx._dict_mem is not None
+    assert idx.meta["n_terms"] > 0
     assert len(idx._dict_mem) == idx.meta["n_terms"]
     # jobless from here: lookups hit the driver dict
     tracker = spark.sparkContext.statusTracker()
@@ -538,9 +541,11 @@ def test_segment_search_rank_identical_to_oracle(
 
 def test_term_prefix_pushdown_and_identity(spark, tmp_path):
     """term_prefix = the trie .tip's prefix seek: results equal a full
-    dictionary filter, absent prefixes are empty, and a COLD dictionary
-    read pushes StringStartsWith into the parquet scan (the dictionary
-    is written sorted by term, so row-group min/max stats prune)."""
+    dictionary filter, absent prefixes are empty, and on a COLD derived
+    dictionary the prefix filter, being on the aggregate's grouping
+    key, pushes below the aggregate into the segments scan as
+    StringStartsWith (the segment files are sorted by term, so
+    row-group min/max stats prune)."""
     from wiser_spark.config import BM25Params, IndexConfig
     from wiser_spark.operators.mapside import write_index_mapside
     from wiser_spark.operators.postings import assign_doc_ids
@@ -568,16 +573,25 @@ def test_term_prefix_pushdown_and_identity(spark, tmp_path):
     assert idx.term_prefix("zzz_nope").count() == 0
     with pytest.raises(ValueError):
         idx.term_prefix("")
-    # cold read: the filter reaches the scan as StringStartsWith
+    # cold read: the filter reaches the segments scan as
+    # StringStartsWith
     from pyspark.sql import functions as F
 
-    cold = spark.read.schema(
-        "term string, df int, bytes_docid_tf long, prefetch_pages int"
-    ).parquet(f"{d}/dictionary").filter(
+    from wiser_spark.operators.segments import (
+        dictionary_from_segments,
+        read_segments,
+    )
+
+    idx.close()  # drop the cached copy the same plan would reuse
+    cold = dictionary_from_segments(read_segments(spark, d)).filter(
         F.col("term").startswith("re")
     )
     plan = cold._jdf.queryExecution().executedPlan().toString()
-    assert "StartsWith" in plan and "PushedFilters" in plan, plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1, plan
+    pushed = scans[0].split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert "StringStartsWith(term,re)" in pushed, plan
+    assert sorted(tuple(r) for r in cold.select("term", "df").collect()) == got
 
 
 def test_overcap_lookup_memoized_jobless(spark, index_dir):
@@ -642,7 +656,6 @@ def test_compact_positionless_index_matches_fresh_build(spark, tmp_path):
         build(docs.filter(cond), half)
         shutil.copytree(f"{half}/segments",
                         multi / "segments" / f"generation={g}")
-    shutil.copytree(f"{fresh}/dictionary", multi / "dictionary")
     shutil.copy(f"{fresh}/stats.json", multi / "stats.json")
     out = str(tmp_path / "compacted")
     compact_index(spark, str(multi), out)

@@ -1,8 +1,8 @@
 """Index table storage: every writer goes through ``segments.write_table``
-(zstd pages, front-coded terms, dictionaries sorted per file); tables
-written snappy with v1 pages still read and compact to the rows of a
-fresh build; unreadable index metadata raises instead of reading as
-absent."""
+(zstd pages, front-coded terms) and stores only the segments, no
+``dictionary/`` or ``dictionary_deltas/`` table; tables written snappy
+with v1 pages still read and compact to the rows of a fresh build;
+unreadable index metadata raises instead of reading as absent."""
 
 import importlib.util
 import os
@@ -32,7 +32,7 @@ from wiser_spark.streaming.incremental import IncrementalIndexer
 PARAMS = BM25Params(1.2, 0.75)
 CFG = IndexConfig(bm25=PARAMS, n_shards=3)
 SCHEMA = "repo string, path string, commit string, lang string, content string"
-TABLES = ("segments", "dictionary", "dictionary_deltas")
+# the tables older writers stored beside the segments
 DICTIONARIES = ("dictionary", "dictionary_deltas")
 
 
@@ -49,11 +49,11 @@ def _digest_module():
 
 def _logical_digest(index_dir: str) -> tuple:
     """scripts/segment_digest.py --logical: segments by (shard,
-    generation, term) entry, dictionary by row."""
+    generation, term) entry, and the dictionary derived from them."""
     mod = _digest_module()
     return (
         mod.logical_digest(os.path.join(index_dir, "segments")),
-        mod.table_digest(os.path.join(index_dir, "dictionary")),
+        mod.derived_dictionary_digest(index_dir),
     )
 
 
@@ -75,23 +75,19 @@ def _chunks(path: str):
 
 
 def _assert_written_by_write_table(index_dir: str) -> None:
-    """Every column chunk of every index table is zstd, every ``term``
-    chunk front-coded, and every dictionary file sorted by term — read
-    from the parquet footers (and the dictionary's term column)."""
-    seen = set()
-    for table in TABLES:
-        for path in _parquet_files(index_dir, table):
-            seen.add(table)
-            chunks = list(_chunks(path))
-            assert {c.compression for c in chunks} <= {"ZSTD"}, path
-            for c in chunks:
-                if c.path_in_schema == "term":
-                    assert "DELTA_BYTE_ARRAY" in c.encodings, (path, c)
-            if table in DICTIONARIES:
-                terms = pq.read_table(path, columns=["term"])["term"]
-                terms = terms.to_pylist()
-                assert terms == sorted(terms), path
-    assert {"segments", "dictionary"} <= seen, seen
+    """Every column chunk of the segments is zstd and every ``term``
+    chunk front-coded — read from the parquet footers — and no
+    dictionary table was written."""
+    paths = _parquet_files(index_dir, "segments")
+    assert paths
+    for path in paths:
+        chunks = list(_chunks(path))
+        assert {c.compression for c in chunks} <= {"ZSTD"}, path
+        for c in chunks:
+            if c.path_in_schema == "term":
+                assert "DELTA_BYTE_ARRAY" in c.encodings, (path, c)
+    for table in DICTIONARIES:
+        assert not os.path.exists(os.path.join(index_dir, table)), table
 
 
 @pytest.fixture(scope="module")
@@ -121,8 +117,9 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
 ):
     """The writers that publish index tables — write_index,
     write_index_mapside, IndexBuildPipeline, a streaming flush, a
-    streaming compaction and compact_index — all write through
-    write_table."""
+    streaming compaction and compact_index — all write the segments
+    through write_table, and none creates ``dictionary/`` or
+    ``dictionary_deltas/``."""
     built = {}
     built["write_index"] = str(tmp_path / "write_index")
     _write_index(docs, built["write_index"])

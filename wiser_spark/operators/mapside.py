@@ -64,7 +64,6 @@ from wiser_spark.operators.segments import (
     SEGMENT_SCHEMA,
     _delta_varint_stream,
     _encode_term_flat,
-    await_all,
     decode_doclen_sentinel,
     sentinel_batch,
     write_stats,
@@ -582,9 +581,10 @@ def write_index_mapside(
     reuse_partitions: bool = False,
     with_blooms: bool = True,
 ) -> None:
-    """Full index build with ONE pass over the documents:
-    segments (map-side) -> dictionary (vocab-sized agg over segment
-    rows) -> global stats (decoded from the sentinel rows)."""
+    """Full index build with ONE pass over the documents: segments
+    (map-side), then the global stats decoded from the sentinel rows in
+    one job. No dictionary table: the reader derives it from the
+    segments."""
     config = config or IndexConfig()
     spark = docs.sparkSession
     segs = build_segments_mapside(
@@ -594,30 +594,13 @@ def write_index_mapside(
     write_table(segs, f"{index_dir}/segments", "shard_id")
     # explicit schema: a DEGENERATE (empty) corpus writes no part files,
     # which would fail schema inference — the index stays readable
-    written = spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
-    # dictionary = (term, df, bytes_docid_tf, prefetch_pages): the
-    # bytes/pages pair is the reference's .tip prefetch-zone field
-    # (flash_engine_dumper.h:44-49) — queries pick full vs skip-based
-    # partial decode with it (segments.partial_decode_terms)
-    from wiser_spark.operators.segments import dictionary_from_segments
+    sent = spark.read.schema(SEGMENT_SCHEMA).parquet(
+        f"{index_dir}/segments"
+    ).filter(F.col("term") == DOCLEN_TERM)
 
-    # r06: the post-write bookkeeping jobs (dictionary agg+write,
-    # sentinel stats scan, max-shard probe) are independent scans of
-    # the just-written parquet — submit them from driver threads so
-    # they overlap (guide §2.6), and fold the vocabulary count into
-    # the dictionary write via an Observation instead of a follow-up
-    # count() job.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    dict_df = dictionary_from_segments(written).observe(
-        obs, F.count(F.lit(1)).alias("n_terms")
-    )
-    # global N and avgdl from the sentinels (no second scan of the docs)
-    sent = written.filter(F.col("term") == DOCLEN_TERM)
-
+    # global N and avgdl from the sentinels (no second scan of the
+    # docs), and the highest shard id (every non-empty shard has a
+    # sentinel), in one job
     def stats_of(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ns, sums = [], []
@@ -625,34 +608,19 @@ def write_index_mapside(
                 _, _, lens = decode_doclen_sentinel(row)
                 ns.append(len(lens))
                 sums.append(int(lens.sum()))
-            yield pd.DataFrame({"n": ns, "s": sums})
+            yield pd.DataFrame({"n": ns, "s": sums,
+                                "shard": pdf["shard_id"].to_numpy()})
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(write_table, dict_df, f"{index_dir}/dictionary"),
-            pool.submit(
-                lambda: sent.mapInPandas(stats_of, "n long, s long")
-                .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-                .collect()[0]
-            ),
-        ]
-        if reuse_partitions:
-            futures.append(pool.submit(
-                lambda: int(
-                    written.agg(F.max("shard_id")).collect()[0][0] or 0
-                )
-                + 1
-            ))
-        _, agg, *max_shard = await_all(futures)
-    n_shards_actual = max_shard[0] if max_shard else config.n_shards
+    agg = sent.mapInPandas(stats_of, "n long, s long, shard int").agg(
+        F.sum("n").alias("n"), F.sum("s").alias("s"),
+        F.max("shard").alias("shard"),
+    ).collect()[0]
     n_docs = int(agg["n"] or 0)
     avgdl = float(agg["s"]) / n_docs if n_docs else 1.0
     meta = {
         "n_docs": n_docs, "avgdl": avgdl,
-        # vocabulary size in the metadata lets readers size the driver
-        # dictionary cache with zero Spark jobs
-        "n_terms": int(obs.get["n_terms"]),
-        "n_shards": n_shards_actual,
+        "n_shards": (int(agg["shard"] or 0) + 1 if reuse_partitions
+                     else config.n_shards),
         "k1": config.bm25.k1, "b": config.bm25.b,
         "format": FORMAT,
     }

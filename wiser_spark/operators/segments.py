@@ -21,7 +21,11 @@ B4-B14):
                 offsets of the frame in each blob (the reference's
                 per-128-bag skip rows, ``flash_containers.h:236-308``) —
                 enables partial decode from any bag boundary
-  df_shard    : postings in this shard; global df lives in the dictionary
+  df_shard    : postings in this shard; global df is the sum over
+                shards, which the reader derives once at load
+                (``dictionary_from_segments``) — the term strings are
+                stored only here, as the reference stores them only in
+                ``my.tip``
   bloom_end_blob, bloom_begin_blob :
                 per-posting phrase blooms as BLOOM BOXES of sized
                 filters (libbloom sizing, functions/bloom.py), one filter
@@ -56,9 +60,12 @@ Queries fan out over shards and merge a k-row result per shard
 ``query_processing.h:810-852``).
 
 STORAGE: ``write_table`` writes every index table (zstd, v2 pages: the
-``term`` column is front-coded, dictionary files are sorted by term);
-snappy tables written earlier still read. ``scripts/index_footprint.py``
-prints an index's bytes, codecs and encodings per column.
+``term`` column is front-coded); snappy tables written earlier still
+read. No writer stores a dictionary table: ``SegmentIndex`` derives and
+caches it from the live segments, and never opens the ``dictionary/``
+or ``dictionary_deltas/`` an older writer left beside them.
+``scripts/index_footprint.py`` prints an index's bytes, codecs and
+encodings per column.
 """
 
 from __future__ import annotations
@@ -354,13 +361,13 @@ def prefetch_pages_col():
 
 
 def dictionary_from_segments(segs: DataFrame) -> DataFrame:
-    """(term, df, bytes_docid_tf, prefetch_pages) from written segment
-    rows in ONE scan of three pruned columns — the .tip analogue (B13).
+    """(term, df, bytes_docid_tf, prefetch_pages) from segment rows in
+    ONE scan of three pruned columns — the .tip analogue (B13).
     df = sum(df_shard) because each doc lives in exactly one shard.
-    Sentinel rows are excluded; each partition (so each written file)
-    is sorted by term. The single definition behind every writer: the
-    shuffle build, the map-side build, and the streaming sink's
-    per-generation deltas."""
+    Sentinel rows are excluded; each partition is sorted by term, so
+    the cached frame's per-batch min/max statistics can prune term
+    filters. The reader's term dictionary (``SegmentIndex.dictionary``)
+    is this over the live segments; no writer stores it."""
     return (
         segs.filter(F.col("term") != DOCLEN_TERM)
         .groupBy("term")
@@ -374,27 +381,6 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
     )
 
 
-def await_all(futures, error: Exception | None = None) -> list:
-    """Wait for EVERY future, then return their results in order, or
-    raise the first failure: ``error`` (the caller's own concurrent
-    step) ahead of the futures' in order. Later failures ride along as
-    notes on the raised one, so no failure of a build thread is
-    dropped."""
-    errors = [error] if error is not None else []
-    results = []
-    for f in futures:
-        try:
-            results.append(f.result())
-        except Exception as e:
-            errors.append(e)
-            results.append(None)
-    if errors:
-        for e in errors[1:]:
-            errors[0].add_note(f"concurrent failure: {type(e).__name__}: {e}")
-        raise errors[0]
-    return results
-
-
 def write_index(
     postings: DataFrame,
     docstats: DataFrame,
@@ -406,45 +392,23 @@ def write_index(
     """Persist a queryable index: segments (partitioned by shard, sorted
     by term within files so parquet min/max stats prune term lookups,
     each shard ending in its doc-length sentinel row built from
-    ``docstats``), dictionary, and a stats/metadata JSON. No phrase
-    blooms: only the map-side writers build them."""
+    ``docstats``) and a stats/metadata JSON. ``dictionary`` is not
+    written: the reader derives the same (term, df) from the segments.
+    No phrase blooms: only the map-side writers build them."""
     config = config or IndexConfig()
-    spark = postings.sparkSession
     # segments: already hash-partitioned by shard_id (the cogroup), rows
     # emitted in term order inside each shard — no extra shuffle before
     # the write
     write_table(build_segments(postings, docstats, config.n_shards),
                 f"{index_dir}/segments", "shard_id")
-    # dictionary (term, df, bytes_docid_tf, prefetch_pages) in ONE scan
-    # of the written segment rows (3 pruned columns): df = sum of
-    # df_shard (each doc lives in exactly one shard), bytes/pages = the
-    # prefetch-zone field analogue (B13, flash_engine_dumper.h:44-49).
-    # The caller-passed dictionary is not re-written — its (term, df)
-    # is identical by construction (pinned by the dictionary tests)
-    # and deriving here avoids a second aggregate over the postings.
-    # The vocabulary count rides on the write via an Observation
-    # instead of a follow-up count() job.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    write_table(
-        dictionary_from_segments(
-            spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
-        ).observe(obs, F.count(F.lit(1)).alias("n_terms")),
-        f"{index_dir}/dictionary",
-    )
-    meta = {
+    write_stats(index_dir, {
         "n_docs": stats.n_docs,
         "avgdl": stats.avgdl,
-        # vocabulary size rides in the metadata so readers can size the
-        # driver dictionary cache without a count() job (ADVICE r03)
-        "n_terms": int(obs.get["n_terms"]),
         "n_shards": config.n_shards,
         "k1": config.bm25.k1,
         "b": config.bm25.b,
         "format": FORMAT,
-    }
-    write_stats(index_dir, meta)
+    })
 
 
 def write_table(df: DataFrame, path: str, partition_by: str | None = None
@@ -1301,8 +1265,8 @@ def require_layout(meta: dict, index_dir: str) -> None:
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
     generation index at ``out_dir`` (``compact_segments``: blooms
-    rebuilt; the dictionary derived from the compacted rows, stats.json
-    carried over). Queries over the compacted index are identical;
+    rebuilt; stats.json carried over; no dictionary table, since the
+    reader derives it). Queries over the compacted index are identical;
     per-term read cost drops to one row, and bloom pruning re-activates
     (multi-generation rows skip it)."""
     meta = read_json(f"{index_dir}/stats.json")
@@ -1311,9 +1275,6 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     segs = compact_segments(read_segments(spark, index_dir),
                             BloomParams(**bloom) if bloom else None)
     write_table(segs, f"{out_dir}/segments", "shard_id")
-    write_table(dictionary_from_segments(
-        spark.read.schema(SEGMENT_SCHEMA).parquet(f"{out_dir}/segments")
-    ), f"{out_dir}/dictionary")
     meta["compacted"] = True
     write_stats(out_dir, meta)
 
@@ -1457,17 +1418,15 @@ class SegmentIndex:
             if scan_coalesce
             else spark.sparkContext.defaultParallelism
         )
-        self.segments = read_segments(spark, index_dir).repartition(
-            self._scan_parts, "shard_id"
-        )
-        # dictionary is the hot lookup table of every query (the
-        # reference mmaps my.tip once) — cache it. bytes/prefetch_pages
-        # are the reference's .tip prefetch-zone field analogue
-        # (flash_engine_dumper.h:44-49); dictionaries written before the
-        # field read as null (-> full decode, the conservative choice)
-        self.dictionary = spark.read.schema(
-            "term string, df int, bytes_docid_tf long, prefetch_pages int"
-        ).parquet(f"{index_dir}/dictionary").cache()
+        segments = read_segments(spark, index_dir)
+        self.segments = segments.repartition(self._scan_parts, "shard_id")
+        # the dictionary is the hot lookup table of every query (the
+        # reference mmaps my.tip once): derived from the SAME read of
+        # the segments, so it is pinned to the same generation set, and
+        # cached. bytes/prefetch_pages are the reference's .tip
+        # prefetch-zone field analogue (flash_engine_dumper.h:44-49).
+        # A dictionary/ table an older writer stored is never opened.
+        self.dictionary = dictionary_from_segments(segments).cache()
         # sized-bloom geometry (bits/bytes/hashes); None when the index
         # has no phrase blooms
         b = self.meta.get("bloom")
@@ -1505,38 +1464,25 @@ class SegmentIndex:
     # the cached dictionary DataFrame.
     DICT_DRIVER_CACHE_MAX = 200_000
 
-    def _vocab_size(self) -> int:
-        """Vocabulary size, from stats.json when the writer recorded it
-        (every round-4+ writer does) — sizing the driver cache then
-        costs zero Spark jobs; older indexes pay one count()."""
-        n = self.meta.get("n_terms")
-        return int(n) if n is not None else self.dictionary.count()
-
     def warmup(self) -> "SegmentIndex":
-        """Build the driver dictionary cache (and materialize the
-        cached dictionary DataFrame) OUTSIDE any query's timing — the
+        """Materialize the cached dictionary, count the vocabulary into
+        ``meta["n_terms"]`` and, under the driver-cache cap, build the
+        driver dictionary cache — OUTSIDE any query's timing: the
         reference pays its .tip mmap at engine load, not on the first
         query (vacuum_engine.h:119-142). Call once after __init__ in
-        latency-sensitive serving; idempotent — including past the
-        driver-cache cap, where the materialization job is memoized so
-        a second warmup() costs zero Spark jobs (r04 item 6)."""
-        if getattr(self, "_warmed", False):
-            return self
+        latency-sensitive serving; idempotent — a second warmup() costs
+        zero Spark jobs (r04 item 6)."""
         self._dict_lookup([])
-        if self._dict_mem is None:
-            # vocabulary over the driver-cache cap: lookups stay
-            # distributed filters, so materialize the CACHED dictionary
-            # DataFrame here instead — otherwise the first query pays
-            # the parquet scan + cache fill this method exists to move
-            self.dictionary.count()
-        self._warmed = True
         return self
 
     def _dict_lookup(self, terms: list[str]) -> dict:
         """term -> (df, prefetch_pages) for the terms present."""
         if not self._dict_mem_tried:
             self._dict_mem_tried = True
-            if self._vocab_size() <= self.DICT_DRIVER_CACHE_MAX:
+            # the count fills the cached dictionary (past the cap, the
+            # lookups below then filter the cache, not the segments)
+            self.meta["n_terms"] = self.dictionary.count()
+            if self.meta["n_terms"] <= self.DICT_DRIVER_CACHE_MAX:
                 self._dict_mem = {
                     r["term"]: (int(r["df"]), r["prefetch_pages"])
                     for r in self.dictionary.collect()
@@ -1571,12 +1517,12 @@ class SegmentIndex:
         a hat-trie, ``vacuum_engine.h:119-142`` + vendored
         ``tsl/htrie``, whose prefix iteration the engine uses for
         dictionary walks). Serving reads the CACHED dictionary (an
-        in-memory filter over vocabulary-sized rows); a cold read gets
-        parquet min/max row-group pruning because every writer sorts
-        each dictionary file by term (``dictionary_from_segments``,
-        the streaming fold), so a file's row groups hold disjoint term
-        ranges — StringStartsWith pushes down to the scan (pinned by
-        test_term_prefix_pushdown)."""
+        in-memory filter over vocabulary-sized rows); on a cold read the
+        filter is on the aggregate's grouping key, so it pushes below
+        the aggregate and reaches the segments scan as
+        StringStartsWith, where the term-sorted segment files' min/max
+        stats prune row groups (pinned by
+        test_term_prefix_pushdown_and_identity)."""
         if not prefix:
             raise ValueError("prefix must be non-empty")
         return self.dictionary.filter(

@@ -11,8 +11,9 @@ the distributed analogue of the reference's two-pass build,
              doc-length sentinel row from docstats (the "merge" shuffle:
              the reference's single-node qq->vacuum conversion becomes a
              repartition by shard + partition-local encode)
-  dictionary term -> global df + prefetch fields, from the written
-             segments (segments.dictionary_from_segments)
+
+No dictionary stage: the reader derives term -> global df + prefetch
+fields from the segments (segments.dictionary_from_segments).
 
 Re-running skips every stage whose input fingerprint is unchanged, so a
 killed build resumes where it stopped. Fingerprints chain: stage N's
@@ -36,9 +37,7 @@ from wiser_spark.operators.postings import (
 )
 from wiser_spark.operators.segments import (
     FORMAT,
-    SEGMENT_SCHEMA,
     build_segments,
-    dictionary_from_segments,
     write_stats,
     write_table,
 )
@@ -155,7 +154,7 @@ class IndexBuildPipeline:
         docstats = self.spark.read.parquet(self._out("docstats"))
 
         # the sentinels come from docstats, so its output chains in too
-        fp_segs = self._run_stage(
+        self._run_stage(
             "segments",
             fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
             lambda d: write_table(
@@ -164,22 +163,10 @@ class IndexBuildPipeline:
             ),
         )
 
-        # the same dictionary as every other writer's, prefetch fields
-        # included (queries pick full vs skip-based partial decode by them)
-        self._run_stage(
-            "dictionary", fingerprint("dictionary", fp_segs),
-            lambda d: write_table(dictionary_from_segments(
-                self.spark.read.schema(SEGMENT_SCHEMA).parquet(
-                    self._out("segments")
-                )
-            ), d),
-        )
-
         # final queryable-index metadata (consumed by SegmentIndex)
         stats = corpus_stats(docstats)
         meta = {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
-            "n_terms": self.manifest.entries["dictionary"].rows,
             "n_shards": cfg.n_shards, "k1": cfg.bm25.k1, "b": cfg.bm25.b,
             "format": FORMAT,
         }
@@ -247,8 +234,8 @@ def build_index_mapside_batched(
     IO shape: the bucketed corpus is STAGED once, partitioned by batch
     (``_batched_source/``), so the per-batch reads prune to one slice —
     without it, N batches would each rescan the full corpus (N-times
-    read amplification at the 10^12-file target). The per-batch
-    dictionary fold is deferred to ONE refresh after the last batch."""
+    read amplification at the 10^12-file target). stats.json is
+    refreshed ONCE after the last batch."""
     from wiser_spark.operators.segments import compact_index
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
@@ -385,10 +372,10 @@ def build_index_mapside_batched(
             pinned = leftover.get("pinned")
             if pinned is not None and pinned.is_cached:
                 pinned.unpersist(blocking=False)
-    # ONE dictionary fold + stats for the whole build (also covers a
-    # resume whose crashed run never refreshed)
+    # ONE stats refresh for the whole build (also covers a resume whose
+    # crashed run never refreshed)
     if processed_any or not os.path.exists(f"{index_dir}/stats.json"):
-        indexer._refresh_meta(spark)
+        indexer._refresh_meta()
     # all batches committed: the staged bucketed corpus is dead weight
     import shutil
 

@@ -31,7 +31,10 @@ per-request semantics — is preserved verbatim):
 * ``POST /echo``     — the reference's ``Echo`` RPC (health check):
   echoes ``{"message": ...}`` back.
 * ``GET /stats``     — corpus stats (n_docs, avgdl, k1/b, n_terms),
-  the serving analogue of the engine's load-time banner.
+  the serving analogue of the engine's load-time banner. ``n_terms`` is
+  the vocabulary the engine counted when it derived its term
+  dictionary from the segments (``SegmentIndex.warmup``; no writer
+  records it).
 * ``POST /add_document`` — the reference's ``AddDocument`` RPC
   (``grpc_server_impl.h:85-101``; request shape
   ``protos/qq.proto:18-33``: document{title,url,body}); reply is the
@@ -160,13 +163,14 @@ class SearchServer:
 
             def do_GET(self):
                 if self.path == "/stats":
-                    m = server.index.meta
+                    with server._lock:  # warmup() counts n_terms once
+                        m = server.index.warmup().meta
                     out = {
                         "n_docs": m["n_docs"],
                         "avgdl": m["avgdl"],
                         "k1": m["k1"],
                         "b": m["b"],
-                        "n_terms": m.get("n_terms"),
+                        "n_terms": m["n_terms"],
                     }
                     self._send(200, json.dumps(out).encode())
                 else:

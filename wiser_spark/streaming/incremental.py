@@ -27,9 +27,11 @@ sink is made idempotent:
     here swallows exceptions).
 
 Query-time global stats (N, avgdl, df) shift as documents arrive; every
-commit refreshes them from the commit log (N, summed doc length) and the
-accumulated dictionary deltas, so results always reflect the ingested
-prefix exactly.
+commit rewrites stats.json from the commit log (N, summed doc length),
+and a reader derives df from the live generations' segment rows when it
+opens the index, so results always reflect the ingested prefix exactly.
+No dictionary table is stored, so a flush costs the encode job plus the
+commit, however many generations are live.
 
 READ ISOLATION (round-5 redesign, closes the r04 advisory findings): the
 live generation set is published through ``generations.json``, updated
@@ -59,16 +61,13 @@ from wiser_spark.config import IndexConfig
 from wiser_spark.functions.bloom import BloomParams
 from wiser_spark.operators.segments import (
     FORMAT,
-    SEGMENT_SCHEMA,
-    dictionary_from_segments,
-    prefetch_pages_col,
     read_json,
     require_layout,
     write_stats,
     write_table,
 )
 
-_TABLES = ("segments", "dictionary_deltas")
+_TABLES = ("segments",)
 
 # merged generations install OUTSIDE the micro-batch id space: ids are
 # max(MERGED_GEN_BASE, max(existing)+1), so an install NEVER collides
@@ -274,8 +273,7 @@ class IncrementalIndexer:
         micro-batch and every query merges them per (shard, term)
         forever. When the segment table holds MORE than this many
         generations after a commit, they merge in place into one
-        (``compact_segments``, dictionary delta included). None
-        (default) disables it."""
+        (``compact_segments``). None (default) disables it."""
         if fmt != "v2":
             raise ValueError(f"unknown streaming index format: {fmt}")
         # resuming an index of an older layout would corrupt it silently
@@ -408,9 +406,6 @@ class IncrementalIndexer:
         # pinned shuffle layout can release now (r04 advisory: the
         # context cleaner is too lazy for a 10^12-file ingest)
         prep["pinned"].unpersist()
-        # dictionary delta from the STAGED rows (plain term rows only) —
-        # no second tokenize pass over the batch
-        self._write_delta(spark, staging)
 
         # atomic per-table publish: generation=<id> partition dirs. A
         # leftover from a crashed attempt of this SAME batch is replaced
@@ -431,13 +426,12 @@ class IncrementalIndexer:
         cur.add(int(batch_id))
         _write_generations(self.index_dir, cur)
         self._append_commit(commits, batch_id, offset, n_docs, lensum)
-        # refresh_meta=False defers the vocabulary-sized dictionary fold
-        # (the batched build refreshes ONCE after its last batch instead
-        # of refolding every accumulated generation per batch) — and
-        # likewise defers auto-compaction to the caller's final refresh
+        # refresh_meta=False defers the stats.json rewrite and
+        # auto-compaction to the caller (the batched build refreshes
+        # ONCE after its last batch)
         if refresh_meta:
             self._maybe_compact(spark)
-            self._refresh_meta(spark)
+            self._refresh_meta()
 
     def process_batch(
         self, batch: DataFrame, batch_id: int, refresh_meta: bool = True
@@ -450,7 +444,7 @@ class IncrementalIndexer:
             # at-least-once replay of a committed batch: a no-op (but
             # make sure the queryable metadata exists)
             if not os.path.exists(f"{self.index_dir}/stats.json"):
-                self._refresh_meta(spark)
+                self._refresh_meta()
             return
         self.commit_prepared(
             spark, batch_id, self.prepare_batch(batch),
@@ -484,16 +478,6 @@ class IncrementalIndexer:
 
     def _recover_compaction(self) -> None:
         recover_compaction(self.index_dir, sweep=True)
-
-    def _write_delta(self, spark: SparkSession, staging: str) -> None:
-        """Stage the dictionary delta of the segments staged at
-        ``staging``: (term, df, bytes_docid_tf) of their term rows."""
-        staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
-            f"{staging}/segments"
-        )
-        write_table(dictionary_from_segments(staged).select(
-            "term", "df", "bytes_docid_tf"
-        ), f"{staging}/dictionary_deltas")
 
     def _maybe_compact(self, spark: SparkSession) -> None:
         """SIZE-TIERED trigger: when more than ``compact_every``
@@ -532,13 +516,12 @@ class IncrementalIndexer:
         the streaming analogue of the reference's qq->vacuum
         conversion, B18). Routine maintenance should prefer the tiered
         ``_maybe_compact`` policy; this is the explicit 'force-merge'
-        an operator runs before freezing an index; it refreshes the
-        queryable dictionary like a flush."""
+        an operator runs before freezing an index. N, avgdl and df are
+        unchanged by a merge, so stats.json is not rewritten."""
         gens = self._generations()
         if len(gens) > 1:
             self._recover_compaction()
             self.compact_generations(spark, gens)
-            self._refresh_meta(spark)
 
     def compact_generations(self, spark: SparkSession, gens) -> None:
         """Merge the given generation dirs into ONE, in place,
@@ -547,8 +530,8 @@ class IncrementalIndexer:
         id space), so the install is a rename into a dir that never
         existed: no live data is ever removed to make room.
 
-          1. the merged segments and their dictionary delta are STAGED
-             outside the live table dirs;
+          1. the merged segments are STAGED outside the live table
+             dirs;
           2. a JOURNAL (compaction.json, atomic rename; staging paths
              recorded RELATIVE to the index dir) records the
              remove-list and the fresh target id;
@@ -588,9 +571,6 @@ class IncrementalIndexer:
             compact_segments(segs, BloomParams(**bloom) if bloom else None),
             f"{staging}/segments", "shard_id",
         )
-        # the delta of the MERGED rows (shorter than the merged-away
-        # ones); _refresh_meta refolds the queryable dictionary
-        self._write_delta(spark, staging)
         journal = {
             "remove": gens,
             "target": target,
@@ -612,28 +592,16 @@ class IncrementalIndexer:
         """Dense append-only docIDs: the end of the committed ranges."""
         return max((v[0] + v[1] for v in commits.values()), default=0)
 
-    def _refresh_meta(self, spark: SparkSession) -> None:
-        # N and avgdl from the commit log's [start, n, lensum] rows
+    def _refresh_meta(self) -> None:
+        """Rewrite stats.json from the commit log alone (no Spark job):
+        N and avgdl from its [start, n, lensum] rows."""
         commits = self._read_commits()
         n_docs = sum(v[1] for v in commits.values())
         # (empty batches committed by older writers carry no lensum)
         lensum = sum(v[2] for v in commits.values() if v[1])
-        # fold delta dictionaries into the queryable table, each
-        # partition sorted by term like dictionary_from_segments
-        deltas = spark.read.schema(
-            "term string, df int, bytes_docid_tf long"
-        ).parquet(f"{self.index_dir}/dictionary_deltas")
-        write_table(deltas.groupBy("term").agg(
-            F.sum("df").cast("int").alias("df"),
-            F.sum("bytes_docid_tf").cast("long").alias("bytes_docid_tf"),
-        ).withColumn("prefetch_pages", prefetch_pages_col())
-            .sortWithinPartitions("term"), f"{self.index_dir}/dictionary")
         meta = {
             "n_docs": n_docs,
             "avgdl": (lensum / n_docs) if n_docs else 1.0,
-            "n_terms": spark.read.parquet(
-                f"{self.index_dir}/dictionary"
-            ).count(),
             "n_shards": self.config.n_shards,
             "k1": self.config.bm25.k1,
             "b": self.config.bm25.b,
