@@ -5,7 +5,12 @@
 
 Each digest covers the table's rows (every column, partition columns
 included) serialized one per line and sorted, so it does not depend on
-file names, file count or row order. Two builds of the same corpus by
+file names, file count or row order. For the segments table, "every
+column" means those of the current ``segments.SEGMENT_SCHEMA`` (plus
+the ``generation`` partition): a column an older layout wrote and no
+reader selects (v3's ``off_blob``, ``skip_off_offs``) is left out, so
+one version of this script compares an index built by an older writer
+with one built by the current writer. Two builds of the same corpus by
 two versions of the writer print the same lines exactly when their
 segment and dictionary rows are byte-identical. Reads the parquet files
 with pyarrow; no Spark session is started.
@@ -49,6 +54,14 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 TABLES = ("segments", "dictionary")
+# the columns of segments.SEGMENT_SCHEMA (this script imports no Spark
+# code; tests/test_segments.py pins the two equal)
+SEGMENT_COLUMNS = (
+    "shard_id", "term", "df_shard", "docids_blob", "tfs_blob", "pos_blob",
+    "skip_predocs", "skip_docid_offs", "skip_tf_offs", "skip_pos_offs",
+    "skip_max_tfs", "bloom_end_blob", "bloom_begin_blob",
+    "skip_bloom_end_offs", "skip_bloom_begin_offs",
+)
 # the bloom sides: (column pair of the term row, term prefix of the
 # older layout's bloom row)
 SIDES = (
@@ -71,6 +84,11 @@ def _digest(lines: list[bytes]) -> tuple[int, str]:
 
 def _dataset(path: str):
     return ds.dataset(path, format="parquet", partitioning="hive")
+
+
+def _stale(names) -> set:
+    """The columns of a segments table outside the current schema."""
+    return set(names) - set(SEGMENT_COLUMNS) - {"generation"}
 
 
 def table_digest(path: str, drop=()) -> tuple[int, str]:
@@ -121,7 +139,7 @@ def logical_digest(path: str) -> tuple[int, str]:
     time."""
     dataset = _dataset(path)
     names = dataset.schema.names
-    base = sorted(c for c in names if c not in BLOOM_COLS)
+    base = sorted(c for c in names if c not in BLOOM_COLS | _stale(names))
     part_cols = [c for c in ("shard_id", "generation") if c in names]
     no_sides = [(None, None)] * len(SIDES)
     shards = pc.unique(
@@ -191,7 +209,9 @@ def main(index_dir: str, mode: str | None = None) -> None:
             n, digest = logical_digest(path)
             print(f"{name} entries={n} logical_sha1={digest}")
         else:
-            drop = BLOOM_COLS if mode == "--no-blooms" else ()
+            drop = BLOOM_COLS if mode == "--no-blooms" else set()
+            if name == "segments":
+                drop = drop | _stale(_dataset(path).schema.names)
             n, digest = table_digest(path, drop)
             print(f"{name} rows={n} sha1={digest}")
 

@@ -169,7 +169,7 @@ def test_blockmax_end_to_end_rank_identity(spark, tmp_path, monkeypatch,
     assert len(full) == 10
     monkeypatch.setattr(segmod, "PARTIAL_DECODE_MIN_PAGES", 1)
     fired = segmod.partial_decode_terms(
-        [(0, ["hot"], False)], {"hot": 1}, set(), set()
+        [(0, ["hot"], False)], {"hot": 1}, set()
     )
     assert "hot" in fired  # the gate really applies at this scale
     bm = [tuple(r) for r in idx.search(["hot"], k=10).collect()]
@@ -512,7 +512,7 @@ def _full_phrase_topk(rows_by_term, terms, k, idfs, cache, codes_for):
         cand = ids if cand is None else cand[np.isin(cand, ids)]
     cand = np.sort(cand)
     if cand.size:
-        cand, _, _ = _phrase_intersect(dec, terms, cand)
+        cand = _phrase_intersect(dec, terms, cand)
     if cand.size == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
     scores = _bm25_scores(
@@ -528,7 +528,7 @@ def _decode_full_multi(rows):
     ids = np.concatenate([p[0] for p in parts])
     tfs = np.concatenate([p[1] for p in parts])
     plists = [pl for p in parts for pl in p[2]]
-    return ids, tfs, plists, None
+    return ids, tfs, plists
 
 
 def test_blockmax_phrase_exact_vs_full_decode(spark, cache):
@@ -724,8 +724,136 @@ def test_blockmax_conj_end_to_end_rank_identity(spark, tmp_path,
     assert len(full) == 10
     monkeypatch.setattr(segmod, "PARTIAL_DECODE_MIN_PAGES", 1)
     fired = segmod.partial_decode_terms(
-        [(0, terms, False)], {t: 1 for t in terms}, set(), set()
+        [(0, terms, False)], {t: 1 for t in terms}, set()
     )
     assert set(fired) == set(terms)
     bm = [tuple(r) for r in idx.search(terms, k=10).collect()]
     assert bm == full
+
+
+# ------------------------------------------------------------ snippets
+SNIPPET_LOG = [
+    (0, ["return"], False),
+    (1, ["package"], False),
+    (2, ["len"], False),
+    (3, ["return", "import"], False),
+    (4, ["def", "self", "return"], False),
+    (5, ["return", "import", "def", "package"], False),
+    (6, ["return", "import"], True),
+    (7, ["import", "import"], True),
+    (8, ["def", "return", "if"], True),
+    (9, ["none", "return"], False),
+]
+
+
+@pytest.fixture(scope="module")
+def snippet_index(spark, tmp_path_factory):
+    """A 900-doc map-side index (2 shards): terms with df far above and
+    below one 128-posting bag per shard."""
+    from wiser_spark.operators.mapside import write_index_mapside
+    from wiser_spark.sources.corpus import make_corpus
+
+    docs = spark.createDataFrame(
+        [(i, r["content"]) for i, r in enumerate(make_corpus(900, 7))],
+        "doc_id long, content string",
+    ).cache()
+    d = str(tmp_path_factory.mktemp("snippets") / "idx")
+    write_index_mapside(docs, d, IndexConfig(bm25=PARAMS, n_shards=2))
+    return d, docs
+
+
+@pytest.mark.parametrize("blockmax", [False, True])
+def test_snippet_queries_rank_like_plain_queries(spark, snippet_index,
+                                                 monkeypatch, blockmax):
+    """search_batch returns the same (query_id, rank, doc_id, score) with
+    and without snippets, whether or not the block-max gates fire:
+    snippet queries take the same kernel paths as plain ones."""
+    import wiser_spark.operators.segments as segmod
+
+    d, docs = snippet_index
+    if blockmax:
+        monkeypatch.setattr(segmod, "PARTIAL_DECODE_MIN_PAGES", 1)
+    idx = SegmentIndex(spark, d)
+    plain = [tuple(r) for r in idx.search_batch(SNIPPET_LOG, k=10).collect()]
+    snip = idx.search_batch(SNIPPET_LOG, k=10, return_snippets=True,
+                            docs=docs).collect()
+    assert [tuple(r)[:4] for r in snip] == plain
+    assert {r[0] for r in plain} == {q[0] for q in SNIPPET_LOG}
+    assert all("<b>" in r["snippet"] for r in snip)
+
+
+def _kernel_bags(idx, monkeypatch, call) -> tuple[int, list]:
+    """Run ``call`` (one query through ``idx``), then its shard kernel
+    once more in this process over the same input rows, counting the
+    128-posting bags the kernel decodes: one per ``_decode_bag`` and
+    every bag of a fully decoded term row. Returns (bags, the kernel's
+    (query_id, doc_id, score) rows)."""
+    import pandas as pd
+    from pyspark.sql.group import GroupedData
+
+    import wiser_spark.operators.segments as segmod
+
+    captured = []
+    apply = GroupedData.applyInPandas
+
+    def capture(self, func, schema):
+        captured.append((self._df, func))
+        return apply(self, func, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", capture)
+    call()
+    rows, kernel = captured[-1]
+    bags = []
+    bag, row = segmod._decode_bag, segmod.decode_segment_row
+
+    def count_bag(r, b, *a):
+        bags.append(1)
+        return bag(r, b, *a)
+
+    def count_row(r, *a, **kw):
+        if r["term"] != segmod.DOCLEN_TERM:
+            bags.append(max(len(r["skip_predocs"]), 1))
+        return row(r, *a, **kw)
+
+    monkeypatch.setattr(segmod, "_decode_bag", count_bag)
+    monkeypatch.setattr(segmod, "decode_segment_row", count_row)
+    pdf = rows.toArrow().to_pandas()
+    out = pd.concat([kernel(g) for _, g in pdf.groupby("shard_id")])
+    return sum(bags), sorted(map(tuple, out.itertuples(index=False)))
+
+
+@pytest.mark.parametrize("terms", [["hot"], ["hot", "cold"]])
+def test_snippet_query_decodes_fewer_bags(spark, tmp_path, monkeypatch,
+                                          terms):
+    """A snippet query over big terms takes the block-max path: its
+    shard kernel decodes fewer bags than a full decode of its terms,
+    and still ranks like that full decode."""
+    import wiser_spark.operators.segments as segmod
+    from wiser_spark.operators.mapside import write_index_mapside
+
+    # one shard, 24 bags per term; only docs 1000-1009 have a high tf
+    hot = range(1000, 1010)
+    docs = spark.createDataFrame([
+        (i, " ".join(["hot"] * (30 if i in hot else 1)
+                     + ["cold"] * (20 if i in hot else 1) + [f"w{i % 50}"]))
+        for i in range(3000)
+    ], "doc_id long, content string")
+    d = str(tmp_path / "idx")
+    write_index_mapside(docs, d, IndexConfig(bm25=PARAMS, n_shards=1))
+    idx = SegmentIndex(spark, d)
+    full = [tuple(r) for r in idx.search(terms, k=5).collect()]
+    monkeypatch.setattr(segmod, "PARTIAL_DECODE_MIN_PAGES", 1)
+    got = []
+    bags, rows = _kernel_bags(idx, monkeypatch, lambda: got.extend(
+        idx.search(terms, k=5, return_snippets=True, docs=docs).collect()))
+    assert [tuple(r)[:3] for r in got] == full
+    # one shard: the kernel's rows are the reply's
+    assert sorted(rows, key=lambda r: (-r[2], r[1])) == [
+        (0, r["doc_id"], r["score"]) for r in got]
+    assert {r["doc_id"] for r in got} <= set(hot)
+    total = sum(
+        max(len(r["skip_predocs"]), 1)
+        for r in idx.segments.filter(
+            idx.segments.term.isin(terms)).collect()
+    )
+    assert total == 24 * len(terms) and 0 < bags <= len(terms)

@@ -154,8 +154,9 @@ def test_older_index_with_stored_dictionary_reads_resumes_and_compacts(
     """An index in the older layout (``dictionary/``,
     ``dictionary_deltas/``, ``n_terms`` in stats.json) answers like a
     fresh build; an IncrementalIndexer resume on it flushes and
-    compacts to the segments of a fresh index given the same batches;
-    compact_index of it writes no ``dictionary/``."""
+    compacts to the segments of a fresh index given the same batches,
+    the compaction sweeping the older tables away; compact_index of it
+    writes no ``dictionary/``."""
     mod = _digest_module()
     old, fresh = str(tmp_path / "old"), str(tmp_path / "fresh")
     shutil.copytree(stream["flush"], old)
@@ -174,6 +175,9 @@ def test_older_index_with_stored_dictionary_reads_resumes_and_compacts(
         ix.process_batch(extra, 3)
         ix.compact_now(spark)
         assert not os.path.exists(f"{d}/dictionary_deltas/generation=3")
+    assert os.path.isdir(f"{old}/segments")
+    assert not os.path.exists(f"{old}/dictionary")
+    assert not os.path.exists(f"{old}/dictionary_deltas")
     assert mod.logical_digest(f"{old}/segments") == mod.logical_digest(
         f"{fresh}/segments")
     got = _answers(spark, old)

@@ -1,4 +1,9 @@
-from wiser_spark.operators.highlight import highlight, highlight_doc
+import re
+
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from wiser_spark.operators.highlight import highlight_doc, matched_spans
 
 
 def test_passage_scoring_prefers_denser_passage():
@@ -46,9 +51,9 @@ def test_index_snippets_phrase_filters_offsets(spark, tmp_path):
 
 
 def test_snippets_fallback_without_offsets_column(spark, tmp_path):
-    """An index written from positions-only postings (empty off_blob)
-    must still serve snippets — via re-tokenization fallback, not a
-    decoder crash."""
+    """An index written from positions-only postings serves snippets:
+    no index stores offsets, and the spans come from the content for
+    term and phrase queries alike."""
     from wiser_spark.config import BM25Params, IndexConfig
     from wiser_spark.operators.docstats import build_docstats, corpus_stats
     from wiser_spark.operators.postings import build_dictionary, build_postings
@@ -69,9 +74,7 @@ def test_snippets_fallback_without_offsets_column(spark, tmp_path):
     idx = SegmentIndex(spark, d)
     got = idx.search(["alpha"], k=3, return_snippets=True, docs=docs).collect()
     assert got and all("<b>alpha</b>" in r["snippet"] for r in got)
-    # PHRASE query on the offset-less index: the offs-extraction loop
-    # must degrade to the re-tokenization fallback, not IndexError on
-    # the empty span arrays (phrase mode then bolds all occurrences)
+    # PHRASE query: the matched phrase positions are bolded
     ph = idx.search(["alpha", "beta"], k=3, is_phrase=True,
                     return_snippets=True, docs=docs).collect()
     assert ph and all(
@@ -82,16 +85,14 @@ def test_snippets_fallback_without_offsets_column(spark, tmp_path):
 
 def test_snippets_divergent_case_mapping_falls_back():
     """U+0130 'İ': Arrow's simple lowercase (1 byte 'i') diverges from
-    Python's full mapping ('i̇', 3 bytes) — stored byte offsets after the
-    divergence shift. The span validation must catch the mismatch and
-    fall back to re-tokenization instead of mis-bolding."""
-    from wiser_spark.operators.highlight import snippet_from_stored_offsets
+    Python's full mapping ('i̇', 3 bytes). The spans are byte spans into
+    the Arrow-lowered text, so that text is shown, and 'wiser' is
+    bolded whole, with no slice shifted by the divergence."""
+    from wiser_spark.operators.highlight import snippets
 
     content = "İstanbul wiser match here."
-    # offsets as INDEX TIME computed them: arrow-lowered text is
-    # "istanbul wiser match here." -> 'wiser' at bytes [9, 14)
-    out = snippet_from_stored_offsets(content, [[9, 14]], ["wiser"], 1)
-    assert "<b>wiser</b>" in out
+    out = snippets([content], [(["wiser"], False)], 1)[0]
+    assert out == "istanbul <b>wiser</b> match here."
     assert "<b>r wise" not in out and "<b>̇" not in out
 
 
@@ -117,21 +118,48 @@ def test_snippets_non_ascii_content(spark, tmp_path):
     assert "<b>wiser</b> row" in got[1]  # ASCII path keeps original text
 
 
-def test_highlight_topk(spark):
-    docs = spark.createDataFrame(
-        [
-            (0, "import os\nreturn the value. nothing here.\nimport sys again"),
-            (1, "no match at all in this doc"),
-            (2, "return return return"),
-        ],
-        "doc_id long, content string",
-    )
-    topk = spark.createDataFrame([(0,), (2,)], "doc_id long")
-    got = {r["doc_id"]: r["snippet"] for r in
-           highlight(docs, topk, ["return", "import"], n_passages=2).collect()}
-    assert set(got) == {0, 2}  # only result docs get snippets
-    assert "<b>import</b> os" in got[0]
-    assert "…" in got[0]  # two passages joined
-    assert got[2] == "<b>return</b> <b>return</b> <b>return</b>"
-    # no partial-word bolding
-    assert "<b>returnx" not in got[0]
+def _oracle_spans(text: str, terms: list[str], phrase: bool) -> list[list[int]]:
+    """Per term, the flat [s,e,...] byte spans of its matched
+    occurrences: regex tokens over the UTF-8 bytes of the Arrow-lowered
+    text, positions in match order."""
+    low = pc.utf8_lower(pa.array([text])).to_pylist()[0].encode("utf-8")
+    toks = [(m.group().decode(), m.start(), m.end())
+            for m in re.finditer(rb"[a-z0-9_]+", low)]
+    if phrase and len(terms) > 1:
+        starts = [p for p in range(len(toks) - len(terms) + 1)
+                  if all(toks[p + i][0] == t for i, t in enumerate(terms))]
+        at = [[p + i for p in starts] for i in range(len(terms))]
+    else:
+        at = [[p for p, tok in enumerate(toks) if tok[0] == t] for t in terms]
+    return [[v for p in ps for v in toks[p][1:]] for ps in at]
+
+
+def test_matched_spans_equal_regex_oracle():
+    """matched_spans (one Arrow pass over every text) equals a regex
+    oracle over the Arrow-lowered bytes: term and phrase queries, a
+    phrase with a repeated term, terms at the first and last byte,
+    multi-byte characters before and between matches, and 'İ', whose
+    Python lowercase differs from Arrow's."""
+    cases = [
+        ("import os\nimport sys; return import", ["import"], False),
+        ("import os\nimport sys; return import", ["import", "return"], False),
+        ("a b a b c a b", ["a", "b"], True),
+        ("import import import x import import", ["import", "import"], True),
+        ("Table PART table part. part table", ["table", "part"], True),
+        ("wiser middle wiser", ["wiser"], False),
+        ("Café über wiser — Ünïcode wiser_x wiser", ["wiser"], False),
+        ("é wiser ü test wiser é", ["wiser", "test"], True),
+        ("İstanbul wiser İİ match wiser", ["wiser", "match"], False),
+        ("İ wiser match", ["wiser", "match"], True),
+        ("no tokens of the query here", ["zz", "qq"], True),
+        ("", ["wiser"], False),
+        ("dup dup", ["dup", "dup"], False),
+    ]
+    texts = [c[0] for c in cases]
+    low, got = matched_spans(texts, [(t, ph) for _, t, ph in cases])
+    assert low.to_pylist() == pc.utf8_lower(pa.array(texts)).to_pylist()
+    for (text, terms, ph), spans in zip(cases, got):
+        assert spans == _oracle_spans(text, terms, ph), text
+    # the edges: a match at byte 0 and one ending at the last byte
+    assert got[5][0][0] == 0 and got[5][0][-1] == len(texts[5])
+    assert got[3] == [[0, 6, 7, 13, 23, 29], [7, 13, 14, 20, 30, 36]]

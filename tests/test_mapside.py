@@ -147,11 +147,7 @@ def test_batched_encode_byte_identical_to_reference():
         flat_pos = np.array(
             [p for d in doc_ids for (p, _, _) in per_term[t][d]], dtype=np.int64
         )
-        flat_off = np.array(
-            [v for d in doc_ids for (_, s, e) in per_term[t][d] for v in (s, e)],
-            dtype=np.int64,
-        )
-        want = _encode_term_flat(7, t, doc_ids, tfs, flat_pos, flat_off)
+        want = _encode_term_flat(7, t, doc_ids, tfs, flat_pos)
         have = got[t]
         for k, v in want.items():
             if k in {c for side in BLOOM_COLUMNS for c in side}:
@@ -224,7 +220,6 @@ def _reference_rows(docs, with_blooms):
             7, t, np.array(doc_ids, dtype=np.int64),
             np.array([len(per_term[t][d]) for d in doc_ids], dtype=np.int64),
             np.array([p for p, _, _ in occ], dtype=np.int64),
-            np.array([v for _, s, e in occ for v in (s, e)], dtype=np.int64),
             tuple(sides) if with_blooms and len(doc_ids) > 1 else None,
         ))
     rows.append(doclen_sentinel_row(
@@ -335,7 +330,7 @@ print((hwm_kb() - base) * 1024, sum(b.nbytes for b in out))
     )
     assert res.returncode == 0, res.stderr
     delta, out_bytes = map(int, res.stdout.split())
-    assert out_bytes > 10 << 20
+    assert out_bytes > 8 << 20  # the probe's size floor (9.4 MB out)
     assert delta <= 7 * out_bytes, (delta / out_bytes, delta, out_bytes)
 
 QUERIES = [

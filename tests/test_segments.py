@@ -174,8 +174,9 @@ def test_index_without_sentinels_refused(spark, tmp_path):
 def test_build_segments_byte_identical_to_per_term_encode(spark, flavor):
     """build_segments rows equal the per-term encoder's (term order,
     one _encode_term_flat row per term) followed by the sentinel, for
-    postings with positions and offsets, positions only, and neither;
-    the corpus has terms on both sides of the framed-path df cut."""
+    postings with positions and offsets (the offsets are not stored),
+    positions only, and neither; the corpus has terms on both sides of
+    the framed-path df cut."""
     from wiser_spark.operators.postings import build_postings_arrow
     from wiser_spark.operators.segments import (
         _encode_term_flat,
@@ -215,7 +216,7 @@ def test_build_segments_byte_identical_to_per_term_encode(spark, flavor):
             shard, term,
             np.array([r["doc_id"] for r in ps], dtype=np.int64),
             np.array([r["tf"] for r in ps], dtype=np.int64),
-            flat(ps, "positions"), flat(ps, "offsets"),
+            flat(ps, "positions"),
         ))
     for shard in want:
         ids = sorted(d for d in lens if d % n_shards == shard)
@@ -227,42 +228,72 @@ def test_build_segments_byte_identical_to_per_term_encode(spark, flavor):
     assert max(dfs) >= 128 > min(dfs)
 
 
-def test_segment_offsets_roundtrip(spark):
-    """off_blob round-trips the per-occurrence [s,e) byte spans through
-    both write paths (mapside + shuffle-from-arrow-postings), and every
-    span extracts its exact token from the lowered content."""
-    from wiser_spark.operators.mapside import build_segments_mapside
+def test_no_writer_stores_offsets(spark, tmp_path):
+    """No writer stores offsets: write_index, write_index_mapside,
+    IndexBuildPipeline, a streaming flush, compact_now and
+    compact_index all write segment files without ``off_blob`` or
+    ``skip_off_offs`` and record the current FORMAT."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from wiser_spark.operators.mapside import write_index_mapside
     from wiser_spark.operators.postings import build_postings_arrow
-    from wiser_spark.operators.segments import DOCLEN_TERM
+    from wiser_spark.operators.segments import compact_index
+    from wiser_spark.plans.build import IndexBuildPipeline
+    from wiser_spark.streaming.incremental import IncrementalIndexer
 
-    docs = assign_doc_ids(corpus_df(spark, 60), n_partitions=2).select(
-        "doc_id", "content"
+    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
+    raw = corpus_df(spark, 60)
+    docs = assign_doc_ids(raw, n_partitions=2).select("doc_id", "content")
+    built = {k: str(tmp_path / k) for k in (
+        "write_index", "mapside", "pipeline", "flush", "compact_now",
+        "compact_index")}
+    postings = build_postings_arrow(docs, with_offsets=True)
+    docstats = build_docstats(docs)
+    write_index(postings, docstats, build_dictionary(postings),
+                corpus_stats(docstats), built["write_index"], cfg)
+    write_index_mapside(docs, built["mapside"], cfg)
+    IndexBuildPipeline(spark, raw, built["pipeline"], cfg).run()
+    rows = raw.collect()
+    for d in (built["flush"], built["compact_now"]):
+        ix = IncrementalIndexer(d, cfg)
+        for b in range(2):
+            ix.process_batch(spark.createDataFrame(
+                rows[30 * b:30 * (b + 1)], raw.schema), b)
+    IncrementalIndexer(built["compact_now"], cfg).compact_now(spark)
+    compact_index(spark, built["flush"], built["compact_index"])
+    for name, d in built.items():
+        files = glob.glob(f"{d}/segments/**/*.parquet", recursive=True)
+        assert files, name
+        for f in files:
+            cols = set(pq.read_schema(f).names)
+            assert not cols & {"off_blob", "skip_off_offs"}, (name, f)
+            assert "pos_blob" in cols
+        with open(f"{d}/stats.json") as fh:
+            assert json.load(fh)["format"] == FORMAT, name
+
+
+def _digest_module():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "segment_digest",
+        os.path.join(os.path.dirname(__file__), "..", "scripts",
+                     "segment_digest.py"),
     )
-    content = {r["doc_id"]: r["content"].lower() for r in docs.collect()}
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
-    def check(rows):
-        n_occ = 0
-        for r in rows:
-            row = r.asDict()
-            if row["term"] == DOCLEN_TERM:
-                continue
-            ids, tfs, _, offs = decode_segment_row(
-                row, with_positions=True, with_offsets=True
-            )
-            for d, tf, o in zip(ids, tfs, offs):
-                assert len(o) == 2 * tf
-                for i in range(int(tf)):
-                    s, e = int(o[2 * i]), int(o[2 * i + 1])
-                    assert content[int(d)][s:e] == row["term"]
-                    n_occ += 1
-        return n_occ
 
-    mapside = build_segments_mapside(docs, n_shards=2).collect()
-    shuffle = build_segments(
-        build_postings_arrow(docs, with_offsets=True), build_docstats(docs),
-        n_shards=2,
-    ).collect()
-    assert check(mapside) == check(shuffle) > 1000
+def test_segment_digest_columns_are_the_schema():
+    """scripts/segment_digest.py digests the columns of the current
+    SEGMENT_SCHEMA, which it spells out without importing Spark code."""
+    from wiser_spark.operators.segments import SEGMENT_ARROW_SCHEMA
+
+    assert _digest_module().SEGMENT_COLUMNS == tuple(
+        SEGMENT_ARROW_SCHEMA.names)
 
 
 def _term_row(postings):
@@ -309,7 +340,7 @@ def test_selective_decode_reads_only_needed_bags(spark):
         [0, 3 * 5, int(seg["skip_predocs"][1]), 3 * 550, 3 * 551, 7],
         dtype=np.int64,
     )
-    got_ids, got_tfs, _, _ = _decode_term_selective([seg], cand)
+    got_ids, got_tfs, _ = _decode_term_selective([seg], cand)
     at = np.searchsorted(got_ids, cand[np.isin(cand, full_ids)])
     want_at = np.searchsorted(full_ids, cand[np.isin(cand, full_ids)])
     np.testing.assert_array_equal(got_ids[at], full_ids[want_at])
@@ -326,7 +357,7 @@ def test_selective_decode_reads_only_needed_bags(spark):
     poisoned = dict(seg)
     poisoned["docids_blob"] = bytes(blob_d)
     poisoned["tfs_blob"] = bytes(blob_t)
-    got2_ids, got2_tfs, _, _ = _decode_term_selective([poisoned], cand)
+    got2_ids, got2_tfs, _ = _decode_term_selective([poisoned], cand)
     np.testing.assert_array_equal(got2_ids[at], full_ids[want_at])
     np.testing.assert_array_equal(got2_tfs[at], full_tfs[want_at])
 
@@ -335,8 +366,10 @@ def test_partial_decode_strategy_gate():
     """Driver-side strategy: partial decode for big (prefetch_pages >=
     threshold), docid+tf-only terms — INCLUDING terms shared by several
     queries (round 4: the shard kernel's per-term bag cache makes
-    shared partial decode a union, so sharing no longer disqualifies);
-    null pages (old dictionaries) decode fully."""
+    shared partial decode a union, so sharing no longer disqualifies)
+    and the terms of snippet queries (their spans come from the
+    content, not the index); null pages (old dictionaries) decode
+    fully."""
     from wiser_spark.operators.segments import partial_decode_terms
 
     qlist = [
@@ -347,19 +380,17 @@ def test_partial_decode_strategy_gate():
     ]
     pages = {"rare": 1, "hot": 9, "hot2": 9, "shared": 9, "ph1": 9,
              "snip": 9}
-    got = partial_decode_terms(
-        qlist, pages, pos_terms={"shared", "ph1"}, off_terms={"snip"}
-    )
-    # hot/hot2: big + plain -> partial. rare: too small. shared: in a
-    # phrase query's pos_terms. ph1: positions. snip: offsets.
-    assert got == {"hot", "hot2"}
+    got = partial_decode_terms(qlist, pages, pos_terms={"shared", "ph1"})
+    # hot/hot2/snip: big + plain -> partial. rare: too small. shared: in
+    # a phrase query's pos_terms. ph1: positions.
+    assert got == {"hot", "hot2", "snip"}
     # shared by two NON-phrase queries -> now eligible (union decode)
     got2 = partial_decode_terms(
         [(0, ["rare", "shared"], False), (1, ["hot", "shared"], False)],
-        pages, set(), set(),
+        pages, set(),
     )
     assert got2 == {"hot", "shared"}
-    assert partial_decode_terms(qlist, {}, set(), set()) == set()  # null pages
+    assert partial_decode_terms(qlist, {}, set()) == set()  # null pages
 
 
 def test_bag_cache_shares_decodes_across_queries(spark):
@@ -375,18 +406,18 @@ def test_bag_cache_shares_decodes_across_queries(spark):
     full_ids, full_tfs, _ = decode_segment_row(seg)
     cache: dict = {}
     cand1 = np.array([0, 2 * 150], dtype=np.int64)         # bags 0 and 1
-    ids1, tfs1, _, _ = _decode_term_selective([seg], cand1, cache)
+    ids1, tfs1, _ = _decode_term_selective([seg], cand1, cache)
     assert set(cache) == {(0, 0), (0, 1)}
     # poison EVERYTHING: cached bags must serve without any read
     poisoned = dict(seg)
     poisoned["docids_blob"] = b"\xff" * len(seg["docids_blob"])
     poisoned["tfs_blob"] = b"\xff" * len(seg["tfs_blob"])
-    ids1b, tfs1b, _, _ = _decode_term_selective([poisoned], cand1, cache)
+    ids1b, tfs1b, _ = _decode_term_selective([poisoned], cand1, cache)
     np.testing.assert_array_equal(ids1b, ids1)
     np.testing.assert_array_equal(tfs1b, tfs1)
     # a second query's candidates reuse bag 1 and add only bag 4
     cand2 = np.array([2 * 150, 2 * 580], dtype=np.int64)
-    ids2, tfs2, _, _ = _decode_term_selective([seg], cand2, cache)
+    ids2, tfs2, _ = _decode_term_selective([seg], cand2, cache)
     assert set(cache) == {(0, 0), (0, 1), (0, 4)}
     at = np.searchsorted(ids2, cand2)
     np.testing.assert_array_equal(ids2[at], cand2)
@@ -459,7 +490,7 @@ def test_prefetch_pages_in_dictionary_and_partial_path(
         [(0, ["rare", "hot"], False)],
         {"rare": dic["rare"]["prefetch_pages"],
          "hot": dic["hot"]["prefetch_pages"]},
-        set(), set(),
+        set(),
     )
 
 
@@ -715,3 +746,158 @@ def test_bloom_row_layout_refused(spark, tmp_path):
             compact_index(spark, str(d), str(tmp_path / "out"))
         with pytest.raises(ValueError, match="rebuilt"):
             IncrementalIndexer(str(d))
+
+
+STREAM_SCHEMA = (
+    "repo string, path string, commit string, lang string, content string"
+)
+
+
+def _as_v3(index_dir: str, contents: list[str]) -> None:
+    """Rewrite an index in place into the v3 layout: every segment file
+    gains ``off_blob`` (each occurrence's [s,e) byte span in the
+    lowered content, delta-varint'd per doc like ``pos_blob``) and
+    ``skip_off_offs`` (its byte offset at each 128-posting bag), and
+    stats.json records v3. ``contents[d]`` is doc ``d``'s text; every
+    doc's token stream read back from the positions must spell it."""
+    import glob
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wiser_spark.functions.tokenize import tokenize_text
+    from wiser_spark.operators.segments import PACK_SIZE, _delta_varint_runs
+
+    spans = [[m.span() for m in re.finditer(r"[a-z0-9_]+", c.lower())]
+             for c in contents]
+    seen: dict[int, dict[int, str]] = {}
+    files = glob.glob(f"{index_dir}/segments/**/*.parquet", recursive=True)
+    for f in files:
+        table = pq.read_table(f)
+        offs, skips = [], []
+        for r in table.to_pylist():
+            if r["term"] == DOCLEN_TERM:
+                offs.append(b"")
+                skips.append([])
+                continue
+            ids, tfs, plists = decode_segment_row(r, with_positions=True)
+            flat = []
+            for d, ps in zip(ids.tolist(), plists):
+                for p in ps.tolist():
+                    seen.setdefault(d, {})[p] = r["term"]
+                    flat.extend(spans[d][p])
+            starts = np.cumsum(tfs) - tfs
+            blob, skip = _delta_varint_runs(
+                np.array(flat, dtype=np.int64), 2 * starts,
+                2 * starts[::PACK_SIZE],
+            )
+            offs.append(blob)
+            skips.append(skip.tolist())
+        table = table.add_column(
+            table.schema.get_field_index("pos_blob") + 1, "off_blob",
+            pa.array(offs, pa.binary()),
+        )
+        table = table.add_column(
+            table.schema.get_field_index("skip_pos_offs") + 1,
+            "skip_off_offs", pa.array(skips, pa.list_(pa.int64())),
+        )
+        pq.write_table(table, f)
+        # the rewrite invalidates Hadoop's checksum sidecar
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    for d, toks in seen.items():
+        assert [toks[p] for p in sorted(toks)] == tokenize_text(contents[d])
+    with open(f"{index_dir}/stats.json") as fh:
+        meta = json.load(fh)
+    meta["format"] = "wiser-spark-segment-v3"
+    with open(f"{index_dir}/stats.json", "w") as fh:
+        json.dump(meta, fh)
+
+
+def test_v3_index_reads_resumes_and_compacts(spark, tmp_path):
+    """An index of the v3 layout (offsets stored) answers a query log,
+    snippets included, exactly as the same index without them; an
+    IncrementalIndexer resume on it flushes; compact_now and
+    compact_index of it write v4 files without the offset columns, and
+    the segment digest over the current schema's columns does not see
+    the difference."""
+    import contextlib
+    import glob
+    import io
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from wiser_spark.operators.segments import compact_index
+    from wiser_spark.streaming.incremental import IncrementalIndexer
+
+    digest = _digest_module()
+
+    def digest_lines(d, *mode):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            digest.main(d, *mode)
+        return out.getvalue()
+
+    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
+    # one key per row in doc order, so the streaming doc ids are the
+    # row numbers
+    rows = [dict(r, repo="r", path=f"p{i:05d}", commit="c")
+            for i, r in enumerate(make_corpus(200, 5))]
+    contents = [r["content"] for r in rows]
+    docs = spark.createDataFrame(list(enumerate(contents)),
+                                 "doc_id long, content string")
+    qlog = [
+        (0, ["return"], False),
+        (1, ["return", "import"], False),
+        (2, ["def", "self", "return"], False),
+        (3, ["import", "return"], True),
+        (4, ["import", "import"], True),
+        (5, ["return", "zz_absent_zz"], False),
+    ]
+
+    def answers(d):
+        idx = SegmentIndex(spark, d)
+        try:
+            return [tuple(r) for r in idx.search_batch(
+                qlog, k=10, return_snippets=True, docs=docs).collect()]
+        finally:
+            idx.close()
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [tuple(r[c] for c in ("repo", "path", "commit", "lang",
+                                  "content")) for r in rows[lo:hi]],
+            STREAM_SCHEMA)
+
+    v4, v3 = str(tmp_path / "v4"), str(tmp_path / "v3")
+    ix = IncrementalIndexer(v4, cfg)
+    for b, (lo, hi) in enumerate(((0, 60), (60, 120), (120, 160))):
+        ix.process_batch(batch(lo, hi), b)
+    shutil.copytree(v4, v3)
+    _as_v3(v3, contents)
+    assert all("off_blob" in pq.read_schema(f).names for f in glob.glob(
+        f"{v3}/segments/**/*.parquet", recursive=True))
+    want = answers(v4)
+    assert answers(v3) == want and len({r[0] for r in want}) == 5
+    for mode in ((), ("--logical",)):
+        assert digest_lines(v3, *mode) == digest_lines(v4, *mode)
+
+    for d in (v4, v3):
+        compact_index(spark, d, f"{d}_compacted")
+        resumed = IncrementalIndexer(d, cfg)
+        resumed.process_batch(batch(160, 200), 3)
+    assert answers(f"{v3}_compacted") == answers(f"{v4}_compacted")
+    assert answers(v3) == answers(v4)
+    IncrementalIndexer(v3, cfg).compact_now(spark)
+    assert answers(v3) == answers(v4)
+    for d in (v3, f"{v3}_compacted"):
+        files = glob.glob(f"{d}/segments/**/*.parquet", recursive=True)
+        assert files
+        for f in files:
+            assert not {"off_blob", "skip_off_offs"} & set(
+                pq.read_schema(f).names)
+        with open(f"{d}/stats.json") as fh:
+            assert json.load(fh)["format"] == FORMAT

@@ -268,8 +268,7 @@ def _per_term_merge(
             ))
             continue
         dec = sorted(
-            (decode_segment_row(r, with_positions=True, with_offsets=True)
-             for r in parts),
+            (decode_segment_row(r, with_positions=True) for r in parts),
             key=lambda d: d[0][0],
         )
         ids = np.concatenate([d[0] for d in dec])
@@ -277,7 +276,6 @@ def _per_term_merge(
         out[shard].append(_encode_term_flat(
             shard, term, ids, np.concatenate([d[1] for d in dec]),
             np.concatenate(plists),
-            np.concatenate([o for d in dec for o in d[3]]),
             (side(ids, plists, 1), side(ids, plists, -1))
             if len(ids) > 1 else None,
         ))

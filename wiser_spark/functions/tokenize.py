@@ -49,8 +49,9 @@ def tokenize_series(contents):
 # Tokens are maximal runs of these bytes, so spans fall out of a purely
 # vectorized run-length pass over the UTF-8 buffer. ASCII-only alphabet
 # means a multi-byte character can never be part of a token, and byte
-# offsets into the lowered content ARE the offsets the reference stores
-# per posting (offset pairs, reference ``posting.h:42-152``).
+# offsets into the lowered content are the offsets the reference stores
+# per posting (offset pairs, reference ``posting.h:42-152``); snippets
+# derive them here instead of reading them from the index.
 _TOKEN_BYTES = np.zeros(256, dtype=bool)
 for _c in b"abcdefghijklmnopqrstuvwxyz0123456789_":
     _TOKEN_BYTES[_c] = True
@@ -63,7 +64,8 @@ def token_spans_batch(low):
     per-occurrence [start, end) byte offsets RELATIVE to each string, in
     document order. Aligned 1:1 with the non-empty pieces of
     ``split_pattern_regex(low, TOKEN_SPLIT_REGEX)`` — both define a token
-    as a maximal [a-z0-9_] run — which is asserted by the callers.
+    as a maximal [a-z0-9_] run — which ``highlight.matched_spans``
+    checks.
     """
     import pyarrow as pa
 

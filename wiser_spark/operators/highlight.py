@@ -11,33 +11,32 @@ Faithful rendition of the reference's unified highlighter
   * the top ``n_passages`` passages by score are re-ordered by start
     offset and matched term occurrences are wrapped in <b>...</b>.
 
-Matches come from the index's per-posting OFFSET PAIRS — not from
-re-tokenizing the document (``query_processing.h:446-492``: phrase
-queries filter offsets by matched positions first). The offsets are byte
-spans into the LOWERED content; the token alphabet is ASCII so they map
-1:1 onto the original content, which is what gets wrapped.
-
-The standalone ``highlight()`` operator recomputes offsets from the
-content (for use without an index); ``SegmentIndex.search(...,
-return_snippets=True)`` feeds stored offsets through the same scorer.
+Matches are the query terms' occurrences; for a phrase, only those at
+matched phrase positions (the reference's FilterOffsetByPosition,
+``query_processing.h:446-492``). The reference reads them from offset
+pairs stored per posting, because its corpus is tokenized offline. This
+engine tokenizes, so ``matched_spans`` recomputes them from the winners'
+content, which the reply reads anyway, with the encoder's own Arrow
+lowercasing and tokens: positions are the indexed positions, and spans
+are exact byte spans into the lowered text. ``snippets`` is the one
+snippet tail: spans, then ``snippet_from_spans``, which wraps them.
 """
 
 from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from wiser_spark.functions.tokenize import token_spans_batch
 
 # reference highlighter.h:437-450 (Lucene's average passage length)
 PASSAGE_PIVOT = 87.0
 PASSAGE_K1 = 1.2
 PASSAGE_B = 0.75
-
-HIGHLIGHT_SCHEMA = "doc_id long, snippet string"
 
 _SENT_BREAK = re.compile(r"(?<=[.!?])\s+|\n+")
 
@@ -107,99 +106,89 @@ def highlight_doc(
     return "…".join(out)
 
 
-def _find_offsets(content: str, terms: list[str]) -> list[list[int]]:
-    """Per-term flat [s,e,...] occurrence offsets by re-tokenization —
-    the no-index path (token = maximal [a-z0-9_] run, exactly the
-    engine tokenizer)."""
-    low = content.lower()
-    per_term: dict[str, list[int]] = {t: [] for t in terms}
-    for m in re.finditer(r"[a-z0-9_]+", low):
-        tok = m.group()
-        if tok in per_term:
-            per_term[tok].extend((m.start(), m.end()))
-    return [per_term[t] for t in terms]
+def matched_spans(
+    texts: list[str], queries: list[tuple[list[str], bool]]
+) -> tuple[pa.Array, list[list[list[int]]]]:
+    """The Arrow-lowered ``texts`` and, per text and per term of its
+    query (terms, is_phrase), the flat [s,e,...] byte spans of the
+    matched occurrences in the lowered text: every occurrence for a
+    term query; for a phrase of two or more terms, term i's occurrences
+    at positions p+i over the match starts p.
+
+    One vectorized pass over all texts: ``pc.utf8_lower`` (the
+    encoder's lowercasing), then ``token_spans_batch``. Its tokens,
+    maximal [a-z0-9_] runs, are the encoder's non-empty split pieces, so
+    a token's index in its text is its indexed position. The tokens are
+    matched against the query terms with ``pc.index_in`` as one string
+    array over the lowered bytes themselves: offsets s0,e0,s1,e1,...
+    make every even element a token and every odd one the gap to the
+    next token, whose codes are dropped."""
+    low = pc.utf8_lower(pa.array(texts, pa.string()))
+    counts, starts, ends = token_spans_batch(low)
+    text_at = np.frombuffer(low.buffers()[1], np.int32)[:-1]
+    edges = np.empty(2 * starts.size, dtype=np.int32)
+    edges[0::2] = starts + np.repeat(text_at, counts)
+    edges[1::2] = ends + np.repeat(text_at, counts)
+    toks = pa.StringArray.from_buffers(
+        max(edges.size - 1, 0), pa.py_buffer(edges), low.buffers()[2])
+    vocab = sorted({t for terms, _ in queries for t in terms})
+    code_of = {t: i for i, t in enumerate(vocab)}
+    codes = pc.index_in(toks, value_set=pa.array(vocab, pa.string()))
+    codes = codes.fill_null(-1).to_numpy(zero_copy_only=False)[0::2]
+    bounds = np.concatenate(([0], np.cumsum(counts)))
+    out = []
+    for j, (terms, phrase) in enumerate(queries):
+        lo, hi = int(bounds[j]), int(bounds[j + 1])
+        c, want = codes[lo:hi], [code_of[t] for t in terms]
+        if phrase and len(terms) > 1:
+            match = np.ones(max(c.size - len(want) + 1, 0), dtype=bool)
+            for i, w in enumerate(want):
+                match &= c[i:i + match.size] == w
+            p = np.flatnonzero(match)
+            at = [p + i for i in range(len(want))]
+        else:
+            at = [np.flatnonzero(c == w) for w in want]
+        out.append([
+            np.stack((starts[lo + a], ends[lo + a]), axis=1).ravel().tolist()
+            for a in at
+        ])
+    return low, out
 
 
-def _retokenize_snippet(content: str, terms: list[str], n_passages: int) -> str:
-    """Re-tokenization fallback, length-safe: offsets are computed over
-    ``content.lower()``, so wrap the ORIGINAL text only when lowering
-    preserved length (the overwhelmingly common case) — a
-    length-changing case mapping (e.g. 'İ' -> 'i̇') shifts every later
-    offset, so display the lowered text the offsets are valid for."""
-    low = content.lower()
-    offs = _find_offsets(content, terms)
-    return highlight_doc(content if len(low) == len(content) else low,
-                         offs, n_passages)
-
-
-def snippet_from_stored_offsets(
-    content: str,
-    per_term_offsets: list[list[int]],
-    terms: list[str],
+def snippet_from_spans(
+    content: str, low: str, per_term_spans: list[list[int]],
     n_passages: int = 3,
 ) -> str:
-    """highlight_doc over INDEX-STORED offsets, made total:
-
-    * offsets absent (index built without the offsets column) -> fall
-      back to re-tokenization (term queries keep exact snippets; phrase
-      offset-filtering degrades to all-occurrence bolding);
-    * non-ASCII content -> the stored values are BYTE offsets into the
-      lowered UTF-8, so convert them to char offsets and highlight the
-      LOWERED text (tokens are lowercase already; ASCII content — the
-      normal case — keeps the original text and needs no conversion)."""
-    if not any(len(o) for o in per_term_offsets):
-        return _retokenize_snippet(content, terms, n_passages)
+    """highlight_doc over byte spans into ``low``, the Arrow-lowered
+    ``content``. ASCII content keeps its original text (lowering keeps
+    its length and bytes are chars). Other content shows ``low`` with
+    the spans converted to char offsets: the tokens are lowercase, and
+    Python's own lowercasing can differ from Arrow's (U+0130 'İ' grows
+    by a code point), which would shift every later span."""
     if content.isascii():
-        return highlight_doc(content, per_term_offsets, n_passages)
-    import numpy as np
-
-    low = content.lower()
+        return highlight_doc(content, per_term_spans, n_passages)
     lb = np.frombuffer(low.encode("utf-8"), dtype=np.uint8)
-    # char index of each byte = count of non-continuation bytes before it
-    char_of = np.cumsum((lb & 0xC0) != 0x80) - 1
-    char_of = np.append(char_of, len(low))
-    last = len(lb)
+    # char index of each byte = count of non-continuation bytes before
+    # it; one past the last byte maps to the length
+    char_of = np.append(np.cumsum((lb & 0xC0) != 0x80) - 1, len(low))
     conv = [
-        [int(char_of[min(int(b), last)]) for b in offs]
-        for offs in per_term_offsets
+        char_of[np.asarray(spans, dtype=np.int64)].tolist()
+        for spans in per_term_spans
     ]
-    # Python str.lower() can diverge from the Arrow utf8_lower used at
-    # index time (full vs simple case mappings, e.g. U+0130 'İ' -> 'i̇'
-    # grows by one codepoint), shifting every stored byte offset after
-    # the divergence. Validate each converted span actually spells its
-    # term; any mismatch -> re-tokenize instead of mis-bolding
-    for offs, t in zip(conv, terms):
-        for i in range(0, len(offs), 2):
-            if low[offs[i] : offs[i + 1]] != t:
-                return _retokenize_snippet(content, terms, n_passages)
     return highlight_doc(low, conv, n_passages)
 
 
-def highlight(
-    docs: DataFrame,
-    topk: DataFrame,
-    terms: list[str],
+def snippets(
+    texts: list[str], queries: list[tuple[list[str], bool]],
     n_passages: int = 3,
-    content_col: str = "content",
-) -> DataFrame:
-    """(doc_id, snippet) for every doc in ``topk`` — the join pulls only
-    the k result docs' content (broadcast the k-row side), then an Arrow
-    batch UDF scores passages and wraps matches."""
-    terms_l = [t.lower() for t in terms]
-    hits = docs.join(
-        F.broadcast(topk.select("doc_id")), "doc_id"
-    ).select("doc_id", content_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "snippet": [
-                        highlight_doc(c, _find_offsets(c, terms_l), n_passages)
-                        for c in pdf[content_col]
-                    ],
-                }
-            )
-
-    return hits.mapInPandas(run, HIGHLIGHT_SCHEMA)
+) -> list[str]:
+    """One snippet per text, of the matches of its query (terms,
+    is_phrase): ``matched_spans`` then ``snippet_from_spans``."""
+    low, spans = matched_spans(texts, queries)
+    return [
+        snippet_from_spans(
+            text, text if text.isascii() else low[j].as_py(), spans[j],
+            n_passages,
+        )
+        for j, text in enumerate(texts)
+    ]

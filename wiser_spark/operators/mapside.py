@@ -170,10 +170,7 @@ def encode_doc_batches(
     # Arrow C++ — no Python string objects exist in the hot path
     # (the earlier pandas/.findall variant was memory-bandwidth
     # bound on PyObject churn and capped multi-core scaling)
-    from wiser_spark.functions.tokenize import token_spans_batch
-
     code_chunks, doc_chunks, pos_chunks = [], [], []
-    start_chunks, end_chunks = [], []
     id_chunks, len_chunks = [], []
     vocab_chunks = []
     for rb in arrow_batches:
@@ -208,14 +205,6 @@ def encode_doc_batches(
         pos_chunks.append(
             np.arange(total, dtype=np.int64) - np.repeat(ends - counts, counts)
         )
-        # byte spans of the SAME token stream (offsets column):
-        # maximal [a-z0-9_] runs == non-empty split pieces, asserted
-        sp_counts, sp_starts, sp_ends = token_spans_batch(low)
-        assert sp_starts.size == total and np.array_equal(
-            sp_counts, counts
-        ), "token spans misaligned with split tokens"
-        start_chunks.append(sp_starts)
-        end_chunks.append(sp_ends)
         id_chunks.append(ids)
         # reference BodyLength(): non-empty ' '-split chunks (B3)
         len_chunks.append(
@@ -265,9 +254,7 @@ def encode_doc_batches(
     del code_chunks, local_to_global, rank_of
     docs_rep = np.concatenate(doc_chunks)
     pos_all = np.concatenate(pos_chunks)
-    starts_all = np.concatenate(start_chunks)
-    ends_all = np.concatenate(end_chunks)
-    del doc_chunks, pos_chunks, start_chunks, end_chunks
+    del doc_chunks, pos_chunks
     if codes.size == 0:  # docs exist but none tokenized to anything
         yield sentinel
         return
@@ -303,19 +290,13 @@ def encode_doc_batches(
         )
     del codes, docs_rep
     p = pos_all[order]
-    del pos_all
-    off_flat = np.empty(2 * p.size, dtype=np.int64)
-    off_flat[0::2] = starts_all[order]
-    del starts_all
-    off_flat[1::2] = ends_all[order]
-    del ends_all, order
+    del pos_all, order
     # the encoder holds the only references from here on, so it frees
     # each input as soon as it is consumed
     batches = encode_postings(
-        shard_id, vocab, term_bounds, posting_doc, tfs_all, p, off_flat,
-        blooms,
+        shard_id, vocab, term_bounds, posting_doc, tfs_all, p, blooms,
     )
-    del vocab, term_bounds, posting_doc, tfs_all, p, off_flat, blooms
+    del vocab, term_bounds, posting_doc, tfs_all, p, blooms
     yield from batches
     yield sentinel
 
@@ -368,7 +349,6 @@ def encode_postings(
     posting_doc: np.ndarray,
     tfs_all: np.ndarray,
     p: np.ndarray | None,
-    off_flat: np.ndarray | None,
     blooms: tuple[np.ndarray, np.ndarray] | None,
 ) -> Iterator[pa.RecordBatch]:
     """THE shard encoder: one shard's postings -> its term rows, one per
@@ -377,8 +357,9 @@ def encode_postings(
 
     Term t = ``vocab[t]`` (ascending) owns postings [term_bounds[t],
     term_bounds[t+1]), doc-ascending. ``p`` holds the flat positions
-    (tf per posting), ``off_flat`` the flat [s,e,...] pairs (2*tf per
-    posting); None writes b"" blobs and empty skip lists. ``blooms`` is
+    (tf per posting); None writes b"" blobs and empty skip lists. No
+    offsets are stored: a snippet derives its spans from the content
+    (``highlight.matched_spans``). ``blooms`` is
     the (end, begin) filter matrices of ``neighbor_blooms`` boxed into the
     bloom columns of the terms of BLOOM_MIN_DF or more postings; other
     terms' bloom columns, and all when ``blooms`` is None, are null.
@@ -387,7 +368,7 @@ def encode_postings(
     PACK_SIZE (varint tail, one bloom box), so each column is built for
     ALL terms at once as one flat buffer plus per-term byte offsets (one
     delta+varint pass per stream, tail and bloom boxes spliced in one
-    vectorized pass, position/offset blobs as zero-copy slices). Only
+    vectorized pass, position blobs as zero-copy slices). Only
     df >= PACK_SIZE terms take the framed per-term path. Rows are
     BYTE-IDENTICAL to _encode_term_flat, in term order."""
     from wiser_spark.functions.packing import varint_tail_boxes
@@ -399,7 +380,7 @@ def encode_postings(
     if n_terms == 0:
         return
     df = term_hi - term_lo
-    has_pos, has_off = p is not None, off_flat is not None
+    has_pos = p is not None
     # terms with blooms, and their rows [bloom_lo, bloom_hi) of blooms
     bloomed = (df >= BLOOM_MIN_DF) & (blooms is not None)
     bloom_hi = np.cumsum(np.where(bloomed, df, 0))
@@ -433,7 +414,6 @@ def encode_postings(
     tfs = tail_boxes(np.frombuffer(tf_blob, dtype=np.uint8), tf_bounds, tail)
     del tf_blob, tf_lens
     pos = term_stream(p, pos_starts, occ_bounds)
-    offs = term_stream(off_flat, 2 * pos_starts, 2 * occ_bounds)
     max_tf = np.maximum.reduceat(tfs_all, term_lo)
     # the framed path's rows, keyed by term index
     framed_rows: dict[int, dict] = {}
@@ -443,13 +423,12 @@ def encode_postings(
         framed_rows[t] = _encode_term_flat(
             shard_id, vocab[t].as_py(), posting_doc[lo:hi], tfs_all[lo:hi],
             p[o_lo:o_hi] if has_pos else None,
-            off_flat[2 * o_lo:2 * o_hi] if has_off else None,
             None if blooms is None else tuple(
                 side[bloom_lo[t]:bloom_hi[t]] for side in blooms
             ),
         )
-    del posting_doc, tfs_all, p, off_flat, pos_starts
-    blobs = [docids, tfs, pos, offs]
+    del posting_doc, tfs_all, p, pos_starts
+    blobs = [docids, tfs, pos]
     if blooms is None:
         empty = (np.zeros(0, np.uint8), np.zeros(n_terms + 1, np.int64))
         bloom_boxes = [empty] * len(BLOOM_COLUMNS)
@@ -488,11 +467,9 @@ def encode_postings(
             "docids_blob": _binary(docids, t0, t1),
             "tfs_blob": _binary(tfs, t0, t1),
             "pos_blob": _binary(pos, t0, t1),
-            "off_blob": _binary(offs, t0, t1),
             "skip_predocs": zero, "skip_docid_offs": zero,
             "skip_tf_offs": zero,
             "skip_pos_offs": zero if has_pos else empty_list,
-            "skip_off_offs": zero if has_off else empty_list,
             "skip_max_tfs": _lists(np.arange(m + 1), max_tf[t0:t1]),
         }
         valid = bloomed[t0:t1]

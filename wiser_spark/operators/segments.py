@@ -10,13 +10,12 @@ B4-B14):
   tfs_blob    : raw TFs, same framing, NO delta (``:560``)
   pos_blob    : per-doc delta-encoded positions, one varint run per doc,
                 doc boundaries derived from TFs (tf == positions count)
-  off_blob    : per-doc delta-encoded OFFSET PAIRS — the flat
-                [s0,e0,s1,e1,...] byte offsets of each occurrence in the
-                lowered content, one varint run per doc, 2*tf values per
-                doc (the reference's 4th term-entry column, dumped after
-                positions, ``flash_engine_dumper.h:459-461,565-575``;
-                used for snippet highlighting, ``query_processing.h:
-                446-492``). Empty when the build path had no offsets.
+  (no offsets): the reference stores each occurrence's byte-offset pair
+                as a 4th column (``flash_engine_dumper.h:459-461``)
+                because its corpus is tokenized offline; this engine
+                tokenizes, so a snippet reply derives the matched spans
+                from the winners' content it reads anyway
+                (``highlight.matched_spans``)
   skip_*      : one entry per 128 postings: preceding docID + byte
                 offsets of the frame in each blob (the reference's
                 per-128-bag skip rows, ``flash_containers.h:236-308``) —
@@ -110,10 +109,10 @@ from wiser_spark.plans.empty import empty_frame
 
 SEGMENT_SCHEMA = (
     "shard_id int, term string, df_shard int, "
-    "docids_blob binary, tfs_blob binary, pos_blob binary, off_blob binary, "
+    "docids_blob binary, tfs_blob binary, pos_blob binary, "
     "skip_predocs array<long>, skip_docid_offs array<long>, "
     "skip_tf_offs array<long>, skip_pos_offs array<long>, "
-    "skip_off_offs array<long>, skip_max_tfs array<long>, "
+    "skip_max_tfs array<long>, "
     "bloom_end_blob binary, bloom_begin_blob binary, "
     "skip_bloom_end_offs array<long>, skip_bloom_begin_offs array<long>"
 )
@@ -137,8 +136,11 @@ BLOOM_COLUMNS = (
 DOCLEN_TERM = ""
 
 # stats.json "format" of the one layout every writer emits: doc lengths
-# in sentinel rows, phrase blooms as columns of the term row
-FORMAT = "wiser-spark-segment-v3"
+# in sentinel rows, phrase blooms as columns of the term row, no
+# offsets. v3 files also carry off_blob/skip_off_offs, columns no
+# reader selects, so they read, resume and compact as v4
+FORMAT = "wiser-spark-segment-v4"
+READABLE_FORMATS = (FORMAT, "wiser-spark-segment-v3")
 
 
 def _no_blooms() -> dict:
@@ -164,12 +166,10 @@ def doclen_sentinel_row(shard_id: int, doc_ids, doclens) -> dict:
         "docids_blob": docids_blob,
         "tfs_blob": chars_blob,
         "pos_blob": varint_encode(doclens),
-        "off_blob": b"",
         "skip_predocs": [],
         "skip_docid_offs": docid_offs.tolist(),
         "skip_tf_offs": char_offs.tolist(),
         "skip_pos_offs": [],
-        "skip_off_offs": [],
         "skip_max_tfs": [],
         **_no_blooms(),
     }
@@ -227,16 +227,14 @@ def _encode_term_flat(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     flat_pos: np.ndarray | None,
-    flat_off: np.ndarray | None = None,
     blooms: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> dict:
     """One term within a shard -> one segment row. Fully vectorized.
 
     ``doc_ids`` must be ascending; ``flat_pos`` (if given) is the
-    concatenation of each doc's ascending positions in that doc order;
-    ``flat_off`` (if given) is the matching flat [s,e,s,e,...] offset
-    pairs (2*tf values per doc). Each is delta+varint encoded in ONE
-    pass (per-doc boundaries fixed up vectorially). ``blooms`` holds
+    concatenation of each doc's ascending positions in that doc order,
+    delta+varint encoded in ONE pass (per-doc boundaries fixed up
+    vectorially). ``blooms`` holds
     the (end, begin) per-posting filter matrices ((n, nbytes) uint8 in
     docID order) boxed into the bloom columns; None leaves them null."""
     docids_blob, docid_offs = encode_column(delta_encode(doc_ids))
@@ -249,14 +247,6 @@ def _encode_term_flat(
         )
     else:
         pos_blob, skip_pos = b"", np.zeros(0, dtype=np.int64)
-    if flat_off is not None:
-        # offset pairs interleave to a nondecreasing stream within a doc
-        # (s0 <= e0 <= s1 <= ...), so the same per-run delta applies
-        off_blob, skip_off = _delta_varint_runs(
-            flat_off, 2 * starts, 2 * starts[::PACK_SIZE]
-        )
-    else:
-        off_blob, skip_off = b"", np.zeros(0, dtype=np.int64)
 
     # skip entry i covers postings [i*128, (i+1)*128): preceding docID
     # (doc before the bag, 0 for the first — reference pre-doc-id rows,
@@ -277,12 +267,10 @@ def _encode_term_flat(
         "docids_blob": docids_blob,
         "tfs_blob": tfs_blob,
         "pos_blob": pos_blob,
-        "off_blob": off_blob,
         "skip_predocs": pre.tolist(),
         "skip_docid_offs": docid_offs.tolist(),
         "skip_tf_offs": tf_offs.tolist(),
         "skip_pos_offs": skip_pos.tolist(),
-        "skip_off_offs": skip_off.tolist(),
         "skip_max_tfs": max_tfs.astype(np.int64).tolist(),
         **_no_blooms(),
     }
@@ -294,10 +282,10 @@ def _encode_term_flat(
 def build_segments(
     postings: DataFrame, docstats: DataFrame, n_shards: int
 ) -> DataFrame:
-    """postings (term, doc_id, tf[, positions][, offsets]) + docstats
-    (doc_id, doclen) -> segment rows, each shard's term rows (in term
-    order, so parquet min/max stats prune term lookups) followed by its
-    doc-length sentinel row.
+    """postings (term, doc_id, tf[, positions]) + docstats (doc_id,
+    doclen) -> segment rows, each shard's term rows (in term order, so
+    parquet min/max stats prune term lookups) followed by its
+    doc-length sentinel row. An ``offsets`` column is not stored.
 
     One Arrow group per shard: the (doc_id % n_shards) shuffle is the
     ONLY data movement of the segment stage; the group's postings are
@@ -340,7 +328,7 @@ def build_segments(
             np.concatenate(([0], np.cumsum(runs.field("counts")))),
             postings["doc_id"].to_numpy().astype(np.int64),
             postings["tf"].to_numpy().astype(np.int64),
-            flat("positions"), flat("offsets"), None,
+            flat("positions"), None,
         ))
         if doclens.num_rows:
             batches.append(sentinel_batch(
@@ -468,22 +456,15 @@ def _parse_shard_rows(seg_pdf: "pd.DataFrame"):
     return rows_by_term, sentinel_rows
 
 
-def _decode_terms(rows_by_term, terms: set, need_pos: bool, need_off: bool):
-    """Decode each term's (possibly multi-generation) rows once:
-    term -> (ids, tfs, plists, olists), docID-ascending."""
-    decoded = {}
-    for t in terms:
-        parts = [
-            decode_segment_row(r, with_positions=need_pos, with_offsets=need_off)
-            for r in rows_by_term[t]
-        ]
-        parts.sort(key=lambda p: int(p[0][0]))
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        plists = [pl for p in parts for pl in p[2]] if need_pos else None
-        olists = [ol for p in parts for ol in p[3]] if need_off else None
-        decoded[t] = (ids, tfs, plists, olists)
-    return decoded
+def _decode_term(rows, need_pos: bool):
+    """Decode one term's (possibly multi-generation) rows:
+    (ids, tfs, plists), docID-ascending."""
+    parts = [decode_segment_row(r, with_positions=need_pos) for r in rows]
+    parts.sort(key=lambda p: int(p[0][0]))
+    ids = np.concatenate([p[0] for p in parts])
+    tfs = np.concatenate([p[1] for p in parts])
+    plists = [pl for p in parts for pl in p[2]] if need_pos else None
+    return ids, tfs, plists
 
 
 # B13/Q14: the reference packs a 16-bit prefetch-zone page count into
@@ -498,14 +479,12 @@ PREFETCH_PAGE_BYTES = 4096
 PARTIAL_DECODE_MIN_PAGES = 4  # don't bother under ~16 KiB of docid+tf
 
 
-def partial_decode_terms(
-    qlist, pages_map, pos_terms, off_terms
-) -> set:
+def partial_decode_terms(qlist, pages_map, pos_terms) -> set:
     """Driver-side strategy pick: terms eligible for skip-based partial
     decode. A term qualifies when (a) its posting column is big enough
     that skipping frames pays (prefetch_pages >= PARTIAL_DECODE_MIN_
     PAGES — dictionaries without the field decode fully) and (b) no
-    query needs its positions/offsets streams (those decode full).
+    query needs its positions stream (that decodes full).
 
     Terms SHARED by several queries are eligible too (round-4 upgrade;
     r03 decoded them fully): the shard kernel keeps one per-term BAG
@@ -518,7 +497,6 @@ def partial_decode_terms(
         t
         for t in terms
         if t not in pos_terms
-        and t not in off_terms
         and (pages_map.get(t) or 0) >= PARTIAL_DECODE_MIN_PAGES
     }
 
@@ -583,7 +561,7 @@ def _decode_term_selective(rows, cand, bag_cache: dict | None = None,
     bags' POSITIONAL runs (phrase block-max) through ``pos_cache``,
     same keying.
 
-    Returns (ids, tfs, plists|None, None) covering every candidate
+    Returns (ids, tfs, plists|None) covering every candidate
     that exists in the term; non-selected bags are never touched."""
     if bag_cache is None:
         bag_cache = {}
@@ -630,7 +608,7 @@ def _decode_term_selective(rows, cand, bag_cache: dict | None = None,
         ids, tfs = ids[order], tfs[order]
         if with_positions:
             plists = [plists[j] for j in order]
-    return ids, tfs, plists, None
+    return ids, tfs, plists
 
 
 def _topk_blockmax_single(rows, k, idf_t, cache, k1, codes_for,
@@ -967,25 +945,24 @@ def _topk_blockmax_conj(rows_by_term, terms_l, k, idfs, cache, k1,
             pc = pos_caches.setdefault(lead, {})
             if key not in pc:
                 pc[key] = _decode_bag_positions(r, b, lead_tfs, n_bags)
-            views = {lead: (cand, lead_tfs, pc[key], None)}
+            views = {lead: (cand, lead_tfs, pc[key])}
         else:
-            views = {lead: (cand, lead_tfs, None, None)}
+            views = {lead: (cand, lead_tfs, None)}
         for t in others:
-            ids_t, tfs_t, pl_t, _ = _decode_term_selective(
+            views[t] = _decode_term_selective(
                 rows_by_term[t], cand, bag_caches.setdefault(t, {}),
                 with_positions=phrase,
                 pos_cache=(
                     pos_caches.setdefault(t, {}) if phrase else None
                 ),
             )
-            views[t] = (ids_t, tfs_t, pl_t, None)
-            cand = cand[np.isin(cand, ids_t)]
+            cand = cand[np.isin(cand, views[t][0])]
             if cand.size == 0:
                 break
         if cand.size == 0:
             continue
         if phrase:
-            cand, _, _ = _phrase_intersect(views, terms_l, cand)
+            cand = _phrase_intersect(views, terms_l, cand)
             if cand.size == 0:
                 continue
         codes = codes_for(cand)
@@ -1055,13 +1032,12 @@ def _bloom_prune(cand, decoded, terms_l, rows_by_term, bloom_cfg=None):
 def _phrase_intersect(decoded, terms_l, cand):
     """Fully vectorized adjusted-position intersect: one key per
     (candidate, position) as cand_idx * 2^32 + (pos - i + k_terms);
-    phrase docs = docs surviving the k-way key intersection. Returns
-    (cand_filtered, surviving_keys, cand_pre) — the keys feed snippet
-    offset filtering. No per-candidate Python loop."""
+    phrase docs = docs surviving the k-way key intersection. No
+    per-candidate Python loop."""
     n_terms = len(terms_l)
     key_sets = []
     for i, t in enumerate(terms_l):
-        ids, tfs, plists, _ = decoded[t]
+        ids, tfs, plists = decoded[t]
         at = np.searchsorted(ids, cand)
         cand_tfs = tfs[at]
         pos_cat = (
@@ -1085,44 +1061,8 @@ def _phrase_intersect(decoded, terms_l, cand):
     for ks in key_sets[1:]:
         surv = surv[np.isin(surv, ks)]
         if surv.size == 0:
-            return surv[:0], surv, cand
-    return cand[np.unique(surv >> np.int64(32))], surv, cand
-
-
-def _winner_offsets(decoded, terms_l, winners, phrase_surv, cand_pre):
-    """Matched offset pairs per term for the <= k shard-local winners
-    only (per-doc Python over k docs — never over candidates):
-    ExpandOffsets for term queries; FilterOffsetByPosition for phrases
-    (reference query_processing.h:446-492). Returns one
-    [per-term flat [s,e,...] list] per winner."""
-    n_terms = len(terms_l)
-    offs_col = []
-    for doc in winners:
-        per_term = []
-        for i, t in enumerate(terms_l):
-            ids, tfs, plists, olists = decoded[t]
-            at = int(np.searchsorted(ids, doc))
-            o = np.asarray(olists[at], dtype=np.int64)
-            if o.size == 0:
-                # index without stored offsets (positions-only builds):
-                # emit no spans so the snippet layer falls back to
-                # re-tokenization — also for phrase queries, which
-                # would otherwise index into the empty span array
-                per_term.append([])
-                continue
-            if phrase_surv is not None and n_terms > 1:
-                ci = int(np.searchsorted(cand_pre, doc))
-                mine = phrase_surv[(phrase_surv >> np.int64(32)) == ci]
-                pos_i = np.unique(
-                    (mine & np.int64(0xFFFFFFFF)) + i - n_terms
-                )
-                j = np.searchsorted(plists[at], pos_i)
-                pairs = np.stack([o[2 * j], o[2 * j + 1]], axis=1).ravel()
-                per_term.append(pairs.tolist())
-            else:
-                per_term.append(o.tolist())
-        offs_col.append(per_term)
-    return offs_col
+            return cand[:0]
+    return cand[np.unique(surv >> np.int64(32))]
 
 
 def _doclen_code_fn(sentinel_rows):
@@ -1147,7 +1087,7 @@ def _doclen_code_fn(sentinel_rows):
 def _bm25_scores(decoded, terms_l, cand, codes, idfs, cache, k1):
     scores = np.zeros(cand.size, dtype=np.float64)
     for t in terms_l:
-        ids, tfs, _, _ = decoded[t]
+        ids, tfs, _ = decoded[t]
         tf = tfs[np.searchsorted(ids, cand)].astype(np.float64)
         scores += idfs[t] * ((tf * (k1 + 1.0)) / (tf + cache[codes]))
     return scores
@@ -1166,8 +1106,8 @@ def compact_segments(
     the shared shard encoder (mapside.encode_postings).
 
     The shard's sentinel rows merge by docID concatenation and come
-    first. Positions and offsets each survive only if every term row
-    of the shard carries them. Phrase blooms are REBUILT (two df == 1
+    first. Positions survive only if every term row of the shard
+    carries them; v3 rows' offsets are not carried over. Phrase blooms are REBUILT (two df == 1
     rows merge into a df == 2 row that needs blooms neither carried):
     the decoded (doc, pos) occurrences sort back into each document's
     token stream, folded by ``mapside.neighbor_blooms`` with
@@ -1175,7 +1115,7 @@ def compact_segments(
     compacted shard holds exactly the rows one build of its documents
     writes. No ``bloom_cfg`` or no positions: null bloom columns."""
     segs = segments.select("shard_id", "term", "df_shard", "docids_blob",
-                           "tfs_blob", "pos_blob", "off_blob")
+                           "tfs_blob", "pos_blob")
 
     def merge_shard(
         batches: Iterator[pa.RecordBatch],
@@ -1204,13 +1144,12 @@ def compact_segments(
             )
         if not plain:
             return
-        # positions and offsets each survive the merge only if EVERY
-        # term row carries them (an index built without them, or a
-        # mixed one, can't produce a complete merged column)
+        # positions survive the merge only if EVERY term row carries
+        # them (an index built without them, or a mixed one, can't
+        # produce a complete merged column)
         with_pos = all(len(r["pos_blob"]) for rs in plain.values() for r in rs)
-        with_off = all(len(r["off_blob"]) for rs in plain.values() for r in rs)
         vocab = sorted(plain)
-        ids, tfs, pos, offs, bounds = [], [], [], [], [0]
+        ids, tfs, pos, bounds = [], [], [], [0]
         for base in vocab:
             parts = plain[base]
             for r in parts:
@@ -1221,8 +1160,6 @@ def compact_segments(
                 tfs.append(r["tfs"])
                 if with_pos:
                     pos.append(_decode_runs(r["pos_blob"], r["tfs"]))
-                if with_off:
-                    offs.append(_decode_runs(r["off_blob"], 2 * r["tfs"]))
             bounds.append(bounds[-1] + sum(len(r["ids"]) for r in parts))
         del plain, parts
         vocab, bounds = pa.array(vocab, pa.string()), np.array(bounds)
@@ -1240,11 +1177,9 @@ def compact_segments(
                 np.argsort(stream), bounds, tfs, bloom_cfg,
             )
             del occ_doc, occ_code, stream
-        batches = encode_postings(
-            shard_id, vocab, bounds, ids, tfs, pos,
-            np.concatenate(offs) if with_off else None, blooms,
-        )
-        del ids, tfs, pos, offs, blooms
+        batches = encode_postings(shard_id, vocab, bounds, ids, tfs, pos,
+                                  blooms)
+        del ids, tfs, pos, blooms
         yield from batches
 
     return segs.groupBy("shard_id").applyInArrow(merge_shard, SEGMENT_SCHEMA)
@@ -1253,8 +1188,9 @@ def compact_segments(
 def require_layout(meta: dict, index_dir: str) -> None:
     """Refuse an index written in an older layout (doc lengths outside
     the segment table, or phrase blooms as separate prefixed rows): no
-    reader or merge handles it, and none converts it."""
-    if meta.get("format") != FORMAT:
+    reader or merge handles it, and none converts it. A v3 index is
+    read as it is: its offset columns are never selected."""
+    if meta.get("format") not in READABLE_FORMATS:
         raise ValueError(
             f"index at {index_dir!r} has format {meta.get('format')!r}, "
             f"not {FORMAT!r}: it was written by an older writer and "
@@ -1265,7 +1201,8 @@ def require_layout(meta: dict, index_dir: str) -> None:
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
     generation index at ``out_dir`` (``compact_segments``: blooms
-    rebuilt; stats.json carried over; no dictionary table, since the
+    rebuilt; stats.json carried over, recording the current FORMAT
+    since the output is written in it; no dictionary table, since the
     reader derives it). Queries over the compacted index are identical;
     per-term read cost drops to one row, and bloom pruning re-activates
     (multi-generation rows skip it)."""
@@ -1275,13 +1212,13 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     segs = compact_segments(read_segments(spark, index_dir),
                             BloomParams(**bloom) if bloom else None)
     write_table(segs, f"{out_dir}/segments", "shard_id")
-    meta["compacted"] = True
+    meta.update(compacted=True, format=FORMAT)
     write_stats(out_dir, meta)
 
 
 # ------------------------------------------------------------------ read
 def _decode_runs(blob, counts: np.ndarray) -> np.ndarray:
-    """Decode a per-doc delta varint stream (pos_blob/off_blob layout):
+    """Decode a per-doc delta varint stream (the pos_blob layout):
     ``counts[i]`` values per run, delta reset at run starts. Returns the
     FLAT decoded values (split per run via counts by the caller)."""
     vals, _ = varint_decode(blob, count=int(counts.sum()))
@@ -1294,14 +1231,9 @@ def _decode_runs(blob, counts: np.ndarray) -> np.ndarray:
     return flat - np.maximum.accumulate(carry)
 
 
-def decode_segment_row(
-    row: dict, with_positions: bool = False, with_offsets: bool = False
-):
-    """Segment row -> (doc_ids, tfs[, positions][, offsets]).
-
-    positions: list of per-doc position arrays. offsets (returned only
-    when with_offsets): list of per-doc flat [s,e,...] arrays, 2*tf
-    values each."""
+def decode_segment_row(row: dict, with_positions: bool = False):
+    """Segment row -> (doc_ids, tfs, positions): positions is a list of
+    per-doc position arrays, or None without ``with_positions``."""
     n = int(row["df_shard"])
     doc_ids = delta_decode(decode_column(row["docids_blob"], n)).astype(np.int64)
     tfs = decode_column(row["tfs_blob"], n).astype(np.int64)
@@ -1310,18 +1242,7 @@ def decode_segment_row(
         flat = _decode_runs(row["pos_blob"], tfs)
         ends = np.cumsum(tfs)
         positions = [flat[e - t : e] for t, e in zip(tfs, ends)]
-    if not with_offsets:
-        return doc_ids, tfs, positions
-    if len(row["off_blob"]) == 0:
-        # index built without the offsets column (positions-only
-        # builds): degrade to empty spans — the snippet path falls back
-        # to re-tokenization
-        offsets = [np.zeros(0, dtype=np.int64)] * n
-    else:
-        flat_off = _decode_runs(row["off_blob"], 2 * tfs)
-        oends = np.cumsum(2 * tfs)
-        offsets = [flat_off[e - 2 * t : e] for t, e in zip(tfs, oends)]
-    return doc_ids, tfs, positions, offsets
+    return doc_ids, tfs, positions
 
 
 def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1535,20 +1456,16 @@ class SegmentIndex:
         m = self._dict_lookup(list(set(terms)))
         return [m[t][0] if t in m else 0 for t in terms]
 
-    def _per_shard_topk(self, queries, k: int, offs_qids: frozenset = frozenset()):
+    def _per_shard_topk(self, queries, k: int):
         """The ONE shard-pass kernel behind both ``search`` and
         ``search_batch``: one scan + one Arrow stage answers every
         query in ``queries`` = [(query_id, terms, is_phrase)]. Each
         shard decodes every referenced term ONCE (shared across queries
         that reuse a term), conjuncts/bloom-prunes/phrase-intersects/
         scores per query, and emits <= k rows per (query, shard):
-        (query_id, doc_id, score[, offs]).
-
-        ``offs_qids``: query ids whose <= k shard winners also carry
-        their MATCHED offset pairs per term — all occurrences for term
-        queries, position-filtered for phrases (reference
-        ``query_processing.h:446-492``) — the snippet feed. Offsets are
-        read and decoded ONLY for those queries' terms.
+        (query_id, doc_id, score). A snippet query runs the same paths
+        as any other: its matched spans come from the winners' content
+        (``_snippets``), not from the index.
 
         Returns None when no query can produce rows (empty/absent-term
         queries — AND semantics, reference qq_mem_engine.h:345-347)."""
@@ -1578,32 +1495,22 @@ class SegmentIndex:
         # the SparkSession into pickle)
         bloom_cfg = self.bloom_cfg
         # positions are decoded ONLY for terms that appear in a phrase
-        # query; offsets ONLY for snippet queries' terms — one long
-        # phrase in a big log must not make every hot term's positional
-        # stream decode
+        # query — one long phrase in a big log must not make every hot
+        # term's positional stream decode
         pos_terms = {t for _, terms_l, ph in qlist if ph for t in terms_l}
-        off_terms = {
-            t for qid, terms_l, _ in qlist if qid in offs_qids for t in terms_l
-        }
-        need_pos, need_off = bool(pos_terms), bool(off_terms)
         # decode strategy per term, picked DRIVER-SIDE from the
         # dictionary's prefetch_pages field (B13/Q14 analogue): big,
         # single-use, docid+tf-only terms decode skip-based partially
-        partial_set = partial_decode_terms(
-            qlist, pages_map, pos_terms, off_terms
-        )
+        partial_set = partial_decode_terms(qlist, pages_map, pos_terms)
         # phrase block-max eligibility (r04 item 2): a phrase TERM is
         # excluded from partial_set (its positions must decode), but
         # the phrase scorer decodes positions at BAG granularity for
-        # surviving candidates only — so eligibility here ignores
-        # pos_terms membership and keeps the size + no-offsets gates
+        # surviving candidates only — so a phrase term needs only the
+        # size gate here
         phrase_bm_set = {
             t
-            for _, terms_l2, ph2 in qlist
-            if ph2
-            for t in terms_l2
-            if t not in off_terms
-            and (pages_map.get(t) or 0) >= PARTIAL_DECODE_MIN_PAGES
+            for t in pos_terms
+            if (pages_map.get(t) or 0) >= PARTIAL_DECODE_MIN_PAGES
         }
 
         seg_cols = [
@@ -1611,10 +1518,8 @@ class SegmentIndex:
             "skip_predocs", "skip_docid_offs", "skip_tf_offs",
             "skip_max_tfs",
         ]
-        if need_pos:
+        if pos_terms:
             seg_cols += ["pos_blob", "skip_pos_offs"]
-        if need_off:
-            seg_cols += ["off_blob", "skip_off_offs"]
         # the phrase bloom blobs (pruning-only; the probe decodes the
         # whole blob, so the box offsets stay unread): end blooms of all
         # but a phrase's last term, begin blooms of all but its first
@@ -1649,9 +1554,7 @@ class SegmentIndex:
 
             def get_full(t):
                 if t not in decoded:
-                    decoded[t] = _decode_terms(
-                        rows_by_term, {t}, t in pos_terms, t in off_terms
-                    )[t]
+                    decoded[t] = _decode_term(rows_by_term[t], t in pos_terms)
                 return decoded[t]
 
             def get_partial(t, cand):
@@ -1668,7 +1571,6 @@ class SegmentIndex:
             out_q: list[int] = []
             out_d: list[np.ndarray] = []
             out_s: list[np.ndarray] = []
-            out_o: list[list] = []
             for qid, terms_l, ph in qlist:
                 if any(t not in rows_by_term for t in terms_l):
                     continue  # empty in THIS shard
@@ -1691,8 +1593,6 @@ class SegmentIndex:
                         out_q.extend([qid] * winners.size)
                         out_d.append(winners)
                         out_s.append(wscores)
-                        if need_off:
-                            out_o.extend([None] * winners.size)
                         continue
                 # conjunction block-max: lead bags scan in descending
                 # combined-bound order, provably non-competitive bags
@@ -1701,7 +1601,6 @@ class SegmentIndex:
                 if (
                     len(terms_l) > 1
                     and not ph
-                    and qid not in offs_qids
                     and all(
                         t in partial_set and t not in decoded
                         for t in set(terms_l)
@@ -1717,8 +1616,6 @@ class SegmentIndex:
                             out_q.extend([qid] * winners.size)
                             out_d.append(winners)
                             out_s.append(wscores)
-                            if need_off:
-                                out_o.extend([None] * winners.size)
                         continue
                 # phrase block-max (r04 item 2): the conjunction bound
                 # is a true upper bound for phrase winners (phrase
@@ -1729,7 +1626,6 @@ class SegmentIndex:
                 if (
                     len(terms_l) > 1
                     and ph
-                    and qid not in offs_qids
                     and all(
                         t in phrase_bm_set and t not in decoded
                         for t in set(terms_l)
@@ -1746,8 +1642,6 @@ class SegmentIndex:
                             out_q.extend([qid] * winners.size)
                             out_d.append(winners)
                             out_s.append(wscores)
-                            if need_off:
-                                out_o.extend([None] * winners.size)
                         continue
                 # smallest-first by shard df (zig-zag analogue) straight
                 # from the segment rows — no decode needed to order
@@ -1770,17 +1664,13 @@ class SegmentIndex:
                         break
                 if cand is None or cand.size == 0:
                     continue
-                phrase_surv = None
-                cand_pre = cand
                 if ph:
                     cand = _bloom_prune(
                         cand, qdec, terms_l, rows_by_term, bloom_cfg
                     )
                     if cand.size == 0:
                         continue
-                    cand, phrase_surv, cand_pre = _phrase_intersect(
-                        qdec, terms_l, cand
-                    )
+                    cand = _phrase_intersect(qdec, terms_l, cand)
                     if cand.size == 0:
                         continue
                 codes = codes_for(cand)
@@ -1788,40 +1678,24 @@ class SegmentIndex:
                     qdec, terms_l, cand, codes, idfs, cache, k1
                 )
                 order = np.lexsort((cand, -scores))[:k]
-                winners = cand[order]
                 out_q.extend([qid] * len(order))
-                out_d.append(winners)
+                out_d.append(cand[order])
                 out_s.append(scores[order])
-                if need_off:
-                    out_o.extend(
-                        _winner_offsets(
-                            qdec, terms_l, winners, phrase_surv, cand_pre
-                        )
-                        if qid in offs_qids
-                        else [None] * len(order)
-                    )
             if not out_q:
-                cols = {
+                return pd.DataFrame({
                     "query_id": pd.Series(dtype="int32"),
                     "doc_id": pd.Series(dtype="int64"),
                     "score": pd.Series(dtype="float64"),
-                }
-                if need_off:
-                    cols["offs"] = pd.Series(dtype="object")
-                return pd.DataFrame(cols)
-            out = {
+                })
+            return pd.DataFrame({
                 "query_id": np.asarray(out_q, dtype=np.int32),
                 "doc_id": np.concatenate(out_d),
                 "score": np.concatenate(out_s),
-            }
-            if need_off:
-                out["offs"] = out_o
-            return pd.DataFrame(out)
+            })
 
-        shard_schema = "query_id int, doc_id long, score double"
-        if need_off:
-            shard_schema += ", offs array<array<long>>"
-        return seg.groupBy("shard_id").applyInPandas(shard_kernel, shard_schema)
+        return seg.groupBy("shard_id").applyInPandas(
+            shard_kernel, "query_id int, doc_id long, score double"
+        )
 
     def search(
         self,
@@ -1839,15 +1713,16 @@ class SegmentIndex:
         query_id column.
 
         With ``return_snippets=True`` the reply gains a ``snippet``
-        column: the shard kernel also emits each top doc's MATCHED
-        offset pairs per term — all occurrences for term queries,
-        position-filtered for phrases (reference
-        ``query_processing.h:446-492``) — and each winner's content is
-        passage-scored with the reference's BM25-like highlighter
-        (``highlighter.h:437-450``). Content comes from ``docs`` (the
-        lake table) or ``doc_store_dir`` (the serving flow: the winners
-        are point-read from the chunked store written by
-        ``write_doc_store``, ``doc_store.h:277-362``)."""
+        column: each top doc's content is read, its MATCHED spans per
+        term are derived from it — all occurrences for term queries,
+        the matched positions for phrases (reference
+        ``query_processing.h:446-492``) — and it is passage-scored with
+        the reference's BM25-like highlighter (``highlighter.h:
+        437-450``). Content comes from ``docs`` (the lake table) or
+        ``doc_store_dir`` (the serving flow: the winners are point-read
+        from the chunked store written by ``write_doc_store``,
+        ``doc_store.h:277-362``). The ranking is the one a query
+        without snippets gets, through the same kernel paths."""
         return self._reply(
             [(0, terms, is_phrase)], k, return_snippets, docs, n_passages,
             content_col, doc_store_dir,
@@ -1913,11 +1788,7 @@ class SegmentIndex:
                     "doc_store_dir"
                 )
             schema += ", snippet string"
-        offs_qids = (
-            frozenset(int(q[0]) for q in queries)
-            if return_snippets else frozenset()
-        )
-        per_shard = self._per_shard_topk(queries, k, offs_qids=offs_qids)
+        per_shard = self._per_shard_topk(queries, k)
         rows = per_shard.collect() if per_shard is not None else []
         # global merge: each query's <= k * n_shards rows ranked by
         # (-score, doc_id), top k kept
@@ -1947,12 +1818,13 @@ class SegmentIndex:
         self, winners: list, queries, docs: DataFrame | None,
         content_col: str, doc_store_dir: str | None, n_passages: int,
     ) -> list[str]:
-        """One snippet per winner row, highlighted on the driver. The
+        """One snippet per winner row, highlighted on the driver from
+        spans derived from its content (``highlight.snippets``). The
         content is a point read of the winner ids from the chunked
         store at ``doc_store_dir`` (no Spark job), or one filtered
         collect of the ``docs`` table."""
         from wiser_spark.operators import docstore
-        from wiser_spark.operators.highlight import snippet_from_stored_offsets
+        from wiser_spark.operators.highlight import snippets
 
         ids = sorted({r["doc_id"] for r in winners})
         if docs is None:
@@ -1965,18 +1837,19 @@ class SegmentIndex:
             )
         else:
             content = {}
-        terms_by_qid = {
-            int(qid): [str(t) for t in terms] for qid, terms, _ in queries
+        query_of = {
+            int(qid): ([str(t) for t in terms], bool(ph))
+            for qid, terms, ph in queries
         }
         # a winner whose content is absent from the docs table / store
         # (e.g. a doc added to a live index after the store was
         # written) keeps its entry with an empty snippet instead of
         # vanishing from the reply
+        found = [r for r in winners if r["doc_id"] in content]
+        made = iter(snippets(
+            [content[r["doc_id"]] for r in found],
+            [query_of[r["query_id"]] for r in found], n_passages,
+        ))
         return [
-            snippet_from_stored_offsets(
-                content[r["doc_id"]], r["offs"], terms_by_qid[r["query_id"]],
-                n_passages,
-            )
-            if r["doc_id"] in content else ""
-            for r in winners
+            next(made) if r["doc_id"] in content else "" for r in winners
         ]

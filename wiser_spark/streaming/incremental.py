@@ -68,6 +68,9 @@ from wiser_spark.operators.segments import (
 )
 
 _TABLES = ("segments",)
+# tables older writers stored beside the segments; no reader opens them,
+# and a compaction sweeps them away
+ORPHAN_TABLES = ("dictionary", "dictionary_deltas")
 
 # merged generations install OUTSIDE the micro-batch id space: ids are
 # max(MERGED_GEN_BASE, max(existing)+1), so an install NEVER collides
@@ -126,7 +129,9 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
       3. remove the merged-away generation dirs (logically dead after
          the flip; only readers that pinned the pre-flip set and are
          still scanning can notice, and they fail LOUDLY on the missing
-         files rather than silently losing documents);
+         files rather than silently losing documents), and the
+         ``dictionary/`` and ``dictionary_deltas/`` tables an older
+         writer left, which no reader opens;
       4. drop the journal and staging leftovers.
 
     IDEMPOTENT: a crash at any point is healed by running it again.
@@ -177,6 +182,8 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
                 shutil.rmtree(
                     f"{index_dir}/{table}/generation={g}", ignore_errors=True
                 )
+    for table in ORPHAN_TABLES:
+        shutil.rmtree(f"{index_dir}/{table}", ignore_errors=True)
     jpath = f"{index_dir}/compaction.json"
     try:
         os.remove(jpath)
