@@ -1,7 +1,7 @@
 """The term dictionary is derived by the reader: ``SegmentIndex`` builds
 it from the live segments (``dictionary_from_segments``), no writer
-stores it, and a ``dictionary/`` or ``dictionary_deltas/`` table that an
-older writer left beside the segments is never opened."""
+stores it, and a ``dictionary/`` table planted beside the segments is
+never opened."""
 
 import contextlib
 import importlib.util
@@ -17,7 +17,6 @@ from wiser_spark.operators import segments as segmod
 from wiser_spark.operators.mapside import write_index_mapside
 from wiser_spark.operators.segments import (
     SegmentIndex,
-    compact_index,
     dictionary_from_segments,
     read_segments,
     write_stats,
@@ -127,63 +126,6 @@ def test_reader_dictionary_matches_oracle_and_ignores_stored_one(
     assert idx.doc_freqs(vocab + ["zz_absent_zz"]) == [
         oracle.df(t) for t in vocab] + [0]
     idx.close()
-
-
-def _parent_layout(spark, d) -> None:
-    """Give a streaming index what the older writers stored beside its
-    segments: per-generation ``dictionary_deltas/``, the folded
-    ``dictionary/`` and ``n_terms`` in stats.json."""
-    segs = read_segments(spark, d)
-    gens = sorted(r[0] for r in segs.select("generation").distinct().collect())
-    for g in gens:
-        write_table(dictionary_from_segments(
-            segs.filter(f"generation = {g}")
-        ).select("term", "df", "bytes_docid_tf"),
-            f"{d}/dictionary_deltas/generation={g}")
-    folded = dictionary_from_segments(segs)
-    write_table(folded, f"{d}/dictionary")
-    with open(f"{d}/stats.json") as f:
-        meta = json.load(f)
-    meta["n_terms"] = folded.count()
-    write_stats(d, meta)
-
-
-def test_older_index_with_stored_dictionary_reads_resumes_and_compacts(
-    spark, stream, tmp_path
-):
-    """An index in the older layout (``dictionary/``,
-    ``dictionary_deltas/``, ``n_terms`` in stats.json) answers like a
-    fresh build; an IncrementalIndexer resume on it flushes and
-    compacts to the segments of a fresh index given the same batches,
-    the compaction sweeping the older tables away; compact_index of it
-    writes no ``dictionary/``."""
-    mod = _digest_module()
-    old, fresh = str(tmp_path / "old"), str(tmp_path / "fresh")
-    shutil.copytree(stream["flush"], old)
-    shutil.copytree(stream["flush"], fresh)
-    _parent_layout(spark, old)
-    assert _answers(spark, old) == _answers(spark, fresh)
-
-    out = str(tmp_path / "compacted")
-    compact_index(spark, old, out)
-    assert not os.path.exists(f"{out}/dictionary")
-    assert _answers(spark, out) == _answers(spark, fresh)
-
-    extra = spark.createDataFrame(ROWS[150:], SCHEMA)
-    for d in (old, fresh):
-        ix = IncrementalIndexer(d, CFG)
-        ix.process_batch(extra, 3)
-        ix.compact_now(spark)
-        assert not os.path.exists(f"{d}/dictionary_deltas/generation=3")
-    assert os.path.isdir(f"{old}/segments")
-    assert not os.path.exists(f"{old}/dictionary")
-    assert not os.path.exists(f"{old}/dictionary_deltas")
-    assert mod.logical_digest(f"{old}/segments") == mod.logical_digest(
-        f"{fresh}/segments")
-    got = _answers(spark, old)
-    assert got == _answers(spark, fresh)
-    oracle = _oracle(len(ROWS))
-    assert got[2] == len(oracle.index)
 
 
 def _jobs_and_tasks(spark, fn) -> tuple[int, int]:

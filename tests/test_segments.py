@@ -82,7 +82,7 @@ def test_write_index_sentinel_layout(spark, oracle, index_dir):
     assert meta["format"] == FORMAT and "bloom" not in meta
     assert not os.path.exists(f"{index_dir}/docstats")
     for shard in range(4):
-        sdir = f"{index_dir}/segments/shard_id={shard}"
+        sdir = f"{index_dir}/segments/generation=0/shard_id={shard}"
         files = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
         assert len(files) == 1
         rows = spark.read.parquet(f"{sdir}/{files[0]}").collect()
@@ -685,9 +685,10 @@ def test_compact_positionless_index_matches_fresh_build(spark, tmp_path):
     for g, cond in enumerate(["doc_id < 60", "doc_id >= 60"]):
         half = str(tmp_path / f"half{g}")
         build(docs.filter(cond), half)
-        shutil.copytree(f"{half}/segments",
+        shutil.copytree(f"{half}/segments/generation=0",
                         multi / "segments" / f"generation={g}")
     shutil.copy(f"{fresh}/stats.json", multi / "stats.json")
+    (multi / "generations.json").write_text('{"generations": [0, 1]}')
     out = str(tmp_path / "compacted")
     compact_index(spark, str(multi), out)
     got, want = _segment_digest(out), _segment_digest(fresh)
@@ -727,13 +728,15 @@ def test_write_stats_crash_keeps_previous_file(tmp_path, monkeypatch):
 
 
 def test_bloom_row_layout_refused(spark, tmp_path):
-    """An index of the older v2 layout (phrase blooms as separate
-    prefixed rows) is refused, not converted, by the reader, by
+    """An index of an older layout — v2 (phrase blooms as separate
+    prefixed rows), v3 (stored offsets) or v4 (batch builds outside
+    generations) — is refused, not converted, by the reader, by
     compaction and by a streaming resume — each asks for a rebuild."""
     from wiser_spark.operators.segments import compact_index
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
-    for fmt in ("wiser-spark-segment-v2", "wiser-spark-segment-v2-mapside"):
+    for fmt in ("wiser-spark-segment-v2", "wiser-spark-segment-v2-mapside",
+                "wiser-spark-segment-v3", "wiser-spark-segment-v4"):
         d = tmp_path / fmt
         d.mkdir()
         (d / "stats.json").write_text(json.dumps({
@@ -746,158 +749,3 @@ def test_bloom_row_layout_refused(spark, tmp_path):
             compact_index(spark, str(d), str(tmp_path / "out"))
         with pytest.raises(ValueError, match="rebuilt"):
             IncrementalIndexer(str(d))
-
-
-STREAM_SCHEMA = (
-    "repo string, path string, commit string, lang string, content string"
-)
-
-
-def _as_v3(index_dir: str, contents: list[str]) -> None:
-    """Rewrite an index in place into the v3 layout: every segment file
-    gains ``off_blob`` (each occurrence's [s,e) byte span in the
-    lowered content, delta-varint'd per doc like ``pos_blob``) and
-    ``skip_off_offs`` (its byte offset at each 128-posting bag), and
-    stats.json records v3. ``contents[d]`` is doc ``d``'s text; every
-    doc's token stream read back from the positions must spell it."""
-    import glob
-    import re
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from wiser_spark.functions.tokenize import tokenize_text
-    from wiser_spark.operators.segments import PACK_SIZE, _delta_varint_runs
-
-    spans = [[m.span() for m in re.finditer(r"[a-z0-9_]+", c.lower())]
-             for c in contents]
-    seen: dict[int, dict[int, str]] = {}
-    files = glob.glob(f"{index_dir}/segments/**/*.parquet", recursive=True)
-    for f in files:
-        table = pq.read_table(f)
-        offs, skips = [], []
-        for r in table.to_pylist():
-            if r["term"] == DOCLEN_TERM:
-                offs.append(b"")
-                skips.append([])
-                continue
-            ids, tfs, plists = decode_segment_row(r, with_positions=True)
-            flat = []
-            for d, ps in zip(ids.tolist(), plists):
-                for p in ps.tolist():
-                    seen.setdefault(d, {})[p] = r["term"]
-                    flat.extend(spans[d][p])
-            starts = np.cumsum(tfs) - tfs
-            blob, skip = _delta_varint_runs(
-                np.array(flat, dtype=np.int64), 2 * starts,
-                2 * starts[::PACK_SIZE],
-            )
-            offs.append(blob)
-            skips.append(skip.tolist())
-        table = table.add_column(
-            table.schema.get_field_index("pos_blob") + 1, "off_blob",
-            pa.array(offs, pa.binary()),
-        )
-        table = table.add_column(
-            table.schema.get_field_index("skip_pos_offs") + 1,
-            "skip_off_offs", pa.array(skips, pa.list_(pa.int64())),
-        )
-        pq.write_table(table, f)
-        # the rewrite invalidates Hadoop's checksum sidecar
-        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-    for d, toks in seen.items():
-        assert [toks[p] for p in sorted(toks)] == tokenize_text(contents[d])
-    with open(f"{index_dir}/stats.json") as fh:
-        meta = json.load(fh)
-    meta["format"] = "wiser-spark-segment-v3"
-    with open(f"{index_dir}/stats.json", "w") as fh:
-        json.dump(meta, fh)
-
-
-def test_v3_index_reads_resumes_and_compacts(spark, tmp_path):
-    """An index of the v3 layout (offsets stored) answers a query log,
-    snippets included, exactly as the same index without them; an
-    IncrementalIndexer resume on it flushes; compact_now and
-    compact_index of it write v4 files without the offset columns, and
-    the segment digest over the current schema's columns does not see
-    the difference."""
-    import contextlib
-    import glob
-    import io
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from wiser_spark.operators.segments import compact_index
-    from wiser_spark.streaming.incremental import IncrementalIndexer
-
-    digest = _digest_module()
-
-    def digest_lines(d, *mode):
-        out = io.StringIO()
-        with contextlib.redirect_stdout(out):
-            digest.main(d, *mode)
-        return out.getvalue()
-
-    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
-    # one key per row in doc order, so the streaming doc ids are the
-    # row numbers
-    rows = [dict(r, repo="r", path=f"p{i:05d}", commit="c")
-            for i, r in enumerate(make_corpus(200, 5))]
-    contents = [r["content"] for r in rows]
-    docs = spark.createDataFrame(list(enumerate(contents)),
-                                 "doc_id long, content string")
-    qlog = [
-        (0, ["return"], False),
-        (1, ["return", "import"], False),
-        (2, ["def", "self", "return"], False),
-        (3, ["import", "return"], True),
-        (4, ["import", "import"], True),
-        (5, ["return", "zz_absent_zz"], False),
-    ]
-
-    def answers(d):
-        idx = SegmentIndex(spark, d)
-        try:
-            return [tuple(r) for r in idx.search_batch(
-                qlog, k=10, return_snippets=True, docs=docs).collect()]
-        finally:
-            idx.close()
-
-    def batch(lo, hi):
-        return spark.createDataFrame(
-            [tuple(r[c] for c in ("repo", "path", "commit", "lang",
-                                  "content")) for r in rows[lo:hi]],
-            STREAM_SCHEMA)
-
-    v4, v3 = str(tmp_path / "v4"), str(tmp_path / "v3")
-    ix = IncrementalIndexer(v4, cfg)
-    for b, (lo, hi) in enumerate(((0, 60), (60, 120), (120, 160))):
-        ix.process_batch(batch(lo, hi), b)
-    shutil.copytree(v4, v3)
-    _as_v3(v3, contents)
-    assert all("off_blob" in pq.read_schema(f).names for f in glob.glob(
-        f"{v3}/segments/**/*.parquet", recursive=True))
-    want = answers(v4)
-    assert answers(v3) == want and len({r[0] for r in want}) == 5
-    for mode in ((), ("--logical",)):
-        assert digest_lines(v3, *mode) == digest_lines(v4, *mode)
-
-    for d in (v4, v3):
-        compact_index(spark, d, f"{d}_compacted")
-        resumed = IncrementalIndexer(d, cfg)
-        resumed.process_batch(batch(160, 200), 3)
-    assert answers(f"{v3}_compacted") == answers(f"{v4}_compacted")
-    assert answers(v3) == answers(v4)
-    IncrementalIndexer(v3, cfg).compact_now(spark)
-    assert answers(v3) == answers(v4)
-    for d in (v3, f"{v3}_compacted"):
-        files = glob.glob(f"{d}/segments/**/*.parquet", recursive=True)
-        assert files
-        for f in files:
-            assert not {"off_blob", "skip_off_offs"} & set(
-                pq.read_schema(f).names)
-        with open(f"{d}/stats.json") as fh:
-            assert json.load(fh)["format"] == FORMAT

@@ -25,7 +25,10 @@ from wiser_spark.operators.segments import (
     write_index,
 )
 from wiser_spark.oracle import OracleEngine
-from wiser_spark.plans.build import IndexBuildPipeline
+from wiser_spark.plans.build import (
+    IndexBuildPipeline,
+    build_index_mapside_batched,
+)
 from wiser_spark.sources.corpus import corpus_df, make_corpus
 from wiser_spark.streaming.incremental import IncrementalIndexer
 
@@ -116,9 +119,11 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
     spark, docs, tmp_path
 ):
     """The writers that publish index tables — write_index,
-    write_index_mapside, IndexBuildPipeline, a streaming flush, a
-    streaming compaction and compact_index — all write the segments
-    through write_table, and none creates ``dictionary/`` or
+    write_index_mapside, IndexBuildPipeline, build_index_mapside_batched,
+    a streaming flush, a streaming compaction and compact_index — all
+    write the segments through write_table in the one layout (a
+    ``generations.json`` and only ``segments/generation=*/shard_id=*``
+    directories), and none creates ``dictionary/`` or
     ``dictionary_deltas/``."""
     built = {}
     built["write_index"] = str(tmp_path / "write_index")
@@ -131,6 +136,9 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
         spark, corpus_df(spark, 60), built["pipeline"], CFG,
         source_fingerprint="storage-60",
     ).run()
+    built["batched"] = str(tmp_path / "batched")
+    build_index_mapside_batched(spark, corpus_df(spark, 60), built["batched"],
+                                CFG, n_batches=2)
     rows = make_corpus(60)
     built["flush"] = str(tmp_path / "flush")
     _stream(spark, built["flush"], rows, 2)
@@ -142,6 +150,15 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
     for name, d in built.items():
         _assert_written_by_write_table(d)
         assert SegmentIndex(spark, d).search(["return"], k=3).collect(), name
+        gens = incmod.read_generations(d)
+        assert gens, name
+        base = os.path.join(d, "segments")
+        assert sorted(os.listdir(base)) == sorted(
+            f"generation={g}" for g in gens), name
+        for g in gens:
+            shards = os.listdir(os.path.join(base, f"generation={g}"))
+            assert all(p.startswith("shard_id=") for p in shards
+                       if not p.startswith(("_", "."))), (name, shards)
     # the pipeline's stage tables go through the same writer
     for stage in ("docs", "postings", "docstats"):
         for path in _parquet_files(built["pipeline"], stage):
@@ -207,8 +224,8 @@ def test_unreadable_metadata_raises(spark, tmp_path):
     """A generations.json or stats.json that is present but unreadable
     raises a ValueError naming the file: read as absent, the readers
     would list merged-away generations, and a resume would skip the
-    layout check and the recorded bloom params. Only a missing file is
-    absent."""
+    layout check and the recorded bloom params. A missing
+    generations.json raises the same way."""
     d = str(tmp_path / "idx")
     ix = _stream(spark, d, make_corpus(20), 2)
     manifest, stats = f"{d}/generations.json", f"{d}/stats.json"
@@ -237,6 +254,12 @@ def test_unreadable_metadata_raises(spark, tmp_path):
     assert incmod.read_generations(d) == [0, 1]  # nothing merged
     with open(stats, "w") as f:
         f.write(good_stats)
-    os.remove(manifest)  # absent: the directory listing, as before
     assert SegmentIndex(spark, d).search(["return"], k=3).collect()
-    IncrementalIndexer(d, CFG)
+    # a missing manifest is refused too: no directory listing stands in
+    os.remove(manifest)
+    with pytest.raises(ValueError, match="generations.json"):
+        SegmentIndex(spark, d)
+    with pytest.raises(ValueError, match="generations.json"):
+        IncrementalIndexer(d, CFG)
+    with pytest.raises(ValueError, match="generations.json"):
+        compact_index(spark, d, str(tmp_path / "out"))

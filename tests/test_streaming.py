@@ -341,6 +341,8 @@ def test_resume_with_other_format_refuses(tmp_path):
             IncrementalIndexer(d, fmt="v2")
     with open(f"{d}/stats.json", "w") as f:
         json.dump({"format": FORMAT}, f)
+    with open(f"{d}/commits.json", "w") as f:
+        json.dump({}, f)
     IncrementalIndexer(d)
     IncrementalIndexer(d, fmt="v2")
     with pytest.raises(ValueError, match="unknown streaming index format"):
@@ -424,29 +426,22 @@ def test_auto_compaction_tiered_trigger(spark, tmp_path, oracle,
     assert got == want
 
 
-def _torn_legacy_state(spark, tmp_path, monkeypatch, n_docs=60):
-    """A 3-generation v2 index with a LEGACY-format torn compaction:
-    staged merge of generations [0, 1] on disk, journal whose target
-    REUSES live id 1 (pre-round-5 writers did this), no generations
-    manifest (legacy indexes predate it). Returns (index_dir, twin_dir,
-    indexer)."""
-    import json
-    import shutil
+def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
+    """A compaction.lock older than LOCK_STALE_S belongs to a dead
+    process: recovery steals it (by rename — two stealers cannot both
+    acquire) and applies the journal of a torn swap (merge staged under
+    a fresh id, journal written, manifest unflipped)."""
+    import time
 
     import wiser_spark.streaming.incremental as incmod
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
-    rows = make_corpus(n_docs)
+    rows = make_corpus(60)
     cfg = IndexConfig(bm25=PARAMS, n_shards=3)
-    d = str(tmp_path / "legacy")
-    d_twin = str(tmp_path / "twin")
-    ix = IncrementalIndexer(d, cfg, fmt="v2")
-    tw = IncrementalIndexer(d_twin, cfg, fmt="v2")
-    step = n_docs // 3
+    d, d_twin = str(tmp_path / "torn"), str(tmp_path / "twin")
+    ix, tw = IncrementalIndexer(d, cfg), IncrementalIndexer(d_twin, cfg)
     for b in range(3):
-        batch = spark.createDataFrame(
-            rows[b * step : (b + 1) * step], SCHEMA
-        )
+        batch = spark.createDataFrame(rows[b * 20:(b + 1) * 20], SCHEMA)
         ix.process_batch(batch, b)
         tw.process_batch(batch, b)
     # stage the merge of [0, 1] but "crash" before any apply
@@ -454,83 +449,7 @@ def _torn_legacy_state(spark, tmp_path, monkeypatch, n_docs=60):
     ix.compact_generations(spark, [0, 1])
     monkeypatch.undo()
     assert os.path.exists(f"{d}/compaction.json")
-    # rewrite the journal into the legacy shape: target = max of the
-    # merged subset (IN the remove list), and drop the manifest (legacy
-    # writers never produced one)
-    with open(f"{d}/compaction.json") as f:
-        j = json.load(f)
-    src = f"{d}/segments/generation={j['target']}"
-    if os.path.isdir(src):  # partially applied? ensure torn pre-install
-        shutil.rmtree(src)
-    j["target"] = 1
-    with open(f"{d}/compaction.json", "w") as f:
-        json.dump(j, f)
-    os.remove(f"{d}/generations.json")
-    return d, d_twin, ix
-
-
-def test_legacy_journal_recovery_replaces_target(spark, tmp_path,
-                                                 monkeypatch):
-    """A legacy journal's target is a LIVE generation id: recovery must
-    replace that dir with the staged merge — treating 'dst exists' as
-    'already installed' would silently drop the staged merge and then
-    delete generation 0's documents."""
-    import wiser_spark.streaming.incremental as incmod
-
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
-    incmod.recover_compaction(d, sweep=True)
-    assert not os.path.exists(f"{d}/compaction.json")
-    gens = sorted(
-        int(p.split("=", 1)[1])
-        for p in os.listdir(f"{d}/segments")
-        if p.startswith("generation=")
-    )
-    assert gens == [1, 2]  # 0 merged away, 1 REPLACED by the merge
-    idx = SegmentIndex(spark, d)
-    twin = SegmentIndex(spark, d_twin)
-    assert idx.stats.n_docs == twin.stats.n_docs == 60
-    for terms, ph in [(["return"], False), (["return", "import"], False),
-                      (["return", "import"], True)]:
-        got = [tuple(r) for r in
-               idx.search(terms, k=10, is_phrase=ph).collect()]
-        want = [tuple(r) for r in
-                twin.search(terms, k=10, is_phrase=ph).collect()]
-        assert got == want and got, (terms, ph)
-
-
-def test_legacy_pre_manifest_torn_index_heals_on_read(spark, tmp_path,
-                                                      monkeypatch):
-    """A pre-manifest index with a pending journal has NO consistent
-    directory fallback: the read path must roll the journal forward
-    (lock-serialized) instead of silently listing a torn directory —
-    and must fail LOUDLY when another process holds the lock."""
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
-    # a held (fresh) lock: reading must refuse rather than return a
-    # silently incomplete index
-    lock = f"{d}/compaction.lock"
-    with open(lock, "w"):
-        pass
-    with pytest.raises(RuntimeError, match="compaction.lock"):
-        SegmentIndex(spark, d)
-    os.remove(lock)
-    idx = SegmentIndex(spark, d)  # heals via lock-serialized recovery
-    assert not os.path.exists(f"{d}/compaction.json")
-    twin = SegmentIndex(spark, d_twin)
-    got = [tuple(r) for r in idx.search(["return", "import"], k=10).collect()]
-    want = [tuple(r) for r in
-            twin.search(["return", "import"], k=10).collect()]
-    assert got == want and got
-
-
-def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
-    """A compaction.lock older than LOCK_STALE_S belongs to a dead
-    process: recovery steals it (by rename — two stealers cannot both
-    acquire) and applies the journal."""
-    import time
-
-    import wiser_spark.streaming.incremental as incmod
-
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
+    assert incmod.read_generations(d) == [0, 1, 2]
     lock = f"{d}/compaction.lock"
     with open(lock, "w"):
         pass
@@ -539,6 +458,56 @@ def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
     incmod.recover_compaction(d)
     assert not os.path.exists(f"{d}/compaction.json")  # applied
     assert not os.path.exists(lock)                    # released
+    gens = incmod.read_generations(d)
+    assert gens[0] == 2 and gens[1] >= incmod.MERGED_GEN_BASE
+    assert len(gens) == 2
+    idx, twin = SegmentIndex(spark, d), SegmentIndex(spark, d_twin)
+    assert idx.stats.n_docs == twin.stats.n_docs == 60
+    for terms, ph in [(["return"], False), (["return", "import"], True)]:
+        got = [tuple(r) for r in
+               idx.search(terms, k=10, is_phrase=ph).collect()]
+        want = [tuple(r) for r in
+                twin.search(terms, k=10, is_phrase=ph).collect()]
+        assert got == want and got, (terms, ph)
+
+
+def test_append_to_index_it_did_not_start_refused(spark, tmp_path):
+    """An incremental indexer does not append to a batch build or to a
+    compact_index output (no commits.json): its first publish would
+    hide the built documents and reuse their ids. The refused index
+    still answers all of its documents."""
+    from wiser_spark.operators.mapside import write_index_mapside
+    from wiser_spark.operators.segments import compact_index
+    from wiser_spark.streaming.incremental import IncrementalIndexer
+
+    rows = make_corpus(80, 7)
+    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
+    d = str(tmp_path / "batch")
+    docs = spark.createDataFrame(
+        [(i, r["content"]) for i, r in enumerate(rows[:60])],
+        "doc_id long, content string")
+    write_index_mapside(docs, d, cfg)
+    with pytest.raises(ValueError, match="commits.json"):
+        IncrementalIndexer(d, cfg).process_batch(
+            spark.createDataFrame(rows[60:], SCHEMA), 0)
+    idx = SegmentIndex(spark, d)
+    assert idx.stats.n_docs == 60
+    eng = OracleEngine(PARAMS)
+    for r in rows[:60]:
+        eng.add_document(r["content"])
+    got = [r["doc_id"] for r in idx.search(["return"], k=100).collect()]
+    assert got == [i for i, _ in eng.search(["return"], k=100)]
+    assert len(got) == eng.df("return") > 20
+
+    stream, out = str(tmp_path / "stream"), str(tmp_path / "compacted")
+    ix = IncrementalIndexer(stream, cfg)
+    for b in range(2):
+        ix.process_batch(
+            spark.createDataFrame(rows[b * 30:(b + 1) * 30], SCHEMA), b)
+    compact_index(spark, stream, out)
+    with pytest.raises(ValueError, match="commits.json"):
+        IncrementalIndexer(out, cfg)
+    IncrementalIndexer(stream, cfg)  # the index it started still resumes
 
 
 def test_empty_microbatch_fast_path(spark, tmp_path):
@@ -559,6 +528,13 @@ def test_empty_microbatch_fast_path(spark, tmp_path):
     ix.process_batch(empty, 0)
     with open(f"{d}/commits.json") as f:
         assert json.load(f)["0"][:2] == [0, 0]
+    # the empty first batch leaves a readable, empty index
+    idx = SegmentIndex(spark, d)
+    assert idx.stats.n_docs == 0
+    assert idx.search(["return"]).count() == 0
+    idx.close()
+    ix.process_batch(empty, 0)  # a replay keeps it readable
+    assert SegmentIndex(spark, d).search(["return"]).count() == 0
     rows = make_corpus(20)
     ix.process_batch(spark.createDataFrame(rows, SCHEMA), 1)
     idx = SegmentIndex(spark, d)

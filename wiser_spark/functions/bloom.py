@@ -14,9 +14,10 @@ SIZING matches the reference's libbloom math exactly
 bits = int(entries * bpe), bytes rounded up, k = ceil(ln(2) * bpe) —
 with the reference defaults entries=5, ratio=0.001
 (``create_qq_mem_dump.cc:14-15``) that is 71 bits / 9 bytes / k=10 per
-posting. Bit positions come from md5 double hashing
-(bit_i = (a + i*b) mod bits, a/b from the term's md5) rather than the
-reference's murmur pair — the hash family is not part of the contract;
+posting. Bit positions come from md5 enhanced double hashing
+(bit_i = (a + i*b + (i^3 - i)/6) mod bits, a/b from the term's md5)
+rather than the reference's murmur pair — the hash family is not part
+of the reference's contract;
 what matters (and is tested) is NO FALSE NEGATIVES: every token OR'd in
 probes positive, so the pre-check only prunes and is provably
 result-neutral.
@@ -63,13 +64,6 @@ class BloomParams(NamedTuple):
     hashes: int
     entries: int
     ratio: float
-    # bit-placement hash FAMILY, part of the on-disk contract: "dh" =
-    # plain double hashing (every index written before round 4), "edh"
-    # = enhanced double hashing (the round-4+ default). The default
-    # here is "dh" ON PURPOSE: BloomParams(**meta["bloom"]) from an
-    # older stats.json (which predates the field) must reconstruct the
-    # family those masks were WRITTEN with, or probes false-negative.
-    family: str = "dh"
 
 
 def bloom_params(entries: int = 5, ratio: float = 0.0009) -> BloomParams:
@@ -85,33 +79,25 @@ def bloom_params(entries: int = 5, ratio: float = 0.0009) -> BloomParams:
     bits = int(entries * bpe)
     nbytes = bits // 8 + (1 if bits % 8 else 0)
     hashes = int(math.ceil(_LN2 * bpe))
-    return BloomParams(bits, nbytes, hashes, entries, ratio, "edh")
+    return BloomParams(bits, nbytes, hashes, entries, ratio)
 
 
 def token_bloom_mask(term: str, bp: BloomParams) -> np.ndarray:
-    """The k-bit byte mask a token sets/probes: md5 double hashing,
-    bit_i = (a + i*b) mod bits, LSB-first within each byte."""
+    """The k-bit byte mask a token sets/probes: md5 enhanced double
+    hashing, LSB-first within each byte."""
     h = hashlib.md5(term.encode()).digest()
     a = int.from_bytes(h[0:8], "little")
-    # Family "edh" — ENHANCED double hashing (Dillinger & Manolios
-    # 2004): bit_i = (a + i*b + (i^3 - i)/6) mod bits. Plain double
-    # hashing needs the stride coprime with bits to avoid short orbits;
-    # at the composite ratio=0.0009 sizing (bits=72, phi(72)=24) only a
-    # third of strides qualify and stride COLLISIONS between probe and
-    # member terms degenerate the FP rate. The cubic increment breaks
-    # the shared-progression structure for ANY modulus — measured FP
+    # ENHANCED double hashing (Dillinger & Manolios 2004): bit_i =
+    # (a + i*b + (i^3 - i)/6) mod bits. Plain double hashing needs the
+    # stride coprime with bits to avoid short orbits; at the composite
+    # ratio=0.0009 sizing (bits=72, phi(72)=24) only a third of strides
+    # qualify and stride COLLISIONS between probe and member terms
+    # degenerate the FP rate. The cubic increment breaks the
+    # shared-progression structure for ANY modulus — measured FP
     # returns to the ~ratio ballpark (pinned by the prune-rate test).
-    # Family "dh" — the pre-round-4 plain progression, kept verbatim so
-    # indexes whose stats.json predates the family field still probe
-    # the masks they stored (the family IS part of the on-disk
-    # contract; stats.json records it via BloomParams._asdict()).
     b = 1 + int.from_bytes(h[8:16], "little") % (bp.bits - 1)
     i_arr = np.arange(bp.hashes, dtype=np.uint64)
-    incr = (
-        (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
-        if bp.family == "edh"
-        else np.zeros(bp.hashes, dtype=np.uint64)
-    )
+    incr = (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
     idx = (
         (np.uint64(a) + i_arr * np.uint64(b) + incr) % np.uint64(bp.bits)
     ).astype(np.int64)
@@ -139,13 +125,9 @@ def vocab_bloom_matrix(uniques, bp: BloomParams) -> np.ndarray:
     digests = b"".join(hashlib.md5(t).digest() for t in utf8)
     ab = np.frombuffer(digests, dtype="<u8").reshape(v, 2)
     b = (ab[:, 1] % np.uint64(bp.bits - 1)) + np.uint64(1)
-    # same family dispatch as token_bloom_mask, formula-identical
+    # the same placement as token_bloom_mask, formula-identical
     i_arr = np.arange(bp.hashes, dtype=np.uint64)
-    incr = (
-        (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
-        if bp.family == "edh"
-        else np.zeros(bp.hashes, dtype=np.uint64)
-    )
+    incr = (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
     idx = (
         (ab[:, 0][:, None] + i_arr[None, :] * b[:, None] + incr[None, :])
         % np.uint64(bp.bits)

@@ -65,9 +65,9 @@ from wiser_spark.operators.segments import (
     _delta_varint_stream,
     _encode_term_flat,
     decode_doclen_sentinel,
+    publish_segments,
     sentinel_batch,
     write_stats,
-    write_table,
 )
 
 # The shard encoder's output batches hold at most this many rows and
@@ -91,11 +91,10 @@ def build_segments_mapside(
 ) -> DataFrame:
     """docs (doc_id, content) -> segment rows + one sentinel per shard.
 
-    ``bloom_cfg`` (a BloomParams) pins the bloom sizing AND hash
-    family — a sink appending generations to an EXISTING index must
-    pass the index's recorded params or the new generations' masks
-    would not match the probe side (None = current defaults, right for
-    fresh builds).
+    ``bloom_cfg`` (a BloomParams) pins the bloom sizing — a sink
+    appending generations to an EXISTING index must pass the index's
+    recorded params or the new generations' masks would not match the
+    probe side (None = current defaults, right for fresh builds).
 
     With ``reuse_partitions=True`` the INPUT partitioning is the
     sharding (shard correctness only needs each doc's postings in one
@@ -568,12 +567,11 @@ def write_index_mapside(
         docs, config.n_shards, content_col,
         reuse_partitions=reuse_partitions, with_blooms=with_blooms,
     )
-    write_table(segs, f"{index_dir}/segments", "shard_id")
+    gen = publish_segments(segs, index_dir)
     # explicit schema: a DEGENERATE (empty) corpus writes no part files,
     # which would fail schema inference — the index stays readable
-    sent = spark.read.schema(SEGMENT_SCHEMA).parquet(
-        f"{index_dir}/segments"
-    ).filter(F.col("term") == DOCLEN_TERM)
+    sent = spark.read.schema(SEGMENT_SCHEMA).parquet(gen).filter(
+        F.col("term") == DOCLEN_TERM)
 
     # global N and avgdl from the sentinels (no second scan of the
     # docs), and the highest shard id (every non-empty shard has a

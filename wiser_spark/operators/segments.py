@@ -38,7 +38,7 @@ B4-B14):
                 analogue). Null on rows with df_shard < 2 (nothing
                 to prune), on the sentinel, and on every row of the
                 shuffle writers (write_index, IndexBuildPipeline) and
-                ``with_blooms=False``; older rows with blooms still read
+                ``with_blooms=False``
 
 A table holds two row kinds: the term rows above, and per non-empty
 shard one doc-length SENTINEL row, term "" (the reference's doc-length
@@ -58,19 +58,29 @@ Queries fan out over shards and merge a k-row result per shard
 (distributed analogue of the reference's single-node zig-zag,
 ``query_processing.h:810-852``).
 
+LAYOUT, one for every writer: ``segments/generation=<id>/shard_id=<s>/``
+beside ``generations.json``, the manifest naming the live generation
+ids, and ``stats.json``. A batch build (``write_index``,
+``write_index_mapside``, ``IndexBuildPipeline``, ``compact_index``)
+publishes generation 0 through ``publish_segments``; the streaming sink
+adds one generation per micro-batch and installs a compaction's merge
+under a fresh id (``streaming/incremental.py``). This module owns the
+path scheme (``generation_path``) and the manifest. Readers take the
+live generations from the manifest, never from a directory listing, and
+an index without one is refused.
+
 STORAGE: ``write_table`` writes every index table (zstd, v2 pages: the
 ``term`` column is front-coded); snappy tables written earlier still
 read. No writer stores a dictionary table: ``SegmentIndex`` derives and
-caches it from the live segments, and never opens the ``dictionary/``
-or ``dictionary_deltas/`` an older writer left beside them.
-``scripts/index_footprint.py`` prints an index's bytes, codecs and
-encodings per column.
+caches it from the live segments. ``scripts/index_footprint.py`` prints
+an index's bytes, codecs and encodings per column.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Iterator
 from itertools import groupby, islice
 
@@ -135,12 +145,10 @@ BLOOM_COLUMNS = (
 # emit an empty term, so "" is collision-free
 DOCLEN_TERM = ""
 
-# stats.json "format" of the one layout every writer emits: doc lengths
-# in sentinel rows, phrase blooms as columns of the term row, no
-# offsets. v3 files also carry off_blob/skip_off_offs, columns no
-# reader selects, so they read, resume and compact as v4
-FORMAT = "wiser-spark-segment-v4"
-READABLE_FORMATS = (FORMAT, "wiser-spark-segment-v3")
+# stats.json "format" of the one layout every writer emits: generations
+# named by generations.json, doc lengths in sentinel rows, phrase blooms
+# as columns of the term row, no offsets
+FORMAT = "wiser-spark-segment-v5"
 
 
 def _no_blooms() -> dict:
@@ -387,8 +395,8 @@ def write_index(
     # segments: already hash-partitioned by shard_id (the cogroup), rows
     # emitted in term order inside each shard — no extra shuffle before
     # the write
-    write_table(build_segments(postings, docstats, config.n_shards),
-                f"{index_dir}/segments", "shard_id")
+    publish_segments(build_segments(postings, docstats, config.n_shards),
+                     index_dir)
     write_stats(index_dir, {
         "n_docs": stats.n_docs,
         "avgdl": stats.avgdl,
@@ -439,6 +447,61 @@ def write_stats(index_dir: str, meta: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(meta, f, indent=1)
     os.replace(tmp, f"{index_dir}/stats.json")
+
+
+def generation_path(index_dir: str, gen: int) -> str:
+    """The directory of one generation of an index's segments table."""
+    return f"{index_dir}/segments/generation={gen}"
+
+
+def _manifest_path(index_dir: str) -> str:
+    return f"{index_dir}/generations.json"
+
+
+def read_generations(index_dir: str) -> list[int]:
+    """The LIVE generation ids, from the ``generations.json`` manifest.
+    A missing or unreadable manifest raises ValueError naming it: a
+    directory listing could include merged-away generations and so
+    duplicate documents."""
+    path = _manifest_path(index_dir)
+    manifest = read_json(path, missing_ok=True)
+    if manifest is None:
+        raise ValueError(
+            f"index at {index_dir!r} has no generations manifest {path!r}: "
+            "its live generations are unknown"
+        )
+    try:
+        return sorted(int(g) for g in manifest["generations"])
+    except (KeyError, TypeError, ValueError) as e:
+        raise ValueError(f"unreadable index metadata {path!r}: {e!r}") from e
+
+
+def _write_generations(index_dir: str, gens) -> None:
+    """Atomically publish the live generation set (ONE os.replace —
+    readers see the old set or the new set, never a mix)."""
+    path = _manifest_path(index_dir)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"generations": sorted(int(g) for g in gens)}, f)
+    os.replace(tmp, path)
+
+
+def publish_segments(segs: DataFrame, index_dir: str) -> str:
+    """Publish a batch build's segments as generation 0 of
+    ``index_dir``: the whole ``segments/`` table is replaced, then the
+    manifest names [0]. A ``commits.json`` an earlier streaming build
+    left goes first, since its ranges describe generations that are
+    gone. Returns the generation's directory; the caller writes
+    ``stats.json``."""
+    try:
+        os.remove(f"{index_dir}/commits.json")
+    except FileNotFoundError:
+        pass
+    shutil.rmtree(f"{index_dir}/segments", ignore_errors=True)
+    path = generation_path(index_dir, 0)
+    write_table(segs, path, "shard_id")
+    _write_generations(index_dir, [0])
+    return path
 
 
 # ---------------------------------------------------- shard query kernel
@@ -1107,11 +1170,11 @@ def compact_segments(
 
     The shard's sentinel rows merge by docID concatenation and come
     first. Positions survive only if every term row of the shard
-    carries them; v3 rows' offsets are not carried over. Phrase blooms are REBUILT (two df == 1
-    rows merge into a df == 2 row that needs blooms neither carried):
+    carries them. Phrase blooms are REBUILT (two df == 1 rows merge
+    into a df == 2 row that needs blooms neither carried):
     the decoded (doc, pos) occurrences sort back into each document's
     token stream, folded by ``mapside.neighbor_blooms`` with
-    ``bloom_cfg``, the index's recorded params and hash family, so a
+    ``bloom_cfg``, the index's recorded params, so a
     compacted shard holds exactly the rows one build of its documents
     writes. No ``bloom_cfg`` or no positions: null bloom columns."""
     segs = segments.select("shard_id", "term", "df_shard", "docids_blob",
@@ -1186,11 +1249,11 @@ def compact_segments(
 
 
 def require_layout(meta: dict, index_dir: str) -> None:
-    """Refuse an index written in an older layout (doc lengths outside
-    the segment table, or phrase blooms as separate prefixed rows): no
-    reader or merge handles it, and none converts it. A v3 index is
-    read as it is: its offset columns are never selected."""
-    if meta.get("format") not in READABLE_FORMATS:
+    """Refuse an index written in any layout but ``FORMAT`` (doc lengths
+    outside the segment table, phrase blooms as separate prefixed rows,
+    stored offsets, or segments outside generations): no reader or
+    merge handles it, and none converts it."""
+    if meta.get("format") != FORMAT:
         raise ValueError(
             f"index at {index_dir!r} has format {meta.get('format')!r}, "
             f"not {FORMAT!r}: it was written by an older writer and "
@@ -1200,19 +1263,19 @@ def require_layout(meta: dict, index_dir: str) -> None:
 
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
-    generation index at ``out_dir`` (``compact_segments``: blooms
-    rebuilt; stats.json carried over, recording the current FORMAT
-    since the output is written in it; no dictionary table, since the
-    reader derives it). Queries over the compacted index are identical;
-    per-term read cost drops to one row, and bloom pruning re-activates
-    (multi-generation rows skip it)."""
+    generation index at ``out_dir``, published as generation 0
+    (``compact_segments``: blooms rebuilt; stats.json carried over;
+    no commits.json, so no incremental indexer appends to the output).
+    Queries over the compacted index are identical; per-term read cost
+    drops to one row, and bloom pruning re-activates (multi-generation
+    rows skip it)."""
     meta = read_json(f"{index_dir}/stats.json")
     require_layout(meta, index_dir)
     bloom = meta.get("bloom")
     segs = compact_segments(read_segments(spark, index_dir),
                             BloomParams(**bloom) if bloom else None)
-    write_table(segs, f"{out_dir}/segments", "shard_id")
-    meta.update(compacted=True, format=FORMAT)
+    publish_segments(segs, out_dir)
+    meta["compacted"] = True
     write_stats(out_dir, meta)
 
 
@@ -1246,50 +1309,25 @@ def decode_segment_row(row: dict, with_positions: bool = False):
 
 
 def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The segments table of an index dir, pinned to the LIVE
-    generation set when a ``generations.json`` manifest exists (all
-    streaming/batched writers publish one; the manifest flips with one
-    atomic os.replace, so this read is consistent across a concurrent
-    compaction swap). Non-generational indexes (write_index /
-    write_index_mapside / compact_index outputs) and pre-manifest
-    indexes read the directory as before.
+    """The segments of an index's LIVE generations, as the manifest
+    names them. The manifest flips with one atomic os.replace, so this
+    read is consistent across a concurrent compaction swap, and a torn
+    swap reads as its pre-flip set with no recovery step."""
+    return read_generation_segments(spark, index_dir,
+                                    read_generations(index_dir))
 
-    A PRE-MANIFEST index with a pending compaction journal (a legacy
-    writer crashed mid-swap) has no consistent directory state to fall
-    back on — silently listing it would drop the merged-away
-    generations' documents. Those heal here through the lock-serialized
-    ``recover_compaction`` (every journal application, including the
-    writer's own live apply, goes through the same lock, so this cannot
-    race it); if the journal survives (another process holds the lock
-    right now), the read fails LOUDLY rather than returning silently
-    incomplete results. Manifest-carrying indexes never take this path:
-    their pre-flip manifest is already consistent."""
-    from wiser_spark.streaming.incremental import (
-        read_generations,
-        recover_compaction,
-    )
 
-    base = f"{index_dir}/segments"
-    gens = read_generations(index_dir)
-    if gens is None and os.path.exists(f"{index_dir}/compaction.json"):
-        recover_compaction(index_dir)
-        gens = read_generations(index_dir)  # the apply may publish one
-        if gens is None and os.path.exists(f"{index_dir}/compaction.json"):
-            raise RuntimeError(
-                f"index at {index_dir!r} has a pending compaction journal "
-                "and no generations manifest (legacy torn swap), and "
-                "another process holds compaction.lock — retry once its "
-                "recovery completes (reading now would silently miss the "
-                "merged-away generations)"
-            )
-    if gens is None:
-        return spark.read.schema(SEGMENT_SCHEMA).parquet(base)
+def read_generation_segments(spark: SparkSession, index_dir: str, gens
+                             ) -> DataFrame:
+    """The segments of the generations ``gens``, read by path with the
+    explicit schema, so no generation (an empty stream) and an empty
+    generation (an empty corpus) both read as no rows."""
     if not gens:
         return empty_frame(spark, SEGMENT_SCHEMA)
     return (
-        spark.read.option("basePath", base)
+        spark.read.option("basePath", f"{index_dir}/segments")
         .schema(SEGMENT_SCHEMA)
-        .parquet(*[f"{base}/generation={g}" for g in gens])
+        .parquet(*[generation_path(index_dir, g) for g in gens])
     )
 
 
@@ -1326,14 +1364,12 @@ class SegmentIndex:
         require_layout(self.meta, index_dir)
         self.params = BM25Params(k1=self.meta["k1"], b=self.meta["b"])
         self.stats = CorpusStats(self.meta["n_docs"], self.meta["avgdl"])
-        # explicit schemas keep a degenerate (empty-corpus) index
-        # readable. Generational (streaming) indexes resolve the LIVE
-        # generation set from the atomic manifest, NOT a directory
-        # listing — a compaction swap is invisible until its single
-        # manifest flip, so a reader of a crashed (torn) swap sees the
-        # consistent pre-flip state with no recovery step; journal
-        # application is writer-only (r04 advisory: a reader applying
-        # the journal could race the writer's own application)
+        # the LIVE generation set comes from the atomic manifest, NOT a
+        # directory listing (read_segments): a compaction swap is
+        # invisible until its single manifest flip, so a reader of a
+        # crashed (torn) swap sees the consistent pre-flip state with no
+        # recovery step; journal application is writer-only (a reader
+        # applying the journal could race the writer's own application)
         self._scan_parts = (
             int(scan_coalesce)
             if scan_coalesce
@@ -1346,7 +1382,6 @@ class SegmentIndex:
         # the segments, so it is pinned to the same generation set, and
         # cached. bytes/prefetch_pages are the reference's .tip
         # prefetch-zone field analogue (flash_engine_dumper.h:44-49).
-        # A dictionary/ table an older writer stored is never opened.
         self.dictionary = dictionary_from_segments(segments).cache()
         # sized-bloom geometry (bits/bytes/hashes); None when the index
         # has no phrase blooms

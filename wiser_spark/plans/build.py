@@ -38,6 +38,8 @@ from wiser_spark.operators.postings import (
 from wiser_spark.operators.segments import (
     FORMAT,
     build_segments,
+    generation_path,
+    publish_segments,
     write_stats,
     write_table,
 )
@@ -153,13 +155,16 @@ class IndexBuildPipeline:
         )
         docstats = self.spark.read.parquet(self._out("docstats"))
 
-        # the sentinels come from docstats, so its output chains in too
+        # the sentinels come from docstats, so its output chains in too;
+        # the stage's output dir is the index's segments/ table, which
+        # publish_segments replaces as generation 0 (FORMAT in the
+        # fingerprint: a work dir written in another layout rebuilds)
         self._run_stage(
             "segments",
-            fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
-            lambda d: write_table(
-                build_segments(postings, docstats, cfg.n_shards), d,
-                "shard_id",
+            fingerprint("segments", FORMAT, fp_post, fp_stats, cfg.n_shards),
+            lambda d: publish_segments(
+                build_segments(postings, docstats, cfg.n_shards),
+                self.work_dir,
             ),
         )
 
@@ -344,7 +349,7 @@ def build_index_mapside_batched(
                 # crashed between commit-log append and manifest.record:
                 # backfill the entry from the durable artifacts
                 wall = 0.0
-            gen_dir = f"{index_dir}/segments/generation={b}"
+            gen_dir = generation_path(index_dir, b)
             files, total_bytes = (
                 dir_lineage(gen_dir) if os.path.isdir(gen_dir) else ([], 0)
             )

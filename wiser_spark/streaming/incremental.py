@@ -15,10 +15,10 @@ sink is made idempotent:
   * a COMMIT LOG (``commits.json``, written atomically via tmp+rename)
     records every committed batch_id together with its docID range;
     a replayed batch_id is skipped outright;
-  * each batch's outputs are written to ``_staging/<batch_id>/`` first
-    and then renamed into ``<table>/generation=<batch_id>/`` — one
-    atomic rename per table. A crash mid-commit leaves at most a
-    half-moved generation that the retry REPLACES with byte-identical
+  * each batch's segments are written to ``_staging/<batch_id>/`` first
+    and then renamed into ``segments/generation=<batch_id>/`` — one
+    atomic rename. A crash mid-commit leaves at most an uncommitted
+    generation that the retry REPLACES with byte-identical
     data (docIDs come from the commit log, not from counting rows, so
     the retry is deterministic);
   * the docID offset is the committed ranges' end — never a count of
@@ -33,18 +33,22 @@ opens the index, so results always reflect the ingested prefix exactly.
 No dictionary table is stored, so a flush costs the encode job plus the
 commit, however many generations are live.
 
-READ ISOLATION (round-5 redesign, closes the r04 advisory findings): the
-live generation set is published through ``generations.json``, updated
-with ONE atomic os.replace per change. Readers (SegmentIndex,
-compact_index) resolve generations from the manifest — never from a
-directory listing — so a compaction swap is invisible until its single
-manifest flip, and a crashed swap leaves readers on the consistent
-pre-flip state with zero recovery work. Merged generations install under
-FRESH ids (>= MERGED_GEN_BASE, outside the micro-batch id space), so an
-install never replaces a live directory. Journal application is
-WRITER-ONLY (guarded by ``compaction.lock``): two processes can no
-longer race a rmtree/rename pair, and a reader can never destroy a
-writer's in-flight swap.
+READ ISOLATION: the live generation set is published through
+``generations.json`` (the manifest of the one index layout,
+``operators/segments.py``), updated with ONE atomic os.replace per
+change. Readers (SegmentIndex, compact_index) resolve generations from
+the manifest — never from a directory listing — so a compaction swap is
+invisible until its single manifest flip, and a crashed swap leaves
+readers on the consistent pre-flip state with zero recovery work.
+Merged generations install under FRESH ids (>= MERGED_GEN_BASE, outside
+the micro-batch id space), so an install never replaces a live
+directory. Journal application is WRITER-ONLY (guarded by
+``compaction.lock``): two processes cannot race a rmtree/rename pair,
+and a reader can never destroy a writer's in-flight swap.
+
+An indexer appends only to an index it started (one with a
+``commits.json``): a batch build's generation 0 has no commit log to
+continue, so its doc ids would restart at 0.
 """
 
 from __future__ import annotations
@@ -61,16 +65,16 @@ from wiser_spark.config import IndexConfig
 from wiser_spark.functions.bloom import BloomParams
 from wiser_spark.operators.segments import (
     FORMAT,
+    _manifest_path,
+    _write_generations,
+    generation_path,
+    read_generation_segments,
+    read_generations,
     read_json,
     require_layout,
     write_stats,
     write_table,
 )
-
-_TABLES = ("segments",)
-# tables older writers stored beside the segments; no reader opens them,
-# and a compaction sweeps them away
-ORPHAN_TABLES = ("dictionary", "dictionary_deltas")
 
 # merged generations install OUTSIDE the micro-batch id space: ids are
 # max(MERGED_GEN_BASE, max(existing)+1), so an install NEVER collides
@@ -85,78 +89,35 @@ MERGED_GEN_BASE = 1 << 40
 LOCK_STALE_S = 900.0
 
 
-def _manifest_path(index_dir: str) -> str:
-    return f"{index_dir}/generations.json"
-
-
-def read_generations(index_dir: str) -> list[int] | None:
-    """The LIVE generation set from the atomic manifest, or None when
-    the index has no manifest (readers then fall back to directory
-    listing — the pre-round-5 behavior). A manifest that is present but
-    unreadable raises ValueError: a listing could include merged-away
-    generations and so duplicate documents."""
-    path = _manifest_path(index_dir)
-    manifest = read_json(path, missing_ok=True)
-    try:
-        return None if manifest is None else sorted(
-            int(g) for g in manifest["generations"])
-    except (KeyError, TypeError, ValueError) as e:
-        raise ValueError(f"unreadable index metadata {path!r}: {e!r}") from e
-
-
-def _write_generations(index_dir: str, gens) -> None:
-    """Atomically publish the live generation set (ONE os.replace —
-    readers see the old set or the new set, never a mix)."""
-    path = _manifest_path(index_dir)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"generations": sorted(int(g) for g in gens)}, f)
-    os.replace(tmp, path)
-
-
 def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
     """Apply (or re-apply) a journalled compaction swap, WRITER-ONLY
     (callers hold compaction.lock via recover_compaction, or are the
     single streaming writer mid-compaction). Order matters:
 
-      1. install each staged table at generation=<target> — target is a
-         FRESH id (MERGED_GEN_BASE namespace), so the rename never
-         replaces a live dir; already-installed tables are skipped, a
+      1. install the staged segments at generation=<target> — target
+         is a FRESH id (MERGED_GEN_BASE namespace), so the rename never
+         replaces a live dir; an installed target is skipped, a
          missing source with a missing target RAISES (never silently
-         drop merged postings — r04 advisory);
+         drop merged postings);
       2. flip the manifest: live set = (old - removed) + {target}, one
          atomic os.replace — the commit point readers observe;
       3. remove the merged-away generation dirs (logically dead after
          the flip; only readers that pinned the pre-flip set and are
          still scanning can notice, and they fail LOUDLY on the missing
-         files rather than silently losing documents), and the
-         ``dictionary/`` and ``dictionary_deltas/`` tables an older
-         writer left, which no reader opens;
+         files rather than silently losing documents);
       4. drop the journal and staging leftovers.
 
-    IDEMPOTENT: a crash at any point is healed by running it again.
-
-    LEGACY journals (pre-round-5 writers) reuse a LIVE generation id as
-    the target (target ∈ remove-list), so "dst exists" there means the
-    OLD unmerged generation, not a prior install — those take the old
-    replace-in-place semantics (src present → replace dst; src absent →
-    a prior attempt already installed) instead of the skip, which on a
-    legacy journal would silently drop the staged merge and then delete
-    the merged-away generations."""
+    IDEMPOTENT: a crash at any point is healed by running it again."""
     target = int(journal["target"])
-    legacy = target in {int(g) for g in journal["remove"]}
-    staging = journal["staging"]
-    if not os.path.isabs(staging):
-        # journals record table-relative staging paths so a recovering
-        # process with a different working directory still resolves
-        # them (r04 advisory); absolute paths (old journals) pass through
-        staging = os.path.join(index_dir, staging)
-    for table in journal["tables"]:
-        src = f"{staging}/{table}"
-        dst = f"{index_dir}/{table}/generation={target}"
+    removed = {int(g) for g in journal["remove"]}
+    # the journal records the staging path relative to the index dir, so
+    # a recovering process with another working directory resolves it
+    staging = os.path.join(index_dir, journal["staging"])
+    src = f"{staging}/segments"
+    dst = generation_path(index_dir, target)
+    # fresh-id target: only a prior attempt's install writes dst
+    if not os.path.isdir(dst):
         if not os.path.isdir(src):
-            if os.path.isdir(dst):
-                continue  # already installed by a prior attempt
             raise RuntimeError(
                 f"compaction journal at {index_dir!r} names staged source "
                 f"{src!r} which does not exist and target generation "
@@ -164,26 +125,13 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
                 "merged-away generations would be lost); inspect "
                 "_staging/ and the journal before removing it by hand"
             )
-        if os.path.isdir(dst):
-            if not legacy:
-                # fresh-id target: dst can only be a prior attempt's
-                # completed install (nothing else writes that id)
-                continue
-            shutil.rmtree(dst)  # legacy: dst is the old live generation
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
-    gens = read_generations(index_dir)
-    if gens is not None:
-        removed = {int(g) for g in journal["remove"]}
-        _write_generations(index_dir, (set(gens) - removed) | {target})
-    for table in journal["tables"]:
-        for g in journal["remove"]:
-            if int(g) != target:
-                shutil.rmtree(
-                    f"{index_dir}/{table}/generation={g}", ignore_errors=True
-                )
-    for table in ORPHAN_TABLES:
-        shutil.rmtree(f"{index_dir}/{table}", ignore_errors=True)
+    _write_generations(
+        index_dir, (set(read_generations(index_dir)) - removed) | {target}
+    )
+    for g in removed:
+        shutil.rmtree(generation_path(index_dir, g), ignore_errors=True)
     jpath = f"{index_dir}/compaction.json"
     try:
         os.remove(jpath)
@@ -289,18 +237,27 @@ class IncrementalIndexer:
         _meta = read_json(f"{index_dir}/stats.json", missing_ok=True)
         if _meta is not None:
             require_layout(_meta, index_dir)
-        read_generations(index_dir)  # an unreadable manifest raises
+            # a queryable index without a commit log was not started by
+            # an indexer (a batch build, a compact_index output): its
+            # first publish would hide its documents and reuse their ids.
+            # A crash before the first commit writes no stats.json, so a
+            # resume of one is not refused here
+            if not os.path.exists(f"{index_dir}/commits.json"):
+                raise ValueError(
+                    f"index at {index_dir!r} has no commits.json: it was "
+                    "not built by an incremental indexer, which cannot "
+                    "append to it; rebuild it through one"
+                )
         self.index_dir = index_dir
         self.config = config or IndexConfig()
         self.order_cols = list(order_cols)
         self.content_col = content_col
         self.with_blooms = with_blooms
         self.compact_every = compact_every
+        self._generations()  # a missing or unreadable manifest raises
         # appending to an EXISTING index must keep encoding blooms with
-        # the RECORDED sizing + hash family (stats.json), or the new
-        # generations' masks would not match the probe side; a meta
-        # that predates the family field reconstructs as the old "dh"
-        # family via the BloomParams default
+        # the RECORDED sizing (stats.json), or the new generations'
+        # masks would not match the probe side
         b = (_meta or {}).get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
 
@@ -377,7 +334,13 @@ class IncrementalIndexer:
         if n_docs == 0:
             if prep["pinned"] is not None:
                 prep["pinned"].unpersist()
+            # nothing to encode, but publish the manifest ([] when this
+            # is the first batch) and the stats, so an index whose first
+            # batch is empty is readable; still no Spark job
+            _write_generations(self.index_dir, self._generations())
             self._append_commit(commits, batch_id, offset, 0, 0)
+            if refresh_meta:
+                self._refresh_meta()
             return
         docs = prep["docs0"].withColumn(
             "doc_id", (F.col("doc_id") + F.lit(offset)).cast("long")
@@ -414,24 +377,21 @@ class IncrementalIndexer:
         # context cleaner is too lazy for a 10^12-file ingest)
         prep["pinned"].unpersist()
 
-        # atomic per-table publish: generation=<id> partition dirs. A
+        # atomic publish: the generation=<id> partition dir. A
         # leftover from a crashed attempt of this SAME batch is replaced
         # (it was never committed; the retry produced identical data).
-        for table in _TABLES:
-            dst = f"{self.index_dir}/{table}/generation={batch_id}"
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            os.rename(f"{staging}/{table}", dst)
+        dst = generation_path(self.index_dir, batch_id)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        if os.path.exists(dst):
+            shutil.rmtree(dst)
+        os.rename(f"{staging}/segments", dst)
         shutil.rmtree(staging, ignore_errors=True)
         # publish the new generation in the atomic manifest BEFORE the
         # commit record (readers resolve generations from the manifest;
         # an uncommitted manifest entry is harmless — the dir exists and
         # the retry republishes identical data)
-        gens = read_generations(self.index_dir)
-        cur = set(gens) if gens is not None else set(self._generations())
-        cur.add(int(batch_id))
-        _write_generations(self.index_dir, cur)
+        _write_generations(self.index_dir,
+                           {*self._generations(), int(batch_id)})
         self._append_commit(commits, batch_id, offset, n_docs, lensum)
         # refresh_meta=False defers the stats.json rewrite and
         # auto-compaction to the caller (the batched build refreshes
@@ -460,20 +420,14 @@ class IncrementalIndexer:
 
     # ------------------------------------------------- auto-compaction
     def _generations(self) -> list[int]:
-        """Live generation ids: the atomic manifest when present (the
-        set readers resolve), else the segments directory listing
-        (indexes predating manifests)."""
-        gens = read_generations(self.index_dir)
-        if gens is not None:
-            return gens
-        try:
-            return sorted(
-                int(p.split("=", 1)[1])
-                for p in os.listdir(f"{self.index_dir}/segments")
-                if p.startswith("generation=")
-            )
-        except FileNotFoundError:
+        """Live generation ids from the manifest (the set readers
+        resolve). Before the first commit an absent manifest is the
+        empty set, as ``read_json(missing_ok=True)`` reads a missing
+        file; once a batch is committed it must be there."""
+        if (not os.path.exists(_manifest_path(self.index_dir))
+                and not self._read_commits()):
             return []
+        return read_generations(self.index_dir)
 
     def _gen_bytes(self, table: str, g: int) -> int:
         total = 0
@@ -559,21 +513,13 @@ class IncrementalIndexer:
             return
         from wiser_spark.operators.segments import compact_segments
 
-        all_gens = self._generations()
-        # ensure the manifest exists BEFORE the swap so the flip in
-        # _apply_compaction_journal is the readers' commit point (an
-        # index from an older round adopts its directory listing)
-        if read_generations(self.index_dir) is None:
-            _write_generations(self.index_dir, all_gens)
-        target = max(MERGED_GEN_BASE, max(all_gens) + 1)
+        target = max(MERGED_GEN_BASE, max(self._generations()) + 1)
         staging_rel = "_staging/compact"
         staging = f"{self.index_dir}/{staging_rel}"
         shutil.rmtree(staging, ignore_errors=True)
         meta = read_json(f"{self.index_dir}/stats.json", missing_ok=True)
         bloom = (meta or {}).get("bloom")
-        segs = spark.read.parquet(f"{self.index_dir}/segments").filter(
-            F.col("generation").isin(gens)
-        )
+        segs = read_generation_segments(spark, self.index_dir, gens)
         write_table(
             compact_segments(segs, BloomParams(**bloom) if bloom else None),
             f"{staging}/segments", "shard_id",
@@ -582,7 +528,6 @@ class IncrementalIndexer:
             "remove": gens,
             "target": target,
             "staging": staging_rel,
-            "tables": list(_TABLES),
         }
         jpath = f"{self.index_dir}/compaction.json"
         tmp = jpath + ".tmp"
@@ -591,8 +536,7 @@ class IncrementalIndexer:
         os.replace(tmp, jpath)  # the commit point of the swap
         # apply through recover_compaction so the LIVE apply holds
         # compaction.lock too — every journal application is then
-        # lock-serialized (legacy pre-manifest indexes let READERS
-        # recover via the same path, which would otherwise race this)
+        # lock-serialized
         recover_compaction(self.index_dir)
 
     def _next_doc_id(self, commits: dict) -> int:
@@ -604,8 +548,7 @@ class IncrementalIndexer:
         N and avgdl from its [start, n, lensum] rows."""
         commits = self._read_commits()
         n_docs = sum(v[1] for v in commits.values())
-        # (empty batches committed by older writers carry no lensum)
-        lensum = sum(v[2] for v in commits.values() if v[1])
+        lensum = sum(v[2] for v in commits.values())
         meta = {
             "n_docs": n_docs,
             "avgdl": (lensum / n_docs) if n_docs else 1.0,
@@ -618,9 +561,8 @@ class IncrementalIndexer:
         if self.with_blooms:
             from wiser_spark.functions.bloom import bloom_params
 
-            # preserve the index's recorded bloom params (sizing + hash
-            # family) across refreshes; defaults only for a brand-new
-            # index
+            # preserve the index's recorded bloom params across
+            # refreshes; defaults only for a brand-new index
             meta["bloom"] = (self.bloom_cfg or bloom_params())._asdict()
         write_stats(self.index_dir, meta)
 
