@@ -91,12 +91,6 @@ def main() -> None:
         "informing the scaling gate",
     )
     ap.add_argument(
-        "--no-pipeline", action="store_true",
-        help="run batch prepares inline (build_index_mapside_batched "
-        "pipeline=False) — the r06 VERDICT-1 attribution toggle for "
-        "low-core-count memory-pressure A/Bs",
-    )
-    ap.add_argument(
         "--snippets", action="store_true",
         help="the SERVING-FLOW treatment (r04 item 8): one-shot "
         "map-side index + chunked doc store over the same corpus, then "
@@ -256,7 +250,6 @@ def main() -> None:
             spark, source, gen_dir,
             IndexConfig(bm25=PARAMS, n_shards=args.n_shards),
             n_batches=args.batches, order_cols=("doc_key",),
-            pipeline=not args.no_pipeline,
         )
         build_sec = time.perf_counter() - t0
         if args.build_only:

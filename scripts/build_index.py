@@ -10,18 +10,19 @@ analogue, distributed):
       --out    /lake/wiser_index \\
       --content-col content \\
       [--n-shards 4096] [--k1 0.9] [--b 0.4] \\
-      [--resumable-work-dir /lake/wiser_build_work]
+      [--batches 64 [--resumable-work-dir /lake/wiser_build_work]]
 
 Two modes:
-  default          the ZERO-SHUFFLE map-side build (write_index_mapside):
-                   one pass, sentinel doc lengths, offsets + both bloom
-                   sides; docIDs assigned deterministically if absent.
-  --resumable-...  the staged checkpointed pipeline (IndexBuildPipeline):
-                   the same sentinel doc-length layout, without phrase
-                   blooms; every stage records per-partition lineage +
-                   rows/bytes in manifest.json; a killed build resumes
-                   where it stopped (fingerprints chain over input file
-                   lineage).
+  default      the ZERO-SHUFFLE map-side build (write_index_mapside):
+               one pass, sentinel doc lengths, both bloom sides;
+               docIDs assigned deterministically if absent.
+  --batches N  the RESUMABLE map-side build (build_index_mapside_batched):
+               the corpus splits into N deterministic slices, each
+               committed exactly-once as one generation; a killed build
+               resumes from the commit log, with per-batch lineage in
+               manifest.json. A source doc_id column is kept (slices are
+               doc_id ranges); otherwise dense docIDs are assigned per
+               md5 slice. The generations are then compacted into --out.
 
 Query the result with wiser_spark.operators.segments.SegmentIndex.
 """
@@ -46,22 +47,21 @@ def main() -> None:
     ap.add_argument("--order-cols", default="repo,path,commit",
                     help="total order for docID assignment when the "
                          "source has no doc_id column")
-    ap.add_argument("--resumable-work-dir", default="",
-                    help="use the staged checkpointed pipeline "
-                         "(shuffle build, no phrase blooms) instead of "
-                         "the one-pass map-side build")
     ap.add_argument("--batches", type=int, default=0,
-                    help=">0: RESUMABLE map-side build — the corpus "
-                         "splits into this many deterministic md5 "
-                         "slices, each committed exactly-once; a killed "
-                         "build resumes from the commit log; per-batch "
-                         "lineage in the generations work dir's "
-                         "manifest.json (<out>_generations unless "
-                         "--resumable-work-dir). Generations are "
-                         "compacted into --out afterwards. NOTE: this "
-                         "mode assigns its own dense docIDs; a source "
-                         "doc_id column is rejected.")
+                    help=">0: RESUMABLE map-side build in this many "
+                         "deterministic slices (doc_id ranges when the "
+                         "source has doc_id, md5 slices otherwise), each "
+                         "committed exactly-once; a killed build resumes "
+                         "from the commit log. Generations are compacted "
+                         "into --out afterwards.")
+    ap.add_argument("--resumable-work-dir", default="",
+                    help="with --batches: the generations work dir that "
+                         "holds the commit log and manifest.json "
+                         "(default <out>_generations)")
     args = ap.parse_args()
+    if args.resumable_work_dir and args.batches <= 0:
+        ap.error("--resumable-work-dir names the --batches work dir; "
+                 "pass --batches")
 
     from pyspark.sql import SparkSession
 
@@ -73,7 +73,7 @@ def main() -> None:
 
     src = spark.read.parquet(args.input)
     if "doc_id" not in src.columns and args.batches == 0:
-        # batched mode assigns its own dense ids (commit-log ranges)
+        # the batched build assigns dense ids per slice itself
         src = assign_doc_ids(src, tuple(args.order_cols.split(",")))
     cfg = IndexConfig(
         bm25=BM25Params(k1=args.k1, b=args.b),
@@ -93,16 +93,6 @@ def main() -> None:
                           "generations": work,
                           "batches": sorted(manifest.entries),
                           "wall_sec": round(time.perf_counter() - t0, 2)}))
-    elif args.resumable_work_dir:
-        from wiser_spark.plans.build import IndexBuildPipeline
-
-        manifest = IndexBuildPipeline(
-            spark, src, args.resumable_work_dir, cfg,
-            order_cols=tuple(args.order_cols.split(",")),
-            content_col=args.content_col,
-        ).run()
-        print(json.dumps({"mode": "resumable", "out": args.resumable_work_dir,
-                          "stages": sorted(manifest.entries)}))
     else:
         from wiser_spark.operators.mapside import write_index_mapside
 

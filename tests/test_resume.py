@@ -1,6 +1,9 @@
-"""Checkpoint/resume: stages skip when complete, rebuild after a 'kill',
-and the resumed index is logically identical (FIXTURES.md §3
-``resume_manifest``)."""
+"""Checkpoint/resume of the one resumable build,
+``build_index_mapside_batched``: a crashed build resumes from the
+commit log without redoing committed batches and answers like the
+oracle, whether it assigns dense ids or keeps a source's own
+``doc_id``; a resume over changed parameters or input is refused
+(FIXTURES.md §3 ``resume_manifest``)."""
 
 import json
 import os
@@ -9,172 +12,224 @@ import shutil
 import pytest
 
 from wiser_spark.config import BM25Params, IndexConfig
-from wiser_spark.operators.segments import SegmentIndex
-from wiser_spark.plans.build import IndexBuildPipeline
-from wiser_spark.sources.corpus import corpus_df
+from wiser_spark.operators.segments import (
+    DOCLEN_TERM,
+    SegmentIndex,
+    decode_doclen_sentinel,
+    read_segments,
+)
+from wiser_spark.oracle import OracleEngine
+from wiser_spark.plans.build import build_index_mapside_batched
+from wiser_spark.sources.corpus import corpus_df, make_corpus
+from wiser_spark.streaming.incremental import IncrementalIndexer
 
-PARAMS = BM25Params(1.2, 0.75)
+PARAMS = BM25Params(0.9, 0.4)
+CFG = IndexConfig(bm25=PARAMS, n_shards=2)
+SCHEMA = "repo string, path string, commit string, lang string, content string"
+SUITE = [(["return"], False), (["return", "import"], False),
+         (["return", "import"], True)]
 
 
-def _mtimes(work_dir, stage):
-    d = os.path.join(work_dir, stage)
-    return {
-        f: os.path.getmtime(os.path.join(d, f))
-        for f in os.listdir(d)
-        if not f.startswith(".")
-    }
+def _crash_after(monkeypatch, n_commits: int) -> None:
+    """Make the build fail after ``n_commits`` committed batches (the
+    pipelined build commits through commit_prepared, the durable commit
+    point; prepares are in memory only, so this models losing the
+    process)."""
+    real = IncrementalIndexer.commit_prepared
+    calls = {"n": 0}
+
+    def flaky(self, spark_, batch_id, prep, **kw):
+        if calls["n"] == n_commits:
+            raise RuntimeError("simulated executor loss")
+        calls["n"] += 1
+        return real(self, spark_, batch_id, prep, **kw)
+
+    monkeypatch.setattr(IncrementalIndexer, "commit_prepared", flaky)
+
+
+def _record_commits(monkeypatch) -> list[int]:
+    """The batch ids commit_prepared is called with, from now on."""
+    real = IncrementalIndexer.commit_prepared
+    calls: list[int] = []
+
+    def counting(self, spark_, batch_id, prep, **kw):
+        calls.append(batch_id)
+        return real(self, spark_, batch_id, prep, **kw)
+
+    monkeypatch.setattr(IncrementalIndexer, "commit_prepared", counting)
+    return calls
+
+
+def _sentinel_doc_ids(spark, d):
+    rows = read_segments(spark, d).filter(f"term = '{DOCLEN_TERM}'").collect()
+    return sorted(
+        i for r in rows for i in decode_doclen_sentinel(r.asDict())[0].tolist()
+    )
+
+
+# sparse kept ids: doc i of the corpus carries doc_id 3*i + 7
+def _kept_id(i: int) -> int:
+    return 3 * i + 7
 
 
 @pytest.fixture(scope="module")
-def work_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("pipeline"))
-    pipe = IndexBuildPipeline(
-        spark, corpus_df(spark, 80), d,
-        IndexConfig(bm25=PARAMS, n_shards=3), source_fingerprint="corpus80-v1",
+def kept(spark, tmp_path_factory):
+    """A source with its own sparse doc_id, built in 3 batches: the
+    first run crashes after one committed batch, the second resumes and
+    compacts. Returns (generations dir, compacted dir, rows, commits
+    after the crash, batches the resume committed)."""
+    base = tmp_path_factory.mktemp("kept")
+    d, out = str(base / "gens"), str(base / "compacted")
+    rows = make_corpus(120, seed=11)
+    src = spark.createDataFrame(
+        [dict(r, doc_id=_kept_id(i)) for i, r in enumerate(rows)],
+        SCHEMA + ", doc_id long",
     )
-    pipe.run()
-    return d
+    with pytest.MonkeyPatch.context() as mp:
+        _crash_after(mp, 1)
+        with pytest.raises(RuntimeError, match="simulated"):
+            build_index_mapside_batched(spark, src, d, CFG, n_batches=3)
+    with open(f"{d}/commits.json") as f:
+        crashed = json.load(f)
+    with pytest.MonkeyPatch.context() as mp:
+        resumed = _record_commits(mp)
+        build_index_mapside_batched(spark, src, d, CFG, n_batches=3,
+                                    compact_to=out)
+    return d, out, rows, crashed, resumed
 
 
-def test_pipeline_dictionary_matches_write_index(spark, work_dir, tmp_path):
-    """The reader's dictionary of a pipeline build is that of
-    write_index for the same postings and n_shards, prefetch fields
-    included; neither writer stores a dictionary or records n_terms,
-    and the reader counts the vocabulary."""
-    from wiser_spark.operators.docstats import corpus_stats
-    from wiser_spark.operators.postings import build_dictionary
-    from wiser_spark.operators.segments import write_index
-
-    def read(stage):
-        return spark.read.parquet(os.path.join(work_dir, stage))
-
-    d = str(tmp_path / "write_index")
-    write_index(
-        read("postings"), read("docstats"), build_dictionary(read("postings")),
-        corpus_stats(read("docstats")), d,
-        IndexConfig(bm25=PARAMS, n_shards=3),
-    )
-    pipe = SegmentIndex(spark, work_dir).warmup()
-    got = sorted(map(tuple, pipe.dictionary.collect()))
-    want = sorted(map(tuple, SegmentIndex(spark, d).dictionary.collect()))
-    assert got == want and got
-    assert pipe.dictionary.columns == [
-        "term", "df", "bytes_docid_tf", "prefetch_pages"
-    ]
-    assert pipe.meta["n_terms"] == len(got)
-    for index_dir in (work_dir, d):
-        assert not os.path.exists(os.path.join(index_dir, "dictionary"))
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            assert "n_terms" not in json.load(f)
-
-
-def _results(spark, work_dir):
-    idx = SegmentIndex(spark, work_dir)
-    return [
-        (r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in idx.search(["return", "import"], k=10).collect()
-    ]
+def test_kept_doc_id_build_resumes_rank_identical(spark, kept):
+    """A source's own sparse doc_id survives a crash and resume: the
+    slices are equal-width id ranges committed in id order, the resume
+    commits only the two missing batches, the commit log records each
+    batch so the next free id is past its largest, and the top-10
+    results before and after compact_to are those of the oracle under
+    the kept ids."""
+    d, out, rows, crashed, resumed = kept
+    ids = [_kept_id(i) for i in range(len(rows))]
+    assert set(crashed) == {"0"} and resumed == [1, 2]
+    with open(f"{d}/commits.json") as f:
+        commits = json.load(f)
+    width = (ids[-1] - ids[0]) // 3 + 1
+    for b in range(3):
+        mine = [i for i in ids if (i - ids[0]) // width == b]
+        start, n, _ = commits[str(b)]
+        assert n == len(mine) and start + n == max(mine) + 1
+    assert not os.path.exists(f"{d}/_batched_source")
+    oracle = OracleEngine(PARAMS)
+    for r in rows:  # oracle id i <-> kept id ids[i]
+        oracle.add_document(r["content"])
+    for idx_dir in (d, out):
+        assert _sentinel_doc_ids(spark, idx_dir) == ids
+        idx = SegmentIndex(spark, idx_dir)
+        assert idx.stats.n_docs == len(rows)
+        assert idx.stats.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
+        for terms, ph in SUITE:
+            want = oracle.search(terms, k=10, is_phrase=ph)
+            got = idx.search(terms, k=10, is_phrase=ph).collect()
+            assert want
+            assert [r["doc_id"] for r in got] == [ids[x] for x, _ in want]
+            for r, (_, s) in zip(got, want):
+                assert r["score"] == pytest.approx(s, rel=1e-12)
 
 
-def test_manifest_written(work_dir):
-    with open(os.path.join(work_dir, "manifest.json")) as f:
+def test_manifest_written(kept):
+    """manifest.json holds one complete entry per batch, each with its
+    rows, bytes and per-partition file lineage, whether the batch was
+    committed by the crashed run or by the resume."""
+    with open(os.path.join(kept[0], "manifest.json")) as f:
         m = json.load(f)
-    assert set(m) == {"docs", "postings", "docstats", "segments"}
-    for stage, e in m.items():
+    assert set(m) == {"batch_0", "batch_1", "batch_2"}
+    for e in m.values():
         assert e["status"] == "complete"
         assert e["rows"] > 0 and e["bytes"] > 0
-        assert len(e["files"]) >= 1  # per-partition lineage present
+        assert len(e["files"]) >= 1
 
 
-def test_rerun_skips_all_stages(spark, work_dir):
-    before = {s: _mtimes(work_dir, s) for s in ("docs", "postings", "segments")}
-    pipe = IndexBuildPipeline(
-        spark, corpus_df(spark, 80), work_dir,
-        IndexConfig(bm25=PARAMS, n_shards=3), source_fingerprint="corpus80-v1",
+def test_assigned_ids_follow_kept_ids_and_lower_kept_batch_refused(
+    spark, kept, tmp_path
+):
+    """A later assigned-id batch continues past the largest kept id,
+    reusing none; a kept-id batch below a committed range is refused
+    before it writes anything."""
+    d = str(tmp_path / "gens")
+    shutil.copytree(kept[0], d)
+    ids = [_kept_id(i) for i in range(len(kept[2]))]
+    ix = IncrementalIndexer(d, CFG)
+    ix.process_batch(spark.createDataFrame(make_corpus(5, seed=3), SCHEMA), 3)
+    assert _sentinel_doc_ids(spark, d) == ids + [ids[-1] + 1 + i
+                                                 for i in range(5)]
+    with open(f"{d}/commits.json") as f:
+        before = json.load(f)
+    low = spark.createDataFrame(
+        [dict(r, doc_id=100 + i) for i, r in enumerate(make_corpus(3))],
+        SCHEMA + ", doc_id long",
     )
-    pipe.run()
-    after = {s: _mtimes(work_dir, s) for s in ("docs", "postings", "segments")}
-    assert before == after  # nothing rewritten
+    with pytest.raises(ValueError, match="below the next free id"):
+        ix.process_batch(low, 4)
+    with open(f"{d}/commits.json") as f:
+        assert json.load(f) == before
+    assert not os.path.exists(f"{d}/segments/generation=4")
+    assert SegmentIndex(spark, d).stats.n_docs == len(ids) + 5
 
 
-def test_resume_after_kill_rebuilds_only_downstream(spark, work_dir):
-    want = _results(spark, work_dir)
-    # simulate a crash mid segment-merge: segments output lost
-    shutil.rmtree(os.path.join(work_dir, "segments"))
-    mpath = os.path.join(work_dir, "manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    m["segments"]["status"] = "pending"
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-
-    before_docs = _mtimes(work_dir, "docs")
-    before_postings = _mtimes(work_dir, "postings")
-    IndexBuildPipeline(
-        spark, corpus_df(spark, 80), work_dir,
-        IndexConfig(bm25=PARAMS, n_shards=3), source_fingerprint="corpus80-v1",
-    ).run()
-    assert _mtimes(work_dir, "docs") == before_docs        # upstream skipped
-    assert _mtimes(work_dir, "postings") == before_postings
-    assert _results(spark, work_dir) == want               # identical answers
-
-
-def test_changed_input_invalidates_chain(spark, work_dir, tmp_path):
-    d = str(tmp_path / "p2")
-    shutil.copytree(work_dir, d)
-    pipe = IndexBuildPipeline(
-        spark, corpus_df(spark, 80), d,
-        IndexConfig(bm25=PARAMS, n_shards=3),
-        source_fingerprint="corpus80-v2-CHANGED",
+@pytest.mark.parametrize("kept_first", [False, True])
+def test_resume_mismatch_when_doc_id_added_or_dropped(
+    spark, tmp_path, monkeypatch, kept_first
+):
+    """A resume that adds or drops the doc_id column would mix kept and
+    assigned ids in one index: refused."""
+    rows = make_corpus(30)
+    plain = spark.createDataFrame(rows, SCHEMA)
+    with_ids = spark.createDataFrame(
+        [dict(r, doc_id=2 * i) for i, r in enumerate(rows)],
+        SCHEMA + ", doc_id long",
     )
-    before = _mtimes(d, "docs")
-    pipe.run()
-    assert _mtimes(d, "docs") != before  # fingerprint change forces rebuild
+    first, second = (with_ids, plain) if kept_first else (plain, with_ids)
+    d = str(tmp_path / "gens")
+    _crash_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="simulated"):
+        build_index_mapside_batched(spark, first, d, CFG, n_batches=2)
+    with open(f"{d}/batched_build.json") as f:
+        assert json.load(f)["keep_doc_id"] is kept_first
+    with pytest.raises(ValueError, match="resume mismatch"):
+        build_index_mapside_batched(spark, second, d, CFG, n_batches=2)
 
 
-def test_changed_docstats_reruns_segments(spark, work_dir, tmp_path):
-    """The segments stage writes each shard's doc-length sentinel from
-    the docstats output, so a changed docstats fingerprint re-runs it
-    (a work dir whose segments predate the sentinels is rebuilt too);
-    upstream postings stay skipped and the answers are unchanged."""
-    d = str(tmp_path / "p3")
-    shutil.copytree(work_dir, d)
-    want = _results(spark, d)
-    mpath = os.path.join(d, "manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    m["docstats"]["output_fingerprint"] = "changed-docstats"
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-    before_postings = _mtimes(d, "postings")
-    before_segments = _mtimes(d, "segments")
-    IndexBuildPipeline(
-        spark, corpus_df(spark, 80), d,
-        IndexConfig(bm25=PARAMS, n_shards=3), source_fingerprint="corpus80-v1",
-    ).run()
-    assert _mtimes(d, "postings") == before_postings
-    assert _mtimes(d, "segments") != before_segments
-    assert _results(spark, d) == want
+def test_changed_input_invalidates_chain(spark, tmp_path, monkeypatch):
+    """A parquet source whose files change between a crashed run and
+    its resume would pair the committed batches of the old input with
+    slices of the new one: the resume is refused."""
+    src_dir = str(tmp_path / "src")
+    corpus_df(spark, 40).write.parquet(src_dir)
+    d = str(tmp_path / "gens")
+    _crash_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="simulated"):
+        build_index_mapside_batched(
+            spark, spark.read.parquet(src_dir), d, CFG, n_batches=2
+        )
+    monkeypatch.undo()
+    corpus_df(spark, 40, seed=43).write.mode("overwrite").parquet(src_dir)
+    with pytest.raises(ValueError, match="resume mismatch"):
+        build_index_mapside_batched(
+            spark, spark.read.parquet(src_dir), d, CFG, n_batches=2
+        )
+    with open(f"{d}/commits.json") as f:
+        assert set(json.load(f)) == {"0"}
 
 
-# ---------------------------------------------------- batched map-side build
+# ---------------------------------------------------- assigned dense ids
 def test_batched_mapside_build_resumable_and_rank_identical(
     spark, tmp_path, monkeypatch
 ):
-    """build_index_mapside_batched: md5 batch split is deterministic
-    (replicated in pure python), a crash mid-build resumes from the
-    commit log without redoing committed batches, per-batch lineage
-    lands in manifest.json, and the compacted result is rank-identical
-    to the oracle fed in the same global order."""
+    """build_index_mapside_batched without a source doc_id: the md5
+    batch split is deterministic (replicated in pure python), a crash
+    mid-build resumes from the commit log without redoing committed
+    batches, per-batch lineage lands in manifest.json, and the result
+    before and after compact_to is rank-identical to the oracle fed in
+    the same global order."""
     import hashlib
 
-    from wiser_spark.oracle import OracleEngine
-    from wiser_spark.plans.build import build_index_mapside_batched
-    from wiser_spark.sources.corpus import make_corpus
-    from wiser_spark.streaming.incremental import IncrementalIndexer
-
-    params = BM25Params(0.9, 0.4)
-    cfg = IndexConfig(bm25=params, n_shards=2)
     rows = make_corpus(200, seed=7)
     n_batches = 4
 
@@ -188,59 +243,33 @@ def test_batched_mapside_build_resumable_and_rank_identical(
         batch = [r for r in rows if bucket(r) == b]
         batch.sort(key=lambda r: (r["repo"], r["path"], r["commit"]))
         ordered.extend(batch)
-    oracle = OracleEngine(params)
+    oracle = OracleEngine(PARAMS)
     for r in ordered:
         oracle.add_document(r["content"])
 
-    docs = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, "
-        "content string"
-    )
+    docs = spark.createDataFrame(rows, SCHEMA)
     d = str(tmp_path / "bidx")
-
-    # crash after two successful batches (the pipelined build commits
-    # through commit_prepared — the durable commit point; prepares are
-    # in-memory only, so crashing here models losing the process)
-    real = IncrementalIndexer.commit_prepared
-    calls = {"n": 0}
-
-    def flaky(self, spark_, batch_id, prep, **kw):
-        if calls["n"] == 2:
-            raise RuntimeError("simulated executor loss")
-        calls["n"] += 1
-        return real(self, spark_, batch_id, prep, **kw)
-
-    monkeypatch.setattr(IncrementalIndexer, "commit_prepared", flaky)
+    _crash_after(monkeypatch, 2)
     with pytest.raises(RuntimeError, match="simulated"):
-        build_index_mapside_batched(
-            spark, docs, d, cfg, n_batches=n_batches
-        )
-    committed = set(json.load(open(f"{d}/commits.json")))
-    assert committed == {"0", "1"}
-    monkeypatch.setattr(IncrementalIndexer, "commit_prepared", real)
+        build_index_mapside_batched(spark, docs, d, CFG, n_batches=n_batches)
+    with open(f"{d}/commits.json") as f:
+        assert set(json.load(f)) == {"0", "1"}
+    monkeypatch.undo()
 
-    calls["n"] = 0
-    counted = IncrementalIndexer.commit_prepared
-
-    def counting(self, spark_, batch_id, prep, **kw):
-        calls["n"] += 1
-        return counted(self, spark_, batch_id, prep, **kw)
-
-    monkeypatch.setattr(IncrementalIndexer, "commit_prepared", counting)
+    calls = _record_commits(monkeypatch)
     out = str(tmp_path / "compacted")
     manifest = build_index_mapside_batched(
-        spark, docs, d, cfg, n_batches=n_batches, compact_to=out
+        spark, docs, d, CFG, n_batches=n_batches, compact_to=out
     )
     # resume processed ONLY the two uncommitted batches; the manifest
     # accumulates all four entries (0-1 persisted by the crashed run),
     # each carrying per-partition lineage + metrics
-    assert calls["n"] == 2
+    assert calls == [2, 3]
     assert set(manifest.entries) == {f"batch_{b}" for b in range(4)}
     for e in manifest.entries.values():
         assert e.rows > 0 and e.bytes > 0 and e.files and e.wall_s >= 0
 
-    for terms, ph in [(["return"], False), (["return", "import"], False),
-                      (["return", "import"], True)]:
+    for terms, ph in SUITE:
         want = oracle.search(terms, k=10, is_phrase=ph)
         for idx_dir in (d, out):
             got = SegmentIndex(spark, idx_dir).search(
@@ -250,20 +279,13 @@ def test_batched_mapside_build_resumable_and_rank_identical(
                 assert r["score"] == pytest.approx(s, rel=1e-12)
 
     # idempotent: a third run has nothing to do and changes nothing
-    m2 = build_index_mapside_batched(spark, docs, d, cfg,
+    m2 = build_index_mapside_batched(spark, docs, d, CFG,
                                      n_batches=n_batches)
-    assert calls["n"] == 2  # no batch re-processed
+    assert calls == [2, 3]  # no batch re-processed
     assert set(m2.entries) == set(manifest.entries)
     # completed build cleans the staged bucketed corpus
     assert not os.path.exists(f"{d}/_batched_source")
-    # guard rails: a different slice count on resume would pair stale
-    # generations with differently-bucketed new ones — refused; and a
-    # lake-assigned doc_id cannot be honored — refused
+    # guard rail: a different slice count on resume would pair stale
+    # generations with differently-bucketed new ones — refused
     with pytest.raises(ValueError, match="resume mismatch"):
-        build_index_mapside_batched(spark, docs, d, cfg, n_batches=8)
-    from pyspark.sql import functions as F
-    with pytest.raises(ValueError, match="doc_id"):
-        build_index_mapside_batched(
-            spark, docs.withColumn("doc_id", F.lit(1)),
-            str(tmp_path / "other"), cfg, n_batches=2,
-        )
+        build_index_mapside_batched(spark, docs, d, CFG, n_batches=8)

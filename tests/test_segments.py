@@ -229,10 +229,10 @@ def test_build_segments_byte_identical_to_per_term_encode(spark, flavor):
 
 
 def test_no_writer_stores_offsets(spark, tmp_path):
-    """No writer stores offsets: write_index, write_index_mapside,
-    IndexBuildPipeline, a streaming flush, compact_now and
-    compact_index all write segment files without ``off_blob`` or
-    ``skip_off_offs`` and record the current FORMAT."""
+    """No writer stores offsets: write_index, write_index_mapside, a
+    streaming flush, compact_now and compact_index all write segment
+    files without ``off_blob`` or ``skip_off_offs`` and record the
+    current FORMAT."""
     import glob
 
     import pyarrow.parquet as pq
@@ -240,21 +240,19 @@ def test_no_writer_stores_offsets(spark, tmp_path):
     from wiser_spark.operators.mapside import write_index_mapside
     from wiser_spark.operators.postings import build_postings_arrow
     from wiser_spark.operators.segments import compact_index
-    from wiser_spark.plans.build import IndexBuildPipeline
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     cfg = IndexConfig(bm25=PARAMS, n_shards=2)
     raw = corpus_df(spark, 60)
     docs = assign_doc_ids(raw, n_partitions=2).select("doc_id", "content")
     built = {k: str(tmp_path / k) for k in (
-        "write_index", "mapside", "pipeline", "flush", "compact_now",
+        "write_index", "mapside", "flush", "compact_now",
         "compact_index")}
     postings = build_postings_arrow(docs, with_offsets=True)
     docstats = build_docstats(docs)
     write_index(postings, docstats, build_dictionary(postings),
                 corpus_stats(docstats), built["write_index"], cfg)
     write_index_mapside(docs, built["mapside"], cfg)
-    IndexBuildPipeline(spark, raw, built["pipeline"], cfg).run()
     rows = raw.collect()
     for d in (built["flush"], built["compact_now"]):
         ix = IncrementalIndexer(d, cfg)

@@ -25,10 +25,7 @@ from wiser_spark.operators.segments import (
     write_index,
 )
 from wiser_spark.oracle import OracleEngine
-from wiser_spark.plans.build import (
-    IndexBuildPipeline,
-    build_index_mapside_batched,
-)
+from wiser_spark.plans.build import build_index_mapside_batched
 from wiser_spark.sources.corpus import corpus_df, make_corpus
 from wiser_spark.streaming.incremental import IncrementalIndexer
 
@@ -119,23 +116,17 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
     spark, docs, tmp_path
 ):
     """The writers that publish index tables — write_index,
-    write_index_mapside, IndexBuildPipeline, build_index_mapside_batched,
-    a streaming flush, a streaming compaction and compact_index — all
-    write the segments through write_table in the one layout (a
-    ``generations.json`` and only ``segments/generation=*/shard_id=*``
-    directories), and none creates ``dictionary/`` or
-    ``dictionary_deltas/``."""
+    write_index_mapside, build_index_mapside_batched, a streaming flush,
+    a streaming compaction and compact_index — all write the segments
+    through write_table in the one layout (a ``generations.json`` and
+    only ``segments/generation=*/shard_id=*`` directories), and none
+    creates ``dictionary/`` or ``dictionary_deltas/``."""
     built = {}
     built["write_index"] = str(tmp_path / "write_index")
     _write_index(docs, built["write_index"])
     built["mapside"] = str(tmp_path / "mapside")
     write_index_mapside(docs.select("doc_id", "content"), built["mapside"],
                         CFG)
-    built["pipeline"] = str(tmp_path / "pipeline")
-    IndexBuildPipeline(
-        spark, corpus_df(spark, 60), built["pipeline"], CFG,
-        source_fingerprint="storage-60",
-    ).run()
     built["batched"] = str(tmp_path / "batched")
     build_index_mapside_batched(spark, corpus_df(spark, 60), built["batched"],
                                 CFG, n_batches=2)
@@ -159,10 +150,6 @@ def test_every_writer_writes_zstd_front_coded_sorted_tables(
             shards = os.listdir(os.path.join(base, f"generation={g}"))
             assert all(p.startswith("shard_id=") for p in shards
                        if not p.startswith(("_", "."))), (name, shards)
-    # the pipeline's stage tables go through the same writer
-    for stage in ("docs", "postings", "docstats"):
-        for path in _parquet_files(built["pipeline"], stage):
-            assert {c.compression for c in _chunks(path)} <= {"ZSTD"}
 
 
 def _plain_write_table(df, path, partition_by=None):

@@ -100,7 +100,8 @@ def test_compaction_preserves_results(spark, streamed, oracle, tmp_path):
 
 def test_replayed_batch_is_noop(spark, tmp_path):
     """At-least-once replay of a committed batch must not duplicate rows
-    or shift docIDs (the commit log makes the sink idempotent)."""
+    or shift docIDs (the commit log makes the sink idempotent). No
+    ``_staging/`` directory outlives a flush or a compaction."""
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     rows = make_corpus(30)
@@ -108,6 +109,7 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     d = str(tmp_path / "idx")
     ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2))
     ix.process_batch(df, 0)
+    assert not os.path.exists(f"{d}/_staging")
     ids1 = _sentinel_doc_ids(spark, d)
     ix.process_batch(df, 0)  # replay
     assert _sentinel_doc_ids(spark, d) == ids1
@@ -118,6 +120,9 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     idx = SegmentIndex(spark, d)
     assert idx.stats.n_docs == 40
     assert idx.search(["return"], k=5).count() > 0
+    ix.compact_now(spark)
+    assert len(ix._generations()) == 1
+    assert not os.path.exists(f"{d}/_staging")
 
 
 def test_staging_leftover_replaced_on_retry(spark, tmp_path):

@@ -21,8 +21,8 @@ results to the shuffle-based path and the oracle.
 
 ``encode_postings`` is THE shard encoder: every writer turns a shard's
 postings into segment rows through it — ``encode_doc_batches`` below
-after tokenizing, segments.build_segments (write_index,
-IndexBuildPipeline) after sorting each shard's postings, and
+after tokenizing, segments.build_segments (write_index) after
+sorting each shard's postings, and
 segments.compact_segments (compact_index, the streaming sink) after
 decoding each shard's generations, as the reference's qq->vacuum merge
 re-dumps through its one dumper (``flash_engine_dumper.h:557-582``).

@@ -21,7 +21,6 @@ def assign_doc_ids(
     df: DataFrame,
     order_cols=DEFAULT_ORDER,
     n_partitions: int | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Dense, deterministic docIDs: global rank over a total order.
 
@@ -35,32 +34,11 @@ def assign_doc_ids(
     add the per-partition base offset to a partition-local row_number —
     every step is parallel; the driver only sees one int per partition.
     """
-    out, _, with_pid = assign_doc_ids_with_stats(df, order_cols, None,
-                                                 n_partitions)
-    if checkpoint:
-        # pin the FINAL assignment (eager) so the intermediate cache can
-        # be released immediately — repeated calls (one per batch in the
-        # resumable build / streaming sink, which pass checkpoint=True)
-        # would otherwise accumulate pinned partitions until the context
-        # cleaner gets around to them. localCheckpoint trades
-        # recomputability for determinism: on executor/node loss the
-        # checkpointed blocks are unrecoverable and the caller's job
-        # fails instead of recomputing — why this is OPT-IN: a one-pass
-        # 10^9-doc build must stay recomputable end-to-end, while the
-        # per-micro-batch sink's assignment is small and re-runnable
-        # from its own retry.
-        out = out.localCheckpoint(eager=True)
-        with_pid.unpersist()
-        return out
-    # default path: with_pid must stay persisted until the caller's
-    # LAST action over `out` (the persisted layout is what keeps the
-    # pid->count map and the final pass on the SAME sampled range
-    # boundaries). The handle rides on the result as ``_wiser_pinned``
-    # so callers release it eagerly after their terminal action instead
-    # of waiting on the JVM context cleaner (r04 advisory — one pinned
-    # intermediate per call adds up over a large batched build).
-    out._wiser_pinned = with_pid
-    return out
+    # the sorted layout stays persisted while `out` is in use (it keeps
+    # the pid->count map and the final pass on the SAME sampled range
+    # boundaries); callers that must release it eagerly use
+    # assign_doc_ids_with_stats, which returns the handle
+    return assign_doc_ids_with_stats(df, order_cols, None, n_partitions)[0]
 
 
 def assign_doc_ids_with_stats(

@@ -37,8 +37,7 @@ B4-B14):
                 hold each box's byte offset (the BloomSkipList
                 analogue). Null on rows with df_shard < 2 (nothing
                 to prune), on the sentinel, and on every row of the
-                shuffle writers (write_index, IndexBuildPipeline) and
-                ``with_blooms=False``
+                shuffle writer (write_index) and ``with_blooms=False``
 
 A table holds two row kinds: the term rows above, and per non-empty
 shard one doc-length SENTINEL row, term "" (the reference's doc-length
@@ -61,13 +60,13 @@ Queries fan out over shards and merge a k-row result per shard
 LAYOUT, one for every writer: ``segments/generation=<id>/shard_id=<s>/``
 beside ``generations.json``, the manifest naming the live generation
 ids, and ``stats.json``. A batch build (``write_index``,
-``write_index_mapside``, ``IndexBuildPipeline``, ``compact_index``)
-publishes generation 0 through ``publish_segments``; the streaming sink
-adds one generation per micro-batch and installs a compaction's merge
-under a fresh id (``streaming/incremental.py``). This module owns the
-path scheme (``generation_path``) and the manifest. Readers take the
-live generations from the manifest, never from a directory listing, and
-an index without one is refused.
+``write_index_mapside``, ``compact_index``) publishes generation 0
+through ``publish_segments``; the streaming sink and the resumable
+batched build add one generation per (micro-)batch and install a
+compaction's merge under a fresh id (``streaming/incremental.py``).
+This module owns the path scheme (``generation_path``) and the
+manifest. Readers take the live generations from the manifest, never
+from a directory listing, and an index without one is refused.
 
 STORAGE: ``write_table`` writes every index table (zstd, v2 pages: the
 ``term`` column is front-coded); snappy tables written earlier still

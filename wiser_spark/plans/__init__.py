@@ -1,1 +1,1 @@
-"""Plans: build pipeline orchestration, manifests, driver-contract queries."""
+"""Plans: the resumable build, its manifest, driver-contract queries."""

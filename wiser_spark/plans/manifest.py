@@ -1,11 +1,10 @@
-"""Per-stage build manifest: checkpointing, lineage, resume.
+"""Per-batch build manifest: lineage and metrics of a resumable build.
 
 The reference has no checkpointing (single-process build); the rebuild
-spec requires each stage of the distributed build to be resumable with
-per-partition lineage and rows/bytes metrics. A stage is skipped on
-re-run iff its manifest entry is COMPLETE and its recorded input
-fingerprint still matches — fingerprints chain from stage to stage, so
-editing any upstream output invalidates everything downstream.
+spec requires the distributed build to be resumable with per-partition
+lineage and rows/bytes metrics. ``build_index_mapside_batched`` records
+one entry per committed batch here; what it resumes from is the
+streaming commit log (``commits.json``), not this file.
 """
 
 from __future__ import annotations
@@ -45,21 +44,9 @@ class Manifest:
             json.dump({k: asdict(v) for k, v in self.entries.items()}, f, indent=1)
         os.replace(tmp, self.path)  # atomic: a killed run never half-writes
 
-    def can_skip(self, stage: str, input_fingerprint: str) -> bool:
-        e = self.entries.get(stage)
-        return (
-            e is not None
-            and e.status == "complete"
-            and e.input_fingerprint == input_fingerprint
-        )
-
     def record(self, entry: StageEntry) -> None:
         self.entries[entry.stage] = entry
         self.save()
-
-    def fingerprint_of(self, stage: str) -> str:
-        e = self.entries.get(stage)
-        return e.output_fingerprint if e else ""
 
 
 def dir_lineage(path: str) -> tuple[list[dict], int]:

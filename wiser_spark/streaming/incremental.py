@@ -24,7 +24,8 @@ sink is made idempotent:
   * the docID offset is the committed ranges' end — never a count of
     possibly-partially-committed files (the round-1 bug where a
     transient read error restarted docIDs at 0 cannot occur: nothing
-    here swallows exceptions).
+    here swallows exceptions). A batch that carries its own ``doc_id``
+    keeps it, and is refused when its ids do not lie past that end.
 
 Query-time global stats (N, avgdl, df) shift as documents arrive; every
 commit rewrites stats.json from the commit log (N, summed doc length),
@@ -89,6 +90,15 @@ MERGED_GEN_BASE = 1 << 40
 LOCK_STALE_S = 900.0
 
 
+def _remove_staging(index_dir: str, staging: str) -> None:
+    """Remove one staging dir, and ``_staging/`` itself once empty."""
+    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        os.rmdir(f"{index_dir}/_staging")
+    except OSError:
+        pass  # absent, or still holding another batch's staging dir
+
+
 def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
     """Apply (or re-apply) a journalled compaction swap, WRITER-ONLY
     (callers hold compaction.lock via recover_compaction, or are the
@@ -137,7 +147,7 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
         os.remove(jpath)
     except FileNotFoundError:
         pass
-    shutil.rmtree(staging, ignore_errors=True)
+    _remove_staging(index_dir, staging)
 
 
 def recover_compaction(index_dir: str, sweep: bool = False) -> None:
@@ -155,7 +165,7 @@ def recover_compaction(index_dir: str, sweep: bool = False) -> None:
     jpath = f"{index_dir}/compaction.json"
     if not os.path.exists(jpath):
         if sweep:
-            shutil.rmtree(f"{index_dir}/_staging/compact", ignore_errors=True)
+            _remove_staging(index_dir, f"{index_dir}/_staging/compact")
         return
     lock = f"{index_dir}/compaction.lock"
     fd = None
@@ -192,7 +202,7 @@ def recover_compaction(index_dir: str, sweep: bool = False) -> None:
                 journal = json.load(f)
             _apply_compaction_journal(index_dir, journal)
         if sweep:
-            shutil.rmtree(f"{index_dir}/_staging/compact", ignore_errors=True)
+            _remove_staging(index_dir, f"{index_dir}/_staging/compact")
     finally:
         os.close(fd)
         try:
@@ -267,8 +277,9 @@ class IncrementalIndexer:
         return f"{self.index_dir}/commits.json"
 
     def _read_commits(self) -> dict[str, list[int]]:
-        """{batch_id(str): [doc_id_start, n_docs, summed_doclen]} for
-        committed batches."""
+        """{batch_id(str): [start, n_docs, summed_doclen]} for committed
+        batches; start + n_docs is one past the batch's largest doc id
+        (start = doc_id_start for assigned ids)."""
         try:
             with open(self._commit_path) as f:
                 return json.load(f)
@@ -300,17 +311,30 @@ class IncrementalIndexer:
         exists to avoid. IDs here are 0-based; commit_prepared adds the
         commit log's offset (a free withColumn). The batch's row count
         and summed doc length ride in assign_doc_ids' OWN stats job —
-        no separate count() pass over the corpus slice."""
+        no separate count() pass over the corpus slice.
+
+        A batch that carries ``doc_id`` keeps its ids: its row count,
+        summed doc length and id range come from ONE aggregate job, with
+        no sort and nothing pinned; commit_prepared checks the range
+        against the commit log."""
         from wiser_spark.functions.tokenize import doclen_col
         from wiser_spark.operators.postings import assign_doc_ids_with_stats
 
+        lensum = F.sum(doclen_col(F.col(self.content_col)).cast("long"))
+        if "doc_id" in batch.columns:
+            n_docs, total, lo, hi = batch.agg(
+                F.count(F.lit(1)), lensum, F.min("doc_id"), F.max("doc_id")
+            ).first()
+            return {
+                "docs0": batch, "n_docs": n_docs, "lensum": int(total or 0),
+                "pinned": None, "doc_ids": (lo, hi),
+            }
         if batch.isEmpty():
             # empty micro-batches are routine on a long-running stream
             # (triggers with no new files): commit them with ONE cheap
             # probe instead of paying the range-sort sampling + persist
             # + stats jobs just to discover n_docs == 0
             return {"docs0": None, "n_docs": 0, "lensum": 0, "pinned": None}
-        lensum = F.sum(doclen_col(F.col(self.content_col)).cast("long"))
         docs0, totals, pinned = assign_doc_ids_with_stats(
             batch, self.order_cols, [lensum.alias("lensum")]
         )
@@ -342,13 +366,25 @@ class IncrementalIndexer:
             if refresh_meta:
                 self._refresh_meta()
             return
+        start = shift = offset
+        if "doc_ids" in prep:
+            lo, hi = prep["doc_ids"]
+            if lo < offset:
+                raise ValueError(
+                    f"batch {batch_id} keeps doc ids from {lo}, below the "
+                    f"next free id {offset} of {self.index_dir!r}: kept "
+                    "ids must ascend past every committed range"
+                )
+            # recorded as the range [hi + 1 - n, hi + 1), so the next
+            # assigned id is past the batch's largest
+            start, shift = hi + 1 - n_docs, 0
         docs = prep["docs0"].withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(offset)).cast("long")
+            "doc_id", (F.col("doc_id") + F.lit(shift)).cast("long")
         )
         staging = f"{self.index_dir}/_staging/{batch_id}"
         try:
             self._encode_and_publish(
-                spark, batch_id, docs, prep, staging, commits, offset,
+                spark, batch_id, docs, prep, staging, commits, start,
                 n_docs, lensum, refresh_meta,
             )
         except BaseException:
@@ -362,7 +398,7 @@ class IncrementalIndexer:
             raise
 
     def _encode_and_publish(
-        self, spark, batch_id, docs, prep, staging, commits, offset,
+        self, spark, batch_id, docs, prep, staging, commits, start,
         n_docs, lensum, refresh_meta,
     ) -> None:
         from wiser_spark.operators.mapside import build_segments_mapside
@@ -375,7 +411,8 @@ class IncrementalIndexer:
         # the encode was the ONE action over the sorted slice: the
         # pinned shuffle layout can release now (r04 advisory: the
         # context cleaner is too lazy for a 10^12-file ingest)
-        prep["pinned"].unpersist()
+        if prep["pinned"] is not None:
+            prep["pinned"].unpersist()
 
         # atomic publish: the generation=<id> partition dir. A
         # leftover from a crashed attempt of this SAME batch is replaced
@@ -385,14 +422,14 @@ class IncrementalIndexer:
         if os.path.exists(dst):
             shutil.rmtree(dst)
         os.rename(f"{staging}/segments", dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        _remove_staging(self.index_dir, staging)
         # publish the new generation in the atomic manifest BEFORE the
         # commit record (readers resolve generations from the manifest;
         # an uncommitted manifest entry is harmless — the dir exists and
         # the retry republishes identical data)
         _write_generations(self.index_dir,
                            {*self._generations(), int(batch_id)})
-        self._append_commit(commits, batch_id, offset, n_docs, lensum)
+        self._append_commit(commits, batch_id, start, n_docs, lensum)
         # refresh_meta=False defers the stats.json rewrite and
         # auto-compaction to the caller (the batched build refreshes
         # ONCE after its last batch)
